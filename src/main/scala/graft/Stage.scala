@@ -177,7 +177,10 @@ object Stage {
     * recomputes from lineage if its result is still referenced.
     * Reliable-checkpoint stages drop their memo entries (identical
     * plans re-checkpoint afterwards) but their bytes stay under
-    * graft.checkpointDir, reclaimed with the directory.
+    * graft.checkpointDir, reclaimed with the directory. The vector
+    * index geometry memo is cleared too (it is keyed by index root,
+    * not by session, so every release clears all of it; later
+    * lookups re-read the sidecar files).
     */
   def releaseAll(): Unit = releaseFor(None)
 
@@ -211,6 +214,7 @@ object Stage {
     while (it.hasNext) {
       if (s.forall(_ eq it.next()._2.sparkSession)) it.remove()
     }
+    graft.dedup.Dedup.clearGeomMemo()
   }
 
   /** Snapshot WITH lineage truncation — for frames whose recompute

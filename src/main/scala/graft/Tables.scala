@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders for the graft star schema.
   *
@@ -15,18 +17,68 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  // once-per-session guard for the function registration below: every
-  // load() used to rewrite ~30 registry entries, pure no-op work that
-  // contends on the session FunctionRegistry lock under the concurrent
-  // serving layer. Weak keys: the guard must not pin dead sessions.
-  private val registered =
+  // Per-session state, created on a session's first load: the graft_*
+  // function registration (once per session — every load() used to
+  // rewrite ~30 registry entries, contending on the session
+  // FunctionRegistry lock under the concurrent serving layer) and the
+  // parquet schema memo below. Weak keys: the map must not pin dead
+  // sessions.
+  private val sessions =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+      new java.util.WeakHashMap[SparkSession,
+        java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]())
 
+  // Session confs that change how a parquet footer maps to Spark types
+  // (or, for mergeSchema, which footers are read): a memoized schema
+  // is only valid under the confs it was inferred with.
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** What a memoized schema of `path` was inferred from: the path's
+    * length and modification time (for a directory, also those of its
+    * direct children, so an added, removed or rewritten part file
+    * re-infers) and the type-mapping confs.
+    */
+  private def schemaStamp(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val files = if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st)
+    (files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}") ++
+      schemaConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")).mkString("|")
+  }
+
+  /** Read one table. Parquet schema inference launches a Spark job per
+    * read, so the inferred schema is memoized per session and path
+    * (see [[schemaStamp]] for what invalidates it) and later reads pass
+    * it explicitly. Every call still returns a fresh DataFrame over a
+    * fresh file listing.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
-      graft.functions.VectorExpressions.register(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val memo = sessions.synchronized {
+      val m = sessions.get(spark)
+      if (m != null) m
+      else {
+        graft.functions.VectorExpressions.register(spark)
+        val fresh = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+        sessions.put(spark, fresh)
+        fresh
+      }
+    }
+    val path = s"$dir/$name.parquet"
+    val stamp = schemaStamp(spark, path)
+    val schema = memo.get(path) match {
+      case (s, schema) if s == stamp => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        memo.put(path, (stamp, schema))
+        schema
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

@@ -725,6 +725,13 @@ object Dedup {
     subKeys(compact, hotBuckets(compact, maxBucket, maxExtra), g, probed, probeSub)
   }
 
+  /** A NaN or infinite cosine threshold compares false (or true)
+    * against every score, and a published `"tau":NaN` sidecar is
+    * unreadable: refused at every entry that takes one.
+    */
+  private def requireFiniteTau(tau: Double, where: String): Unit =
+    require(!tau.isNaN && !tau.isInfinite, s"$where: tau must be a finite number, got $tau")
+
   private def nearDupsImpl(
       emb: DataFrame,
       tau: Double,
@@ -735,6 +742,7 @@ object Dedup {
       probe1: Boolean,
       probeUnion: Boolean = false,
       probeSub2: Boolean = false): DataFrame = {
+    requireFiniteTau(tau, "near-dup search")
     import graft.functions.VectorFunctions._
     // spread BEFORE the banding/refinement maps: tables×planes dot
     // products per row fused onto a one-row-group parquet scan would
@@ -1119,6 +1127,7 @@ object Dedup {
       maxCell: Int = 0,
       md5Seed: Boolean = false): DataFrame = {
     import graft.functions.VectorFunctions._
+    requireFiniteTau(tau, "semanticDedup")
     require(tau <= 1.0, s"semanticDedup: tau=$tau > 1 can never match (cosine <= 1)")
     val rows = emb.select(col("vec_id"), col("embedding"))
       .filter(col("vec_id").isNotNull)
@@ -1369,6 +1378,7 @@ object Dedup {
       planes: Int = 0,
       probe1: Boolean = false,
       brute: Boolean = false): DataFrame = {
+    requireFiniteTau(tau, "incrementalVecDups")
     import graft.functions.VectorFunctions._
     def withNorm(df: DataFrame) =
       df.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
@@ -1499,6 +1509,7 @@ object Dedup {
       tables: Int = 0,
       planes: Int = 0,
       probe1: Boolean = false): DataFrame = {
+    requireFiniteTau(tau, "collapsedNearDups")
     // group by the array VALUE: exact distinct groups and a pure
     // HashAggregate (array grouping keys hash-aggregate fine; an
     // array-typed AGGREGATE like first(embedding) would demote this
@@ -1611,6 +1622,7 @@ object Dedup {
       tables: Int = 0,
       planes: Int = 0,
       probe1: Boolean = false): Long = {
+    requireFiniteTau(tau, "commitVecIndex")
     val spark = corpus.sparkSession
     import spark.implicits._
     val e = corpus.select(col("vec_id"), col("embedding"),
@@ -1661,16 +1673,28 @@ object Dedup {
   private val geomMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), VecIndexGeom]()
 
+  /** Drop every memoized geometry (later lookups re-read the
+    * sidecars); [[graft.Stage.releaseAll]] calls this, so a long-lived
+    * session that builds index after index does not grow the memo
+    * without bound.
+    */
+  private[graft] def clearGeomMemo(): Unit = geomMemo.clear()
+
+  /** Test seam: memoized geometries. */
+  private[graft] def geomMemoSize: Int = geomMemo.size()
+
   /** The sidecar is a one-line JSON FILE written driver-side: the old
     * 1-row parquet sidecar cost a full Spark write job per publish
     * and a read job per geometry load — pure scheduler overhead for
     * five scalars. Written to a temp name and renamed into place, so
     * the existence check ([[hasGeom]]) that gates snapshot adoption
-    * can never observe a half-written sidecar; rename-to-existing
-    * fails, preserving the never-overwritten contract. Old parquet
-    * sidecars (directories) stay readable forever — see [[readGeom]].
+    * can never observe a half-written sidecar. A publish to a version
+    * whose sidecar exists is refused before the rename (HDFS's rename
+    * fails onto an existing target, but a local filesystem's POSIX
+    * rename silently replaces it). Old parquet sidecars (directories)
+    * stay readable forever — see [[readGeom]].
     */
-  private def writeGeom(
+  private[graft] def writeGeom(
       spark: org.apache.spark.sql.SparkSession,
       root: String, v: Long, g: VecIndexGeom): Unit = {
     val p = new org.apache.hadoop.fs.Path(geomPath(root, v))
@@ -1683,7 +1707,7 @@ object Dedup {
       g.tau.toString, Boolean.box(g.probe1))
     val out = f.create(tmp, false)
     try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, p)) {
+    if (f.exists(p) || !f.rename(tmp, p)) {
       f.delete(tmp, false)
       throw new IllegalStateException(
         s"geometry sidecar for v$v of $root already exists (sidecars are never overwritten)")

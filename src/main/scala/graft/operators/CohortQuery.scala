@@ -26,9 +26,14 @@ import org.json4s.jackson.JsonMethods
   * }
   * }}}
   *
-  * ops: eq ne gt ge lt le like in between. Atoms resolve to distinct
-  * key sets before any set algebra (SURVEY §4), so the evaluation
-  * plan is identical to the hand-composed [[Cohort]] combinators.
+  * ops: eq ne gt ge lt le like in between. A query is evaluated in
+  * one aggregate pass, not as set algebra over per-atom key sets:
+  * each source is scanned once, its rows carrying a bitmask of the
+  * atoms they match; one `groupBy(key).agg(bit_or)` gives every key's
+  * atom membership, and the CNF is one filter over that mask. The
+  * answers are the hand-composed [[Cohort]] combinators' (which stay
+  * as the independent cross-check), except that a NULL key counts as
+  * one member, as in SQL `INTERSECT`/`EXCEPT`.
   */
 object CohortQuery {
 
@@ -45,43 +50,33 @@ object CohortQuery {
       over: SourceOverrides, name: String)(live: => DataFrame): DataFrame =
     over.getOrElse(name, live)
 
-  /** subject-population keys: how each source maps to c_custkey. */
-  private def subjectKey(
-      spark: SparkSession, dir: String, source: String,
-      over: SourceOverrides): (DataFrame, Column) =
-    source match {
-      case "customer" => (resolve(over, "customer")(Tables.customer(spark, dir)), col("c_custkey"))
-      case "orders"   => (resolve(over, "orders")(Tables.orders(spark, dir)), col("o_custkey"))
-      case "lineitem" =>
-        // measurements hang off visits; key them to the visit's subject
-        val j = resolve(over, "lineitem")(Tables.lineitem(spark, dir))
-          .join(resolve(over, "orders")(Tables.orders(spark, dir))
-            .select("o_orderkey", "o_custkey"),
-            col("l_orderkey") === col("o_orderkey"))
-        (j, col("o_custkey"))
-      case s => throw new IllegalArgumentException(s"unknown subject source: $s")
-    }
-
-  /** visit-population keys: how each source maps to o_orderkey. */
-  private def visitKey(
-      spark: SparkSession, dir: String, source: String,
-      over: SourceOverrides): (DataFrame, Column) =
-    source match {
-      case "orders"   => (resolve(over, "orders")(Tables.orders(spark, dir)), col("o_orderkey"))
-      case "lineitem" => (resolve(over, "lineitem")(Tables.lineitem(spark, dir)), col("l_orderkey"))
-      case s => throw new IllegalArgumentException(s"unknown visit source: $s")
-    }
-
-  /** user-population keys (the event stream's subject axis) — the
-    * population the typed temporal/era atoms key by.
+  /** The frame a source's atoms scan, and the column that keys its
+    * rows to the population: `subject` maps every source to
+    * c_custkey, `visit` to o_orderkey, `user` (the event stream's
+    * subject axis, the one typed temporal/era atoms key by) to user_id.
     */
-  private def userKey(
-      spark: SparkSession, dir: String, source: String,
-      over: SourceOverrides): (DataFrame, Column) =
-    source match {
-      case "events" => (resolve(over, "events")(Tables.events(spark, dir)), col("user_id"))
-      case s => throw new IllegalArgumentException(s"unknown user source: $s")
+  private def keyed(
+      spark: SparkSession, dir: String, population: String, source: String,
+      over: SourceOverrides): (DataFrame, Column) = {
+    def orders = resolve(over, "orders")(Tables.orders(spark, dir))
+    def lineitem = resolve(over, "lineitem")(Tables.lineitem(spark, dir))
+    (population, source) match {
+      case ("subject", "customer") =>
+        (resolve(over, "customer")(Tables.customer(spark, dir)), col("c_custkey"))
+      case ("subject", "orders") => (orders, col("o_custkey"))
+      case ("subject", "lineitem") =>
+        // measurements hang off visits; key them to the visit's subject
+        (lineitem.join(orders.select("o_orderkey", "o_custkey"),
+          col("l_orderkey") === col("o_orderkey")), col("o_custkey"))
+      case ("visit", "orders")   => (orders, col("o_orderkey"))
+      case ("visit", "lineitem") => (lineitem, col("l_orderkey"))
+      case ("user", "events") =>
+        (resolve(over, "events")(Tables.events(spark, dir)), col("user_id"))
+      case ("subject" | "visit" | "user", s) =>
+        throw new IllegalArgumentException(s"unknown $population source: $s")
+      case (p, _) => throw new IllegalArgumentException(s"unknown population: $p")
     }
+  }
 
   private def lit0(v: JValue): Any = v match {
     case JString(s)  => s
@@ -132,15 +127,23 @@ object CohortQuery {
       case other    => throw new IllegalArgumentException(s"atom '$name' must be an integer, got $other")
     }
 
-  /** One criterion → distinct key set. `type` picks the atom family:
-    * plain field predicates (default), or the typed event-shape
-    * criteria — `temporal` ({first, then, withinDays}, q4c semantics)
-    * and `era` ({windowMinutes, minEras}, q4d semantics) — which key
-    * by user_id and therefore require the `user` population.
+  /** One parsed criterion: a row predicate over a named source (a
+    * `field` atom), or a key set computed on its own (the typed
+    * `temporal` and `era` atoms).
     */
-  private def atomKeys(
+  private sealed trait Criterion
+  private final case class RowPredicate(source: String, pred: Column) extends Criterion
+  private final case class KeySet(keys: DataFrame) extends Criterion
+
+  /** Parse one criterion. `type` picks the atom family: plain field
+    * predicates (default), or the typed event-shape criteria —
+    * `temporal` ({first, then, withinDays}, q4c semantics) and `era`
+    * ({windowMinutes, minEras}, q4d semantics) — which key by user_id
+    * and therefore require the `user` population.
+    */
+  private def criterion(
       spark: SparkSession, dir: String, population: String, atom: JValue,
-      over: SourceOverrides): DataFrame = {
+      over: SourceOverrides): Criterion = {
     val typ = atom \ "type" match {
       case JString(t) => t
       case JNothing   => "field"
@@ -148,17 +151,8 @@ object CohortQuery {
     }
     typ match {
       case "field" =>
-        val source = strField(atom, "source")
-        val field = strField(atom, "field")
-        val op = strField(atom, "op")
-        val value = atom \ "value"
-        val (df, key) = population match {
-          case "subject" => subjectKey(spark, dir, source, over)
-          case "visit"   => visitKey(spark, dir, source, over)
-          case "user"    => userKey(spark, dir, source, over)
-          case p => throw new IllegalArgumentException(s"unknown population: $p")
-        }
-        df.filter(predicate(field, op, value)).select(key.as("subject")).distinct()
+        RowPredicate(strField(atom, "source"),
+          predicate(strField(atom, "field"), strField(atom, "op"), atom \ "value"))
       case "temporal" =>
         require(population == "user", "temporal atoms key by user_id — use population 'user'")
         // range-checked BEFORE the narrowing .toInt: an unvalidated
@@ -168,8 +162,8 @@ object CohortQuery {
         val wd = numField(atom, "withinDays")
         require(wd >= 1 && wd <= 36500,
           s"withinDays must be in [1, 36500] (100 years), got $wd")
-        Cohort.temporalAtom(resolve(over, "events")(Tables.events(spark, dir)),
-          strField(atom, "first"), strField(atom, "then"), wd.toInt).keys
+        KeySet(Cohort.temporalAtom(resolve(over, "events")(Tables.events(spark, dir)),
+          strField(atom, "first"), strField(atom, "then"), wd.toInt).keys)
       case "era" =>
         require(population == "user", "era atoms key by user_id — use population 'user'")
         // bounded so windowMinutes * 60e6 micros cannot overflow Long
@@ -177,9 +171,9 @@ object CohortQuery {
         val wm = numField(atom, "windowMinutes")
         require(wm >= 1 && wm <= 52600000L,
           s"windowMinutes must be in [1, 52600000] (~100 years), got $wm")
-        Cohort.eraAtom(resolve(over, "events")(Tables.events(spark, dir)),
+        KeySet(Cohort.eraAtom(resolve(over, "events")(Tables.events(spark, dir)),
           wm * 60000000L,
-          numField(atom, "minEras")).keys
+          numField(atom, "minEras")).keys)
       case other => throw new IllegalArgumentException(s"unknown atom type: $other")
     }
   }
@@ -190,7 +184,67 @@ object CohortQuery {
     case other      => throw new IllegalArgumentException(s"bad population: $other")
   }
 
-  /** Evaluate a JSON query spec → distinct population key set.
+  private def maskWords(nAtoms: Int): Int = (nAtoms + 63) / 64
+
+  private def wordCol(w: Int): String = s"m$w"
+
+  /** `m_w & bits != 0` over every word where `bits` (one mask word
+    * per word of the membership frame) is non-zero: the subject
+    * matches at least one of the atoms the mask names.
+    */
+  private def hitsAny(bits: Array[Long]): Column =
+    bits.zipWithIndex.collect { case (b, w) if b != 0L =>
+      (col(wordCol(w)) bitwiseAND lit(b)) =!= lit(0L)
+    }.reduce(_ || _)
+
+  private def maskOf(atoms: Seq[Int], nAtoms: Int): Array[Long] = {
+    val words = new Array[Long](maskWords(nAtoms))
+    atoms.foreach(i => words(i / 64) |= 1L << (i % 64))
+    words
+  }
+
+  /** Atom membership per population key, in ONE aggregate: every
+    * source is scanned once for all of its field atoms, each matching
+    * row carrying a bitmask with bit i%64 of word `m{i/64}` set iff
+    * atom i's predicate holds on it (a predicate evaluating null sets
+    * no bit, exactly the rows a filter would drop); a temporal or era
+    * atom contributes its key set with its own bit. The branches meet
+    * in one union and one `groupBy(subject).agg(bit_or)`, so the
+    * result has one row per key matching any atom — a NULL key
+    * included, as one group — and a query costs one shuffle on the
+    * key whatever its atom count.
+    */
+  private def membership(
+      spark: SparkSession, dir: String, population: String, atoms: Seq[JValue],
+      over: SourceOverrides): DataFrame = {
+    val n = atoms.size
+    def words(bits: Seq[(Int, Column)]): Seq[Column] =
+      (0 until maskWords(n)).map { w =>
+        bits.collect { case (i, on) if i / 64 == w =>
+          when(on, lit(1L << (i % 64))).otherwise(lit(0L))
+        }.reduceOption(_ bitwiseOR _).getOrElse(lit(0L)).as(wordCol(w))
+      }
+    val parsed = atoms.map(a => criterion(spark, dir, population, a, over)).zipWithIndex
+    val rowAtoms = parsed.collect { case (RowPredicate(src, p), i) => (src, i, p) }
+    val scans = rowAtoms.map(_._1).distinct.map { src =>
+      val bits = rowAtoms.collect { case (`src`, i, p) => (i, p) }
+      val (df, key) = keyed(spark, dir, population, src, over)
+      df.filter(bits.map(_._2).reduce(_ || _))
+        .select(key.as("subject") +: words(bits): _*)
+    }
+    val keySets = parsed.collect { case (KeySet(keys), i) =>
+      keys.select(col("subject") +: words(Seq(i -> lit(true))): _*)
+    }
+    val ws = (0 until maskWords(n)).map(wordCol)
+    (scans ++ keySets).reduce(_ unionByName _)
+      .groupBy("subject")
+      .agg(bit_or(col(ws.head)).as(ws.head), ws.tail.map(w => bit_or(col(w)).as(w)): _*)
+  }
+
+  /** Evaluate a JSON query spec → distinct population key set, as one
+    * filter over [[membership]]: every AND-group's mask intersects the
+    * key's membership and the NOT mask does not. Set semantics are
+    * SQL `INTERSECT`/`EXCEPT`'s, a NULL key being one member.
     * `sources` substitutes named frames for the live tables (e.g. an
     * as-of store read as `orders` — see [[SourceOverrides]]).
     */
@@ -204,14 +258,11 @@ object CohortQuery {
         g \ "or" match {
           // non-empty required: an empty OR-group has no defined
           // semantics (vacuously-false would make the whole AND
-          // empty; vacuously-true would drop the criterion) and the
-          // bare reduce below would surface it as an unexplained
-          // empty.reduceLeft 500 instead of this validation error
-          case JArray(atoms) if atoms.nonEmpty =>
-            atoms.map(a => atomKeys(spark, dir, pop, a, sources))
+          // empty; vacuously-true would drop the criterion)
+          case JArray(atoms) if atoms.nonEmpty => atoms
           case JArray(_) =>
             throw new IllegalArgumentException(s"empty 'or' group in: $g")
-          case JNothing      => List(atomKeys(spark, dir, pop, g, sources)) // bare atom = 1-ary OR
+          case JNothing      => List(g) // bare atom = 1-ary OR
           case other         => throw new IllegalArgumentException(s"bad or-group: $other")
         }
       }
@@ -219,13 +270,18 @@ object CohortQuery {
         throw new IllegalArgumentException("query needs at least one criterion in 'and'")
       case other => throw new IllegalArgumentException(s"query needs an 'and' array, got $other")
     }
-    val base = Cohort.and(groups.map(g => g.reduce(_ union _).distinct()))
-    spec \ "not" match {
-      case JArray(atoms) =>
-        atoms.foldLeft(base)((acc, a) => Cohort.not(acc, atomKeys(spark, dir, pop, a, sources)))
-      case JNothing => base
+    val nots = spec \ "not" match {
+      case JArray(atoms) => atoms
+      case JNothing => Nil
       case other    => throw new IllegalArgumentException(s"bad not-list: $other")
     }
+    val atoms = groups.flatten ++ nots
+    val n = atoms.size
+    val starts = groups.scanLeft(0)(_ + _.size)
+    val cnf = groups.zip(starts).map { case (g, s) => hitsAny(maskOf(s until s + g.size, n)) }
+      .reduce(_ && _)
+    val keep = if (nots.isEmpty) cnf else cnf && !hitsAny(maskOf(n - nots.size until n, n))
+    membership(spark, dir, pop, atoms, sources).filter(keep).select("subject")
   }
 
   /** Evaluate a spec → 1-row count (the reference's query result). */
@@ -237,10 +293,10 @@ object CohortQuery {
   /** Per-atom subject counts — the reference exposes every
     * criterion's own population size next to the query result. Spec
     * shape: `{"population": ..., "atoms": [atom, ...]}` with the same
-    * atom grammar as [[population]]. ONE job: each atom's distinct
-    * key set is tagged with its index and unioned, so a single
-    * partial-agg pass counts all atoms; atoms matching nothing still
-    * report 0 via the broadcast index join.
+    * atom grammar as [[population]]. One pass: each atom's count is
+    * the number of keys in [[membership]] with its bit set, all
+    * counted by one global aggregate; an atom matching nothing
+    * reports 0.
     */
   def atomCounts(
       spark: SparkSession, dir: String, json: String,
@@ -252,14 +308,12 @@ object CohortQuery {
       case other => throw new IllegalArgumentException(
         s"atom-counts needs a non-empty 'atoms' array, got $other")
     }
-    val tagged = atoms.zipWithIndex.map { case (a, i) =>
-      atomKeys(spark, dir, pop, a, sources).select(lit(i).as("atom"), col("subject"))
+    val perAtom = atoms.indices.map { i =>
+      org.apache.spark.sql.functions.count(when(hitsAny(maskOf(Seq(i), atoms.size)), lit(1)))
     }
-    val counts = tagged.reduce(_ unionByName _)
-      .groupBy("atom").agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-    spark.range(atoms.size).select(col("id").cast("int").as("atom"))
-      .join(broadcast(counts), Seq("atom"), "left")
-      .select(col("atom"), coalesce(col("n"), lit(0L)).as("n_subjects"))
+    membership(spark, dir, pop, atoms, sources)
+      .agg(array(perAtom: _*).as("n"))
+      .select(posexplode(col("n")).as(Seq("atom", "n_subjects")))
       .orderBy("atom")
   }
 

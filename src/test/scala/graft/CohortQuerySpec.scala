@@ -201,4 +201,152 @@ class CohortQuerySpec extends SparkSpec {
     assert(present(rebuilt) === present(state))
     assert(present(rebuilt) === recompute())
   }
+
+  // ---------------------------------------------- one-pass evaluator
+
+  private def keysOf(df: org.apache.spark.sql.DataFrame): Set[Option[Long]] =
+    df.collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
+
+  test("a NULL subject key is one member, as in SQL INTERSECT/EXCEPT") {
+    import spark.implicits._
+    val rows = Seq[(Long, Option[Long], String, Double)](
+      (1L, None, "1-URGENT", 500.0), (2L, None, "2-HIGH", 50.0),
+      (3L, Some(7L), "1-URGENT", 500.0), (4L, Some(8L), "1-URGENT", 50.0),
+      (5L, Some(9L), "3-MEDIUM", 900.0))
+    val orders = rows.toDF("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
+    def atom(field: String, op: String, v: String) =
+      s"""{"source": "orders", "field": "$field", "op": "$op", "value": $v}"""
+    val urgent = atom("o_orderpriority", "eq", "\"1-URGENT\"")
+    val pricey = atom("o_totalprice", "gt", "100")
+    val high = atom("o_orderpriority", "eq", "\"2-HIGH\"")
+    // the expected sets come from the rows above in plain Scala, with
+    // None standing for the NULL key
+    def matching(p: ((Long, Option[Long], String, Double)) => Boolean): Set[Option[Long]] =
+      rows.filter(p).map(_._2).toSet
+    val urgentK = matching(_._3 == "1-URGENT")
+    val priceyK = matching(_._4 > 100)
+    val highK = matching(_._3 == "2-HIGH")
+    val over = Map("orders" -> orders)
+
+    val both = s"""{"and": [$urgent, $pricey]}"""
+    val expectBoth = urgentK intersect priceyK
+    assert(expectBoth === Set(None, Some(7L)))
+    assert(keysOf(CohortQuery.population(spark, sf, both, over)) === expectBoth)
+    assert(CohortQuery.count(spark, sf, both, over).head().getLong(0) === expectBoth.size)
+
+    // EXCEPT removes the NULL key when the NOT atom matches it too
+    val minus = s"""{"and": [$urgent, $pricey], "not": [$high]}"""
+    val expectMinus = expectBoth diff highK
+    assert(expectMinus === Set(Some(7L)))
+    assert(keysOf(CohortQuery.population(spark, sf, minus, over)) === expectMinus)
+
+    // and every atom counts the NULL key once
+    val counts = CohortQuery.atomCounts(spark, sf, s"""{"atoms": [$urgent, $pricey, $high]}""", over)
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(counts === Seq((0, urgentK.size.toLong), (1, priceyK.size.toLong), (2, highK.size.toLong)))
+  }
+
+  test("70 atoms span two mask words: CNF and atom counts equal a plain-Scala evaluation") {
+    val custKeys = Tables.customer(spark, sf).select("c_custkey").collect().map(_.getLong(0)).toSet
+    def eq(k: Int) = s"""{"source": "customer", "field": "c_custkey", "op": "eq", "value": $k}"""
+    // atoms 0..39 (word 0), 40..68 (word 0 bits 40..63 and word 1),
+    // and the NOT atom 69 (word 1)
+    val g1 = (1 to 40).map(eq)
+    val g2 = (20 to 48).map(eq)
+    val spec = s"""{"and": [{"or": [${g1.mkString(",")}]}, {"or": [${g2.mkString(",")}]}],
+                  | "not": [${eq(25)}]}""".stripMargin
+    val expect = custKeys.filter(k => k >= 1 && k <= 40 && k >= 20 && k <= 48 && k != 25)
+    assert(expect.size > 10, "the fixture lost the customers the spec selects")
+    assert(keysOf(CohortQuery.population(spark, sf, spec)) === expect.map(Some(_)))
+    assert(CohortQuery.count(spark, sf, spec).head().getLong(0) === expect.size)
+
+    val atoms = (1 to 69).map(eq) :+
+      """{"source": "customer", "field": "c_acctbal", "op": "gt", "value": 0}"""
+    val counts = CohortQuery.atomCounts(spark, sf, s"""{"atoms": [${atoms.mkString(",")}]}""")
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val positive = Tables.customer(spark, sf).filter(col("c_acctbal") > 0)
+      .select("c_custkey").distinct().count()
+    assert(counts === (1 to 69).map(k => (k - 1, if (custKeys(k.toLong)) 1L else 0L)) :+ ((69, positive)))
+  }
+
+  test("atom counts keep a zero row per atom, also when no key matches any atom") {
+    val never = """{"source": "orders", "field": "o_orderpriority", "op": "eq", "value": "NEVER"}"""
+    val broke = """{"source": "customer", "field": "c_acctbal", "op": "gt", "value": 1.0e12}"""
+    val counts = CohortQuery.atomCounts(spark, sf, s"""{"atoms": [$never, $broke]}""")
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(counts === Seq((0, 0L), (1, 0L)))
+    assert(CohortQuery.count(spark, sf, s"""{"and": [{"or": [$never, $broke]}]}""")
+      .head().getLong(0) === 0L)
+  }
+
+  test("an orders override reaches every source that reads orders, lineitem's join included") {
+    // the override keeps the even visits and moves each to another
+    // subject; the expected answer is computed from collected rows
+    val live = Tables.orders(spark, sf)
+    val over = live.filter(col("o_orderkey") % 2 === 0)
+      .withColumn("o_custkey", col("o_custkey") + 100000L)
+    val visits = over.select("o_orderkey", "o_custkey", "o_orderpriority").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val returned = Tables.lineitem(spark, sf).filter(col("l_returnflag") === "R")
+      .select("l_orderkey").collect().map(_.getLong(0))
+    val returnsK = returned.flatMap(visits.get).map(_._1).toSet
+    val urgentK = visits.values.collect { case (c, "1-URGENT") => c }.toSet
+    val spec =
+      """{"and": [
+        |  {"source": "lineitem", "field": "l_returnflag", "op": "eq", "value": "R"},
+        |  {"source": "orders", "field": "o_orderpriority", "op": "eq", "value": "1-URGENT"}
+        |]}""".stripMargin
+    val expect = returnsK intersect urgentK
+    assert(expect.nonEmpty, "the fixture lost the subjects the spec selects")
+    assert(keysOf(CohortQuery.population(spark, sf, spec, Map("orders" -> over))) ===
+      expect.map(Some(_)))
+  }
+
+  test("Tables.load re-infers the schema after a file at the same path is rewritten") {
+    import spark.implicits._
+    val dir = tmpDir("tables-memo")
+    val path = s"$dir/t.parquet"
+    Seq(1L, 2L).toDF("a").write.parquet(path)
+    val first = Tables.load(spark, dir, "t")
+    assert(first.schema.fieldNames.toSeq === Seq("a"))
+    assert(first.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
+    Seq(("x", 3)).toDF("a", "b").write.mode("overwrite").parquet(path)
+    val second = Tables.load(spark, dir, "t")
+    assert(second.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("a" -> "string", "b" -> "int"))
+    assert(second.collect().map(r => (r.getString(0), r.getInt(1))).toSeq === Seq(("x", 3)))
+  }
+
+  test("job pin at sf0.01: a built cohort count runs no job, and at most 4 when executed") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = new java.io.File(sf).getParent + "/sf0.01"
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    // listener delivery is asynchronous; events arrive in order, so once
+    // a sentinel job's start is seen, every earlier job's has been too
+    def jobsIn(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      val sentinel = s"$group-sentinel"
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(sentinel), "listener never saw the sentinel job")
+      groups.toArray.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    try {
+      CohortQuery.count(spark, dir, CohortQuery.demoSpec) // first loads infer the schemas
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(jobsIn("pin-build") { df = CohortQuery.count(spark, dir, CohortQuery.demoSpec) } === 0)
+      val executed = jobsIn("pin-exec") { df.collect() }
+      assert(executed <= 4, s"a cohort count ran $executed jobs")
+    } finally sc.removeSparkListener(listener)
+  }
 }

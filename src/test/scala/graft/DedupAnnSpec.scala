@@ -473,6 +473,36 @@ class DedupAnnSpec extends SparkSpec {
     assert(rows(Dedup.ingestAgainstVecIndex(b2, corpus2, root)) === rows(v2))
   }
 
+  test("a geometry sidecar is never overwritten: a second publish of a version throws, the first file stays") {
+    val emb = Tables.embeddings(spark, sf)
+    val root = tmpDir("vecindex-geom") + "/idx"
+    val v = Dedup.commitVecIndex(emb, root)
+    val sidecar = java.nio.file.Paths.get(s"$root/_geom/v$v")
+    val before = java.nio.file.Files.readAllBytes(sidecar)
+    val g = Dedup.vecIndexGeometry(spark, root)
+    intercept[IllegalStateException] {
+      Dedup.writeGeom(spark, root, v, g.copy(tables = g.tables + 1, tau = 0.9))
+    }
+    assert(java.nio.file.Files.readAllBytes(sidecar).sameElements(before),
+      "the second publish replaced the first sidecar")
+    val stray = new java.io.File(s"$root/_geom").list().filter(_.startsWith(".tmp-"))
+    assert(stray.isEmpty, s"the refused publish left temp files: ${stray.mkString(", ")}")
+  }
+
+  test("NaN and infinite tau are refused at every tau entry, before anything is published") {
+    val emb = Tables.embeddings(spark, sf)
+    for (tau <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val root = tmpDir("vecindex-tau") + "/idx"
+      intercept[IllegalArgumentException](Dedup.commitVecIndex(emb, root, tau = tau))
+      assert(!new java.io.File(root).exists(), s"tau=$tau published an index")
+      intercept[IllegalArgumentException](Dedup.embeddingNearDups(emb, tau = tau))
+      intercept[IllegalArgumentException](Dedup.adaptiveNearDups(emb, tau = tau))
+      intercept[IllegalArgumentException](Dedup.collapsedNearDups(emb, tau = tau))
+      intercept[IllegalArgumentException](Dedup.semanticDedup(emb, tau = tau))
+      intercept[IllegalArgumentException](Dedup.incrementalVecDups(emb, emb, tau = tau))
+    }
+  }
+
   test("q6e: collapse-then-LSH pairs expand to exactly the direct all-pairs truth") {
     // plant exact-copy mass: corpus ∪ two id-shifted copies → every
     // vector is a group of 3; near-dup structure otherwise unchanged

@@ -17,6 +17,14 @@ class PlanShapeSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
   }
 
+  /** Shuffle exchanges in a plan string: lines whose node head is
+    * `Exchange` — `BroadcastExchange` and `ReusedExchange` are other
+    * nodes and do not count.
+    */
+  private def exchangeHeads(p: String): Seq[String] =
+    p.linesIterator.map(_.replaceFirst("""^[\s:+|-]*(\*\(\d+\) )?""", ""))
+      .filter(_.startsWith("Exchange ")).toSeq
+
   test("q01: filters and column pruning reach the parquet scan") {
     val p = plan("q01_scan_project")
     assert(p.contains("PushedFilters: [IsNotNull"), s"no pushed filters:\n$p")
@@ -143,7 +151,7 @@ class PlanShapeSpec extends SparkSpec {
     // aggregation — the map itself still never shuffles); any OTHER
     // exchange (a hash shuffle, a second exchange) is the regression
     // this lock exists for.
-    val exchanges = "Exchange ".r.findAllIn(p).size
+    val exchanges = exchangeHeads(p).size
     assert(exchanges <= 1, s"signature computation shuffles more than the spread:\n$p")
     if (exchanges == 1)
       assert(p.contains("Exchange RoundRobinPartitioning"),
@@ -178,6 +186,18 @@ class PlanShapeSpec extends SparkSpec {
   test("cohort AND plans as a chain of semi joins over distinct key sets") {
     val p = plan("q41_cohort_and")
     assert(p.contains("LeftSemi"), s"cohort AND lost its semi-join shape:\n$p")
+  }
+
+  test("q4a: the cohort DSL is one aggregate pass - no semi/anti join, one shuffle on subject") {
+    val p = plan("q4a_cohort_json_dsl")
+    assert(!p.contains("LeftSemi") && !p.contains("LeftAnti"),
+      s"the cohort DSL fell back to set-algebra joins:\n$p")
+    val ex = exchangeHeads(p)
+    assert(ex.size === 2, s"expected the subject shuffle and the count exchange:\n$p")
+    assert(ex.count(_.startsWith("Exchange hashpartitioning(subject#")) === 1,
+      s"no single hash exchange on subject:\n$p")
+    assert(ex.count(_.startsWith("Exchange SinglePartition")) === 1,
+      s"no final count exchange:\n$p")
   }
 
   test("merge is ONE key shuffle (priority union, no join)") {

@@ -37,6 +37,16 @@ class StageSpec extends SparkSpec {
     assert(a.count() === n)
   }
 
+  test("releaseAll empties the vector-index geometry memo; geometry still reads back") {
+    val root = tmpDir("stage-geom") + "/idx"
+    dedup.Dedup.commitVecIndex(Tables.embeddings(spark, sf), root)
+    val g = dedup.Dedup.vecIndexGeometry(spark, root)
+    assert(dedup.Dedup.geomMemoSize > 0)
+    Stage.releaseAll(spark)
+    assert(dedup.Dedup.geomMemoSize === 0, "releaseAll left the geometry memo populated")
+    assert(dedup.Dedup.vecIndexGeometry(spark, root) === g)
+  }
+
   test("re-staging an identical plan does not grow the release queue") {
     // the contract the scaladoc promises: CacheManager dedups the
     // cache ENTRY, but an unconditional enqueue per call would pin
