@@ -430,7 +430,7 @@ object Soak {
     val runPath = new org.apache.hadoop.fs.Path(runDir)
     val runFs = runPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val runBytes = runFs.getContentSummary(runPath).getLength
-    val shardAgg = spark.read.parquet(runDir).groupBy("shard")
+    val shardAgg = graft.sources.Sources.readParquet(spark, runDir).groupBy("shard")
       .agg(count(lit(1)).as("rows"), sum("toks_in_chunk").as("toks"))
       .agg(count(lit(1)), min("rows"), max("rows"), min("toks"), max("toks")).head()
     println(s"[soak] qa3 layout: shards=${shardAgg.getLong(0)}/32 " +

@@ -162,10 +162,11 @@ object Stage {
     ()
   }
 
-  /** Test seam: current release-queue depth (the leak the plan-dedup
-    * in [[track]] bounds).
+  /** Test seam: the frames staged on the persist path, oldest first
+    * (its size is the release-queue depth the plan-dedup in [[track]]
+    * bounds).
     */
-  private[graft] def stagedCount: Int = staged.size()
+  private[graft] def stagedFrames: Seq[DataFrame] = staged.toArray(Array.empty[DataFrame]).toSeq
 
   /** Unpersist every frame staged via the persist path so far (e.g.
     * between batches of a long-lived session) — ACROSS ALL SESSIONS

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Table loaders for the graft star schema.
   *
@@ -17,68 +15,27 @@ import org.apache.spark.sql.types.StructType
   */
 object Tables {
 
-  // Per-session state, created on a session's first load: the graft_*
-  // function registration (once per session — every load() used to
-  // rewrite ~30 registry entries, contending on the session
-  // FunctionRegistry lock under the concurrent serving layer) and the
-  // parquet schema memo below. Weak keys: the map must not pin dead
-  // sessions.
-  private val sessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]())
+  // Sessions whose graft_* functions are registered: once per session
+  // (every load() used to rewrite ~30 registry entries, contending on
+  // the session FunctionRegistry lock under the concurrent serving
+  // layer). Weak keys: the set must not pin dead sessions.
+  private val registered =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  // Session confs that change how a parquet footer maps to Spark types
-  // (or, for mergeSchema, which footers are read): a memoized schema
-  // is only valid under the confs it was inferred with.
-  private val schemaConfs = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.mergeSchema")
-
-  /** What a memoized schema of `path` was inferred from: the path's
-    * length and modification time (for a directory, also those of its
-    * direct children, so an added, removed or rewritten part file
-    * re-infers) and the type-mapping confs.
-    */
-  private def schemaStamp(spark: SparkSession, path: String): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val files = if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st)
-    (files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}") ++
-      schemaConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")).mkString("|")
-  }
-
-  /** Read one table. Parquet schema inference launches a Spark job per
-    * read, so the inferred schema is memoized per session and path
-    * (see [[schemaStamp]] for what invalidates it) and later reads pass
-    * it explicitly. Every call still returns a fresh DataFrame over a
-    * fresh file listing.
+  /** Read one table through [[graft.sources.Sources.readParquet]]: the
+    * schema comes from one driver-side footer read, memoized per
+    * session, so a load runs no Spark job. The first load of a session
+    * also registers the graft_* SQL functions. Every call returns a
+    * fresh DataFrame over a fresh file listing.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val memo = sessions.synchronized {
-      val m = sessions.get(spark)
-      if (m != null) m
-      else {
+    registered.synchronized {
+      if (!registered.containsKey(spark)) {
         graft.functions.VectorExpressions.register(spark)
-        val fresh = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
-        sessions.put(spark, fresh)
-        fresh
+        registered.put(spark, true)
       }
     }
-    val path = s"$dir/$name.parquet"
-    val stamp = schemaStamp(spark, path)
-    val schema = memo.get(path) match {
-      case (s, schema) if s == stamp => schema
-      case _ =>
-        val schema = spark.read.parquet(path).schema
-        memo.put(path, (stamp, schema))
-        schema
-    }
-    spark.read.schema(schema).parquet(path)
+    graft.sources.Sources.readParquet(spark, s"$dir/$name.parquet")
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

@@ -1729,7 +1729,7 @@ object Dedup {
     val g =
       if (f.getFileStatus(p).isDirectory) {
         // pre-r14 sidecar: a 1-row parquet directory
-        val r = spark.read.parquet(geomPath(root, v)).head()
+        val r = graft.sources.Sources.readParquet(spark, geomPath(root, v)).head()
         VecIndexGeom(r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3), r.getBoolean(4))
       } else {
         val in = f.open(p)

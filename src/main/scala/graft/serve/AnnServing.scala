@@ -285,7 +285,7 @@ object AnnServing {
           val p = new org.apache.hadoop.fs.Path(warmGeomPath(root, v))
           if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
           else {
-            val r = spark.read.parquet(warmGeomPath(root, v)).head()
+            val r = graft.sources.Sources.readParquet(spark, warmGeomPath(root, v)).head()
             if (r.getString(0) != stamp) None
             else Some((v, LshGeometry(r.getInt(1), r.getInt(2), r.getBoolean(3)), r.getInt(4)))
           }

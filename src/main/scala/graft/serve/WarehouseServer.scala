@@ -3,7 +3,7 @@ package graft.serve
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsServer}
 import graft.{SparkEntry, Tables}
 import graft.operators.{Cohort, CohortQuery}
-import graft.sources.Snapshots
+import graft.sources.{Snapshots, Sources}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -769,7 +769,8 @@ object WarehouseServer {
             case Some(other)   => throw HttpError(400,
               s"speculative_evolve must be true|false, got '$other'")
           }
-          val batch = spark.read.parquet(checkUnder(src, cfg.dataDir +: cfg.storeRoot.toSeq))
+          val batch =
+            Sources.readParquet(spark, checkUnder(src, cfg.dataDir +: cfg.storeRoot.toSeq))
           val view =
             try Snapshots.withBatch(spark, storeRoot, batch, Seq("o_orderkey"), evolve)
             catch {
@@ -1496,7 +1497,7 @@ object WarehouseServer {
               }
               // driver-side listing only — the freshness check itself
               // costs no Spark job; a stale entry relearns in-request
-              val srcSig = graft.sources.Sources.listingSignature(
+              val srcSig = Sources.listingSignature(
                 spark, s"${cfg.dataDir}/documents.parquet")
               bpeTables.compute(n, (nn, cur) =>
                 if (cur != null && cur._1 == srcSig) cur
@@ -1731,7 +1732,7 @@ object WarehouseServer {
           // commit provenance — free-form string facts stored on the
           // manifest line, surfaced by /store/versions and /status
           val meta: Map[String, String] = parseMetaObject(spec)
-          val df = spark.read.parquet(source)
+          val df = Sources.readParquet(spark, source)
           val version =
             try {
               if (mode == "full") Snapshots.commit(df, storeRoot, statsCols = stats,

@@ -514,7 +514,7 @@ object Snapshots {
     val cols = schemaCols(df.columns.toIndexedSeq)
     manifestState(df.sparkSession, root).lines.lastOption.foreach { case ManifestLine(v, _, rel, _, _) =>
       if (validatedDeltaCols.get(root) == (v, cols)) return
-      val tip = schemaCols(df.sparkSession.read.parquet(s"$root/$rel").columns.toIndexedSeq)
+      val tip = schemaCols(Sources.readParquet(df.sparkSession, s"$root/$rel").columns.toIndexedSeq)
       if (cols != tip) {
         val added = (cols -- tip).toSeq.sorted
         val missing = (tip -- cols).toSeq.sorted
@@ -562,7 +562,7 @@ object Snapshots {
       .getOrElse(throw new IllegalStateException(s"no full snapshot <= $version in $root"))
     val chain = all.filter(_._1 >= baseV)
     val frames = chain.map { case (v, _, rel) =>
-      val seg = spark.read.parquet(s"$root/$rel")
+      val seg = Sources.readParquet(spark, s"$root/$rel")
       // merge keys are the one column class evolution can never drop:
       // a segment without one would merge under a NULL key and corrupt
       // last-writer-wins silently — refuse with the segment named
@@ -660,7 +660,7 @@ object Snapshots {
   def read(spark: SparkSession, root: String, version: Long): DataFrame = {
     val entry = versions(spark, root).find(_._1 == version)
       .getOrElse(throw new IllegalArgumentException(s"no version $version in $root"))
-    spark.read.parquet(s"$root/${entry._3}")
+    Sources.readParquet(spark, s"$root/${entry._3}")
   }
 
   /** Latest committed version (0 when the store is empty). */
@@ -712,7 +712,7 @@ object Snapshots {
       // reads per call on a K-segment chain, growing with every
       // commit), on the micro-batch hot path of both ingest sinks
       .map { case (v, _, rel) =>
-        val seg = spark.read.parquet(s"$root/$rel")
+        val seg = Sources.readParquet(spark, s"$root/$rel")
         // append-only means NO retractions: a segment carrying the
         // tombstone column belongs to a merge-read store, and a raw
         // union would serve retracted rows as live data (or die in
@@ -770,7 +770,7 @@ object Snapshots {
     // sidecar exists to prevent. Reading back is also cheaper: a
     // column-pruned scan of the fresh files vs the whole upstream
     // query again.
-    val df = src.sparkSession.read.parquet(s"$root/$rel")
+    val df = Sources.readParquet(src.sparkSession, s"$root/$rel")
     // ONE agg job for every column's min+max
     val aggs = statsCols.flatMap(c => Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c")))
     val row = df.agg(aggs.head, aggs.tail: _*).collect().head
@@ -923,7 +923,7 @@ object Snapshots {
     */
   private def writeBloomSidecar(
       src: DataFrame, root: String, rel: String, bloomCols: Seq[String]): Unit = {
-    val df = src.sparkSession.read.parquet(s"$root/$rel")
+    val df = Sources.readParquet(src.sparkSession, s"$root/$rel")
     val n = math.max(df.count(), 1L)
     val filters = bloomCols.map(c => c -> df.stat.bloomFilter(col(c), n, 0.01))
     val f = fs(df.sparkSession, root)
@@ -1051,7 +1051,7 @@ object Snapshots {
       // where(lit(false)) collapses to an empty relation in the
       // optimizer, so this is footer reads only, no scan.
       val carriers =
-        entries.filter(e => spark.read.parquet(s"$root/${e._3}").columns.contains(column))
+        entries.filter(e => Sources.readParquet(spark, s"$root/${e._3}").columns.contains(column))
       if (carriers.isEmpty)
         throw new IllegalArgumentException(s"no segment of $root carries column '$column'")
       readChain(spark, root, carriers.head._1, carriers).where(lit(false)).filter(bounded)
@@ -1064,8 +1064,10 @@ object Snapshots {
     * on an evolved chain a segment that predates the column holds
     * only all-null values for it, so no range can match (and keeping
     * it would fail the filter's analysis with the column unresolved).
-    * The schema check is a driver-side footer read, paid only for
-    * stats-kept segments the scan would open anyway; if NO segment
+    * The schema check is a driver-side footer read
+    * ([[Sources.readParquet]], no Spark job; a memo hit after the
+    * segment's first read), paid only for stats-kept segments the
+    * scan would open anyway; if NO segment
     * carries the column the query is a loud error, not a vacuous
     * empty answer.
     */
@@ -1077,10 +1079,10 @@ object Snapshots {
       mayContain(segmentStats(spark, root, rel), column, lo, hi)
     }
     val kept = statsKept.filter { case (_, _, rel) =>
-      spark.read.parquet(s"$root/$rel").columns.contains(column)
+      Sources.readParquet(spark, s"$root/$rel").columns.contains(column)
     }
     if (kept.isEmpty && statsKept.nonEmpty &&
-        !entries.exists(e => spark.read.parquet(s"$root/${e._3}").columns.contains(column)))
+        !entries.exists(e => Sources.readParquet(spark, s"$root/${e._3}").columns.contains(column)))
       throw new IllegalArgumentException(s"no segment of $root carries column '$column'")
     (entries, kept)
   }
@@ -1142,7 +1144,7 @@ object Snapshots {
       // directly on each scan it reaches the parquet row-group stats
       // (zone maps prune files, pushed filters prune row groups)
       val frames = kept.map { case (sv, _, rel) =>
-        val seg = spark.read.parquet(s"$root/$rel")
+        val seg = Sources.readParquet(spark, s"$root/$rel")
         val missingKeys = keys.filterNot(seg.columns.contains)
         if (missingKeys.nonEmpty) throw new IllegalStateException(
           s"segment v$sv of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
@@ -1234,7 +1236,7 @@ object Snapshots {
       // cannot change any surviving row, and on the scan it reaches
       // the parquet row-group dictionary/stats
       val frames = kept.map { case (sv, _, rel) =>
-        val seg = spark.read.parquet(s"$root/$rel")
+        val seg = Sources.readParquet(spark, s"$root/$rel")
         val missingKeys = keys.filterNot(seg.columns.contains)
         if (missingKeys.nonEmpty) throw new IllegalStateException(
           s"segment v$sv of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
@@ -1848,7 +1850,7 @@ object Snapshots {
     val lines = manifestState(spark, root).lines
     require(lines.nonEmpty, s"empty snapshot store at $root")
     lines
-      .map(l => spark.read.parquet(s"$root/${l.rel}").where(lit(false)))
+      .map(l => Sources.readParquet(spark, s"$root/${l.rel}").where(lit(false)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
       .schema
   }
@@ -1865,10 +1867,10 @@ object Snapshots {
     val hit = coalesce(condition, lit(false))
     // ONE footer-read round: the per-segment frames captured here
     // serve the union-schema condition analysis AND the per-segment
-    // schema checks below (re-reading per check would pay a listing +
-    // footer job per segment per pass — hundreds of redundant driver
-    // jobs on a years-long chain)
-    val segFrames = st.lines.map(l => l -> spark.read.parquet(s"$root/${l.rel}"))
+    // schema checks below (re-reading per check would pay a listing
+    // and a schema-memo stat per segment per pass on a years-long
+    // chain)
+    val segFrames = st.lines.map(l => l -> Sources.readParquet(spark, s"$root/${l.rel}"))
     val unionFrame = segFrames.map(_._2.where(lit(false)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val analyzedCond = unionFrame.filter(hit).queryExecution.analyzed.collect {
@@ -1946,7 +1948,7 @@ object Snapshots {
       if (matchable.isEmpty) Map.empty
       else matchable
         .map(l =>
-          withRefCols(spark.read.parquet(s"$root/${l.rel}"), refs, refTypes)
+          withRefCols(Sources.readParquet(spark, s"$root/${l.rel}"), refs, refTypes)
             .where(hit).select(lit(l.v).as("_seg")))
         .reduce(_ unionByName _)
         .groupBy(col("_seg")).agg(count(lit(1)).as("n"))
@@ -1965,7 +1967,7 @@ object Snapshots {
     val attempted = scala.collection.mutable.ArrayBuffer.empty[String]
     val rewritten =
       try st.lines.filter(l => matched.contains(l.v)).map { l =>
-        val seg = spark.read.parquet(s"$root/${l.rel}")
+        val seg = Sources.readParquet(spark, s"$root/${l.rel}")
         val newRel = s"v${l.v}-${java.util.UUID.randomUUID.toString.take(8)}"
         attempted += newRel
         // survivors keep the segment's EXACT schema: ref columns added
@@ -2137,7 +2139,7 @@ object Snapshots {
     val chain = manifestState(spark, root).lines
     require(chain.nonEmpty, s"empty snapshot store at $root")
     val frames = chain.map { case ManifestLine(v, kind, rel, ts, meta) =>
-      val seg = spark.read.parquet(s"$root/$rel")
+      val seg = Sources.readParquet(spark, s"$root/$rel")
       val missingKeys = keys.filterNot(seg.columns.contains)
       if (missingKeys.nonEmpty) throw new IllegalStateException(
         s"segment v$v of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
@@ -2358,7 +2360,7 @@ object Snapshots {
     else {
       val spanKeys = span
         .map { case (_, _, rel) =>
-          spark.read.parquet(s"$root/$rel").select(keys.map(col): _*) }
+          Sources.readParquet(spark, s"$root/$rel").select(keys.map(col): _*) }
         .reduce(_ unionByName _)
         .distinct()
       diffStates(
@@ -2390,7 +2392,7 @@ object Snapshots {
         // advance progress (an operational commit on the output
         // store) actually retries.
         def progressedAt(stx: ManifestState): Boolean = stx.lines.lastOption.exists { l =>
-          spark.read.parquet(s"$outRoot/${l.rel}")
+          Sources.readParquet(spark, s"$outRoot/${l.rel}")
             .agg(max(col("_to_v"))).head().getLong(0) > last
         }
         var st = manifestState(spark, outRoot)

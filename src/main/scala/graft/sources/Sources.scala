@@ -1,6 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink helpers — SURVEY §2.11 (io01–io03).
@@ -16,8 +22,136 @@ object Sources {
 
   // --------------------------------------------------------- parquet
 
+  /** THE parquet reader of graft: every table load, snapshot-segment
+    * read and import-source read goes through here.
+    *
+    * `spark.read.parquet(path)` without a schema infers one, and that
+    * inference launches a Spark job (`mergeSchemasInParallel`) even for
+    * a single footer — on an as-of read, one job per segment of the
+    * chain before a row is scanned. Here the schema is resolved on the
+    * driver instead, from the ONE footer Spark's own inference reads
+    * when `mergeSchema` is off (`_common_metadata`, else `_metadata`,
+    * else the first data file in path order, hidden `_`/`.` names
+    * skipped), converted by Spark's own `readSchemaFromFooter` under the
+    * session's type-mapping confs; the frame is then
+    * `spark.read.schema(s).parquet(path)`. Same schema, no job.
+    *
+    * Resolved schemas are memoized per session and path (see
+    * [[schemaStamp]] for what invalidates an entry); every call still
+    * returns a fresh DataFrame over a fresh file listing.
+    *
+    * Under `spark.sql.parquet.mergeSchema=true` every footer is merged,
+    * so the read keeps Spark's inference. A path that names no file,
+    * or a directory without a data file, also goes to Spark's read,
+    * which raises its usual error.
+    */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) spark.read.parquet(path)
+    else footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  // Per-session schema memo: path → (stamp, schema). Weak keys: the map
+  // must not pin dead sessions. Segment paths of a long-lived store
+  // accumulate (every commit adds one), so a session's memo is dropped
+  // whole once it holds MemoCap paths.
+  private val schemaMemos =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession,
+        java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]())
+  private val MemoCap = 4096
+
+  private def memoOf(spark: SparkSession)
+      : java.util.concurrent.ConcurrentHashMap[String, (String, StructType)] =
+    schemaMemos.synchronized {
+      val m = schemaMemos.get(spark)
+      if (m != null) m
+      else {
+        val fresh = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+        schemaMemos.put(spark, fresh)
+        fresh
+      }
+    }
+
+  /** Test seam: drop `spark`'s schema memo, so the next read of every
+    * path resolves its footer afresh.
+    */
+  private[graft] def forgetSchemas(spark: SparkSession): Unit = {
+    schemaMemos.remove(spark)
+    ()
+  }
+
+  // Session confs that change how a parquet footer maps to Spark types:
+  // a memoized schema is only valid under the confs it was read with.
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** What a memoized schema of a path was read from: the path's length
+    * and modification time (for a directory, also those of its direct
+    * children, so an added, removed or rewritten part file re-reads)
+    * and the type-mapping confs.
+    */
+  private def schemaStamp(spark: SparkSession, st: FileStatus, children: Seq[FileStatus]): String =
+    ((st +: children).map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}") ++
+      schemaConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")).mkString("|")
+
+  /** The schema Spark's inference would give `path`, from one footer
+    * read on the driver; None when the path names no file or holds no
+    * file to read a footer from.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st =
+      try fs.getFileStatus(p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val children = if (st.isDirectory) fs.listStatus(p).toSeq else Nil
+    val stamp = schemaStamp(spark, st, children)
+    val memo = memoOf(spark)
+    memo.get(path) match {
+      case (s, schema) if s == stamp => Some(schema)
+      case _ =>
+        footerFile(fs, st, children).map { f =>
+          val conf = spark.sessionState.newHadoopConf()
+          val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+          val schema = ParquetFileFormat.readSchemaFromFooter(
+            footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          if (memo.size >= MemoCap) memo.clear()
+          memo.put(path, (stamp, schema))
+          schema
+        }
+    }
+  }
+
+  /** The file whose footer Spark's schema inference reads when
+    * `mergeSchema` is off: `_common_metadata`, else `_metadata`, else
+    * the first data file by path, over the leaf files Spark's file
+    * index lists (names starting with `_` or `.` are hidden, except the
+    * two summary files and `_`-names holding `=`, i.e. partition
+    * directories).
+    */
+  private def footerFile(fs: FileSystem, st: FileStatus, children: Seq[FileStatus]): Option[FileStatus] = {
+    if (!st.isDirectory) return Some(st)
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !(name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ||
+          name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE))
+    def leaves(entries: Seq[FileStatus]): Seq[FileStatus] =
+      entries.filterNot(f => hidden(f.getPath.getName)).flatMap { f =>
+        if (f.isDirectory) leaves(fs.listStatus(f.getPath).toSeq) else Seq(f)
+      }
+    val all = leaves(children).sortBy(_.getPath.toString)
+    def named(n: String) = all.find(_.getPath.getName == n)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(all.headOption) // no summary file listed: `all` holds data files only
+  }
 
   /** Order-independent freshness signature of a file tree: per-file
     * (path-relative-to-root × mtime × length) mixes folded with BOTH

@@ -1199,4 +1199,34 @@ class SnapshotsSpec extends SparkSpec {
     overwrite("2")
     assert(Snapshots.latest(spark, root, Seq("id")).count() === 2L)
   }
+
+  test("job pin: asOf and range pruning over an evolved tombstone chain read footers with no job") {
+    val root = tmpDir("snap-jobpin")
+    Snapshots.commit(Seq((1, "a", 10L), (2, "b", 20L), (3, "c", 30L)).toDF("id", "name", "amount"),
+      root, statsCols = Seq("id"))
+    Snapshots.commitDelta(Seq((2, "b", 20L, true), (4, "d", 40L, false))
+      .toDF("id", "name", "amount", "_deleted"), root, statsCols = Seq("id"))
+    Snapshots.commitDelta(Seq((5, "e", 0.5)).toDF("id", "name", "score"), root,
+      evolveSchema = true, statsCols = Seq("id"))
+    // cold reader memo: the commits above resolved every segment's footer
+    graft.sources.Sources.forgetSchemas(spark)
+    var df: DataFrame = null
+    assert(jobsIn("asof-build") { df = Snapshots.asOf(spark, root, 3, Seq("id")) } === 0)
+    assert(df.select("id").as[Int].collect().sorted.toSeq === Seq(1, 3, 4, 5))
+    assert(df.columns.toSet === Set("id", "name", "amount", "score"))
+    graft.sources.Sources.forgetSchemas(spark)
+    var kept: Seq[Long] = Nil
+    assert(jobsIn("range-prune") { kept = Snapshots.prunedTo(spark, root, "id", 4, 9) } === 0)
+    assert(kept === Seq(2L, 3L))
+    // the same pin on a whole range read of an append-only chain
+    val ao = tmpDir("snap-jobpin-ao")
+    Snapshots.commit(Seq((1, "a", 10L)).toDF("id", "name", "amount"), ao, statsCols = Seq("id"))
+    Snapshots.commitDelta(Seq((50, "b", 20L)).toDF("id", "name", "amount"), ao, statsCols = Seq("id"))
+    Snapshots.commitDelta(Seq((100, "c", 0.5)).toDF("id", "name", "score"), ao,
+      evolveSchema = true, statsCols = Seq("id"))
+    graft.sources.Sources.forgetSchemas(spark)
+    var range: DataFrame = null
+    assert(jobsIn("range-build") { range = Snapshots.readAppendOnlyWhere(spark, ao, "id", 40, 200) } === 0)
+    assert(range.select("id").as[Int].collect().sorted.toSeq === Seq(50, 100))
+  }
 }

@@ -248,4 +248,126 @@ class SourcesSpec extends SparkSpec {
     // a missing path stamps as the empty tree, deterministically
     assert(Sources.listingSignature(spark, s"$dir/nope") === Sources.listingSignature(spark, s"$dir/nope2"))
   }
+
+  // ------------------------------------------- readParquet schema parity
+
+  /** `Sources.readParquet`'s schema equals Spark's inferred one for
+    * `path` under the session's current confs, read from a cold memo.
+    */
+  private def assertParity(path: String): org.apache.spark.sql.types.StructType = {
+    Sources.forgetSchemas(spark)
+    val ours = Sources.readParquet(spark, path).schema
+    val spark_ = spark.read.parquet(path).schema
+    assert(ours === spark_, s"schema of $path: footer read\n${ours.treeString}\ninferred\n${spark_.treeString}")
+    ours
+  }
+
+  private def withConf[T](k: String, v: String)(body: => T): T = {
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** One parquet file written by parquet-mr itself, so its footer has
+    * no Spark schema and the type-mapping confs decide the Spark types.
+    */
+  private def writeRaw(file: String, message: String)(fill: org.apache.parquet.example.data.Group => Unit): Unit = {
+    val mt = org.apache.parquet.schema.MessageTypeParser.parseMessageType(message)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+      .withType(mt).build()
+    try {
+      val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(mt).newGroup()
+      fill(g)
+      w.write(g)
+    } finally w.close()
+  }
+
+  test("readParquet: schema parity with Spark's inference on every sf0.001 table") {
+    val tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "documents", "embeddings", "events")
+    tables.foreach(t => assertParity(s"$sf/$t.parquet"))
+    // the session's nanosAsLong pin is what types events.ts
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+      assertParity(s"$sf/events.parquet")
+    }
+  }
+
+  test("readParquet: a 4-part segment with a non-nullable column and metadata siblings, in 0 jobs") {
+    val seg = tmpDir("rp-seg") + "/seg"
+    spark.range(0, 400, 1, 4).select(col("id"), lit(false).as("_deleted"),
+      (col("id") % 7).cast("string").as("k")).write.parquet(seg)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(seg, "_graft_stats.json"), "{}")
+    assert(new java.io.File(seg, "_SUCCESS").exists())
+    assert(new java.io.File(seg).list().count(_.startsWith("part-")) === 4)
+    val schema = assertParity(seg)
+    assert(schema("_deleted").nullable, "the reader relaxes nullability, as Spark's read does")
+    Sources.forgetSchemas(spark)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn("rp-cold") { df = Sources.readParquet(spark, seg) } === 0)
+    assert(jobsIn("rp-inferred") { spark.read.parquet(seg) } >= 1,
+      "Spark's inference ran no job — the pin above proves nothing")
+    assert(df.count() === 400L)
+    // a partitioned directory keeps its inferred partition column
+    val parted = tmpDir("rp-parted") + "/t"
+    spark.range(0, 20).withColumn("p", col("id") % 3).write.partitionBy("p").parquet(parted)
+    assert(assertParity(parted).fieldNames.last === "p")
+  }
+
+  test("readParquet: a zero-row delta segment keeps its schema") {
+    import spark.implicits._
+    val root = tmpDir("rp-empty")
+    graft.sources.Snapshots.commit(Seq((1, "a", 10L)).toDF("id", "name", "amount"), root)
+    val v = graft.sources.Snapshots.commitDelta(
+      Seq.empty[(Int, String, Long, Boolean)].toDF("id", "name", "amount", "_deleted"), root)
+    val rel = graft.sources.Snapshots.versions(spark, root).find(_._1 == v).get._3
+    val schema = assertParity(s"$root/$rel")
+    assert(schema.fieldNames.toSeq === Seq("id", "name", "amount", "_deleted"))
+    assert(Sources.readParquet(spark, s"$root/$rel").count() === 0L)
+  }
+
+  test("readParquet: binaryAsString and inferTimestampNTZ type the footer as Spark does, on and off") {
+    val dir = tmpDir("rp-raw") + "/t"
+    new java.io.File(dir).mkdirs()
+    writeRaw(s"$dir/part-0.parquet",
+      "message m { required binary b; required int64 ts (TIMESTAMP(MICROS,false)); }") { g =>
+      g.append("b", org.apache.parquet.io.api.Binary.fromString("x"))
+      g.append("ts", 1000000L)
+    }
+    def typeOf(c: String) = Sources.readParquet(spark, dir).schema(c).dataType
+    import org.apache.spark.sql.types._
+    // the memo is NOT forgotten between flips: the confs are part of its stamp
+    withConf("spark.sql.parquet.binaryAsString", "true")(assertParity(dir))
+    withConf("spark.sql.parquet.binaryAsString", "true")(assert(typeOf("b") === StringType))
+    withConf("spark.sql.parquet.binaryAsString", "false")(assert(typeOf("b") === BinaryType))
+    withConf("spark.sql.parquet.binaryAsString", "false")(assertParity(dir))
+    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "true")(assertParity(dir))
+    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "true")(
+      assert(typeOf("ts") === TimestampNTZType))
+    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "false")(
+      assert(typeOf("ts") === TimestampType))
+    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "false")(assertParity(dir))
+  }
+
+  test("readParquet: mergeSchema=true merges every footer, as Spark does; off, one footer decides") {
+    import spark.implicits._
+    val dir = tmpDir("rp-merge") + "/t"
+    Seq((1L, "x")).toDF("a", "b").write.parquet(dir)
+    Seq((2L, 0.5)).toDF("a", "c").write.mode("append").parquet(dir)
+    val merged = withConf("spark.sql.parquet.mergeSchema", "true")(assertParity(dir))
+    assert(merged.fieldNames.toSet === Set("a", "b", "c"))
+    assert(assertParity(dir).fieldNames.length === 2)
+  }
+
+  test("readParquet: a directory without a data file, or a missing path, fails as Spark's read does") {
+    val dir = tmpDir("rp-nodata") + "/t"
+    new java.io.File(dir).mkdirs()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_SUCCESS"), "")
+    Seq(dir, s"$dir-missing").foreach { p =>
+      val theirs = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(p))
+      val ours = intercept[org.apache.spark.sql.AnalysisException](Sources.readParquet(spark, p))
+      assert(ours.getCondition === theirs.getCondition)
+    }
+  }
 }

@@ -23,11 +23,43 @@ object SparkSpec {
     graft.functions.VectorExpressions.register(s)
     s
   }
+
+  // job-group id of every job the shared session starts
+  private lazy val jobGroups = {
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    session.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        q.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    })
+    q
+  }
+  private val pins = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The number of Spark jobs `body` starts on this thread (job-pin
+    * specs). Listener delivery is asynchronous but ordered, so once a
+    * sentinel job's start is seen, every earlier job's has been too.
+    */
+  def jobsIn(label: String)(body: => Unit): Int = {
+    val sc = session.sparkContext
+    val groups = jobGroups // registers the listener before `body` runs
+    val group = s"$label-${pins.incrementAndGet()}"
+    sc.setJobGroup(group, label)
+    try body finally sc.clearJobGroup()
+    val sentinel = s"$group-sentinel"
+    sc.setJobGroup(sentinel, sentinel)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30000000000L
+    while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(groups.contains(sentinel), "listener never saw the sentinel job")
+    groups.toArray.count(_ == group)
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf = "/root/testdata/sf0.001"
+  def jobsIn(label: String)(body: => Unit): Int = SparkSpec.jobsIn(label)(body)
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

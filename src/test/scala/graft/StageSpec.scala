@@ -53,14 +53,14 @@ class StageSpec extends SparkSpec {
     // plan trees without bound in a long-lived session re-staging the
     // same frame per batch — a slow driver-heap leak
     Stage.releaseAll()
-    val base = Stage.stagedCount
+    val base = Stage.stagedFrames.size
     (1 to 3).foreach(_ => Stage(Tables.documents(spark, sf).select("doc_id")))
-    assert(Stage.stagedCount === base + 1,
+    assert(Stage.stagedFrames.size === base + 1,
       "identical plans must be tracked once")
     Stage(Tables.documents(spark, sf).select("doc_id", "lang"))
-    assert(Stage.stagedCount === base + 2, "a genuinely new plan must still be tracked")
+    assert(Stage.stagedFrames.size === base + 2, "a genuinely new plan must still be tracked")
     Stage.releaseAll()
-    assert(Stage.stagedCount === 0)
+    assert(Stage.stagedFrames.size === 0)
   }
 
   test("graft.checkpointDir switches staging to a reliable checkpoint") {
@@ -175,5 +175,33 @@ class StageSpec extends SparkSpec {
       Stage.releaseAll(spark)
       spark.conf.unset("graft.checkpointDir")
     }
+  }
+
+  test("Stage.lazily: after the first action of qa2 and of qa3 every staged partition is cached") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val sc = spark.sparkContext
+    def assertFullyCached(query: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val rel = df.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }
+        .getOrElse(fail(s"$query: a staged frame is not a cached relation"))
+      assert(rel.cacheBuilder.isCachedColumnBuffersLoaded, s"$query: staged relation never materialized")
+      val rdd = rel.cacheBuilder.cachedColumnBuffers
+      val info = sc.getRDDStorageInfo.find(_.id == rdd.id)
+        .getOrElse(fail(s"$query: no block of the staged relation is stored"))
+      assert(info.numCachedPartitions === rdd.getNumPartitions,
+        s"$query: ${info.numCachedPartitions} of ${rdd.getNumPartitions} staged partitions cached")
+    }
+    // qa2's first action is semanticDedup's probe job, run while the
+    // query is built; qa3 builds without an action, so its first is the
+    // query's own
+    Seq("qa2_curate_semantic" -> false, "qa3_training_run" -> true).foreach { case (q, collect) =>
+      Stage.releaseAll(spark)
+      spark.catalog.clearCache()
+      val df = SparkEntry.queries(q)(spark, sf)
+      if (collect) df.collect()
+      val staged = Stage.stagedFrames.filter(_.sparkSession eq spark)
+      assert(staged.nonEmpty, s"$q staged nothing")
+      staged.foreach(assertFullyCached(q, _))
+    }
+    Stage.releaseAll(spark)
   }
 }
