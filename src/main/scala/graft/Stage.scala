@@ -181,7 +181,8 @@ object Stage {
     * graft.checkpointDir, reclaimed with the directory. The vector
     * index geometry memo is cleared too (it is keyed by index root,
     * not by session, so every release clears all of it; later
-    * lookups re-read the sidecar files).
+    * lookups re-read the sidecar files). The cohort path's source
+    * images are unpersisted and forgotten with their session's stages.
     */
   def releaseAll(): Unit = releaseFor(None)
 
@@ -216,6 +217,7 @@ object Stage {
       if (s.forall(_ eq it.next()._2.sparkSession)) it.remove()
     }
     graft.dedup.Dedup.clearGeomMemo()
+    graft.operators.CohortQuery.releaseImages(s)
   }
 
   /** Snapshot WITH lineage truncation — for frames whose recompute

@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -33,7 +35,11 @@ import org.json4s.jackson.JsonMethods
   * atom membership, and the CNF is one filter over that mask. The
   * answers are the hand-composed [[Cohort]] combinators' (which stay
   * as the independent cross-check), except that a NULL key counts as
-  * one member, as in SQL `INTERSECT`/`EXCEPT`.
+  * one member, as in SQL `INTERSECT`/`EXCEPT`. A source no override
+  * replaces is scanned from its per-session image, the live frame
+  * hash-partitioned on the population key and cached once per table
+  * version, so a query over images runs no join and no shuffle before
+  * its count.
   */
 object CohortQuery {
 
@@ -54,29 +60,105 @@ object CohortQuery {
     * rows to the population: `subject` maps every source to
     * c_custkey, `visit` to o_orderkey, `user` (the event stream's
     * subject axis, the one typed temporal/era atoms key by) to user_id.
+    * A pair none of whose tables is overridden scans its [[image]];
+    * an override (as-of, tag, speculative import) gets the live frame.
     */
   private def keyed(
       spark: SparkSession, dir: String, population: String, source: String,
       over: SourceOverrides): (DataFrame, Column) = {
-    def orders = resolve(over, "orders")(Tables.orders(spark, dir))
-    def lineitem = resolve(over, "lineitem")(Tables.lineitem(spark, dir))
-    (population, source) match {
-      case ("subject", "customer") =>
-        (resolve(over, "customer")(Tables.customer(spark, dir)), col("c_custkey"))
-      case ("subject", "orders") => (orders, col("o_custkey"))
-      case ("subject", "lineitem") =>
-        // measurements hang off visits; key them to the visit's subject
-        (lineitem.join(orders.select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey")), col("o_custkey"))
-      case ("visit", "orders")   => (orders, col("o_orderkey"))
-      case ("visit", "lineitem") => (lineitem, col("l_orderkey"))
-      case ("user", "events") =>
-        (resolve(over, "events")(Tables.events(spark, dir)), col("user_id"))
+    val (tables, key) = (population, source) match {
+      case ("subject", "customer") => (Seq("customer"), "c_custkey")
+      case ("subject", "orders")   => (Seq("orders"), "o_custkey")
+      case ("subject", "lineitem") => (Seq("lineitem", "orders"), "o_custkey")
+      case ("visit", "orders")     => (Seq("orders"), "o_orderkey")
+      case ("visit", "lineitem")   => (Seq("lineitem"), "l_orderkey")
+      case ("user", "events")      => (Seq("events"), "user_id")
       case ("subject" | "visit" | "user", s) =>
         throw new IllegalArgumentException(s"unknown $population source: $s")
       case (p, _) => throw new IllegalArgumentException(s"unknown population: $p")
     }
+    def table(name: String): DataFrame = resolve(over, name)(
+      if (name == "events") Tables.events(spark, dir) else Tables.load(spark, dir, name))
+    def frame: DataFrame = (population, source) match {
+      // measurements hang off visits; key them to the visit's subject
+      case ("subject", "lineitem") =>
+        table("lineitem").join(table("orders").select("o_orderkey", "o_custkey"),
+          col("l_orderkey") === col("o_orderkey"))
+      case _ => table(source)
+    }
+    val df = if (tables.exists(over.contains)) frame
+      else image(spark, dir, population, source, tables, key)(frame)
+    (df, col(key))
   }
+
+  // ------------------------------------------------------------ images
+  //
+  // An image is a (population, source) pair's live frame, hash-
+  // partitioned on its key into the session's pinned parallelism and
+  // persisted: the lineitem⋈orders join and the orders broadcast run
+  // once per table version instead of once per query, scans run one
+  // task per partition instead of one per row group, and, since every
+  // image of a population shares HashPartitioning(key, n), the
+  // membership union needs no shuffle before its `bit_or` aggregate.
+
+  private final case class ImageKey(
+      spark: SparkSession, dir: String, population: String, source: String)
+  private final case class Image(stamp: String, partitions: Int, frame: DataFrame)
+
+  // Session-scoped like the parquet schema memo; an entry pins its
+  // session until Stage.releaseAll drops it.
+  private val images = new java.util.concurrent.ConcurrentHashMap[ImageKey, Image]()
+
+  /** The persisted image of `live`: reused while the listing signature
+    * of every table it reads and the partition count are unchanged and
+    * its cache entry lives (`clearCache()` drops it), and rebuilt
+    * otherwise. The stale entry is unpersisted first: its plan names
+    * the same files, so the cache manager would substitute its rows
+    * into the new image. The persist is lazy: the first query that
+    * scans the image fills it, so building a query runs no job.
+    */
+  private def image(
+      spark: SparkSession, dir: String, population: String, source: String,
+      tables: Seq[String], key: String)(live: => DataFrame): DataFrame = {
+    val n = Tables.pinnedParallelism(spark)
+    val stamp = (tables.map(t => graft.sources.Sources.listingSignature(spark, s"$dir/$t.parquet"))
+      :+ s"n$n").mkString("|")
+    images.compute(ImageKey(spark, dir, population, source), (_, old) =>
+      if (old != null && old.stamp == stamp && old.frame.storageLevel != StorageLevel.NONE) old
+      else {
+        if (old != null) old.frame.unpersist(blocking = false)
+        Image(stamp, n, live.repartition(n, col(key)).persist(StorageLevel.MEMORY_AND_DISK))
+      }).frame
+  }
+
+  /** One live image as `/status` reports it. */
+  final case class ImageInfo(population: String, source: String, partitions: Int, cachedBytes: Long)
+
+  /** The live images of `spark` over `dir`, with the bytes their cached
+    * blocks hold (memory plus disk; 0 until a scan has filled every
+    * partition). Reads the memo and Spark's storage report only; runs no job.
+    */
+  def imageInfo(spark: SparkSession, dir: String): Seq[ImageInfo] = {
+    import scala.jdk.CollectionConverters._
+    val stored = spark.sparkContext.getRDDStorageInfo.map(r => r.id -> (r.memSize + r.diskSize)).toMap
+    images.asScala.toSeq.collect {
+      case (k, img) if (k.spark eq spark) && k.dir == dir &&
+          img.frame.storageLevel != StorageLevel.NONE =>
+        val bytes = img.frame.queryExecution.withCachedData.collectFirst {
+          case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+            stored.getOrElse(r.cacheBuilder.cachedColumnBuffers.id, 0L)
+        }.getOrElse(0L)
+        ImageInfo(k.population, k.source, img.partitions, bytes)
+    }.sortBy(i => (i.population, i.source))
+  }
+
+  /** Unpersist and forget the images of `spark`, or of every session. */
+  private[graft] def releaseImages(spark: Option[SparkSession]): Unit =
+    images.entrySet().removeIf { e =>
+      val drop = spark.forall(_ eq e.getKey.spark)
+      if (drop) e.getValue.frame.unpersist(blocking = false)
+      drop
+    }
 
   private def lit0(v: JValue): Any = v match {
     case JString(s)  => s
@@ -211,8 +293,10 @@ object CohortQuery {
     * atom contributes its key set with its own bit. The branches meet
     * in one union and one `groupBy(subject).agg(bit_or)`, so the
     * result has one row per key matching any atom — a NULL key
-    * included, as one group — and a query costs one shuffle on the
-    * key whatever its atom count.
+    * included, as one group. When every branch scans an image, the
+    * branches share the key's hash partitioning and the aggregate
+    * needs no shuffle; a live (overridden) source or a temporal/era
+    * key set adds one shuffle on the key, whatever the atom count.
     */
   private def membership(
       spark: SparkSession, dir: String, population: String, atoms: Seq[JValue],

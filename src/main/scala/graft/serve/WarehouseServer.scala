@@ -647,7 +647,7 @@ object WarehouseServer {
         ("links" -> List(
           ("href" -> "/health") ~ ("method" -> "GET") ~ ("rel" -> "health"),
           ("href" -> "/status") ~ ("method" -> "GET") ~
-            ("rel" -> "observability: per-endpoint counts/latency, ann index, store tip"),
+            ("rel" -> "observability: per-endpoint counts/latency, ann index, store tip, cohort images"),
           ("href" -> "/tables") ~ ("method" -> "GET") ~ ("rel" -> "tables"),
           ("href" -> "/cohort/query") ~ ("method" -> "POST") ~
             ("rel" -> "cohort-count") ~ ("body" -> "cohort DSL (see README)") ~
@@ -1203,12 +1203,19 @@ object WarehouseServer {
                 ("built_at_version" -> cs.builtAtVersion) ~
                 ("applied_batches" -> cs.appliedBatches)
           }
+          // the cohort path's cached source images (session-scoped:
+          // they outlive this server and serve the next one)
+          val images = JArray(CohortQuery.imageInfo(spark, cfg.dataDir).toList.map { i =>
+            ("population" -> i.population) ~ ("source" -> i.source) ~
+              ("partitions" -> i.partitions) ~ ("cached_bytes" -> i.cachedBytes): JValue
+          })
           ("uptime_ms" -> (System.currentTimeMillis() - startedAtMs)) ~
             ("active_job_groups" -> JArray(active.asScala.toList.sorted.map(JString(_)))) ~
             ("endpoints" -> endpoints) ~
             ("ann" -> ann) ~
             ("store" -> store) ~
-            ("cohort_state" -> cohort)
+            ("cohort_state" -> cohort) ~
+            ("cohort_images" -> images)
         case ("GET", "/tables") => tablesDoc
         case ("POST", "/cohort/query") =>
           scalar(CohortQuery.count(spark, cfg.dataDir, body(ex, cfg.maxBodyBytes),

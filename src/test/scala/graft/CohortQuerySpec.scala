@@ -298,8 +298,15 @@ class CohortQuerySpec extends SparkSpec {
         |]}""".stripMargin
     val expect = returnsK intersect urgentK
     assert(expect.nonEmpty, "the fixture lost the subjects the spec selects")
+    // warm the live images of both sources first: a memo hit must
+    // never shadow the override, nor the override poison the memo
+    val liveKeys = keysOf(CohortQuery.population(spark, sf, spec))
+    assert(Set("lineitem", "orders").subsetOf(CohortQuery.imageInfo(spark, sf).map(_.source).toSet),
+      "the live query built no image")
+    assert(liveKeys !== expect.map(Some(_)), "the override must change the answer")
     assert(keysOf(CohortQuery.population(spark, sf, spec, Map("orders" -> over))) ===
       expect.map(Some(_)))
+    assert(keysOf(CohortQuery.population(spark, sf, spec)) === liveKeys)
   }
 
   test("Tables.load re-infers the schema after a file at the same path is rewritten") {
@@ -317,14 +324,86 @@ class CohortQuerySpec extends SparkSpec {
     assert(second.collect().map(r => (r.getString(0), r.getInt(1))).toSeq === Seq(("x", 3)))
   }
 
-  test("job pin at sf0.01: a built cohort count runs no job, and at most 4 when executed") {
+  test("job pin at sf0.01: a built cohort count runs no job on a cold memo, and at most 2 on warm images") {
     val dir = new java.io.File(sf).getParent + "/sf0.01"
-    // cold reader memo: the first loads of the session read footers on
-    // the driver, so even they run no job
+    // cold reader and image memos: a first load reads its footer
+    // without a Spark job and an image persists lazily, so even the
+    // first build runs no job
     graft.sources.Sources.forgetSchemas(spark)
+    CohortQuery.releaseImages(Some(spark))
     var df: org.apache.spark.sql.DataFrame = null
     assert(jobsIn("pin-build") { df = CohortQuery.count(spark, dir, CohortQuery.demoSpec) } === 0)
-    val executed = jobsIn("pin-exec") { df.collect() }
-    assert(executed <= 4, s"a cohort count ran $executed jobs")
+    val answer = df.collect().toSeq // fills the images
+    var warm: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn("pin-build-warm") { warm = CohortQuery.count(spark, dir, CohortQuery.demoSpec) } === 0)
+    var again: Seq[org.apache.spark.sql.Row] = Nil
+    val executed = jobsIn("pin-exec") { again = warm.collect().toSeq }
+    assert(again === answer)
+    assert(executed <= 2, s"a cohort count on warm images ran $executed jobs")
+  }
+
+  // ------------------------------------------------------ source images
+
+  /** A private copy of the sf0.001 tables a test may rewrite. */
+  private def tableCopy(prefix: String): String = {
+    val dir = tmpDir(prefix)
+    Seq("customer", "orders", "lineitem").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    }
+    dir
+  }
+
+  private val richUrgent =
+    """{"and": [
+      |  {"source": "customer", "field": "c_acctbal", "op": "gt", "value": 0},
+      |  {"or": [{"source": "orders", "field": "o_orderpriority", "op": "eq", "value": "1-URGENT"},
+      |          {"source": "lineitem", "field": "l_returnflag", "op": "eq", "value": "R"}]}
+      |]}""".stripMargin
+
+  /** [[richUrgent]] in plain Scala over the tables' collected rows. */
+  private def richUrgentByHand(dir: String): Long = {
+    val rich = Tables.customer(spark, dir).filter(col("c_acctbal") > 0)
+      .select("c_custkey").collect().map(_.getLong(0)).toSet
+    val custOf = Tables.orders(spark, dir).select("o_orderkey", "o_custkey", "o_orderpriority")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val urgent = custOf.values.collect { case (c, "1-URGENT") => c }.toSet
+    val returned = Tables.lineitem(spark, dir).filter(col("l_returnflag") === "R")
+      .select("l_orderkey").collect().flatMap(r => custOf.get(r.getLong(0)).map(_._1)).toSet
+    (rich intersect (urgent union returned)).size.toLong
+  }
+
+  test("a rewritten table rebuilds its image: the next count answers the new rows") {
+    val dir = tableCopy("cohort-image-rewrite")
+    val before = CohortQuery.count(spark, dir, richUrgent).head().getLong(0)
+    assert(before === richUrgentByHand(dir))
+    assert(CohortQuery.imageInfo(spark, dir).map(_.source).toSet === Set("customer", "lineitem", "orders"))
+    // keep the odd customers, each with its balance negated, and swap
+    // the new file in outside Spark (a Spark write to the same path
+    // would re-cache the plans reading it by itself)
+    val old = Tables.customer(spark, dir)
+    val rows = old.filter(col("c_custkey") % 2 === 1)
+      .withColumn("c_acctbal", -col("c_acctbal")).collect()
+    val staged = s"${tmpDir("cohort-image-new")}/customer.parquet"
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), old.schema).write.parquet(staged)
+    val path = java.nio.file.Paths.get(s"$dir/customer.parquet")
+    java.nio.file.Files.delete(path)
+    java.nio.file.Files.move(java.nio.file.Paths.get(staged), path)
+    val after = CohortQuery.count(spark, dir, richUrgent).head().getLong(0)
+    assert(after === richUrgentByHand(dir))
+    assert(after !== before, "the rewrite must change the answer")
+  }
+
+  test("clearCache drops the images; the next count re-persists them and answers the same") {
+    val dir = tableCopy("cohort-image-clear")
+    val first = CohortQuery.count(spark, dir, richUrgent).head().getLong(0)
+    assert(CohortQuery.imageInfo(spark, dir).size === 3)
+    spark.catalog.clearCache()
+    assert(CohortQuery.imageInfo(spark, dir).isEmpty, "a cleared image still reads as persisted")
+    assert(CohortQuery.count(spark, dir, richUrgent).head().getLong(0) === first)
+    val infos = CohortQuery.imageInfo(spark, dir)
+    assert(infos.map(_.source).toSet === Set("customer", "lineitem", "orders"))
+    assert(infos.forall(i => i.partitions == Tables.pinnedParallelism(spark) && i.cachedBytes > 0),
+      s"images not re-persisted and filled: $infos")
   }
 }

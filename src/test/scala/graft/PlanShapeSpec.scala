@@ -188,16 +188,47 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("LeftSemi"), s"cohort AND lost its semi-join shape:\n$p")
   }
 
-  test("q4a: the cohort DSL is one aggregate pass - no semi/anti join, one shuffle on subject") {
-    val p = plan("q4a_cohort_json_dsl")
-    assert(!p.contains("LeftSemi") && !p.contains("LeftAnti"),
-      s"the cohort DSL fell back to set-algebra joins:\n$p")
-    val ex = exchangeHeads(p)
-    assert(ex.size === 2, s"expected the subject shuffle and the count exchange:\n$p")
-    assert(ex.count(_.startsWith("Exchange hashpartitioning(subject#")) === 1,
-      s"no single hash exchange on subject:\n$p")
-    assert(ex.count(_.startsWith("Exchange SinglePartition")) === 1,
-      s"no final count exchange:\n$p")
+  test("q4a: on warm images the cohort DSL is one aggregate pass - no join, broadcast or shuffle before the count") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    object Walk extends AdaptiveSparkPlanHelper
+    // the first run builds and fills the images; the second build is
+    // planned over them. An image scan is a leaf: the image's own plan
+    // is an inner child the walk below does not enter.
+    spark.catalog.clearCache()
+    SparkEntry.queries("q4a_cohort_json_dsl")(spark, sf).collect()
+    val plan = SparkEntry.queries("q4a_cohort_json_dsl")(spark, sf).queryExecution.executedPlan
+    val p = plan.toString
+    def shuffles(sp: SparkPlan) = Walk.collect(sp) { case e: ShuffleExchangeExec => e }
+    val own = shuffles(plan)
+    assert(own.size === 1 && own.head.outputPartitioning === SinglePartition,
+      s"the query's own plan must hold only the count exchange:\n$p")
+    assert(Walk.collect(plan) { case j: BaseJoinExec => j }.isEmpty,
+      s"a join (semi/anti set algebra or the lineitem-orders join) is planned per query:\n$p")
+    assert(Walk.collect(plan) { case u: UnionExec => u }.size === 1, s"no membership union:\n$p")
+    assert(Walk.collect(plan) {
+      case a: HashAggregateExec if a.aggregateExpressions.exists(_.toString.contains("bit_or")) => a
+    }.nonEmpty, s"no bit_or membership aggregate:\n$p")
+    // the orders, lineitem-orders and customer images, each hash-
+    // partitioned once on its subject key into the pinned parallelism
+    val scans = Walk.collect(plan) { case s: InMemoryTableScanExec => s }
+    assert(scans.size === 3, s"expected one image scan per source:\n$p")
+    val n = Tables.pinnedParallelism(spark)
+    scans.foreach { s =>
+      val inner = s.relation.cachedPlan
+      val keys = shuffles(inner).map(_.outputPartitioning).collect {
+        case h: HashPartitioning if h.numPartitions == n => h.expressions.map(_.toString.takeWhile(_ != '#'))
+      }
+      assert(keys.size === 1 && shuffles(inner).size === 1, s"image not hash-partitioned once:\n$inner")
+      assert(Set(Seq("o_custkey"), Seq("c_custkey"))(keys.head), s"image partitioned off its key:\n$inner")
+    }
+    assert(scans.count(s => Walk.collect(s.relation.cachedPlan) { case j: BroadcastHashJoinExec => j }
+      .nonEmpty) === 1, s"the lineitem-orders join must live inside its image only:\n$p")
   }
 
   test("merge is ONE key shuffle (priority union, no join)") {

@@ -1766,6 +1766,38 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally srv.close()
   }
 
+  test("/status lists the cohort images: one appears after the first /cohort/query and outlives the server") {
+    val dir = tmpDir("serve-images")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/customer.parquet"),
+      java.nio.file.Paths.get(s"$dir/customer.parquet"))
+    val srv = WarehouseServer.start(spark, WarehouseServer.Config(dataDir = dir))
+    try {
+      val b = s"http://127.0.0.1:${srv.port}"
+      def images(): List[JValue] = {
+        val r = client.send(HttpRequest.newBuilder(URI.create(s"$b/status")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200)
+        (JsonMethods.parse(r.body()) \ "cohort_images").asInstanceOf[JArray].arr
+      }
+      assert(images() === Nil)
+      val spec = """{"and": [{"source": "customer", "field": "c_acctbal", "op": "gt", "value": 0}]}"""
+      val r = client.send(HttpRequest.newBuilder(URI.create(s"$b/cohort/query"))
+        .POST(HttpRequest.BodyPublishers.ofString(spec, UTF_8)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200)
+      assert(longOf(JsonMethods.parse(r.body()) \ "n_subjects") ===
+        Tables.customer(spark, dir).filter("c_acctbal > 0").select("c_custkey").distinct().count())
+      val imgs = images()
+      assert(imgs.size == 1, s"expected the customer image alone: $imgs")
+      val img = imgs.head
+      assert(img \ "population" == JString("subject") && img \ "source" == JString("customer"))
+      assert(longOf(img \ "partitions") === Tables.pinnedParallelism(spark).toLong)
+      assert(longOf(img \ "cached_bytes") > 0L)
+    } finally srv.close()
+    // session-scoped: a restarted server on this session reuses it
+    assert(CohortQuery.imageInfo(spark, dir).map(_.source) === Seq("customer"))
+  }
+
   test("/dedup/check_vec screens a posted embedding against the persisted vector index") {
     val corpusRoot = s"${tmpDir("serve-vcheck")}/corpus"
     val indexRoot = s"${tmpDir("serve-vcheck")}/index"

@@ -38,13 +38,24 @@ class StageSpec extends SparkSpec {
   }
 
   test("releaseAll empties the vector-index geometry memo; geometry still reads back") {
+    import operators.CohortQuery
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val root = tmpDir("stage-geom") + "/idx"
     dedup.Dedup.commitVecIndex(Tables.embeddings(spark, sf), root)
     val g = dedup.Dedup.vecIndexGeometry(spark, root)
     assert(dedup.Dedup.geomMemoSize > 0)
+    // the cohort path's image memo is released the same way
+    val cohort = CohortQuery.count(spark, sf, CohortQuery.demoSpec)
+    val n = cohort.head().getLong(0)
+    val images = cohort.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder }
+    assert(images.nonEmpty && images.forall(_.isCachedColumnBuffersLoaded), "the count filled no image")
+    assert(CohortQuery.imageInfo(spark, sf).nonEmpty)
     Stage.releaseAll(spark)
     assert(dedup.Dedup.geomMemoSize === 0, "releaseAll left the geometry memo populated")
     assert(dedup.Dedup.vecIndexGeometry(spark, root) === g)
+    assert(CohortQuery.imageInfo(spark, sf).isEmpty, "releaseAll left the image memo populated")
+    assert(!images.exists(_.isCachedColumnBuffersLoaded), "releaseAll left an image persisted")
+    assert(CohortQuery.count(spark, sf, CohortQuery.demoSpec).head().getLong(0) === n)
   }
 
   test("re-staging an identical plan does not grow the release queue") {
