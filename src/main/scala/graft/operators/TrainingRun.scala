@@ -200,7 +200,7 @@ object TrainingRun {
     // the caller deletes or overwrites the run directory (it is
     // chunk-count sized — tiny).
     graft.Stage.cut(
-      spark.read.schema(schema).parquet(path)
+      graft.sources.Sources.readParquet(spark, path, schema)
         .groupBy("shard", "chunk")
         .agg(count(lit(1)).as("n_docs"), sum("toks_in_chunk").as("n_tokens")))
 

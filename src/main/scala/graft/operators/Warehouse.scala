@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *    item-group analog): subtree counts for every node of the
   *    hierarchy in ONE rollup pass, not one query per level.
   *
-  * Scale: the snapshot queries read base + delta parquet and shuffle
-  * once on the merge key; merge is one full-outer-shaped shuffle on
+  * Scale: the snapshot queries scan the base in place and shuffle
+  * only the delta rows on the merge key (the base anti-joins the
+  * broadcast delta keys); merge is one full-outer-shaped shuffle on
   * the key; the tree query is a single rollup aggregation (map-side
   * partial per grouping set).
   */
@@ -31,8 +32,10 @@ object Warehouse {
   /** MERGE an update batch into `target`, keyed by `keys`: an update
     * row replaces the target row with the same key, a row with
     * `_deleted = true` retracts it, and unmatched update rows insert.
-    * One shuffle on `keys` (priority-union + window rank — the same
-    * merge shape [[Snapshots.asOf]] uses for its delta chain).
+    * One shuffle on `keys` (priority-union + window rank), target rows
+    * included, so duplicate keys in the target also collapse to one
+    * row — unlike [[Snapshots.asOf]], which leaves its base in place
+    * and ranks only the delta rows.
     */
   def merge(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
     val t = Snapshots.normDeleted(target).withColumn("_src", lit(0))

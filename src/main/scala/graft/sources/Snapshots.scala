@@ -32,10 +32,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * - `asOf(version)` = latest full snapshot ≤ version, then the delta
   *   chain up to `version` applied key-wise, last writer wins.
   *
-  * Scale: an as-of read is one union of parquet scans plus ONE shuffle
-  * on the merge key (window rank) — delta files are small relative to
-  * the base, and a periodic `compact` turns a long chain back into a
-  * full snapshot. Manifests and data files are immutable once written
+  * Scale: an as-of read leaves the full snapshot in place. The deltas
+  * since it are read as one scan (one per distinct schema), resolved
+  * last-writer-wins by a window on the merge key over the delta rows
+  * only, and the base keeps the rows whose key no delta touches — an
+  * anti join that Spark broadcasts when the delta keys are small, as
+  * an incremental import's are. A one-segment chain is the base scan
+  * alone. A periodic `compact` turns a long chain back into a full
+  * snapshot. Manifests and data files are immutable once written
   * (same as any log-structured table format): a commit publishes a NEW
   * `_manifest.v<N>` file and readers resolve the latest by listing, so
   * a reader concurrent with a commit sees the previous complete
@@ -47,8 +51,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[appendManifest]] for the exact protocol and its fallbacks.
   *
   * Each commit is assumed to carry at most one row per merge key (the
-  * reference's import batches do); duplicate keys WITHIN one version
-  * would tie in the last-writer-wins rank.
+  * reference's import batches do). Duplicate keys within one delta tie
+  * in the last-writer-wins rank and one of them survives; duplicate
+  * keys within a full snapshot are not deduplicated — a read returns
+  * every such row the deltas leave in place.
   */
 object Snapshots {
 
@@ -359,9 +365,10 @@ object Snapshots {
     else df.withColumn("_deleted", lit(false))
 
   /** Last-writer-wins resolution: keep the row with the highest
-    * `prioCol` per key, drop tombstones. ONE shuffle on `keys` — the
-    * single merge shape shared by [[asOf]]'s delta chain and
-    * [[graft.operators.Warehouse.merge]]'s update batches.
+    * `prioCol` per key, drop tombstones. ONE shuffle on `keys` over
+    * every row it is given — so the store merge ([[mergeChain]]) hands
+    * it the delta rows only, and [[graft.operators.Warehouse.merge]]
+    * the target and its update batch.
     */
   private[graft] def lastWriterWins(
       merged: DataFrame, keys: Seq[String], prioCol: String): DataFrame = {
@@ -370,6 +377,81 @@ object Snapshots {
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1 && !col("_deleted"))
       .drop("_rn", prioCol, "_deleted")
+  }
+
+  /** THE merge of every store read: `base ⋉̸ keys(deltas) ∪
+    * lastWriterWins(deltas)`. `base` is a full snapshot or merged view
+    * (its tombstones are dropped, its rows are not deduplicated);
+    * `deltas` are normalized ([[normDeleted]]) rows carrying their
+    * version in `_v`. A base row survives unless some delta row has its
+    * key, compared null-safely on every merge key, so a NULL key is
+    * superseded like any other. The anti join carries no hint: Spark
+    * broadcasts the delta keys when they are small (AQE re-plans on
+    * their measured size) and shuffles both sides otherwise. With no
+    * deltas the base is returned as it is, with no merge; with no base
+    * the deltas' resolution is the whole answer.
+    */
+  private def mergeChain(
+      base: Option[DataFrame], deltas: Option[DataFrame], keys: Seq[String]): DataFrame = {
+    val live = base.map(b =>
+      if (b.columns.contains("_deleted")) normDeleted(b).filter(!col("_deleted")).drop("_deleted")
+      else b)
+    (live, deltas) match {
+      case (Some(b), None) => b
+      case (None, Some(d)) => lastWriterWins(d, keys, "_v")
+      case (Some(b), Some(d)) =>
+        val touched = d.select(keys.zipWithIndex.map { case (k, i) => col(k).as(s"_mk$i") }: _*)
+        val kept = b.join(touched,
+          keys.zipWithIndex.map { case (k, i) => col(k) <=> col(s"_mk$i") }.reduce(_ && _), "left_anti")
+        kept.unionByName(lastWriterWins(d, keys, "_v"), allowMissingColumns = true)
+      case (None, None) => throw new IllegalArgumentException("a merge needs a base or a delta")
+    }
+  }
+
+  /** [[mergeChain]] over stored segments: `base` (a full snapshot) and
+    * `deltas` (later delta segments, version-ascending), each read
+    * with `bound` applied below the merge when given. A merge key's
+    * bound cannot change which row of a surviving key wins, so it
+    * prunes both sides before the anti join and the window. A segment
+    * lacking a merge key column is refused by name: merged under a
+    * NULL key it would corrupt last-writer-wins silently.
+    */
+  private def mergeSegments(
+      spark: SparkSession, root: String, base: Option[(Long, String, String)],
+      deltas: Seq[(Long, String, String)], keys: Seq[String],
+      bound: Option[Column] = None): DataFrame = {
+    def checked(v: Long, cols: Seq[String]): Unit = {
+      val missingKeys = keys.filterNot(cols.contains)
+      if (missingKeys.nonEmpty) throw new IllegalStateException(
+        s"segment v$v of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
+          "— the store cannot be merge-read on these keys")
+    }
+    def bounded(df: DataFrame): DataFrame = bound.fold(df)(df.filter)
+    val b = base.map { case (v, _, rel) =>
+      val seg = Sources.readParquet(spark, s"$root/$rel")
+      checked(v, seg.columns.toIndexedSeq)
+      bounded(seg)
+    }
+    val d = Option.when(deltas.nonEmpty) {
+      deltas.foreach { case (v, _, rel) =>
+        checked(v, Sources.parquetSchema(spark, s"$root/$rel").fieldNames.toIndexedSeq)
+      }
+      normDeleted(bounded(
+        Sources.readParquetTagged(spark, deltas.map { case (v, _, rel) => s"$root/$rel" -> v }, "_v")))
+    }
+    mergeChain(b, d, keys)
+  }
+
+  /** The segments an as-of read of `version` merges: the latest full
+    * snapshot at or below it and the deltas after that, up to it.
+    */
+  private def chainAt(spark: SparkSession, root: String, version: Long)
+      : ((Long, String, String), Seq[(Long, String, String)]) = {
+    val all = versions(spark, root).filter(_._1 <= version)
+    require(all.nonEmpty, s"no version <= $version in $root")
+    val base = all.filter(_._2 == "full").lastOption
+      .getOrElse(throw new IllegalStateException(s"no full snapshot <= $version in $root"))
+    (base, all.filter(_._1 > base._1))
   }
 
   private[graft] def nextVersion(spark: SparkSession, root: String): Long =
@@ -553,32 +635,17 @@ object Snapshots {
 
   /** Read the table as of `version` (reproducible forever): base = the
     * latest full snapshot ≤ version, then deltas (base, version]
-    * merged last-writer-wins on `keys`, tombstones dropped.
+    * merged last-writer-wins on `keys`, tombstones dropped
+    * ([[mergeChain]]: the base is scanned in place and anti-joined with
+    * the delta keys; only the delta rows are ranked). An evolved chain
+    * (a delta that added or narrowed columns via
+    * `commitDelta(evolveSchema = true)`) reads with the union schema,
+    * absent cells null — commit-side validation is what keeps
+    * accidental drift out of the chain.
     */
   def asOf(spark: SparkSession, root: String, version: Long, keys: Seq[String]): DataFrame = {
-    val all = versions(spark, root).filter(_._1 <= version)
-    require(all.nonEmpty, s"no version <= $version in $root")
-    val baseV = all.filter(_._2 == "full").map(_._1).maxOption
-      .getOrElse(throw new IllegalStateException(s"no full snapshot <= $version in $root"))
-    val chain = all.filter(_._1 >= baseV)
-    val frames = chain.map { case (v, _, rel) =>
-      val seg = Sources.readParquet(spark, s"$root/$rel")
-      // merge keys are the one column class evolution can never drop:
-      // a segment without one would merge under a NULL key and corrupt
-      // last-writer-wins silently — refuse with the segment named
-      // (schema-only check, no job)
-      val missingKeys = keys.filterNot(seg.columns.contains)
-      if (missingKeys.nonEmpty) throw new IllegalStateException(
-        s"segment v$v of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
-          "— the store cannot be merge-read on these keys")
-      normDeleted(seg).withColumn("_v", lit(v))
-    }
-    // null-filling union: an evolved chain (a delta that added or
-    // narrowed columns via commitDelta(evolveSchema = true)) reads
-    // with the union schema, absent cells null — commit-side
-    // validation is what keeps accidental drift out of the chain
-    lastWriterWins(
-      frames.reduce(_.unionByName(_, allowMissingColumns = true)), keys, "_v")
+    val (base, deltas) = chainAt(spark, root, version)
+    mergeSegments(spark, root, Some(base), deltas, keys)
   }
 
   /** Speculative import — the reference's `db.with` twin: the merged
@@ -589,15 +656,14 @@ object Snapshots {
     * returns is ever visible to other readers, and the manifest is
     * not touched — the only filesystem access is the read side.
     *
-    * Exact commit parity, by construction: the overlay unions the
-    * CURRENT merged view (priority 0) with the normalized batch
-    * (priority 1) through the same [[lastWriterWins]] the real read
-    * path uses — batch rows supersede stored rows per key, batch
-    * tombstones retract them, within-batch duplicate keys resolve
-    * exactly as a committed delta would. The schema-drift gate also
-    * matches commit: an unflagged drifting batch is refused with the
-    * same loud error; `evolveSchema = true` previews the evolved
-    * union schema null-filled. An EMPTY store previews the batch as
+    * Exact commit parity, by construction: the overlay is the store's
+    * own [[mergeChain]] with the CURRENT merged view as the base and the
+    * normalized batch as the only delta — batch rows supersede stored
+    * rows per key, batch tombstones retract them, within-batch
+    * duplicate keys resolve exactly as a committed delta would. The
+    * schema-drift gate also matches commit: an unflagged drifting
+    * batch is refused with the same loud error; `evolveSchema = true`
+    * previews the evolved union schema null-filled. An EMPTY store previews the batch as
     * the whole table (what committing it would make true).
     */
   def withBatch(
@@ -606,14 +672,11 @@ object Snapshots {
     val missingKeys = keys.filterNot(batch.columns.contains)
     require(missingKeys.isEmpty,
       s"speculative batch lacks merge key column(s) ${missingKeys.mkString(", ")}")
-    if (versions(spark, root).isEmpty) {
-      val b = normDeleted(batch).withColumn("_v", lit(1L))
-      lastWriterWins(b, keys, "_v")
-    } else {
+    val b = normDeleted(batch).withColumn("_v", lit(1L))
+    if (versions(spark, root).isEmpty) mergeChain(None, Some(b), keys)
+    else {
       if (!evolveSchema) validateDeltaSchema(batch, root)
-      val cur = normDeleted(latest(spark, root, keys)).withColumn("_v", lit(0L))
-      val b = normDeleted(batch).withColumn("_v", lit(1L))
-      lastWriterWins(cur.unionByName(b, allowMissingColumns = true), keys, "_v")
+      mergeChain(Some(latest(spark, root, keys)), Some(b), keys)
     }
   }
 
@@ -671,7 +734,7 @@ object Snapshots {
     * delta — the APPEND-ONLY read for stores whose writers guarantee
     * row-uniqueness at commit time (the streaming ingest sinks
     * anti-join stored ids before every delta). Unlike [[latest]] no
-    * merge window runs — the whole read is a union of parquet scans a
+    * merge runs — the whole read is a union of parquet scans a
     * candidate join can prune — and unlike a raw all-versions union,
     * segments the newest full SUPERSEDES are skipped: after a
     * [[compact]] the scan fan-in resets to one segment instead of
@@ -1108,11 +1171,11 @@ object Snapshots {
     * column's value can move across versions, so a later rewrite
     * relocating a row out of range could hide in a pruned segment —
     * refused loudly.) Stats-less segments stay conservatively in;
-    * the merged result then applies the same lastWriterWins +
-    * tombstone-drop as the full read, and BOTH branches (matching
-    * and all-pruned) answer in [[asOf]]'s null-filled union schema,
-    * so evolved chains give one stable column set regardless of what
-    * pruning kept.
+    * the kept segments go through the full read's merge
+    * ([[mergeChain]]) with the range applied to the base and the
+    * deltas below it, and BOTH branches (matching and all-pruned)
+    * answer in [[asOf]]'s null-filled union schema, so evolved chains
+    * give one stable column set regardless of what pruning kept.
     */
   def readMergeWhere(
       spark: SparkSession, root: String, keys: Seq[String], column: String,
@@ -1123,39 +1186,34 @@ object Snapshots {
         "so its zone maps cannot bound where a superseding row lives; filter the " +
         "full merge read instead")
     val v = if (version < 0) latestVersion(spark, root) else version
-    val all = versions(spark, root).filter(_._1 <= v)
-    require(all.nonEmpty, s"no version <= $v in $root")
-    val baseV = all.filter(_._2 == "full").map(_._1).maxOption
-      .getOrElse(throw new IllegalStateException(s"no full snapshot <= $v in $root"))
-    val chain = all.filter(_._1 >= baseV)
-    val kept = chain.filter { case (_, _, rel) =>
+    val bounded = col(column) >= lit(lo) && col(column) <= lit(hi)
+    mergeKept(spark, root, keys, v, bounded) { case (_, _, rel) =>
       mayContain(segmentStats(spark, root, rel), column, lo, hi)
     }
-    val bounded = col(column) >= lit(lo) && col(column) <= lit(hi)
-    // the one stable schema: what the unpruned merge read answers
-    // with (analysis-only — Filter(false) collapses to an empty
-    // relation before any scan runs)
-    val schemaFrame = asOf(spark, root, v, keys).where(lit(false))
-    if (kept.isEmpty) schemaFrame.filter(bounded)
-    else {
-      // the range filter applies BELOW the merge window, per segment:
-      // it bounds the merge KEY, so dropping out-of-range keys before
-      // lastWriterWins cannot change any surviving row — and sitting
-      // directly on each scan it reaches the parquet row-group stats
-      // (zone maps prune files, pushed filters prune row groups)
-      val frames = kept.map { case (sv, _, rel) =>
-        val seg = Sources.readParquet(spark, s"$root/$rel")
-        val missingKeys = keys.filterNot(seg.columns.contains)
-        if (missingKeys.nonEmpty) throw new IllegalStateException(
-          s"segment v$sv of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
-            "— the store cannot be merge-read on these keys")
-        normDeleted(seg).filter(bounded).withColumn("_v", lit(sv))
-      }
-      lastWriterWins(
-        frames.reduce(_.unionByName(_, allowMissingColumns = true)), keys, "_v")
-        .unionByName(schemaFrame, allowMissingColumns = true)
-        .select(schemaFrame.columns.map(col).toIndexedSeq: _*)
-    }
+  }
+
+  /** The pruned merge read shared by [[readMergeWhere]] and
+    * [[readMergeEq]]: the chain of `version` cut to the segments `keep`
+    * accepts, merged by [[mergeSegments]] with the key predicate
+    * `bounded` applied to the base and the deltas below the merge (it
+    * reaches each scan's parquet row-group statistics). If the base is
+    * pruned, the kept deltas' own resolution is the answer. Both the
+    * matching and the all-pruned answer take [[asOf]]'s null-filled
+    * union schema, so an evolved chain gives one column set whatever
+    * pruning kept (the schema frame is analysis only — Filter(false)
+    * collapses to an empty relation before any scan runs).
+    */
+  private def mergeKept(
+      spark: SparkSession, root: String, keys: Seq[String], version: Long, bounded: Column)(
+      keep: ((Long, String, String)) => Boolean): DataFrame = {
+    val (base, deltas) = chainAt(spark, root, version)
+    val schemaFrame = asOf(spark, root, version, keys).where(lit(false))
+    val keptBase = Some(base).filter(keep)
+    val keptDeltas = deltas.filter(keep)
+    if (keptBase.isEmpty && keptDeltas.isEmpty) schemaFrame.filter(bounded)
+    else mergeSegments(spark, root, keptBase, keptDeltas, keys, Some(bounded))
+      .unionByName(schemaFrame, allowMissingColumns = true)
+      .select(schemaFrame.columns.map(col).toIndexedSeq: _*)
   }
 
   /** The version numbers [[readMergeWhere]] would open — the pruning
@@ -1164,11 +1222,8 @@ object Snapshots {
   private[graft] def prunedMergeTo(
       spark: SparkSession, root: String, keys: Seq[String], column: String,
       lo: Any, hi: Any): Seq[Long] = {
-    val v = latestVersion(spark, root)
-    val all = versions(spark, root).filter(_._1 <= v)
-    val baseV = all.filter(_._2 == "full").map(_._1).maxOption.getOrElse(
-      throw new IllegalStateException(s"no full snapshot in $root"))
-    all.filter(_._1 >= baseV)
+    val (base, deltas) = chainAt(spark, root, latestVersion(spark, root))
+    (base +: deltas)
       .filter { case (_, _, rel) => mayContain(segmentStats(spark, root, rel), column, lo, hi) }
       .map(_._1)
   }
@@ -1221,32 +1276,8 @@ object Snapshots {
       "readMergeEq probe values must be non-null — an IN (..., NULL) matches nothing; " +
         "filter the full merge read for IS NULL semantics")
     val v = if (version < 0) latestVersion(spark, root) else version
-    val all = versions(spark, root).filter(_._1 <= v)
-    require(all.nonEmpty, s"no version <= $v in $root")
-    val baseV = all.filter(_._2 == "full").map(_._1).maxOption
-      .getOrElse(throw new IllegalStateException(s"no full snapshot <= $v in $root"))
-    val chain = all.filter(_._1 >= baseV)
-    val kept = chain.filter { case (_, _, rel) => eqKeeps(spark, root, rel, column, values) }
-    val bounded = col(column).isin(values: _*)
-    val schemaFrame = asOf(spark, root, v, keys).where(lit(false))
-    if (kept.isEmpty) schemaFrame.filter(bounded)
-    else {
-      // same per-segment pushdown as the range read: the IN filter
-      // bounds the merge KEY, so applying it below lastWriterWins
-      // cannot change any surviving row, and on the scan it reaches
-      // the parquet row-group dictionary/stats
-      val frames = kept.map { case (sv, _, rel) =>
-        val seg = Sources.readParquet(spark, s"$root/$rel")
-        val missingKeys = keys.filterNot(seg.columns.contains)
-        if (missingKeys.nonEmpty) throw new IllegalStateException(
-          s"segment v$sv of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
-            "— the store cannot be merge-read on these keys")
-        normDeleted(seg).filter(bounded).withColumn("_v", lit(sv))
-      }
-      lastWriterWins(
-        frames.reduce(_.unionByName(_, allowMissingColumns = true)), keys, "_v")
-        .unionByName(schemaFrame, allowMissingColumns = true)
-        .select(schemaFrame.columns.map(col).toIndexedSeq: _*)
+    mergeKept(spark, root, keys, v, col(column).isin(values: _*)) { case (_, _, rel) =>
+      eqKeeps(spark, root, rel, column, values)
     }
   }
 
@@ -1256,13 +1287,8 @@ object Snapshots {
   private[graft] def prunedEqTo(
       spark: SparkSession, root: String, keys: Seq[String], column: String,
       values: Seq[Any]): Seq[Long] = {
-    val v = latestVersion(spark, root)
-    val all = versions(spark, root).filter(_._1 <= v)
-    val baseV = all.filter(_._2 == "full").map(_._1).maxOption.getOrElse(
-      throw new IllegalStateException(s"no full snapshot in $root"))
-    all.filter(_._1 >= baseV)
-      .filter { case (_, _, rel) => eqKeeps(spark, root, rel, column, values) }
-      .map(_._1)
+    val (base, deltas) = chainAt(spark, root, latestVersion(spark, root))
+    (base +: deltas).filter { case (_, _, rel) => eqKeeps(spark, root, rel, column, values) }.map(_._1)
   }
 
   /** Read the latest version. */
@@ -1270,7 +1296,9 @@ object Snapshots {
     asOf(spark, root, latestVersion(spark, root), keys)
 
   /** Fold the delta chain into a new full snapshot (bounds the merge
-    * fan-in for future reads; old versions stay readable).
+    * fan-in for future reads; old versions stay readable). The fold is
+    * the [[asOf]] read of the tip, so it is written without shuffling
+    * the old base: only the delta rows are ranked.
     *
     * The fold's content is pinned to the chain visible at THIS read,
     * and the publish is pinned to land at exactly the next version

@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
   ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink helpers — SURVEY §2.11 (io01–io03).
@@ -51,6 +52,65 @@ object Sources {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
+
+  /** [[readParquet]] under a caller-given schema, for an output
+    * directory that may hold no data file (a run that wrote nothing),
+    * where there is no footer to resolve a schema from.
+    */
+  def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
+  /** The schema [[readParquet]] gives `path`, without building a frame:
+    * the memoized footer schema, else (schema merging on, or no footer
+    * to read) the schema of Spark's own read.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    (if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None else footerSchema(spark, path))
+      .getOrElse(readParquet(spark, path).schema)
+
+  /** Many parquet directories as one frame, every row tagged with the
+    * number its directory maps to in `dirs` (column `tagCol`): the
+    * delta-chain read of the snapshot store.
+    *
+    * Directories whose schemas agree up to nullability (a file read
+    * makes every column nullable anyway) share one parquet relation, so
+    * a chain that never evolved is one scan however long it is; each
+    * further schema adds a relation, and the relations union by name
+    * with null fill. Schemas come from the footer memo of
+    * [[readParquet]], so building the frame runs no job. A relation
+    * takes at most `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * directories, past which Spark would list them in a job.
+    *
+    * The tag of a row is looked up from its `_metadata.file_path`: the
+    * name of the directory holding the file (data files sit directly
+    * in each directory), through one map literal, so neither the
+    * directory names' form nor the chain's length reaches the
+    * generated code. A file outside every given directory fails the
+    * read.
+    */
+  def readParquetTagged(spark: SparkSession, dirs: Seq[(String, Long)], tagCol: String): DataFrame = {
+    require(dirs.nonEmpty, "readParquetTagged needs at least one directory")
+    // the last path segment as it appears, URL-encoded, in _metadata.file_path
+    val names = dirs.map { case (d, t) => new Path(d).toUri.getRawPath.split('/').last -> t }
+    require(names.map(_._1).distinct.size == names.size,
+      s"directory names must be distinct to tag rows: ${dirs.map(_._1).mkString(", ")}")
+    val file = col("_metadata.file_path")
+    val tag = coalesce(element_at(typedLit(names.toMap), element_at(split(file, "/"), -2)),
+      raise_error(concat(lit(s"no $tagCol for "), file)))
+    val merging = spark.sessionState.conf.isParquetSchemaMergingEnabled
+    val perRelation = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+    val groups = scala.collection.mutable.LinkedHashMap.empty[Option[StructType], Vector[String]]
+    dirs.foreach { case (d, _) =>
+      val key = if (merging) None else footerSchema(spark, d).map(_.toNullable)
+      groups(key) = groups.getOrElse(key, Vector.empty) :+ d
+    }
+    groups.toSeq.flatMap {
+      // no footer schema: one Spark read per directory, as readParquet
+      case (None, ds) => ds.map(readParquet(spark, _))
+      case (Some(s), ds) => ds.grouped(perRelation).map(g => spark.read.schema(s).parquet(g: _*))
+    }.map(_.withColumn(tagCol, tag))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+  }
 
   // Per-session schema memo: path → (stamp, schema). Weak keys: the map
   // must not pin dead sessions. Segment paths of a long-lived store
@@ -161,10 +221,10 @@ object Sources {
     * stamp, and the xor+sum pair is duplicate-sensitive: two files
     * with identical (name, mtime, length) no longer cancel under a
     * pure XOR fold (adding/removing such a pair changes the sum
-    * lane). One recursive listing, NO Spark job — cheap enough to
-    * consult per request/call. Used by the ANN serving index's
-    * rebuild detection and the derived-store staleness checks; a
-    * missing path stamps as the empty tree.
+    * lane). One walk of directory listings, NO Spark job and no
+    * process fork — cheap enough to consult per request/call. Used by
+    * the ANN serving index's rebuild detection and the derived-store
+    * staleness checks; a missing path stamps as the empty tree.
     */
   def listingSignature(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -172,20 +232,25 @@ object Sources {
     val rootPrefix = f.makeQualified(p).toUri.getPath
     var hx = 0L
     var hs = 0L
-    if (f.exists(p)) {
-      val it = f.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val full = s.getPath.toUri.getPath
-        val rel = if (full.startsWith(rootPrefix)) full.substring(rootPrefix.length) else full
-        var m = 1125899906842597L
-        var i = 0
-        while (i < rel.length) { m = m * 6364136223846793005L + rel.charAt(i); i += 1 }
-        m = m * 6364136223846793005L + s.getModificationTime
-        m = m * 6364136223846793005L + s.getLen
-        hx ^= m
-        hs += m
-      }
+    // plain statuses, walked by hand: `listFiles` returns located
+    // statuses, whose construction on the local file system without
+    // native Hadoop forks `ls -ld` per file to read its permissions
+    def files(st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory) f.listStatus(st.getPath).iterator.flatMap(files)
+      else Iterator.single(st)
+    val root =
+      try Some(f.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    root.iterator.flatMap(files).foreach { s =>
+      val full = s.getPath.toUri.getPath
+      val rel = if (full.startsWith(rootPrefix)) full.substring(rootPrefix.length) else full
+      var m = 1125899906842597L
+      var i = 0
+      while (i < rel.length) { m = m * 6364136223846793005L + rel.charAt(i); i += 1 }
+      m = m * 6364136223846793005L + s.getModificationTime
+      m = m * 6364136223846793005L + s.getLen
+      hx ^= m
+      hs += m
     }
     s"f${java.lang.Long.toHexString(hx)}-${java.lang.Long.toHexString(hs)}"
   }
@@ -227,9 +292,6 @@ object Sources {
     df.write.mode("overwrite").json(path)
 
   // --------------------------------------------- z-order layout (io06)
-
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions._
 
   /** Morton (Z-order) key over ≥2 numeric columns, each linearly
     * scaled to `bits` bits between the column's min and max and then

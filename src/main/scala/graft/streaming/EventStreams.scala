@@ -271,9 +271,10 @@ object EventStreams {
     * new by construction), so the per-batch corpus view is
     * [[graft.sources.Snapshots.readAppendOnly]] — the latest full
     * snapshot plus later deltas as a narrow union, never
-    * `Snapshots.latest`, whose last-writer-wins window would shuffle
-    * the entire growing corpus (text included) on every micro-batch
-    * before the candidate join could prune anything. That keeps the
+    * `Snapshots.latest`, whose merge ranks every delta row since the
+    * last compaction (text included) and anti-joins the corpus with
+    * their keys on every micro-batch, although keepers are new by
+    * construction and supersede nothing. That keeps the
     * per-ingest cost at what [[graft.dedup.Dedup.ingestAgainstIndex]]
     * promises: one index scan + one narrow corpus scan. Both stores
     * grow one delta segment per batch: fold them back on an

@@ -249,6 +249,50 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.listingSignature(spark, s"$dir/nope") === Sources.listingSignature(spark, s"$dir/nope2"))
   }
 
+  test("listingSignature: the status walk gives the value of the recursive listFiles stamp") {
+    import org.apache.hadoop.fs.Path
+    // the stamp as it was computed over FileSystem.listFiles(p, true),
+    // so stamps recorded by derived stores do not churn
+    def listed(path: String): String = {
+      val p = new Path(path)
+      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val rootPrefix = f.makeQualified(p).toUri.getPath
+      var hx = 0L
+      var hs = 0L
+      if (f.exists(p)) {
+        val it = f.listFiles(p, true)
+        while (it.hasNext) {
+          val s = it.next()
+          val full = s.getPath.toUri.getPath
+          val rel = if (full.startsWith(rootPrefix)) full.substring(rootPrefix.length) else full
+          var m = 1125899906842597L
+          rel.foreach(c => m = m * 6364136223846793005L + c)
+          m = m * 6364136223846793005L + s.getModificationTime
+          m = m * 6364136223846793005L + s.getLen
+          hx ^= m
+          hs += m
+        }
+      }
+      s"f${java.lang.Long.toHexString(hx)}-${java.lang.Long.toHexString(hs)}"
+    }
+    import spark.implicits._
+    val dir = tmpDir("lsig-walk")
+    // nested directories, a Spark-written table (with .crc and _SUCCESS siblings) and an empty dir
+    Seq((1, "a"), (2, "b")).toDF("id", "name").write.partitionBy("id").parquet(s"$dir/t")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "empty", "deeper"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "top.txt"), "x".getBytes)
+    val before = Sources.listingSignature(spark, dir)
+    assert(before === listed(dir))
+    assert(Sources.listingSignature(spark, s"$dir/t") === listed(s"$dir/t"))
+    assert(Sources.listingSignature(spark, s"$dir/top.txt") === listed(s"$dir/top.txt"))
+    assert(Sources.listingSignature(spark, s"$dir/nope") === listed(s"$dir/nope"))
+    // a rewrite still moves the stamp
+    Seq((1, "a"), (3, "c")).toDF("id", "name").write.mode("overwrite").partitionBy("id").parquet(s"$dir/t")
+    val after = Sources.listingSignature(spark, dir)
+    assert(after === listed(dir))
+    assert(after !== before)
+  }
+
   // ------------------------------------------- readParquet schema parity
 
   /** `Sources.readParquet`'s schema equals Spark's inferred one for
