@@ -368,11 +368,29 @@ object CohortQuery {
     membership(spark, dir, pop, atoms, sources).filter(keep).select("subject")
   }
 
-  /** Evaluate a spec → 1-row count (the reference's query result). */
+  /** Evaluate a spec → 1-row count (the reference's query result), as
+    * a frame a caller can compose (q4a). Its global aggregate moves one
+    * partial count per partition through a `SinglePartition` exchange:
+    * one Spark job more than [[populationSize]].
+    */
   def count(
       spark: SparkSession, dir: String, json: String,
       sources: SourceOverrides = Map.empty): DataFrame =
     Cohort.countSubjects(population(spark, dir, json, sources))
+
+  /** Evaluate a spec → the number of keys in its [[population]], the
+    * answer `POST /cohort/query` serves. Each partition counts its own
+    * rows and the driver sums the partial counts, so a query over
+    * images runs ONE Spark job, with no exchange and no AQE re-plan
+    * after the membership aggregate. An overridden source keeps its
+    * membership shuffle but also saves [[count]]'s final job.
+    */
+  def populationSize(
+      spark: SparkSession, dir: String, json: String,
+      sources: SourceOverrides = Map.empty): Long =
+    population(spark, dir, json, sources).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.foldLeft(0L)((n, _) => n + 1)))
+      .collect().sum
 
   /** Per-atom subject counts — the reference exposes every
     * criterion's own population size next to the query result. Spec

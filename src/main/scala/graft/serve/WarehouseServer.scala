@@ -530,13 +530,6 @@ object WarehouseServer {
     }
   }
 
-  /** 1-row/1-col aggregate → bare value object. */
-  private def scalar(df: DataFrame, as: String): JValue = {
-    val r = df.collect()
-    require(r.length == 1 && r(0).size == 1, s"expected a scalar, got ${r.length} rows")
-    JObject(as -> jval(r(0).get(0)))
-  }
-
   private final case class HttpError(code: Int, msg: String)
     extends RuntimeException(msg)
 
@@ -599,6 +592,14 @@ object WarehouseServer {
       if (cfg.bindAll) new InetSocketAddress(cfg.port).getAddress
       else InetAddress.getLoopbackAddress,
       cfg.port)
+    // TCP_NODELAY on accepted connections. The JDK server writes a
+    // response's headers and its body in two writes; under Nagle the
+    // body waits for the client's ACK of the headers, which Linux
+    // delays by ~40 ms, so every response took ≥ 44 ms on loopback.
+    // The JDK reads this property once, when the first server of the
+    // process is created; an operator's own setting wins.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = cfg.keystorePath match {
       case Some(ksPath) =>
         // TLS termination in-process: PKCS12 keystore → KeyManager →
@@ -1218,8 +1219,8 @@ object WarehouseServer {
             ("cohort_images" -> images)
         case ("GET", "/tables") => tablesDoc
         case ("POST", "/cohort/query") =>
-          scalar(CohortQuery.count(spark, cfg.dataDir, body(ex, cfg.maxBodyBytes),
-            cohortSources(params)), "n_subjects")
+          JObject("n_subjects" -> JInt(CohortQuery.populationSize(spark, cfg.dataDir,
+            body(ex, cfg.maxBodyBytes), cohortSources(params))))
         case ("POST", "/cohort/population") =>
           page(CohortQuery.population(spark, cfg.dataDir, body(ex, cfg.maxBodyBytes),
             cohortSources(params)).orderBy("subject"), limit, after)

@@ -233,6 +233,7 @@ class CohortQuerySpec extends SparkSpec {
     assert(expectBoth === Set(None, Some(7L)))
     assert(keysOf(CohortQuery.population(spark, sf, both, over)) === expectBoth)
     assert(CohortQuery.count(spark, sf, both, over).head().getLong(0) === expectBoth.size)
+    assert(CohortQuery.populationSize(spark, sf, both, over) === expectBoth.size)
 
     // EXCEPT removes the NULL key when the NOT atom matches it too
     val minus = s"""{"and": [$urgent, $pricey], "not": [$high]}"""
@@ -340,6 +341,38 @@ class CohortQuerySpec extends SparkSpec {
     val executed = jobsIn("pin-exec") { again = warm.collect().toSeq }
     assert(again === answer)
     assert(executed <= 2, s"a cohort count on warm images ran $executed jobs")
+  }
+
+  test("job pin at sf0.01: populationSize on warm images runs one job and answers count") {
+    val dir = new java.io.File(sf).getParent + "/sf0.01"
+    val answer = CohortQuery.count(spark, dir, CohortQuery.demoSpec).head().getLong(0) // fills the images
+    // the partial counts are summed on the driver: no SinglePartition
+    // exchange, no second job
+    var size = -1L
+    assert(jobsIn("pin-size") { size = CohortQuery.populationSize(spark, dir, CohortQuery.demoSpec) } === 1)
+    assert(size === answer)
+  }
+
+  test("populationSize equals count under an orders override that keeps the subject shuffle, in one job fewer") {
+    val over = Map("orders" -> Tables.orders(spark, sf).filter(col("o_custkey") % 2 === 0))
+    val plan = CohortQuery.population(spark, sf, CohortQuery.demoSpec, over)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("Exchange hashpartitioning(subject"),
+      s"the override no longer shuffles on the subject key:\n$plan")
+    // fills the images of the sources the override leaves live, so
+    // neither pin counts an image's build
+    val counted = CohortQuery.count(spark, sf, CohortQuery.demoSpec, over).head().getLong(0)
+    val countJobs = jobsIn("pin-override-count") {
+      assert(CohortQuery.count(spark, sf, CohortQuery.demoSpec, over).head().getLong(0) === counted)
+    }
+    var size = -1L
+    val sizeJobs = jobsIn("pin-override-size") {
+      size = CohortQuery.populationSize(spark, sf, CohortQuery.demoSpec, over)
+    }
+    assert(size === counted)
+    assert(size !== CohortQuery.populationSize(spark, sf, CohortQuery.demoSpec),
+      "the override must change the answer")
+    assert(sizeJobs === countJobs - 1, s"count ran $countJobs jobs, populationSize $sizeJobs")
   }
 
   // ------------------------------------------------------ source images

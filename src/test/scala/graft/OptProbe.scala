@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** r14 stage-isolation probe (TEST scope — never ships): times the
   * pieces of the bench's most expensive composites so optimization
   * targets the measured cost, not the guessed one. Run with
-  * `sbt "Test/runMain graft.OptProbe <mode> [names...]"`.
+  * `sbt "Test/runMain graft.OptProbe <mode> [names...]"`; mode `serve
+  * [n]` times n sequential requests per endpoint of an in-process server.
   */
 object OptProbe {
   private def session(): SparkSession = {
@@ -28,16 +29,50 @@ object OptProbe {
     r
   }
 
+  /** Round-trip times of `n` sequential keep-alive requests per
+    * endpoint to an in-process `WarehouseServer` over `d`, after one
+    * untimed request each (it opens the connection and fills the
+    * cohort images).
+    */
+  private def timeServe(spark: SparkSession, d: String, n: Int): Unit = {
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val srv = graft.serve.WarehouseServer.start(spark, graft.serve.WarehouseServer.Config(dataDir = d))
+    try {
+      val client = HttpClient.newHttpClient()
+      val calls = Seq(
+        "GET /health" -> HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/health")).GET(),
+        "GET /status" -> HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/status")).GET(),
+        "POST /cohort/query" -> HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/cohort/query"))
+          .POST(HttpRequest.BodyPublishers.ofString(operators.CohortQuery.demoSpec)))
+      for ((label, req) <- calls) {
+        def once(): Double = {
+          val t0 = System.nanoTime()
+          val r = client.send(req.build(), HttpResponse.BodyHandlers.ofString())
+          require(r.statusCode() == 200, s"$label answered ${r.statusCode()}: ${r.body()}")
+          (System.nanoTime() - t0) / 1e6
+        }
+        once()
+        val ms = Seq.fill(n)(once()).sorted
+        println(f"PROBE serve $label%-20s n=$n p50 ${ms(n / 2)}%8.2f ms  min ${ms.head}%8.2f ms  max ${ms.last}%8.2f ms")
+      }
+    } finally srv.close()
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = session()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // warm like Bench: table scans only
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { tn =>
-      try noop(Tables.load(spark, d, tn)) catch { case _: Throwable => () }
+    val mode = args.headOption.getOrElse("query")
+    if (mode != "serve") {
+      // warm like Bench: table scans only
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings").foreach { tn =>
+        try noop(Tables.load(spark, d, tn)) catch { case _: Throwable => () }
+      }
+      try operators.Warehouse.warm(spark, d) catch { case _: Throwable => () }
     }
-    try operators.Warehouse.warm(spark, d) catch { case _: Throwable => () }
-    args.headOption.getOrElse("query") match {
+    mode match {
+      case "serve" => timeServe(spark, d, args.lift(1).fold(30)(_.toInt))
       case "query" =>
         for (n <- args.drop(1); r <- 1 to 3) {
           spark.catalog.clearCache()

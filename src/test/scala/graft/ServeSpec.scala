@@ -54,6 +54,14 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     case other    => fail(s"expected an integer, got $other")
   }
 
+  /** Median round trip, in ms, of `n` sequential calls. */
+  private def p50Ms(n: Int)(call: => Unit): Double =
+    Seq.fill(n) {
+      val t0 = System.nanoTime()
+      call
+      (System.nanoTime() - t0) / 1e6
+    }.sorted.apply(n / 2)
+
   test("service document and health") {
     val (code, doc) = get("/")
     assert(code == 200)
@@ -80,6 +88,24 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       .collect()(0).getLong(0)
     val (code, v) = post("/cohort/query", CohortQuery.demoSpec)
     assert(code == 200)
+    assert(longOf(v \ "n_subjects") == direct)
+  }
+
+  test("responses are not held back by Nagle: 30 keep-alive GET /health, p50 under 10 ms") {
+    get("/health") // opens the pooled connection the timed calls reuse
+    val p50 = p50Ms(30)(assert(get("/health")._1 == 200))
+    // headers and body leave in two writes; without TCP_NODELAY the body
+    // waits ~40 ms for the client's delayed ACK of the headers
+    assert(p50 < 10.0, f"GET /health p50 $p50%.1f ms")
+  }
+
+  test("cohort query on warm images runs one Spark job and answers the library count") {
+    // the library count fills the images the served query then scans
+    val direct = CohortQuery.count(spark, sf, CohortQuery.demoSpec).head().getLong(0)
+    var v: JValue = JNothing
+    val served = jobGroupsIn("serve-cohort-pin") { v = post("/cohort/query", CohortQuery.demoSpec)._2 }
+      .filter(_.startsWith("graft-serve-"))
+    assert(served.size == 1, s"POST /cohort/query ran ${served.size} jobs: $served")
     assert(longOf(v \ "n_subjects") == direct)
   }
 
@@ -1887,6 +1913,10 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(health(Some("Bearer nope"))._1 == 401)
       val (okC, okV) = health(Some("Bearer s3kr1t"))
       assert(okC == 200 && okV \ "status" == JString("ok"))
+      // HttpsServer shares the JDK server's two-write responses, so
+      // TCP_NODELAY matters here too
+      val p50 = p50Ms(30)(assert(health(Some("Bearer s3kr1t"))._1 == 200))
+      assert(p50 < 10.0, f"GET /health over TLS p50 $p50%.1f ms")
       // a client that does NOT trust the cert must fail the handshake —
       // the server really is terminating TLS, not echoing plaintext
       intercept[java.io.IOException] {

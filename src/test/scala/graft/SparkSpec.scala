@@ -36,23 +36,43 @@ object SparkSpec {
   }
   private val pins = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The number of Spark jobs `body` starts on this thread (job-pin
-    * specs). Listener delivery is asynchronous but ordered, so once a
-    * sentinel job's start is seen, every earlier job's has been too.
+  /** Runs one sentinel job in group `name` and waits until the
+    * listener has seen it. Listener delivery is asynchronous but
+    * ordered, so by then every earlier job's start has been seen too.
     */
-  def jobsIn(label: String)(body: => Unit): Int = {
+  private def sentinel(name: String): Unit = {
     val sc = session.sparkContext
-    val groups = jobGroups // registers the listener before `body` runs
-    val group = s"$label-${pins.incrementAndGet()}"
-    sc.setJobGroup(group, label)
-    try body finally sc.clearJobGroup()
-    val sentinel = s"$group-sentinel"
-    sc.setJobGroup(sentinel, sentinel)
+    val groups = jobGroups
+    sc.setJobGroup(name, name)
     try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
     val deadline = System.nanoTime() + 30000000000L
-    while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-    assert(groups.contains(sentinel), "listener never saw the sentinel job")
-    groups.toArray.count(_ == group)
+    while (!groups.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(groups.contains(name), "listener never saw the sentinel job")
+  }
+
+  /** `body`'s own job group, and the groups of the Spark jobs started
+    * while it runs, in start order and from any thread.
+    */
+  private def window(label: String)(body: => Unit): (String, Seq[String]) = {
+    val group = s"$label-${pins.incrementAndGet()}"
+    sentinel(s"$group-from")
+    val sc = session.sparkContext
+    sc.setJobGroup(group, label)
+    try body finally sc.clearJobGroup()
+    sentinel(s"$group-to")
+    (group, jobGroups.toArray(Array.empty[String]).toSeq
+      .dropWhile(_ != s"$group-from").drop(1).takeWhile(_ != s"$group-to"))
+  }
+
+  /** The job groups of every Spark job started while `body` runs, from
+    * any thread: a server's per-request groups show up here.
+    */
+  def jobGroupsIn(label: String)(body: => Unit): Seq[String] = window(label)(body)._2
+
+  /** The number of Spark jobs `body` starts on this thread (job-pin specs). */
+  def jobsIn(label: String)(body: => Unit): Int = {
+    val (group, groups) = window(label)(body)
+    groups.count(_ == group)
   }
 }
 
@@ -60,6 +80,7 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf = "/root/testdata/sf0.001"
   def jobsIn(label: String)(body: => Unit): Int = SparkSpec.jobsIn(label)(body)
+  def jobGroupsIn(label: String)(body: => Unit): Seq[String] = SparkSpec.jobGroupsIn(label)(body)
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
