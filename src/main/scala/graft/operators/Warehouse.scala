@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
   *    item-group analog): subtree counts for every node of the
   *    hierarchy in ONE rollup pass, not one query per level.
   *
-  * Scale: the snapshot queries scan the base in place and shuffle
-  * only the delta rows on the merge key (the base anti-joins the
-  * broadcast delta keys); merge is one full-outer-shaped shuffle on
-  * the key; the tree query is a single rollup aggregation (map-side
-  * partial per grouping set).
+  * Scale: the snapshot queries scan the base in place, filtered by
+  * the delta keys of a small chain resolved on the driver, or
+  * anti-joined with them while only the delta rows shuffle on the
+  * merge key (Snapshots.mergeChain); merge is one full-outer-shaped
+  * shuffle on the key; the tree query is a single rollup aggregation
+  * (map-side partial per grouping set).
   */
 object Warehouse {
 

@@ -1,10 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Versioned snapshot store: reproducible as-of reads over a mutable
   * warehouse (SURVEY §2.13).
@@ -32,14 +35,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * - `asOf(version)` = latest full snapshot ≤ version, then the delta
   *   chain up to `version` applied key-wise, last writer wins.
   *
-  * Scale: an as-of read leaves the full snapshot in place. The deltas
-  * since it are read as one scan (one per distinct schema), resolved
-  * last-writer-wins by a window on the merge key over the delta rows
-  * only, and the base keeps the rows whose key no delta touches — an
-  * anti join that Spark broadcasts when the delta keys are small, as
-  * an incremental import's are. A one-segment chain is the base scan
-  * alone. A periodic `compact` turns a long chain back into a full
-  * snapshot. Manifests and data files are immutable once written
+  * Scale: an as-of read leaves the full snapshot in place, and the
+  * base keeps the rows whose key no delta since it touches. Small
+  * delta chains (an incremental import's) are read and resolved
+  * last-writer-wins on the driver, and the base scan is filtered by
+  * their keys: the read is one Spark job. Larger chains are read as one
+  * scan (one per distinct schema), resolved by a window on the merge
+  * key over the delta rows only, and anti-joined with the base. A
+  * one-segment chain is the base scan alone. A periodic `compact`
+  * turns a long chain back into a full snapshot. Manifests and data
+  * files are immutable once written
   * (same as any log-structured table format): a commit publishes a NEW
   * `_manifest.v<N>` file and readers resolve the latest by listing, so
   * a reader concurrent with a commit sees the previous complete
@@ -381,22 +386,30 @@ object Snapshots {
 
   /** THE merge of every store read: `base ⋉̸ keys(deltas) ∪
     * lastWriterWins(deltas)`. `base` is a full snapshot or merged view
-    * (its tombstones are dropped, its rows are not deduplicated);
-    * `deltas` are normalized ([[normDeleted]]) rows carrying their
-    * version in `_v`. A base row survives unless some delta row has its
-    * key, compared null-safely on every merge key, so a NULL key is
-    * superseded like any other. The anti join carries no hint: Spark
-    * broadcasts the delta keys when they are small (AQE re-plans on
-    * their measured size) and shuffles both sides otherwise. With no
-    * deltas the base is returned as it is, with no merge; with no base
-    * the deltas' resolution is the whole answer.
+    * (its tombstones are dropped, its rows are not deduplicated); the
+    * deltas' rows are resolved per key, compared null-safely on every
+    * merge key, to the row of the highest version, tombstones dropped;
+    * a base row survives unless some delta row — a tombstone too — has
+    * its key, so a NULL key is superseded like any other.
+    *
+    * The merge has two physical forms, chosen by [[mergeSegments]]:
+    * - this one, distributed: `deltas` are normalized ([[normDeleted]])
+    *   rows carrying their version in `_v`, ranked by a window over the
+    *   delta rows only; the base anti-joins the delta keys with `<=>`.
+    *   The join carries no hint: Spark broadcasts the delta keys when
+    *   they are small (AQE re-plans on their measured size) and
+    *   shuffles both sides otherwise. Large chains, `withBatch`'s
+    *   DataFrame batch, and keys without exact equality take it;
+    * - [[mergeOnDriver]], for small chains: the deltas are resolved on
+    *   the driver and the base is filtered by their keys, so the read
+    *   is one Spark job, the base scan.
+    *
+    * With no deltas the base is returned as it is, with no merge; with
+    * no base the deltas' resolution is the whole answer.
     */
   private def mergeChain(
-      base: Option[DataFrame], deltas: Option[DataFrame], keys: Seq[String]): DataFrame = {
-    val live = base.map(b =>
-      if (b.columns.contains("_deleted")) normDeleted(b).filter(!col("_deleted")).drop("_deleted")
-      else b)
-    (live, deltas) match {
+      base: Option[DataFrame], deltas: Option[DataFrame], keys: Seq[String]): DataFrame =
+    (base.map(liveBase), deltas) match {
       case (Some(b), None) => b
       case (None, Some(d)) => lastWriterWins(d, keys, "_v")
       case (Some(b), Some(d)) =>
@@ -406,15 +419,30 @@ object Snapshots {
         kept.unionByName(lastWriterWins(d, keys, "_v"), allowMissingColumns = true)
       case (None, None) => throw new IllegalArgumentException("a merge needs a base or a delta")
     }
-  }
+
+  /** A merge base without its tombstones. */
+  private def liveBase(b: DataFrame): DataFrame =
+    if (b.columns.contains("_deleted")) normDeleted(b).filter(!col("_deleted")).drop("_deleted")
+    else b
 
   /** [[mergeChain]] over stored segments: `base` (a full snapshot) and
     * `deltas` (later delta segments, version-ascending), each read
-    * with `bound` applied below the merge when given. A merge key's
-    * bound cannot change which row of a surviving key wins, so it
-    * prunes both sides before the anti join and the window. A segment
-    * lacking a merge key column is refused by name: merged under a
-    * NULL key it would corrupt last-writer-wins silently.
+    * with `bound` applied when given. A merge key's bound cannot change
+    * which row of a surviving key wins, so it prunes the base scan and
+    * the deltas, below the merge or on its resolved rows alike. A
+    * segment lacking a merge key column is refused by name: merged
+    * under a NULL key it would corrupt last-writer-wins silently.
+    *
+    * The deltas are resolved on the driver ([[mergeOnDriver]]) when
+    * both hold:
+    * - their data files total at most `spark.sql.autoBroadcastJoinThreshold`
+    *   bytes, Spark's own "small enough to ship whole" (a value ≤ 0
+    *   disables the driver form);
+    * - every merge key has exact equality: an integral, string (binary
+    *   collation), boolean, date, timestamp or decimal type, the same
+    *   in the deltas as in the base.
+    * Otherwise — float, double, binary or complex keys, and chains over
+    * the threshold — the merge is the distributed [[mergeChain]].
     */
   private def mergeSegments(
       spark: SparkSession, root: String, base: Option[(Long, String, String)],
@@ -432,14 +460,94 @@ object Snapshots {
       checked(v, seg.columns.toIndexedSeq)
       bounded(seg)
     }
-    val d = Option.when(deltas.nonEmpty) {
-      deltas.foreach { case (v, _, rel) =>
-        checked(v, Sources.parquetSchema(spark, s"$root/$rel").fieldNames.toIndexedSeq)
-      }
-      normDeleted(bounded(
-        Sources.readParquetTagged(spark, deltas.map { case (v, _, rel) => s"$root/$rel" -> v }, "_v")))
+    val dirs = deltas.map { case (v, _, rel) => s"$root/$rel" -> v }
+    val schemas = dirs.map { case (d, v) =>
+      val s = Sources.parquetSchema(spark, d)
+      checked(v, s.fieldNames.toIndexedSeq)
+      s.toNullable
+    }.distinct
+    if (dirs.isEmpty) mergeChain(b, None, keys)
+    else {
+      val union =
+        if (schemas.size == 1) schemas.head
+        else schemas.map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
+          .reduce(_.unionByName(_, allowMissingColumns = true)).schema
+      if (resolvesOnDriver(spark, dirs.map(_._1), union, keys, b))
+        mergeOnDriver(spark, b, dirs.map(_._1), union, keys, bound)
+      else mergeChain(b, Some(normDeleted(bounded(Sources.readParquetTagged(spark, dirs, "_v")))), keys)
     }
-    mergeChain(b, d, keys)
+  }
+
+  /** Whether [[mergeSegments]] resolves the deltas in `dirs`, of the
+    * by-name union schema `union`, on the driver: their data files
+    * total at most `spark.sql.autoBroadcastJoinThreshold` bytes, and
+    * every merge key has an exact-equality type, the base's too.
+    */
+  private def resolvesOnDriver(spark: SparkSession, dirs: Seq[String], union: StructType,
+      keys: Seq[String], base: Option[DataFrame]): Boolean = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val resolver = spark.sessionState.conf.resolver
+    def typeOf(s: StructType, k: String) = s.fields.find(f => resolver(f.name, k)).map(_.dataType)
+    def exact(t: DataType): Boolean = t match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType | TimestampType |
+          TimestampNTZType | _: DecimalType => true
+      case s: StringType => s.collationId == StringType.collationId
+      case _ => false
+    }
+    limit > 0 &&
+      keys.forall { k =>
+        val t = typeOf(union, k)
+        t.exists(exact) && base.forall(b => typeOf(b.schema, k) == t)
+      } &&
+      dirs.iterator.flatMap(Sources.parquetFiles(spark, _)).map(_.getLen).sum <= limit
+  }
+
+  /** The driver form of [[mergeChain]], for a small chain. The deltas
+    * in `dirs` (version-ascending) are read on the driver, each in its
+    * own schema aligned by name to `union` ([[Sources.parquetRows]]),
+    * and resolved there: per key, null-safe on every merge key, the row
+    * of the highest version wins; a tombstone (`_deleted`, NULL meaning
+    * false) then drops it. The winners become a local frame, filtered
+    * by `bound` as the base is. The base keeps a row unless its key is
+    * one of the delta keys, tombstoned ones included, compared
+    * null-safely as `<=>` does: a NULL delta key supersedes the NULL-key
+    * base rows. On one key that is the key NOT IN the delta values (a
+    * hashed set), with NULL handled apart; on several it is a struct of
+    * the keys NOT IN struct literals typed and named as the keys, whose
+    * equality is null-safe. A filter, not a join: the plan is the base
+    * scan beside a LocalTableScan, with no exchange and no window.
+    */
+  private def mergeOnDriver(spark: SparkSession, base: Option[DataFrame], dirs: Seq[String],
+      union: StructType, keys: Seq[String], bound: Option[Column]): DataFrame = {
+    val resolver = spark.sessionState.conf.resolver
+    val keyAt = keys.map(k => union.fields.indexWhere(f => resolver(f.name, k)))
+    val keyTypes = keyAt.map(union(_).dataType)
+    val deletedAt = union.fieldNames.indexOf("_deleted")
+    val last = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], InternalRow]
+    Sources.parquetRows(spark, dirs, union).foreach { r =>
+      last(keyAt.zip(keyTypes).map { case (i, t) => r.get(i, t) }) = r
+    }
+    val toRow = CatalystTypeConverters.createToScalaConverter(union)
+    val live = last.valuesIterator
+      .filter(r => deletedAt < 0 || r.isNullAt(deletedAt) || !r.getBoolean(deletedAt))
+      .map(toRow(_).asInstanceOf[Row]).toSeq
+    val winners = spark.createDataFrame(live.asJava, union).drop("_deleted")
+    val resolved = bound.fold(winners)(winners.filter)
+    base.map(liveBase) match {
+      case None => resolved
+      case Some(b) =>
+        def value(k: Any, t: DataType) = CatalystTypeConverters.convertToScala(k, t)
+        val (probe, touched) =
+          if (keys.size == 1) (col(keys.head), last.keysIterator.map(k => value(k.head, keyTypes.head)).toSeq)
+          else (struct(keys.map(col): _*), last.keysIterator.map(k => struct(keys.lazyZip(keyTypes).lazyZip(k)
+            .map { case (name, t, v) => lit(value(v, t)).cast(t).as(name) }: _*)).toSeq)
+        val listed = touched.filter(_ != null)
+        val hit =
+          if (listed.isEmpty) probe.isNull
+          else coalesce(probe.isin(listed: _*), lit(listed.size < touched.size))
+        val kept = if (touched.isEmpty) b else b.filter(!hit)
+        kept.unionByName(resolved, allowMissingColumns = true)
+    }
   }
 
   /** The segments an as-of read of `version` merges: the latest full
@@ -636,8 +744,9 @@ object Snapshots {
   /** Read the table as of `version` (reproducible forever): base = the
     * latest full snapshot ≤ version, then deltas (base, version]
     * merged last-writer-wins on `keys`, tombstones dropped
-    * ([[mergeChain]]: the base is scanned in place and anti-joined with
-    * the delta keys; only the delta rows are ranked). An evolved chain
+    * ([[mergeChain]]: the base is scanned in place and keeps the rows
+    * whose key no delta holds; a small chain resolves on the driver,
+    * a larger one ranks only the delta rows). An evolved chain
     * (a delta that added or narrowed columns via
     * `commitDelta(evolveSchema = true)`) reads with the union schema,
     * absent cells null — commit-side validation is what keeps
@@ -1195,8 +1304,8 @@ object Snapshots {
   /** The pruned merge read shared by [[readMergeWhere]] and
     * [[readMergeEq]]: the chain of `version` cut to the segments `keep`
     * accepts, merged by [[mergeSegments]] with the key predicate
-    * `bounded` applied to the base and the deltas below the merge (it
-    * reaches each scan's parquet row-group statistics). If the base is
+    * `bounded` applied to the base scan (it reaches its parquet
+    * row-group statistics) and to the deltas. If the base is
     * pruned, the kept deltas' own resolution is the answer. Both the
     * matching and the all-pruned answer take [[asOf]]'s null-filled
     * union schema, so an evolved chain gives one column set whatever
@@ -1298,7 +1407,8 @@ object Snapshots {
   /** Fold the delta chain into a new full snapshot (bounds the merge
     * fan-in for future reads; old versions stay readable). The fold is
     * the [[asOf]] read of the tip, so it is written without shuffling
-    * the old base: only the delta rows are ranked.
+    * the old base: a small chain resolves on the driver, a larger one
+    * ranks only the delta rows.
     *
     * The fold's content is pinned to the chain visible at THIS read,
     * and the publish is pinned to land at exactly the next version

@@ -4,7 +4,11 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -112,6 +116,53 @@ object Sources {
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** The rows of the parquet files or directories `paths`, in path
+    * order, read on the driver by Spark's own parquet reader in each
+    * path's footer schema ([[parquetSchema]]) and aligned by column name
+    * to `schema`: a column a path lacks reads NULL, one stored under
+    * another type is cast to `schema`'s, as a by-name union would.
+    * Partition directories are not parsed into columns (a store segment
+    * is flat). No Spark job runs, and every row is held in driver
+    * memory — for small inputs only (the snapshot store's small delta
+    * chains).
+    */
+  def parquetRows(spark: SparkSession, paths: Seq[String], schema: StructType): Seq[InternalRow] = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    // one reader per stored schema: building one broadcasts the Hadoop conf
+    val readers = scala.collection.mutable.Map.empty[StructType, PartitionedFile => Iterator[InternalRow]]
+    paths.flatMap { path =>
+      val stored = parquetSchema(spark, path)
+      val read = readers.getOrElseUpdate(stored, new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, stored, new StructType(), stored, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        hadoopConf))
+      val align = UnsafeProjection.create(schema.fields.toIndexedSeq.map { f =>
+        stored.fields.indexWhere(s => conf.resolver(s.name, f.name)) match {
+          case -1 => Literal(null, f.dataType)
+          case i if stored(i).dataType == f.dataType => BoundReference(i, f.dataType, nullable = true)
+          case i => Cast(BoundReference(i, stored(i).dataType, nullable = true), f.dataType,
+            Some(conf.sessionLocalTimeZone))
+        }
+      })
+      parquetFiles(spark, path).flatMap { f =>
+        read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f), 0, f.getLen,
+          modificationTime = f.getModificationTime, fileSize = f.getLen)).map(r => align(r).copy())
+      }
+    }
+  }
+
+  /** The data files of a parquet path, as Spark's file index lists
+    * them: the path itself if it is a file, else the non-empty leaf
+    * files below it, hidden `_`/`.` names skipped, in path order.
+    */
+  def parquetFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) Seq(st)
+    else leaves(fs, fs.listStatus(p).toSeq, isDataName).filter(_.getLen > 0).sortBy(_.getPath.toString)
+  }
+
   // Per-session schema memo: path → (stamp, schema). Weak keys: the map
   // must not pin dead sessions. Segment paths of a long-lived store
   // accumulate (every commit adds one), so a session's memo is dropped
@@ -197,21 +248,30 @@ object Sources {
     */
   private def footerFile(fs: FileSystem, st: FileStatus, children: Seq[FileStatus]): Option[FileStatus] = {
     if (!st.isDirectory) return Some(st)
-    def hidden(name: String): Boolean =
-      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-        name.endsWith("._COPYING_")) &&
-        !(name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ||
-          name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE))
-    def leaves(entries: Seq[FileStatus]): Seq[FileStatus] =
-      entries.filterNot(f => hidden(f.getPath.getName)).flatMap { f =>
-        if (f.isDirectory) leaves(fs.listStatus(f.getPath).toSeq) else Seq(f)
-      }
-    val all = leaves(children).sortBy(_.getPath.toString)
+    def summary(name: String): Boolean =
+      name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ||
+        name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
+    val all = leaves(fs, children, n => isDataName(n) || summary(n)).sortBy(_.getPath.toString)
     def named(n: String) = all.find(_.getPath.getName == n)
     named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
       .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
       .orElse(all.headOption) // no summary file listed: `all` holds data files only
   }
+
+  /** A name Spark's file index lists as data: not hidden by a leading
+    * `_` (unless it holds `=`, a partition directory) or `.`, and not a
+    * file still being copied.
+    */
+  private def isDataName(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_"))
+
+  /** The leaf files below `entries` whose names, and whose directories'
+    * names, `visible` accepts.
+    */
+  private def leaves(fs: FileSystem, entries: Seq[FileStatus], visible: String => Boolean): Seq[FileStatus] =
+    entries.filter(f => visible(f.getPath.getName)).flatMap { f =>
+      if (f.isDirectory) leaves(fs, fs.listStatus(f.getPath).toSeq, visible) else Seq(f)
+    }
 
   /** Order-independent freshness signature of a file tree: per-file
     * (path-relative-to-root × mtime × length) mixes folded with BOTH

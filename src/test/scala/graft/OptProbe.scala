@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * pieces of the bench's most expensive composites so optimization
   * targets the measured cost, not the guessed one. Run with
   * `sbt "Test/runMain graft.OptProbe <mode> [names...]"`; mode `serve
-  * [n]` times n sequential requests per endpoint of an in-process server.
+  * [n]` times n sequential requests per endpoint of an in-process server,
+  * mode `asof` the as-of reads of a small store at every version.
   */
 object OptProbe {
   private def session(): SparkSession = {
@@ -59,11 +60,64 @@ object OptProbe {
     } finally srv.close()
   }
 
+  /** p50 of 7 timed runs (after 2 untimed) and the Spark job count of
+    * `asOf(v).orderBy(key).limit(1000).collect()` at every version of a
+    * store of `orders` plus five deltas of about 50 rows each (updates,
+    * tombstones and inserts); the build of the frame is timed apart.
+    */
+  private def timeAsOf(spark: SparkSession, d: String): Unit = {
+    import graft.sources.Snapshots
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    })
+    val tmp = java.nio.file.Files.createTempDirectory("graft-probe-asof")
+    val root = s"$tmp/store"
+    val key = "o_orderkey"
+    try {
+      val orders = Tables.orders(spark, d)
+      Snapshots.commit(orders, root)
+      val top = orders.agg(max(key)).head().getLong(0)
+      (1 to 5).foreach { i =>
+        val touched = orders.filter(col(key) % 3001 === i * 97)
+        val upserts = touched.withColumn("o_totalprice", col("o_totalprice") + i)
+          .withColumn("_deleted", col(key) % 7 === 0)
+        val inserts = touched.limit(12).withColumn(key, col(key) + top * i).withColumn("_deleted", lit(false))
+        Snapshots.commitDelta(upserts.unionByName(inserts), root)
+      }
+      for (v <- 1L to 6L) {
+        def once(): (Double, Double) = {
+          val t0 = System.nanoTime()
+          val df = Snapshots.asOf(spark, root, v, Seq(key))
+          val t1 = System.nanoTime()
+          df.orderBy(key).limit(1000).collect()
+          ((t1 - t0) / 1e6, (System.nanoTime() - t0) / 1e6)
+        }
+        Seq.fill(2)(once())
+        val g = s"probe-asof-v$v"
+        spark.sparkContext.setJobGroup(g, g)
+        val runs = try Seq.fill(7)(once()) finally spark.sparkContext.clearJobGroup()
+        spark.sparkContext.setJobGroup(s"$g-end", "sentinel")
+        try spark.sparkContext.parallelize(Seq(1), 1).count() finally spark.sparkContext.clearJobGroup()
+        while (!jobs.contains(s"$g-end")) Thread.sleep(10)
+        val n = jobs.toArray.count(_ == g) / 7.0
+        val build = runs.map(_._1).sorted
+        val all = runs.map(_._2).sorted
+        println(f"PROBE asof v$v p50 ${all(3)}%8.1f ms  min ${all.head}%8.1f ms  build p50 ${build(3)}%6.1f ms  jobs $n%.1f")
+      }
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(tmp.toString)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      ()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = session()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mode = args.headOption.getOrElse("query")
-    if (mode != "serve") {
+    if (mode != "serve" && mode != "asof") {
       // warm like Bench: table scans only
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { tn =>
@@ -73,6 +127,7 @@ object OptProbe {
     }
     mode match {
       case "serve" => timeServe(spark, d, args.lift(1).fold(30)(_.toInt))
+      case "asof" => timeAsOf(spark, d)
       case "query" =>
         for (n <- args.drop(1); r <- 1 to 3) {
           spark.catalog.clearCache()

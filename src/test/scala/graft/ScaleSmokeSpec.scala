@@ -235,19 +235,31 @@ class ScaleSmokeSpec extends SparkSpec {
         root)
     }
 
-    val t0 = System.nanoTime()
-    val latest = Snapshots.latest(spark, root, Seq("o_orderkey"))
-    // the scale property: merging a 17-frame chain is ONE key shuffle
-    // (union → window rank), not one join or shuffle per delta
-    val p = latest.queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(p).length === 1,
-      s"delta-chain merge should be a single key shuffle:\n$p")
-    assert(!p.contains("Exchange rangepartitioning"), "unexpected extra shuffle")
+    // the distributed form's property: a threshold one byte under the
+    // deltas' size keeps the merge off the driver, and Spark still
+    // broadcasts the delta keys to the base's anti join
+    val deltaBytes = Snapshots.versions(spark, root).tail
+      .flatMap { case (_, _, rel) => graft.sources.Sources.parquetFiles(spark, s"$root/$rel") }.map(_.getLen).sum
+    val mergeSecs = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> (deltaBytes - 1).toString) {
+      val t0 = System.nanoTime()
+      val latest = Snapshots.latest(spark, root, Seq("o_orderkey"))
+      // the scale property: merging a 17-frame chain is ONE key shuffle
+      // (union → window rank), not one join or shuffle per delta
+      val p = latest.queryExecution.executedPlan.toString
+      assert("Exchange hashpartitioning".r.findAllIn(p).length === 1,
+        s"delta-chain merge should be a single key shuffle:\n$p")
+      assert(!p.contains("Exchange rangepartitioning"), "unexpected extra shuffle")
 
-    assert(latest.count() === total, "upsert-only chain changed cardinality")
-    val amended = latest.filter(col("o_orderstatus") === "A").count()
-    assert(amended === orders.filter(col("o_orderkey") % 64 < 16).count())
-    val mergeSecs = (System.nanoTime() - t0) / 1e9
+      assert(latest.count() === total, "upsert-only chain changed cardinality")
+      val amended = latest.filter(col("o_orderstatus") === "A").count()
+      assert(amended === orders.filter(col("o_orderkey") % 64 < 16).count())
+      (System.nanoTime() - t0) / 1e9
+    }
+    // under the threshold the chain resolves on the driver: no exchange at all
+    val small = Snapshots.latest(spark, root, Seq("o_orderkey"))
+    assert(!small.queryExecution.executedPlan.toString.contains("Exchange"),
+      s"a small chain merged with an exchange:\n${small.queryExecution.executedPlan}")
+    assert(small.filter(col("o_orderstatus") === "A").count() === orders.filter(col("o_orderkey") % 64 < 16).count())
 
     // compaction folds the chain: later reads scan ONE file set again
     Snapshots.compact(spark, root, Seq("o_orderkey"))
@@ -321,19 +333,27 @@ class ScaleSmokeSpec extends SparkSpec {
     // keys the base drops and once for its last-writer-wins rows
     val lo = 5L * slice
     val hi = lo + slice / 2
-    val ranged = Snapshots.readMergeWhere(
-      spark, root, Seq("o_orderkey"), "o_orderkey", lo, hi)
-    val rp = ranged.queryExecution.executedPlan
-    val opened = Walk.collect(rp) { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-      s.relation.location.rootPaths.map(_.getName)
-    }.flatten.toSet
-    val segs = Snapshots.versions(spark, root).map { case (v, _, rel) => v -> rel }.toMap
-    assert(opened === Set(segs(1L), segs(7L)),
-      s"merge-range read should open base + 1 delta, opened $opened:\n$rp")
-    assert(ranged.count() ===
-      orders.filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi).count())
-    assert(ranged.filter(col("o_orderstatus") =!= "A").count() === 0,
-      "every in-range key was amended by its band's delta — LWW must serve the amendment")
+    // the plan shows the opened segments when the merge is distributed;
+    // a small chain's deltas are read on the driver instead
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val ranged = Snapshots.readMergeWhere(
+        spark, root, Seq("o_orderkey"), "o_orderkey", lo, hi)
+      val rp = ranged.queryExecution.executedPlan
+      val opened = Walk.collect(rp) { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.getName)
+      }.flatten.toSet
+      val segs = Snapshots.versions(spark, root).map { case (v, _, rel) => v -> rel }.toMap
+      assert(opened === Set(segs(1L), segs(7L)),
+        s"merge-range read should open base + 1 delta, opened $opened:\n$rp")
+      assert(ranged.count() ===
+        orders.filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi).count())
+      assert(ranged.filter(col("o_orderstatus") =!= "A").count() === 0,
+        "every in-range key was amended by its band's delta — LWW must serve the amendment")
+    }
+    assert(Snapshots.prunedMergeTo(spark, root, Seq("o_orderkey"), "o_orderkey", lo, hi) === Seq(1L, 7L))
+    val rangedOnDriver = Snapshots.readMergeWhere(spark, root, Seq("o_orderkey"), "o_orderkey", lo, hi)
+    assert(rangedOnDriver.count() === orders.filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi).count())
+    assert(rangedOnDriver.filter(col("o_orderstatus") =!= "A").count() === 0)
     // history over the same 17-segment chain: the whole per-key
     // timeline classifies through ONE key shuffle (the window), not
     // one join or exchange per segment

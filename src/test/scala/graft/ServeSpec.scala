@@ -109,6 +109,29 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(longOf(v \ "n_subjects") == direct)
   }
 
+  test("a versioned store read over a 3-delta chain runs one Spark job") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = tmpDir("serve-read-jobs")
+    Snapshots.commit(spark.range(0, 500).select(col("id").as("k"), (col("id") * 2).as("v")), root)
+    (1 to 3).foreach { d =>
+      Snapshots.commitDelta(spark.range(d * 10, d * 10 + 5).select(col("id").as("k"), lit(-d).cast("long").as("v"),
+        (col("id") % 5 === 0).as("_deleted")), root)
+    }
+    val srv = WarehouseServer.start(spark, WarehouseServer.Config(dataDir = sf, storeRoot = Some(root)))
+    try {
+      def read(): JValue = JsonMethods.parse(client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${srv.port}/store/read?keys=k&version=4&limit=40")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body())
+      read() // warms the footer memo and the connection
+      var v: JValue = JNothing
+      val served = jobGroupsIn("serve-read-pin") { v = read() }.filter(_.startsWith("graft-serve-"))
+      assert(served.size == 1, s"GET /store/read ran ${served.size} jobs: $served")
+      val want = Snapshots.asOf(spark, root, 4, Seq("k")).orderBy("k").limit(40).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toList
+      assert(rows(v).map(r => longOf(r \ "k") -> longOf(r \ "v")) == want)
+    } finally srv.close()
+  }
+
   test("cohort population pages and marks truncation") {
     val (code, v) = post("/cohort/population?limit=3", CohortQuery.demoSpec)
     assert(code == 200)

@@ -1,8 +1,8 @@
 package graft
 
-import graft.sources.Snapshots
+import graft.sources.{Snapshots, Sources}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -167,24 +167,36 @@ class SnapshotMergeSpec extends SparkSpec {
     checkReads(root, excised, keys, seed + 100)
   }
 
+  private val distributed = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+
+  /** `body` under both forms of the merge: the default, where these
+    * small chains resolve on the driver, and the distributed one.
+    */
+  private def bothForms(body: => Unit): Unit = {
+    withClue("driver form: ")(body)
+    withClue("distributed form: ")(withSQLConf(distributed)(body))
+  }
+
   Seq(11L, 12L).foreach { seed =>
     test(s"merge parity with a plain-Scala last-writer-wins reference, seed $seed") {
-      scenario(seed, twoKeys = false)
+      bothForms(scenario(seed, twoKeys = false))
     }
   }
 
   test("merge parity on a two-column key, seed 13") {
-    scenario(13L, twoKeys = true)
+    bothForms(scenario(13L, twoKeys = true))
   }
 
   test("a full snapshot with a duplicated key returns both rows; a delta supersedes both") {
-    val root = tmpDir("merge-dup-base")
-    val base = Commit(full = true, Seq(Rec(Some(1), "a", "x", 1L), Rec(Some(1), "a", "y", 2L),
-      Rec(Some(2), "a", "z", 3L)))
-    Snapshots.commit(frame(base), root)
-    assert(recsOf(Snapshots.latest(spark, root, Seq("k1"))).map(_.name) === Set("x", "y", "z"))
-    Snapshots.commitDelta(frame(Commit(full = false, Seq(Rec(Some(1), "a", "w", 4L)))), root)
-    assert(recsOf(Snapshots.latest(spark, root, Seq("k1"))).map(_.name) === Set("w", "z"))
+    bothForms {
+      val root = tmpDir("merge-dup-base")
+      val base = Commit(full = true, Seq(Rec(Some(1), "a", "x", 1L), Rec(Some(1), "a", "y", 2L),
+        Rec(Some(2), "a", "z", 3L)))
+      Snapshots.commit(frame(base), root)
+      assert(recsOf(Snapshots.latest(spark, root, Seq("k1"))).map(_.name) === Set("x", "y", "z"))
+      Snapshots.commitDelta(frame(Commit(full = false, Seq(Rec(Some(1), "a", "w", 4L)))), root)
+      assert(recsOf(Snapshots.latest(spark, root, Seq("k1"))).map(_.name) === Set("w", "z"))
+    }
   }
 
   private object Walk extends AdaptiveSparkPlanHelper
@@ -204,27 +216,124 @@ class SnapshotMergeSpec extends SparkSpec {
         .toDF("id", "name", "amount", "_deleted"), root)
     }
     val dirs = Snapshots.versions(spark, root).map(_._3)
-    val df = Snapshots.asOf(spark, root, 4, Seq("id"))
-    assert(df.count() === 2000L - 3 + 3)
-    df.collect()
+    // the distributed form's plan: a threshold one byte under the deltas'
+    // size keeps the merge off the driver and still lets Spark broadcast
+    // the delta keys (at -1 it would shuffle the base for the anti join)
+    val deltaBytes = dirs.tail.flatMap(d => Sources.parquetFiles(spark, s"$root/$d")).map(_.getLen).sum
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> (deltaBytes - 1).toString) {
+      val df = Snapshots.asOf(spark, root, 4, Seq("id"))
+      assert(df.count() === 2000L - 3 + 3)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val scans = scansOf(plan)
+      val (baseScans, deltaScans) = scans.partition(s => dirsOf(s) === Set(dirs.head))
+      assert(baseScans.size === 1, s"one base scan:\n$plan")
+      // every scan over the deltas is the one relation over all three
+      assert(deltaScans.nonEmpty && deltaScans.forall(s => dirsOf(s) === dirs.tail.toSet),
+        s"the deltas are not one relation:\n$plan")
+      val exchanged = Walk.collect(plan) {
+        case e: ShuffleExchangeExec => scansOf(e)
+        case b: BroadcastExchangeExec => scansOf(b)
+      }.flatten
+      assert(!exchanged.exists(baseScans.contains), s"the base scan feeds an exchange:\n$plan")
+      assert(Walk.collect(plan) { case w: WindowExec => w }.size === 1, s"one delta rank:\n$plan")
+      // a one-segment chain: the base scan alone
+      val one = Snapshots.asOf(spark, root, 1, Seq("id"))
+      assert(one.count() === 2000L)
+      val onePlan = one.queryExecution.executedPlan
+      assert(Walk.collect(onePlan) { case w: WindowExec => w }.isEmpty, s"a merge on one segment:\n$onePlan")
+      assert(Walk.collect(onePlan) { case e: Exchange => e }.isEmpty, s"an exchange on one segment:\n$onePlan")
+    }
+  }
+
+  /** Whether `df` merged on the driver: its deltas are a local relation
+    * and no window ranks them.
+    */
+  private def onDriver(df: DataFrame): Boolean = {
     val plan = df.queryExecution.executedPlan
-    val scans = scansOf(plan)
-    val (baseScans, deltaScans) = scans.partition(s => dirsOf(s) === Set(dirs.head))
-    assert(baseScans.size === 1, s"one base scan:\n$plan")
-    // every scan over the deltas is the one relation over all three
-    assert(deltaScans.nonEmpty && deltaScans.forall(s => dirsOf(s) === dirs.tail.toSet),
-      s"the deltas are not one relation:\n$plan")
-    val exchanged = Walk.collect(plan) {
-      case e: ShuffleExchangeExec => scansOf(e)
-      case b: BroadcastExchangeExec => scansOf(b)
-    }.flatten
-    assert(!exchanged.exists(baseScans.contains), s"the base scan feeds an exchange:\n$plan")
-    assert(Walk.collect(plan) { case w: WindowExec => w }.size === 1, s"one delta rank:\n$plan")
-    // a one-segment chain: the base scan alone
-    val one = Snapshots.asOf(spark, root, 1, Seq("id"))
-    assert(one.count() === 2000L)
-    val onePlan = one.queryExecution.executedPlan
-    assert(Walk.collect(onePlan) { case w: WindowExec => w }.isEmpty, s"a merge on one segment:\n$onePlan")
-    assert(Walk.collect(onePlan) { case e: Exchange => e }.isEmpty, s"an exchange on one segment:\n$onePlan")
+    Walk.collect(plan) { case l: LocalTableScanExec => l }.nonEmpty &&
+      Walk.collect(plan) { case w: WindowExec => w }.isEmpty
+  }
+
+  test("driver form: NULL keys superseded and tombstoned, a re-insert after a tombstone, an added column") {
+    val commits = Seq(
+      Commit(full = true, (1 to 6).map(k => Rec(Some(k), "a", s"v1-$k", k.toLong)) :+
+        Rec(None, "a", "v1-null", 0L)),
+      Commit(full = false, Seq(Rec(None, "a", "v2-null", 1L), Rec(Some(2), "a", "v2-2", 2L, del = true),
+        Rec(Some(7), "a", "v2-7", 7L))),
+      Commit(full = false, Seq(Rec(Some(2), "a", "v3-2", 3L, extra = Some(30L)),
+        Rec(Some(3), "a", "v3-3", 3L, extra = Some(31L))), extra = Some(IntegerType)),
+      Commit(full = false, Seq(Rec(None, "a", "v4-null", 4L, del = true), Rec(Some(4), "a", "v4-4", 4L, del = true))),
+      Commit(full = false, Seq(Rec(Some(4), "a", "v5-4", 5L), Rec(Some(5), "a", "v5-5", 5L))))
+    val root = tmpDir("merge-driver-cases")
+    commitAll(root, commits)
+    (1 to commits.size).foreach { v =>
+      val df = Snapshots.asOf(spark, root, v, Seq("k1"))
+      assert(recsOf(df) === reference(commits, v, Seq("k1")), s"asOf v$v")
+      if (v > 1) assert(onDriver(df), s"v$v did not merge on the driver:\n${df.queryExecution.executedPlan}")
+    }
+    // the NULL key: superseded at v2, tombstoned at v4
+    assert(recsOf(Snapshots.asOf(spark, root, 2, Seq("k1"))).filter(_.k1.isEmpty).map(_.name) === Set("v2-null"))
+    assert(!recsOf(Snapshots.asOf(spark, root, 4, Seq("k1"))).exists(_.k1.isEmpty))
+    // key 2: tombstoned at v2, back with the added column at v3
+    assert(recsOf(Snapshots.asOf(spark, root, 3, Seq("k1"))).find(_.k1.contains(2)).flatMap(_.extra) === Some(30L))
+  }
+
+  test("driver form: an as-of read of 1 to 5 small deltas is one Spark job, no exchange, no window") {
+    import spark.implicits._
+    val root = tmpDir("merge-driver-jobs")
+    Snapshots.commit((1 to 2000).map(i => (i.toLong, s"n$i", i.toLong)).toDF("id", "name", "amount"), root)
+    (1 to 5).foreach { d =>
+      Snapshots.commitDelta(Seq((d.toLong, s"u$d", 0L, false), (100L + d, "t", 0L, true), (5000L + d, "i", 0L, false))
+        .toDF("id", "name", "amount", "_deleted"), root)
+    }
+    (2 to 6).foreach { v =>
+      var got: Set[Row] = Set.empty
+      var df: DataFrame = null
+      val jobs = jobsIn(s"asof-v$v") {
+        df = Snapshots.asOf(spark, root, v, Seq("id"))
+        got = df.collect().toSet
+      }
+      assert(jobs === 1, s"asOf v$v ran $jobs jobs")
+      val plan = df.queryExecution.executedPlan
+      assert(Walk.collect(plan) { case e: Exchange => e }.isEmpty, s"an exchange at v$v:\n$plan")
+      assert(Walk.collect(plan) { case w: WindowExec => w }.isEmpty, s"a window at v$v:\n$plan")
+      assert(Walk.collect(plan) { case l: LocalTableScanExec => l }.size === 1, s"no local deltas at v$v:\n$plan")
+      assert(got.size === 2000, s"rows at v$v") // each delta: one update, one tombstone, one insert
+      assert(got === withSQLConf(distributed)(Snapshots.asOf(spark, root, v, Seq("id")).collect().toSet),
+        s"the forms disagree at v$v")
+    }
+  }
+
+  test("routing: a double merge key takes the distributed form and still matches the reference") {
+    import spark.implicits._
+    val root = tmpDir("merge-double-key")
+    Snapshots.commit(Seq[(Option[Double], String)](Some(1.5) -> "a", Some(2.5) -> "b", Some(3.5) -> "c", None -> "n")
+      .toDF("d", "name"), root)
+    Snapshots.commitDelta(Seq[(Option[Double], String, Boolean)]((Some(1.5), "a2", false), (Some(2.5), "b", true),
+      (None, "n2", false), (Some(4.5), "e", false)).toDF("d", "name", "_deleted"), root)
+    val df = Snapshots.asOf(spark, root, 2, Seq("d"))
+    assert(!onDriver(df), s"a double key merged on the driver:\n${df.queryExecution.executedPlan}")
+    assert(df.as[(Option[Double], String)].collect().toSet ===
+      Set(Some(1.5) -> "a2", Some(3.5) -> "c", None -> "n2", Some(4.5) -> "e"))
+  }
+
+  test("routing: a chain one byte over the threshold takes the distributed form and still matches") {
+    val commits = chain(14L, twoKeys = false).take(4)
+    val root = tmpDir("merge-threshold")
+    commitAll(root, commits)
+    val bytes = Snapshots.versions(spark, root).tail
+      .flatMap { case (_, _, rel) => Sources.parquetFiles(spark, s"$root/$rel") }.map(_.getLen).sum
+    val want = reference(commits, commits.size, Seq("k1"))
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> bytes.toString) {
+      val df = Snapshots.latest(spark, root, Seq("k1"))
+      assert(onDriver(df), s"a chain of $bytes bytes at a threshold of $bytes:\n${df.queryExecution.executedPlan}")
+      assert(recsOf(df) === want)
+    }
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> (bytes - 1).toString) {
+      val df = Snapshots.latest(spark, root, Seq("k1"))
+      assert(!onDriver(df), s"a chain of $bytes bytes over a threshold of ${bytes - 1}")
+      assert(recsOf(df) === want)
+    }
   }
 }

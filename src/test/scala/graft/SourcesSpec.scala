@@ -306,12 +306,6 @@ class SourcesSpec extends SparkSpec {
     ours
   }
 
-  private def withConf[T](k: String, v: String)(body: => T): T = {
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
   /** One parquet file written by parquet-mr itself, so its footer has
     * no Spark schema and the type-mapping confs decide the Spark types.
     */
@@ -333,7 +327,7 @@ class SourcesSpec extends SparkSpec {
       "lineitem", "documents", "embeddings", "events")
     tables.foreach(t => assertParity(s"$sf/$t.parquet"))
     // the session's nanosAsLong pin is what types events.ts
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+    withSQLConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
       assertParity(s"$sf/events.parquet")
     }
   }
@@ -382,16 +376,16 @@ class SourcesSpec extends SparkSpec {
     def typeOf(c: String) = Sources.readParquet(spark, dir).schema(c).dataType
     import org.apache.spark.sql.types._
     // the memo is NOT forgotten between flips: the confs are part of its stamp
-    withConf("spark.sql.parquet.binaryAsString", "true")(assertParity(dir))
-    withConf("spark.sql.parquet.binaryAsString", "true")(assert(typeOf("b") === StringType))
-    withConf("spark.sql.parquet.binaryAsString", "false")(assert(typeOf("b") === BinaryType))
-    withConf("spark.sql.parquet.binaryAsString", "false")(assertParity(dir))
-    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "true")(assertParity(dir))
-    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "true")(
+    withSQLConf("spark.sql.parquet.binaryAsString" -> "true")(assertParity(dir))
+    withSQLConf("spark.sql.parquet.binaryAsString" -> "true")(assert(typeOf("b") === StringType))
+    withSQLConf("spark.sql.parquet.binaryAsString" -> "false")(assert(typeOf("b") === BinaryType))
+    withSQLConf("spark.sql.parquet.binaryAsString" -> "false")(assertParity(dir))
+    withSQLConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "true")(assertParity(dir))
+    withSQLConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "true")(
       assert(typeOf("ts") === TimestampNTZType))
-    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "false")(
+    withSQLConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")(
       assert(typeOf("ts") === TimestampType))
-    withConf("spark.sql.parquet.inferTimestampNTZ.enabled", "false")(assertParity(dir))
+    withSQLConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")(assertParity(dir))
   }
 
   test("readParquet: mergeSchema=true merges every footer, as Spark does; off, one footer decides") {
@@ -399,7 +393,7 @@ class SourcesSpec extends SparkSpec {
     val dir = tmpDir("rp-merge") + "/t"
     Seq((1L, "x")).toDF("a", "b").write.parquet(dir)
     Seq((2L, 0.5)).toDF("a", "c").write.mode("append").parquet(dir)
-    val merged = withConf("spark.sql.parquet.mergeSchema", "true")(assertParity(dir))
+    val merged = withSQLConf("spark.sql.parquet.mergeSchema" -> "true")(assertParity(dir))
     assert(merged.fieldNames.toSet === Set("a", "b", "c"))
     assert(assertParity(dir).fieldNames.length === 2)
   }

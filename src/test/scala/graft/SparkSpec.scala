@@ -81,6 +81,12 @@ trait SparkSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
   def jobsIn(label: String)(body: => Unit): Int = SparkSpec.jobsIn(label)(body)
   def jobGroupsIn(label: String)(body: => Unit): Seq[String] = SparkSpec.jobGroupsIn(label)(body)
+  /** `body` with the session confs `kvs` set, each restored after. */
+  def withSQLConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
