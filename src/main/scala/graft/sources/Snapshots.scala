@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -37,9 +39,9 @@ import scala.jdk.CollectionConverters._
   *
   * Scale: an as-of read leaves the full snapshot in place, and the
   * base keeps the rows whose key no delta since it touches. Small
-  * delta chains (an incremental import's) are read and resolved
-  * last-writer-wins on the driver, and the base scan is filtered by
-  * their keys: the read is one Spark job. Larger chains are read as one
+  * delta chains (an incremental import's, up to about 200 KB) are read
+  * and resolved last-writer-wins on the driver, and the base scan is
+  * filtered by their keys: the read is one Spark job. Larger chains are read as one
   * scan (one per distinct schema), resolved by a window on the merge
   * key over the delta rows only, and anti-joined with the base. A
   * one-segment chain is the base scan alone. A periodic `compact`
@@ -437,53 +439,81 @@ object Snapshots {
     * both hold:
     * - their data files total at most `spark.sql.autoBroadcastJoinThreshold`
     *   bytes, Spark's own "small enough to ship whole" (a value ≤ 0
-    *   disables the driver form);
+    *   disables the driver form), and at most [[driverMergeMaxBytes]],
+    *   the measured size past which the driver form stops paying
+    *   (200 KB on one key). The sizes come with the footer schemas
+    *   ([[Sources.parquetSchemaAndBytes]]): choosing lists nothing more;
     * - every merge key has exact equality: an integral, string (binary
     *   collation), boolean, date, timestamp or decimal type, the same
     *   in the deltas as in the base.
     * Otherwise — float, double, binary or complex keys, and chains over
-    * the threshold — the merge is the distributed [[mergeChain]].
+    * either bound — the merge is the distributed [[mergeChain]].
     */
   private def mergeSegments(
       spark: SparkSession, root: String, base: Option[(Long, String, String)],
       deltas: Seq[(Long, String, String)], keys: Seq[String],
       bound: Option[Column] = None): DataFrame = {
-    def checked(v: Long, cols: Seq[String]): Unit = {
-      val missingKeys = keys.filterNot(cols.contains)
-      if (missingKeys.nonEmpty) throw new IllegalStateException(
-        s"segment v$v of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
-          "— the store cannot be merge-read on these keys")
-    }
     def bounded(df: DataFrame): DataFrame = bound.fold(df)(df.filter)
     val b = base.map { case (v, _, rel) =>
       val seg = Sources.readParquet(spark, s"$root/$rel")
-      checked(v, seg.columns.toIndexedSeq)
+      checkKeys(root, keys, v, seg.columns.toIndexedSeq)
       bounded(seg)
     }
     val dirs = deltas.map { case (v, _, rel) => s"$root/$rel" -> v }
-    val schemas = dirs.map { case (d, v) =>
-      val s = Sources.parquetSchema(spark, d)
-      checked(v, s.fieldNames.toIndexedSeq)
-      s.toNullable
-    }.distinct
+    val shapes = dirs.map { case (d, v) =>
+      val (s, bytes) = Sources.parquetSchemaAndBytes(spark, d)
+      checkKeys(root, keys, v, s.fieldNames.toIndexedSeq)
+      (s.toNullable, bytes)
+    }
     if (dirs.isEmpty) mergeChain(b, None, keys)
     else {
-      val union =
-        if (schemas.size == 1) schemas.head
-        else schemas.map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
-          .reduce(_.unionByName(_, allowMissingColumns = true)).schema
-      if (resolvesOnDriver(spark, dirs.map(_._1), union, keys, b))
+      val union = byNameUnion(spark, shapes.map(_._1).distinct)
+      if (resolvesOnDriver(spark, shapes.map(_._2).sum, union, keys, b))
         mergeOnDriver(spark, b, dirs.map(_._1), union, keys, bound)
       else mergeChain(b, Some(normDeleted(bounded(Sources.readParquetTagged(spark, dirs, "_v")))), keys)
     }
   }
 
-  /** Whether [[mergeSegments]] resolves the deltas in `dirs`, of the
-    * by-name union schema `union`, on the driver: their data files
-    * total at most `spark.sql.autoBroadcastJoinThreshold` bytes, and
-    * every merge key has an exact-equality type, the base's too.
+  /** Refuse segment `v` of `root` unless its columns `cols` hold every
+    * merge key: merged under a NULL key it would corrupt
+    * last-writer-wins silently.
     */
-  private def resolvesOnDriver(spark: SparkSession, dirs: Seq[String], union: StructType,
+  private def checkKeys(root: String, keys: Seq[String], v: Long, cols: Seq[String]): Unit = {
+    val missingKeys = keys.filterNot(cols.contains)
+    if (missingKeys.nonEmpty) throw new IllegalStateException(
+      s"segment v$v of $root lacks merge key column(s) ${missingKeys.mkString(", ")} " +
+        "— the store cannot be merge-read on these keys")
+  }
+
+  /** The schema a by-name union (`unionByName`, missing columns
+    * allowed) of frames of `schemas` has, without reading any.
+    */
+  private def byNameUnion(spark: SparkSession, schemas: Seq[StructType]): StructType =
+    if (schemas.size == 1) schemas.head
+    else schemas.map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
+      .reduce(_.unionByName(_, allowMissingColumns = true)).schema
+
+  /** The schema of [[mergeSegments]]' answer over the segments `segs`
+    * (base first), from their footer schemas alone — no scan and no
+    * merge runs: the base's columns, then the columns only deltas hold,
+    * each typed as the by-name union types it, tombstone flag dropped.
+    * Every segment is checked to hold the merge keys.
+    */
+  private def mergedSchema(spark: SparkSession, root: String, segs: Seq[(Long, String, String)],
+      keys: Seq[String]): StructType =
+    byNameUnion(spark, segs.map { case (v, _, rel) =>
+      val s = Sources.parquetSchema(spark, s"$root/$rel")
+      checkKeys(root, keys, v, s.fieldNames.toIndexedSeq)
+      StructType(s.toNullable.filterNot(_.name == "_deleted"))
+    }.distinct)
+
+  /** Whether [[mergeSegments]] resolves deltas of `deltaBytes` data
+    * bytes, of the by-name union schema `union`, on the driver: the
+    * bytes are at most both `spark.sql.autoBroadcastJoinThreshold` and
+    * [[driverMergeMaxBytes]] of the key count, and every merge key has
+    * an exact-equality type, the base's too.
+    */
+  private def resolvesOnDriver(spark: SparkSession, deltaBytes: Long, union: StructType,
       keys: Seq[String], base: Option[DataFrame]): Boolean = {
     val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
     val resolver = spark.sessionState.conf.resolver
@@ -494,12 +524,11 @@ object Snapshots {
       case s: StringType => s.collationId == StringType.collationId
       case _ => false
     }
-    limit > 0 &&
+    limit > 0 && deltaBytes <= limit && deltaBytes <= driverMergeMaxBytes(keys.size) &&
       keys.forall { k =>
         val t = typeOf(union, k)
         t.exists(exact) && base.forall(b => typeOf(b.schema, k) == t)
-      } &&
-      dirs.iterator.flatMap(Sources.parquetFiles(spark, _)).map(_.getLen).sum <= limit
+      }
   }
 
   /** The driver form of [[mergeChain]], for a small chain. The deltas
@@ -511,11 +540,12 @@ object Snapshots {
     * by `bound` as the base is. The base keeps a row unless its key is
     * one of the delta keys, tombstoned ones included, compared
     * null-safely as `<=>` does: a NULL delta key supersedes the NULL-key
-    * base rows. On one key that is the key NOT IN the delta values (a
-    * hashed set), with NULL handled apart; on several it is a struct of
-    * the keys NOT IN struct literals typed and named as the keys, whose
-    * equality is null-safe. A filter, not a join: the plan is the base
-    * scan beside a LocalTableScan, with no exchange and no window.
+    * base rows. The test is one function (`delta_key`) over a hashed
+    * set of the delta keys, not one literal per key, whose analysis and
+    * planning grow with the chain: on one key, the key's value, NULL a
+    * member like any other; on several, the struct of the keys, whose
+    * row equality is null-safe. A filter, not a join: the plan is the
+    * base scan beside a LocalTableScan, with no exchange and no window.
     */
   private def mergeOnDriver(spark: SparkSession, base: Option[DataFrame], dirs: Seq[String],
       union: StructType, keys: Seq[String], bound: Option[Column]): DataFrame = {
@@ -535,20 +565,42 @@ object Snapshots {
     val resolved = bound.fold(winners)(winners.filter)
     base.map(liveBase) match {
       case None => resolved
+      case Some(b) if last.isEmpty => b.unionByName(resolved, allowMissingColumns = true)
       case Some(b) =>
-        def value(k: Any, t: DataType) = CatalystTypeConverters.convertToScala(k, t)
-        val (probe, touched) =
-          if (keys.size == 1) (col(keys.head), last.keysIterator.map(k => value(k.head, keyTypes.head)).toSeq)
-          else (struct(keys.map(col): _*), last.keysIterator.map(k => struct(keys.lazyZip(keyTypes).lazyZip(k)
-            .map { case (name, t, v) => lit(value(v, t)).cast(t).as(name) }: _*)).toSeq)
-        val listed = touched.filter(_ != null)
-        val hit =
-          if (listed.isEmpty) probe.isNull
-          else coalesce(probe.isin(listed: _*), lit(listed.size < touched.size))
-        val kept = if (touched.isEmpty) b else b.filter(!hit)
-        kept.unionByName(resolved, allowMissingColumns = true)
+        // one key: the key itself, NULL a member like any value; several:
+        // the struct of the keys, a Row whose equality is null-safe
+        val (probe, probeType, tuples) =
+          if (keys.size == 1) (col(keys.head), keyTypes.head, last.keysIterator.map(_.head))
+          else (struct(keys.map(col): _*), StructType(keys.lazyZip(keyTypes).map(StructField(_, _))),
+            last.keysIterator.map(k => new GenericInternalRow(k.toArray): Any))
+        val toScala = CatalystTypeConverters.createToScalaConverter(probeType)
+        val touched = tuples.map(toScala).toSet
+        val hit = udf(new UDF1[Any, Boolean] { def call(k: Any): Boolean = touched.contains(k) },
+          BooleanType).withName("delta_key")(probe)
+        b.filter(!hit).unionByName(resolved, allowMissingColumns = true)
     }
   }
+
+  /** The most delta bytes [[mergeOnDriver]] resolves: 200 000 on one
+    * merge key, that over the key count on several. Past it the
+    * driver's work per delta row (reading and resolving it, shipping it
+    * and its key to every task, converting each base key to probe the
+    * set) costs more than the distributed form's two extra jobs.
+    * Measured by `OptProbe asof <rows>...` (one delta over sf0.1
+    * `orders`, local[4] on a 4-core machine, p50 of 7): the forms cross
+    * between 10k and 20k delta rows (186–340 KB) on one key and between
+    * 5k and 10k rows (71–186 KB) on two, wide rows or narrow.
+    */
+  private[graft] def driverMergeMaxBytes(keyCount: Int): Long =
+    driverMergeCap.value.getOrElse(200000L / keyCount)
+
+  private val driverMergeCap = new scala.util.DynamicVariable[Option[Long]](None)
+
+  /** Test seam: `body` with [[driverMergeMaxBytes]] set to `bytes`
+    * whatever the key count, on this thread.
+    */
+  private[graft] def withDriverMergeCap[T](bytes: Long)(body: => T): T =
+    driverMergeCap.withValue(Some(bytes))(body)
 
   /** The segments an as-of read of `version` merges: the latest full
     * snapshot at or below it and the deltas after that, up to it.
@@ -1309,14 +1361,15 @@ object Snapshots {
     * pruned, the kept deltas' own resolution is the answer. Both the
     * matching and the all-pruned answer take [[asOf]]'s null-filled
     * union schema, so an evolved chain gives one column set whatever
-    * pruning kept (the schema frame is analysis only — Filter(false)
-    * collapses to an empty relation before any scan runs).
+    * pruning kept (the schema comes from the chain's footer schemas,
+    * [[mergedSchema]]: a pruned segment is never read).
     */
   private def mergeKept(
       spark: SparkSession, root: String, keys: Seq[String], version: Long, bounded: Column)(
       keep: ((Long, String, String)) => Boolean): DataFrame = {
     val (base, deltas) = chainAt(spark, root, version)
-    val schemaFrame = asOf(spark, root, version, keys).where(lit(false))
+    val schemaFrame = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      mergedSchema(spark, root, base +: deltas, keys))
     val keptBase = Some(base).filter(keep)
     val keptDeltas = deltas.filter(keep)
     if (keptBase.isEmpty && keptDeltas.isEmpty) schemaFrame.filter(bounded)

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Source/sink helpers — SURVEY §2.11 (io01–io03).
   *
@@ -71,6 +72,15 @@ object Sources {
   def parquetSchema(spark: SparkSession, path: String): StructType =
     (if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None else footerSchema(spark, path))
       .getOrElse(readParquet(spark, path).schema)
+
+  /** [[parquetSchema]] and the total length of the path's data files
+    * ([[parquetFiles]]), both from the one memoized footer lookup, so a
+    * caller that needs the size too (the snapshot store's choice of
+    * merge form) lists nothing more.
+    */
+  def parquetSchemaAndBytes(spark: SparkSession, path: String): (StructType, Long) =
+    (if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None else footerEntry(spark, path))
+      .getOrElse((readParquet(spark, path).schema, parquetFiles(spark, path).map(_.getLen).sum))
 
   /** Many parquet directories as one frame, every row tagged with the
     * number its directory maps to in `dirs` (column `tagCol`): the
@@ -132,6 +142,7 @@ object Sources {
     // one reader per stored schema: building one broadcasts the Hadoop conf
     val readers = scala.collection.mutable.Map.empty[StructType, PartitionedFile => Iterator[InternalRow]]
     paths.flatMap { path =>
+      driverReads.value.foreach(_.add(path))
       val stored = parquetSchema(spark, path)
       val read = readers.getOrElseUpdate(stored, new ParquetFileFormat().buildReaderWithPartitionValues(
         spark, stored, new StructType(), stored, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
@@ -151,6 +162,19 @@ object Sources {
     }
   }
 
+  // the paths parquetRows reads on this thread, while a test records them
+  private val driverReads =
+    new scala.util.DynamicVariable[Option[java.util.concurrent.ConcurrentLinkedQueue[String]]](None)
+
+  /** Test seam: `body`'s result and the paths [[parquetRows]] read on
+    * this thread while it ran, in order.
+    */
+  private[graft] def recordingDriverReads[T](body: => T): (T, Seq[String]) = {
+    val read = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val out = driverReads.withValue(Some(read))(body)
+    (out, read.asScala.toSeq)
+  }
+
   /** The data files of a parquet path, as Spark's file index lists
     * them: the path itself if it is a file, else the non-empty leaf
     * files below it, hidden `_`/`.` names skipped, in path order.
@@ -163,23 +187,23 @@ object Sources {
     else leaves(fs, fs.listStatus(p).toSeq, isDataName).filter(_.getLen > 0).sortBy(_.getPath.toString)
   }
 
-  // Per-session schema memo: path → (stamp, schema). Weak keys: the map
+  // Per-session schema memo: path → (stamp, schema, data bytes). Weak keys: the map
   // must not pin dead sessions. Segment paths of a long-lived store
   // accumulate (every commit adds one), so a session's memo is dropped
   // whole once it holds MemoCap paths.
   private val schemaMemos =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]())
+        java.util.concurrent.ConcurrentHashMap[String, (String, StructType, Long)]]())
   private val MemoCap = 4096
 
   private def memoOf(spark: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, (String, StructType)] =
+      : java.util.concurrent.ConcurrentHashMap[String, (String, StructType, Long)] =
     schemaMemos.synchronized {
       val m = schemaMemos.get(spark)
       if (m != null) m
       else {
-        val fresh = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+        val fresh = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType, Long)]()
         schemaMemos.put(spark, fresh)
         fresh
       }
@@ -214,7 +238,13 @@ object Sources {
     * read on the driver; None when the path names no file or holds no
     * file to read a footer from.
     */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    footerEntry(spark, path).map(_._1)
+
+  /** [[footerSchema]] and the total length of the path's data files,
+    * memoized together per path.
+    */
+  private def footerEntry(spark: SparkSession, path: String): Option[(StructType, Long)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st =
@@ -224,17 +254,17 @@ object Sources {
     val stamp = schemaStamp(spark, st, children)
     val memo = memoOf(spark)
     memo.get(path) match {
-      case (s, schema) if s == stamp => Some(schema)
+      case (s, schema, bytes) if s == stamp => Some((schema, bytes))
       case _ =>
-        footerFile(fs, st, children).map { f =>
+        footerFile(fs, st, children).map { case (f, bytes) =>
           val conf = spark.sessionState.newHadoopConf()
           val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
             HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
           val schema = ParquetFileFormat.readSchemaFromFooter(
             footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
           if (memo.size >= MemoCap) memo.clear()
-          memo.put(path, (stamp, schema))
-          schema
+          memo.put(path, (stamp, schema, bytes))
+          (schema, bytes)
         }
     }
   }
@@ -244,18 +274,21 @@ object Sources {
     * the first data file by path, over the leaf files Spark's file
     * index lists (names starting with `_` or `.` are hidden, except the
     * two summary files and `_`-names holding `=`, i.e. partition
-    * directories).
+    * directories); with the total length of the data files listed.
     */
-  private def footerFile(fs: FileSystem, st: FileStatus, children: Seq[FileStatus]): Option[FileStatus] = {
-    if (!st.isDirectory) return Some(st)
+  private def footerFile(fs: FileSystem, st: FileStatus, children: Seq[FileStatus])
+      : Option[(FileStatus, Long)] = {
+    if (!st.isDirectory) return Some((st, st.getLen))
     def summary(name: String): Boolean =
       name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ||
         name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
     val all = leaves(fs, children, n => isDataName(n) || summary(n)).sortBy(_.getPath.toString)
+    val bytes = all.filter(f => isDataName(f.getPath.getName)).map(_.getLen).sum
     def named(n: String) = all.find(_.getPath.getName == n)
     named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
       .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
       .orElse(all.headOption) // no summary file listed: `all` holds data files only
+      .map(_ -> bytes)
   }
 
   /** A name Spark's file index lists as data: not hidden by a leading

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * targets the measured cost, not the guessed one. Run with
   * `sbt "Test/runMain graft.OptProbe <mode> [names...]"`; mode `serve
   * [n]` times n sequential requests per endpoint of an in-process server,
-  * mode `asof` the as-of reads of a small store at every version.
+  * mode `asof` the as-of reads of a small store at every version, mode
+  * `asof rows...` both merge forms over one delta of each size.
   */
 object OptProbe {
   private def session(): SparkSession = {
@@ -113,6 +114,74 @@ object OptProbe {
     }
   }
 
+  /** The size at which the driver form of a merging as-of read stops
+    * paying: for each delta size in `sizes` (rows), a store of `orders`
+    * plus ONE delta of that many rows (the first ≤ |orders| rows update
+    * existing keys, the rest insert new ones), read as of the delta's
+    * version on one key (`o_orderkey`) and on two (`o_orderkey`,
+    * `o_custkey`), in both physical forms, over all nine columns of
+    * `orders` and over three (`wide`, `narrow`): the driver form
+    * (`spark.sql.autoBroadcastJoinThreshold` = the delta's bytes, the
+    * code's own byte cap lifted) and
+    * the distributed one (one byte under, so the delta keys still
+    * broadcast). Per cell: p50 of 7 timed runs after 1 untimed (1 run
+    * only once a build takes over 20 s) of
+    * `asOf(v).orderBy(key).limit(1000).collect()`, the build of the
+    * frame apart, and the bytes the calling (driver) thread allocated
+    * in one run.
+    */
+  private def sweepAsOf(spark: SparkSession, d: String, sizes: Seq[Int]): Unit = {
+    import graft.sources.{Snapshots, Sources}
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val key = "o_orderkey"
+    val full = Tables.orders(spark, d)
+    val n0 = full.count()
+    val top = full.agg(max(key)).head().getLong(0)
+    for ((width, orders) <- Seq("wide" -> full, "narrow" -> full.select(key, "o_custkey", "o_totalprice"));
+         n <- sizes) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-probe-asof-size")
+      val root = s"$tmp/store"
+      try {
+        Snapshots.commit(orders, root)
+        val copies = (0 until ((n + n0 - 1) / n0).toInt).map { i =>
+          if (i == 0) orders.withColumn("o_totalprice", col("o_totalprice") + 1)
+          else orders.withColumn(key, col(key) + top * i)
+        }
+        val delta = copies.reduce(_.unionByName(_)).limit(n).withColumn("_deleted", lit(false))
+        val v = Snapshots.commitDelta(delta, root)
+        val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val dir = fs.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath.toString)
+          .find(_.split('/').last.startsWith(s"v$v-")).get
+        val bytes = Sources.parquetFiles(spark, dir).map(_.getLen).sum
+        for (keys <- Seq(Seq(key), Seq(key, "o_custkey")); (form, limit) <- Seq("driver" -> bytes, "distributed" -> (bytes - 1))) {
+          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", limit.toString)
+          def once(): (Double, Double, Long) = {
+            val a0 = threads.getCurrentThreadAllocatedBytes
+            val t0 = System.nanoTime()
+            // the threshold alone picks the form, past the code's byte cap too
+            val df = Snapshots.withDriverMergeCap(Long.MaxValue)(Snapshots.asOf(spark, root, v, keys))
+            val t1 = System.nanoTime()
+            df.orderBy(key).limit(1000).collect()
+            ((t1 - t0) / 1e6, (System.nanoTime() - t0) / 1e6, threads.getCurrentThreadAllocatedBytes - a0)
+          }
+          val first = once()
+          val runs = if (first._1 > 20000) Seq(first) else Seq.fill(7)(once())
+          val build = runs.map(_._1).sorted
+          val all = runs.map(_._2).sorted
+          println(f"PROBE asof-size $width%-6s rows $n%8d bytes $bytes%9d keys ${keys.size} $form%-11s " +
+            f"p50 ${all(all.size / 2)}%9.1f ms  build p50 ${build(build.size / 2)}%9.1f ms  " +
+            f"alloc ${runs.head._3 / 1e6}%8.1f MB  runs ${runs.size}")
+        }
+      } finally {
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        val p = new org.apache.hadoop.fs.Path(tmp.toString)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        ()
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = session()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -127,6 +196,7 @@ object OptProbe {
     }
     mode match {
       case "serve" => timeServe(spark, d, args.lift(1).fold(30)(_.toInt))
+      case "asof" if args.length > 1 => sweepAsOf(spark, d, args.drop(1).map(_.toInt).toSeq)
       case "asof" => timeAsOf(spark, d)
       case "query" =>
         for (n <- args.drop(1); r <- 1 to 3) {

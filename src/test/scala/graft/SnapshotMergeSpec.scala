@@ -318,6 +318,37 @@ class SnapshotMergeSpec extends SparkSpec {
       Set(Some(1.5) -> "a2", Some(3.5) -> "c", None -> "n2", Some(4.5) -> "e"))
   }
 
+  test("routing: past the driver form's byte cap (halved on two keys) a chain takes the distributed form") {
+    val root = tmpDir("merge-cap")
+    val base = spark.range(0, 20000).select(col("id"), (col("id") % 3).as("grp"), md5(col("id").cast("string")).as("name"))
+    def delta(from: Long, until: Long, tag: String) = spark.range(from, until)
+      .select(col("id"), (col("id") % 3).as("grp"), sha2(concat(col("id").cast("string"), lit(tag)), 256).as("name"),
+        (col("id") % 10 === 0).as("_deleted"))
+    Snapshots.commit(base, root)
+    Snapshots.commitDelta(delta(0, 2000, "a"), root)
+    def deltaBytes = Snapshots.versions(spark, root).tail
+      .flatMap { case (_, _, rel) => Sources.parquetFiles(spark, s"$root/$rel") }.map(_.getLen).sum
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    def check(keys: Seq[String], driver: Boolean): Unit = {
+      val df = Snapshots.latest(spark, root, keys)
+      assert(onDriver(df) === driver, s"keys $keys, $deltaBytes delta bytes:\n${df.queryExecution.executedPlan}")
+      assert(rows(df) === withSQLConf(distributed)(rows(Snapshots.latest(spark, root, keys))), s"keys $keys")
+    }
+    val one = deltaBytes
+    assert(one > Snapshots.driverMergeMaxBytes(2) && one <= Snapshots.driverMergeMaxBytes(1),
+      s"the first delta is $one bytes")
+    check(Seq("id"), driver = true)
+    check(Seq("id", "grp"), driver = false)
+    Snapshots.commitDelta(delta(1500, 4500, "b"), root)
+    val two = deltaBytes
+    assert(two > Snapshots.driverMergeMaxBytes(1) && two < spark.sessionState.conf.autoBroadcastJoinThreshold,
+      s"the chain is $two bytes")
+    check(Seq("id"), driver = false)
+    Snapshots.withDriverMergeCap(two)(check(Seq("id"), driver = true))
+    Snapshots.withDriverMergeCap(two - 1)(check(Seq("id"), driver = false))
+    assert(Snapshots.latest(spark, root, Seq("id")).count() === 20000L - 450)
+  }
+
   test("routing: a chain one byte over the threshold takes the distributed form and still matches") {
     val commits = chain(14L, twoKeys = false).take(4)
     val root = tmpDir("merge-threshold")

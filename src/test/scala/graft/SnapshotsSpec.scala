@@ -548,8 +548,10 @@ class SnapshotsSpec extends SparkSpec {
         .toDF("id", "name", "amount", "_deleted"), root, statsCols = Seq("id"))
     // pruning decision: [1,4] opens v1+v3, not v2
     assert(Snapshots.prunedMergeTo(spark, root, Seq("id"), "id", 1L, 4L) === Seq(1L, 3L))
-    val r = Snapshots.readMergeWhere(spark, root, Seq("id"), "id", 1L, 4L)
-      .orderBy("id").collect()
+    val segs = Snapshots.versions(spark, root).map { case (v, _, rel) => v -> rel }.toMap
+    val (ranged, opened) = readDirs(Snapshots.readMergeWhere(spark, root, Seq("id"), "id", 1L, 4L))
+    assert(opened === Set(segs(1L), segs(3L)), "the read opens what the pruning kept, and only that")
+    val r = ranged.orderBy("id").collect()
     // LWW: id=2 is the v3 rewrite; tombstone: id=3 gone; id=1, id=4 base
     assert(r.map(x => (x.getLong(0), x.getString(1), x.getLong(2))).toSeq
       === Seq((1L, "a", 10L), (2L, "b2", 21L), (4L, "d", 40L)))
@@ -618,8 +620,11 @@ class SnapshotsSpec extends SparkSpec {
       Seq((41L, "o41"), (42L, "e42")))
     // absent key: empty, in the same schema, without opening anything
     // beyond what the sidecars admit
-    val none = Snapshots.readMergeEq(spark, root, Seq("id"), "id", Seq(9999L))
+    val (none, noneOpened) = readDirs(Snapshots.readMergeEq(spark, root, Seq("id"), "id", Seq(9999L)))
     assert(none.count() === 0L && none.columns.toSeq === r.head.schema.fieldNames.toSeq)
+    assert(noneOpened.isEmpty, s"an all-pruned lookup read $noneOpened")
+    val segs = Snapshots.versions(spark, root).map { case (v, _, rel) => v -> rel }.toMap
+    assert(readDirs(Snapshots.readMergeEq(spark, root, Seq("id"), "id", Seq(42L)))._2 === Set(segs(2L)))
     // non-key columns are refused with the soundness reasoning
     val e = intercept[IllegalArgumentException](
       Snapshots.readMergeEq(spark, root, Seq("id"), "name", Seq("o41")))

@@ -398,6 +398,26 @@ class SourcesSpec extends SparkSpec {
     assert(assertParity(dir).fieldNames.length === 2)
   }
 
+  test("parquetRows: the rows readParquetTagged reads, on widened, dropped and added columns") {
+    import spark.implicits._
+    val root = tmpDir("rows-parity")
+    Seq((1, 10, "a", 1), (2, 20, "b", 2)).toDF("k", "a", "b", "p").write.parquet(s"$root/d1")
+    // `a` widens to long, `b` and `p` are dropped
+    Seq((3, 30000000000L), (1, 11L)).toDF("k", "a").write.parquet(s"$root/d2")
+    // `a` is dropped, `p` widens to double, `c` is added
+    Seq((4, "d", 0.5, "x")).toDF("k", "b", "p", "c").write.parquet(s"$root/d3")
+    val dirs = (1 to 3).map(i => s"$root/d$i" -> i.toLong)
+    val tagged = Sources.readParquetTagged(spark, dirs, "_v").drop("_v")
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
+    assert(tagged.schema.map(f => f.name -> f.dataType) ===
+      Seq("k" -> IntegerType, "a" -> LongType, "b" -> StringType, "p" -> DoubleType, "c" -> StringType))
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(tagged.schema)
+    def sorted(rs: Seq[org.apache.spark.sql.Row]) = rs.map(_.toSeq).sortBy(_.mkString("|"))
+    val read = Sources.parquetRows(spark, dirs.map(_._1), tagged.schema).map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
+    assert(sorted(read) === sorted(tagged.collect().toSeq))
+    assert(read.size === 5)
+  }
+
   test("readParquet: a directory without a data file, or a missing path, fails as Spark's read does") {
     val dir = tmpDir("rp-nodata") + "/t"
     new java.io.File(dir).mkdirs()

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one forked test JVM). */
@@ -35,6 +37,8 @@ object SparkSpec {
     q
   }
   private val pins = new java.util.concurrent.atomic.AtomicLong()
+
+  object Walk extends AdaptiveSparkPlanHelper
 
   /** Runs one sentinel job in group `name` and waits until the
     * listener has seen it. Listener delivery is asynchronous but
@@ -89,4 +93,16 @@ trait SparkSpec extends AnyFunSuite {
   }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The frame `body` builds, and the names of the directories it
+    * reads: those its plan scans, and those read on the driver while
+    * it was built (`Sources.parquetRows`, a small delta chain's merge).
+    */
+  def readDirs(body: => DataFrame): (DataFrame, Set[String]) = {
+    val (df, onDriver) = graft.sources.Sources.recordingDriverReads(body)
+    val scanned = SparkSpec.Walk.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+    }.flatten
+    (df, (scanned ++ onDriver.map(new org.apache.hadoop.fs.Path(_).getName)).toSet)
+  }
 }
