@@ -182,7 +182,8 @@ object Stage {
     * index geometry memo is cleared too (it is keyed by index root,
     * not by session, so every release clears all of it; later
     * lookups re-read the sidecar files). The cohort path's source
-    * images are unpersisted and forgotten with their session's stages.
+    * images are unpersisted and forgotten with their session's stages,
+    * and so are the cohort counts prepared over them.
     */
   def releaseAll(): Unit = releaseFor(None)
 

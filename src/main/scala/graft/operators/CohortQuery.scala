@@ -1,11 +1,16 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.ParamSlot
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.json4s._
+import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
 
 /** Declarative cohort queries — the JSON query surface of the
@@ -152,13 +157,17 @@ object CohortQuery {
     }.sortBy(i => (i.population, i.source))
   }
 
-  /** Unpersist and forget the images of `spark`, or of every session. */
-  private[graft] def releaseImages(spark: Option[SparkSession]): Unit =
+  /** Unpersist and forget the images of `spark`, or of every session,
+    * and the counts prepared over them.
+    */
+  private[graft] def releaseImages(spark: Option[SparkSession]): Unit = {
     images.entrySet().removeIf { e =>
       val drop = spark.forall(_ eq e.getKey.spark)
       if (drop) e.getValue.frame.unpersist(blocking = false)
       drop
     }
+    preparedMemos.keySet().removeIf(k => spark.forall(_ eq k._1))
+  }
 
   private def lit0(v: JValue): Any = v match {
     case JString(s)  => s
@@ -172,27 +181,35 @@ object CohortQuery {
     case other       => throw new IllegalArgumentException(s"unsupported literal: $other")
   }
 
-  private def predicate(field: String, op: String, value: JValue): Column = {
+  /** The row predicate of a field atom. `bind` turns each of its
+    * literals into a Column: `lit` for a frame a caller composes, a
+    * [[graft.functions.ParamSlot]] for a prepared count. A `like`
+    * pattern stays a constant: a pattern that is not foldable is
+    * re-compiled per row.
+    */
+  private def predicate(field: String, op: String, value: JValue, bind: Any => Column): Column = {
     val c = col(field)
     op match {
-      case "eq"   => c === lit(lit0(value))
-      case "ne"   => c =!= lit(lit0(value))
-      case "gt"   => c > lit(lit0(value))
-      case "ge"   => c >= lit(lit0(value))
-      case "lt"   => c < lit(lit0(value))
-      case "le"   => c <= lit(lit0(value))
+      case "eq"   => c === bind(lit0(value))
+      case "ne"   => c =!= bind(lit0(value))
+      case "gt"   => c > bind(lit0(value))
+      case "ge"   => c >= bind(lit0(value))
+      case "lt"   => c < bind(lit0(value))
+      case "le"   => c <= bind(lit0(value))
       case "like" => c.like(lit0(value).toString)
       case "in" => value match {
-        case JArray(vs) => c.isin(vs.map(lit0): _*)
+        case JArray(vs) => c.isin(vs.map(v => bind(lit0(v))): _*)
         case other      => throw new IllegalArgumentException(s"'in' needs an array, got $other")
       }
       case "between" => value match {
-        case JArray(lo :: hi :: Nil) => c >= lit(lit0(lo)) && c <= lit(lit0(hi))
+        case JArray(lo :: hi :: Nil) => c >= bind(lit0(lo)) && c <= bind(lit0(hi))
         case other => throw new IllegalArgumentException(s"'between' needs [lo, hi], got $other")
       }
       case other => throw new IllegalArgumentException(s"unknown op: $other")
     }
   }
+
+  private val literal: Any => Column = lit
 
   private def strField(atom: JValue, name: String): String =
     atom \ name match {
@@ -217,24 +234,27 @@ object CohortQuery {
   private final case class RowPredicate(source: String, pred: Column) extends Criterion
   private final case class KeySet(keys: DataFrame) extends Criterion
 
+  /** An atom's family: `field` (the default), `temporal` or `era`. */
+  private def atomType(atom: JValue): String = atom \ "type" match {
+    case JString(t) => t
+    case JNothing   => "field"
+    case other      => throw new IllegalArgumentException(s"bad atom type: $other")
+  }
+
   /** Parse one criterion. `type` picks the atom family: plain field
     * predicates (default), or the typed event-shape criteria —
     * `temporal` ({first, then, withinDays}, q4c semantics) and `era`
     * ({windowMinutes, minEras}, q4d semantics) — which key by user_id
-    * and therefore require the `user` population.
+    * and therefore require the `user` population. `bind` makes a field
+    * atom's literals Columns (see [[predicate]]).
     */
   private def criterion(
       spark: SparkSession, dir: String, population: String, atom: JValue,
-      over: SourceOverrides): Criterion = {
-    val typ = atom \ "type" match {
-      case JString(t) => t
-      case JNothing   => "field"
-      case other      => throw new IllegalArgumentException(s"bad atom type: $other")
-    }
-    typ match {
+      over: SourceOverrides, bind: Any => Column): Criterion =
+    atomType(atom) match {
       case "field" =>
         RowPredicate(strField(atom, "source"),
-          predicate(strField(atom, "field"), strField(atom, "op"), atom \ "value"))
+          predicate(strField(atom, "field"), strField(atom, "op"), atom \ "value", bind))
       case "temporal" =>
         require(population == "user", "temporal atoms key by user_id — use population 'user'")
         // range-checked BEFORE the narrowing .toInt: an unvalidated
@@ -258,6 +278,19 @@ object CohortQuery {
           numField(atom, "minEras")).keys)
       case other => throw new IllegalArgumentException(s"unknown atom type: $other")
     }
+
+  /** `atom` with every literal its predicate binds replaced by the
+    * literal's type tag (String, Long, Double, Boolean), an array
+    * keeping its arity: atoms of one shape build one plan up to the
+    * values bound into it. A `like` pattern is no bound literal.
+    */
+  private def atomShape(atom: JValue): JValue = {
+    def tags(v: JValue): JValue = v match {
+      case JArray(vs) => JArray(vs.map(tags))
+      case x          => JString(lit0(x).getClass.getSimpleName)
+    }
+    if (atomType(atom) != "field" || atom \ "op" == JString("like")) atom
+    else atom.replace(List("value"), tags(atom \ "value"))
   }
 
   private def popOf(spec: JValue): String = spec \ "population" match {
@@ -298,45 +331,63 @@ object CohortQuery {
     * needs no shuffle; a live (overridden) source or a temporal/era
     * key set adds one shuffle on the key, whatever the atom count.
     */
-  private def membership(
-      spark: SparkSession, dir: String, population: String, atoms: Seq[JValue],
-      over: SourceOverrides): DataFrame = {
-    val n = atoms.size
+  private def membership(criteria: Seq[Criterion], scanned: Seq[Scan]): DataFrame = {
+    val n = criteria.size
     def words(bits: Seq[(Int, Column)]): Seq[Column] =
       (0 until maskWords(n)).map { w =>
         bits.collect { case (i, on) if i / 64 == w =>
           when(on, lit(1L << (i % 64))).otherwise(lit(0L))
         }.reduceOption(_ bitwiseOR _).getOrElse(lit(0L)).as(wordCol(w))
       }
-    val parsed = atoms.map(a => criterion(spark, dir, population, a, over)).zipWithIndex
-    val rowAtoms = parsed.collect { case (RowPredicate(src, p), i) => (src, i, p) }
-    val scans = rowAtoms.map(_._1).distinct.map { src =>
+    val indexed = criteria.zipWithIndex
+    val rowAtoms = indexed.collect { case (RowPredicate(src, p), i) => (src, i, p) }
+    val branches = scanned.map { case Scan(src, df, key) =>
       val bits = rowAtoms.collect { case (`src`, i, p) => (i, p) }
-      val (df, key) = keyed(spark, dir, population, src, over)
       df.filter(bits.map(_._2).reduce(_ || _))
         .select(key.as("subject") +: words(bits): _*)
     }
-    val keySets = parsed.collect { case (KeySet(keys), i) =>
+    val keySets = indexed.collect { case (KeySet(keys), i) =>
       keys.select(col("subject") +: words(Seq(i -> lit(true))): _*)
     }
     val ws = (0 until maskWords(n)).map(wordCol)
-    (scans ++ keySets).reduce(_ unionByName _)
+    (branches ++ keySets).reduce(_ unionByName _)
       .groupBy("subject")
       .agg(bit_or(col(ws.head)).as(ws.head), ws.tail.map(w => bit_or(col(w)).as(w)): _*)
   }
 
-  /** Evaluate a JSON query spec → distinct population key set, as one
-    * filter over [[membership]]: every AND-group's mask intersects the
-    * key's membership and the NOT mask does not. Set semantics are
-    * SQL `INTERSECT`/`EXCEPT`'s, a NULL key being one member.
-    * `sources` substitutes named frames for the live tables (e.g. an
-    * as-of store read as `orders` — see [[SourceOverrides]]).
+  /** A source the row predicates read: the frame it scans and its key. */
+  private final case class Scan(source: String, frame: DataFrame, key: Column)
+
+  /** The parsed criteria of `atoms` with literals bound by `bind`, and
+    * a [[Scan]] of every source their row predicates read, in first-use
+    * order.
     */
-  def population(
-      spark: SparkSession, dir: String, json: String,
-      sources: SourceOverrides = Map.empty): DataFrame = {
+  private def parseAtoms(
+      spark: SparkSession, dir: String, population: String, atoms: Seq[JValue],
+      over: SourceOverrides, bind: Any => Column): (Seq[Criterion], Seq[Scan]) = {
+    val criteria = atoms.map(criterion(spark, dir, population, _, over, bind))
+    val scanned = criteria.collect { case RowPredicate(src, _) => src }.distinct.map { src =>
+      val (df, key) = keyed(spark, dir, population, src, over)
+      Scan(src, df, key)
+    }
+    (criteria, scanned)
+  }
+
+  /** A parsed query spec: an AND of OR-groups of atoms, minus the NOT atoms. */
+  private final case class Spec(population: String, groups: List[List[JValue]], nots: List[JValue]) {
+    def atoms: List[JValue] = groups.flatten ++ nots
+
+    /** The spec with every bound literal replaced by its type tag (see
+      * [[atomShape]]): specs of one shape build one plan.
+      */
+    def shape: String = JsonMethods.compact(JsonMethods.render(
+      ("population" -> population) ~
+        ("and" -> JArray(groups.map(g => JArray(g.map(atomShape))))) ~
+        ("not" -> JArray(nots.map(atomShape)))))
+  }
+
+  private def parseSpec(json: String): Spec = {
     val spec = JsonMethods.parse(json)
-    val pop = popOf(spec)
     val groups = spec \ "and" match {
       case JArray(gs) if gs.nonEmpty => gs.map { g =>
         g \ "or" match {
@@ -359,13 +410,35 @@ object CohortQuery {
       case JNothing => Nil
       case other    => throw new IllegalArgumentException(s"bad not-list: $other")
     }
-    val atoms = groups.flatten ++ nots
-    val n = atoms.size
-    val starts = groups.scanLeft(0)(_ + _.size)
-    val cnf = groups.zip(starts).map { case (g, s) => hitsAny(maskOf(s until s + g.size, n)) }
+    Spec(popOf(spec), groups, nots)
+  }
+
+  /** `spec`'s population as one filter over [[membership]]: every
+    * AND-group's mask intersects the key's membership and the NOT mask
+    * does not.
+    */
+  private def select(spec: Spec, criteria: Seq[Criterion], scanned: Seq[Scan]): DataFrame = {
+    val n = criteria.size
+    val starts = spec.groups.scanLeft(0)(_ + _.size)
+    val cnf = spec.groups.zip(starts).map { case (g, s) => hitsAny(maskOf(s until s + g.size, n)) }
       .reduce(_ && _)
-    val keep = if (nots.isEmpty) cnf else cnf && !hitsAny(maskOf(n - nots.size until n, n))
-    membership(spark, dir, pop, atoms, sources).filter(keep).select("subject")
+    val keep = if (spec.nots.isEmpty) cnf else cnf && !hitsAny(maskOf(n - spec.nots.size until n, n))
+    membership(criteria, scanned).filter(keep).select("subject")
+  }
+
+  /** Evaluate a JSON query spec → distinct population key set, as one
+    * filter over [[membership]]: every AND-group's mask intersects the
+    * key's membership and the NOT mask does not. Set semantics are
+    * SQL `INTERSECT`/`EXCEPT`'s, a NULL key being one member.
+    * `sources` substitutes named frames for the live tables (e.g. an
+    * as-of store read as `orders` — see [[SourceOverrides]]).
+    */
+  def population(
+      spark: SparkSession, dir: String, json: String,
+      sources: SourceOverrides = Map.empty): DataFrame = {
+    val spec = parseSpec(json)
+    val (criteria, scanned) = parseAtoms(spark, dir, spec.population, spec.atoms, sources, literal)
+    select(spec, criteria, scanned)
   }
 
   /** Evaluate a spec → 1-row count (the reference's query result), as
@@ -378,19 +451,116 @@ object CohortQuery {
       sources: SourceOverrides = Map.empty): DataFrame =
     Cohort.countSubjects(population(spark, dir, json, sources))
 
+  // ---------------------------------------------------- prepared counts
+
+  private final case class Prepared(frames: Seq[DataFrame], counts: RDD[Long])
+
+  private final class PreparedMemo {
+    val shapes = new java.util.concurrent.ConcurrentHashMap[String, Prepared]()
+    val hits = new java.util.concurrent.atomic.AtomicLong()
+    val prepares = new java.util.concurrent.atomic.AtomicLong()
+  }
+
+  // Session-scoped like the images, and released with them. The like
+  // patterns a long-lived server sees are part of the shape, so a
+  // memo is dropped whole once it holds PreparedCap shapes.
+  private val preparedMemos =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), PreparedMemo]()
+  private val PreparedCap = 256
+
+  /** The prepared counts of `spark` over `dir`, as `/status` reports them. */
+  final case class PreparedInfo(shapes: Int, hits: Long, prepares: Long)
+
+  /** The prepared shapes held for `spark` over `dir`, and how many
+    * counts reused one (hits) or planned one (prepares). Reads
+    * counters only; runs no job.
+    */
+  def preparedInfo(spark: SparkSession, dir: String): PreparedInfo =
+    Option(preparedMemos.get((spark, dir))).fold(PreparedInfo(0, 0L, 0L))(m =>
+      PreparedInfo(m.shapes.size, m.hits.get, m.prepares.get))
+
+  // walks into AQE plans, not into the images' cached plans
+  private object planWalk extends AdaptiveSparkPlanHelper
+
+  private def counting(population: DataFrame): RDD[Long] =
+    population.queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.foldLeft(0L)((n, _) => n + 1)))
+
   /** Evaluate a spec → the number of keys in its [[population]], the
     * answer `POST /cohort/query` serves. Each partition counts its own
-    * rows and the driver sums the partial counts, so a query over
-    * images runs ONE Spark job, with no exchange and no AQE re-plan
-    * after the membership aggregate. An overridden source keeps its
-    * membership shuffle but also saves [[count]]'s final job.
+    * rows and the driver sums the partial counts: one Spark job over
+    * the images, with no exchange and no AQE re-plan after the
+    * membership aggregate. An overridden source keeps its membership
+    * shuffle but also saves [[count]]'s final job.
+    *
+    * The plan binds no literal. Its *shape* is the spec with every
+    * bound literal replaced by its type tag: population, groups, NOT
+    * list, each atom's source, field and op, an `in` list's arity and
+    * each literal's JSON type (`gt 7000` and `gt 7000.5` are two
+    * shapes; a `like` pattern is part of the shape). Each literal
+    * becomes a [[graft.functions.ParamSlot]], and every call walks the
+    * spec, records its literals in the calling thread's job-local
+    * property [[graft.functions.ParamSlot.Key]] and runs the counting
+    * RDD. A slot reads the property once per partition, or on the
+    * driver from the calling thread when an optimizer rule folds a
+    * filter over a local relation into data; so concurrent calls of
+    * one shape each count with their own values.
+    *
+    * The counting RDD is memoized per (session, data dir, shape) only
+    * when no source is overridden, no atom is temporal or era and the
+    * plan has no exchange, so that every branch scans an image: a
+    * stage that ran (an AQE query stage, a shuffle map stage) or a
+    * folded local relation would keep the first call's values. An
+    * entry is reused while [[keyed]] hands back the very image frames
+    * it scans, so a rewritten table, a new partition count or
+    * `clearCache()` prepares it again; [[releaseImages]] forgets it.
+    * Any other call plans its slot-bound frame afresh.
     */
   def populationSize(
       spark: SparkSession, dir: String, json: String,
-      sources: SourceOverrides = Map.empty): Long =
-    population(spark, dir, json, sources).queryExecution.toRdd
-      .mapPartitions(rows => Iterator.single(rows.foldLeft(0L)((n, _) => n + 1)))
-      .collect().sum
+      sources: SourceOverrides = Map.empty): Long = {
+    val spec = parseSpec(json)
+    val values = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val (criteria, scanned) = parseAtoms(spark, dir, spec.population, spec.atoms, sources,
+      { v => values += v; ParamSlot.column(values.size - 1, v) })
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty(ParamSlot.Key)
+    // set before planning: an overridden plan runs its shuffle inside toRdd
+    sc.setLocalProperty(ParamSlot.Key, ParamSlot.encode(values.toSeq))
+    try {
+      val counts =
+        if (sources.nonEmpty || criteria.exists(_.isInstanceOf[KeySet]))
+          counting(select(spec, criteria, scanned))
+        else prepared(spark, dir, spec.shape, scanned)(select(spec, criteria, scanned))
+      counts.collect().sum
+    } finally sc.setLocalProperty(ParamSlot.Key, prior)
+  }
+
+  /** The memoized counting RDD of `shape` over the frames of `scanned`,
+    * planned from `population` when none is held for them.
+    */
+  private def prepared(spark: SparkSession, dir: String, shape: String, scanned: Seq[Scan])(
+      population: => DataFrame): RDD[Long] = {
+    val memo = preparedMemos.computeIfAbsent((spark, dir), _ => new PreparedMemo)
+    val frames = scanned.map(_.frame)
+    memo.shapes.get(shape) match {
+      case p if p != null && p.frames.corresponds(frames)(_ eq _) =>
+        memo.hits.incrementAndGet()
+        p.counts
+      case _ =>
+        val pop = population
+        val counts = counting(pop)
+        // images alone still plan an exchange when the union keeps no
+        // partitioning (spark.sql.unionOutputPartitioning=false): the
+        // stage below it would run once, with this call's values
+        if (planWalk.find(pop.queryExecution.executedPlan)(_.isInstanceOf[Exchange]).isEmpty) {
+          memo.prepares.incrementAndGet()
+          if (memo.shapes.size >= PreparedCap) memo.shapes.clear()
+          memo.shapes.put(shape, Prepared(frames, counts))
+        }
+        counts
+    }
+  }
 
   /** Per-atom subject counts — the reference exposes every
     * criterion's own population size next to the query result. Spec
@@ -413,7 +583,8 @@ object CohortQuery {
     val perAtom = atoms.indices.map { i =>
       org.apache.spark.sql.functions.count(when(hitsAny(maskOf(Seq(i), atoms.size)), lit(1)))
     }
-    membership(spark, dir, pop, atoms, sources)
+    val (criteria, scanned) = parseAtoms(spark, dir, pop, atoms, sources, literal)
+    membership(criteria, scanned)
       .agg(array(perAtom: _*).as("n"))
       .select(posexplode(col("n")).as(Seq("atom", "n_subjects")))
       .orderBy("atom")
@@ -515,14 +686,10 @@ object CohortQuery {
         s"atom-counts needs a non-empty 'atoms' array, got $other")
     }
     val preds = atoms.map { a =>
-      val typ = a \ "type" match {
-        case JString(t) => t; case JNothing => "field"
-        case other => throw new IllegalArgumentException(s"bad atom type: $other")
-      }
-      require(typ == "field" && strField(a, "source") == "orders",
+      require(atomType(a) == "field" && strField(a, "source") == "orders",
         "maintained atom counts cover field atoms on the store-fed 'orders' source — " +
           s"evaluate other atoms through the normal (recompute) path: $a")
-      predicate(strField(a, "field"), strField(a, "op"), a \ "value")
+      predicate(strField(a, "field"), strField(a, "op"), a \ "value", literal)
     }
     (subject, preds)
   }

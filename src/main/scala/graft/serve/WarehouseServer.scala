@@ -648,7 +648,7 @@ object WarehouseServer {
         ("links" -> List(
           ("href" -> "/health") ~ ("method" -> "GET") ~ ("rel" -> "health"),
           ("href" -> "/status") ~ ("method" -> "GET") ~
-            ("rel" -> "observability: per-endpoint counts/latency, ann index, store tip, cohort images"),
+            ("rel" -> "observability: per-endpoint counts/latency, ann index, store tip, cohort images and prepared shapes"),
           ("href" -> "/tables") ~ ("method" -> "GET") ~ ("rel" -> "tables"),
           ("href" -> "/cohort/query") ~ ("method" -> "POST") ~
             ("rel" -> "cohort-count") ~ ("body" -> "cohort DSL (see README)") ~
@@ -1210,13 +1210,18 @@ object WarehouseServer {
             ("population" -> i.population) ~ ("source" -> i.source) ~
               ("partitions" -> i.partitions) ~ ("cached_bytes" -> i.cachedBytes): JValue
           })
+          // the served counts' prepared query shapes (session-scoped
+          // like the images): how many are held, reused and planned
+          val prepared = CohortQuery.preparedInfo(spark, cfg.dataDir)
           ("uptime_ms" -> (System.currentTimeMillis() - startedAtMs)) ~
             ("active_job_groups" -> JArray(active.asScala.toList.sorted.map(JString(_)))) ~
             ("endpoints" -> endpoints) ~
             ("ann" -> ann) ~
             ("store" -> store) ~
             ("cohort_state" -> cohort) ~
-            ("cohort_images" -> images)
+            ("cohort_images" -> images) ~
+            ("cohort_prepared" -> (("shapes" -> prepared.shapes) ~ ("hits" -> prepared.hits) ~
+              ("prepares" -> prepared.prepares)))
         case ("GET", "/tables") => tablesDoc
         case ("POST", "/cohort/query") =>
           JObject("n_subjects" -> JInt(CohortQuery.populationSize(spark, cfg.dataDir,

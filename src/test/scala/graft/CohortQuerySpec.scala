@@ -234,12 +234,19 @@ class CohortQuerySpec extends SparkSpec {
     assert(keysOf(CohortQuery.population(spark, sf, both, over)) === expectBoth)
     assert(CohortQuery.count(spark, sf, both, over).head().getLong(0) === expectBoth.size)
     assert(CohortQuery.populationSize(spark, sf, both, over) === expectBoth.size)
+    // the same shape with another literal: the override's local relation
+    // is filtered on the driver, with this call's value
+    val cheap = s"""{"and": [$urgent, ${atom("o_totalprice", "gt", "10")}]}"""
+    val expectCheap = urgentK intersect matching(_._4 > 10)
+    assert(expectCheap === Set(None, Some(7L), Some(8L)))
+    assert(CohortQuery.populationSize(spark, sf, cheap, over) === expectCheap.size)
 
     // EXCEPT removes the NULL key when the NOT atom matches it too
     val minus = s"""{"and": [$urgent, $pricey], "not": [$high]}"""
     val expectMinus = expectBoth diff highK
     assert(expectMinus === Set(Some(7L)))
     assert(keysOf(CohortQuery.population(spark, sf, minus, over)) === expectMinus)
+    assert(CohortQuery.populationSize(spark, sf, minus, over) === expectMinus.size)
 
     // and every atom counts the NULL key once
     val counts = CohortQuery.atomCounts(spark, sf, s"""{"atoms": [$urgent, $pricey, $high]}""", over)
@@ -252,14 +259,22 @@ class CohortQuerySpec extends SparkSpec {
     def eq(k: Int) = s"""{"source": "customer", "field": "c_custkey", "op": "eq", "value": $k}"""
     // atoms 0..39 (word 0), 40..68 (word 0 bits 40..63 and word 1),
     // and the NOT atom 69 (word 1)
-    val g1 = (1 to 40).map(eq)
-    val g2 = (20 to 48).map(eq)
-    val spec = s"""{"and": [{"or": [${g1.mkString(",")}]}, {"or": [${g2.mkString(",")}]}],
-                  | "not": [${eq(25)}]}""".stripMargin
-    val expect = custKeys.filter(k => k >= 1 && k <= 40 && k >= 20 && k <= 48 && k != 25)
+    def cnf(shift: Int): (String, Set[Long]) = {
+      val g1 = (1 to 40).map(k => eq(k + shift))
+      val g2 = (20 to 48).map(k => eq(k + shift))
+      (s"""{"and": [{"or": [${g1.mkString(",")}]}, {"or": [${g2.mkString(",")}]}],
+          | "not": [${eq(25 + shift)}]}""".stripMargin,
+        custKeys.filter(k => k >= 20 + shift && k <= 40 + shift && k != 25 + shift))
+    }
+    val (spec, expect) = cnf(0)
     assert(expect.size > 10, "the fixture lost the customers the spec selects")
     assert(keysOf(CohortQuery.population(spark, sf, spec)) === expect.map(Some(_)))
     assert(CohortQuery.count(spark, sf, spec).head().getLong(0) === expect.size)
+    // a prepared count binds all 70 literals, then 70 others
+    assert(CohortQuery.populationSize(spark, sf, spec) === expect.size)
+    val (shifted, expectShifted) = cnf(7)
+    assert(expectShifted !== expect)
+    assert(CohortQuery.populationSize(spark, sf, shifted) === expectShifted.size)
 
     val atoms = (1 to 69).map(eq) :+
       """{"source": "customer", "field": "c_acctbal", "op": "gt", "value": 0}"""
@@ -406,14 +421,11 @@ class CohortQuerySpec extends SparkSpec {
     (rich intersect (urgent union returned)).size.toLong
   }
 
-  test("a rewritten table rebuilds its image: the next count answers the new rows") {
-    val dir = tableCopy("cohort-image-rewrite")
-    val before = CohortQuery.count(spark, dir, richUrgent).head().getLong(0)
-    assert(before === richUrgentByHand(dir))
-    assert(CohortQuery.imageInfo(spark, dir).map(_.source).toSet === Set("customer", "lineitem", "orders"))
-    // keep the odd customers, each with its balance negated, and swap
-    // the new file in outside Spark (a Spark write to the same path
-    // would re-cache the plans reading it by itself)
+  /** Keep the odd customers of `dir`, each with its balance negated,
+    * and swap the new file in outside Spark (a Spark write to the same
+    * path would re-cache the plans reading it by itself).
+    */
+  private def rewriteCustomers(dir: String): Unit = {
     val old = Tables.customer(spark, dir)
     val rows = old.filter(col("c_custkey") % 2 === 1)
       .withColumn("c_acctbal", -col("c_acctbal")).collect()
@@ -422,6 +434,14 @@ class CohortQuerySpec extends SparkSpec {
     val path = java.nio.file.Paths.get(s"$dir/customer.parquet")
     java.nio.file.Files.delete(path)
     java.nio.file.Files.move(java.nio.file.Paths.get(staged), path)
+  }
+
+  test("a rewritten table rebuilds its image: the next count answers the new rows") {
+    val dir = tableCopy("cohort-image-rewrite")
+    val before = CohortQuery.count(spark, dir, richUrgent).head().getLong(0)
+    assert(before === richUrgentByHand(dir))
+    assert(CohortQuery.imageInfo(spark, dir).map(_.source).toSet === Set("customer", "lineitem", "orders"))
+    rewriteCustomers(dir)
     val after = CohortQuery.count(spark, dir, richUrgent).head().getLong(0)
     assert(after === richUrgentByHand(dir))
     assert(after !== before, "the rewrite must change the answer")
@@ -438,5 +458,145 @@ class CohortQuerySpec extends SparkSpec {
     assert(infos.map(_.source).toSet === Set("customer", "lineitem", "orders"))
     assert(infos.forall(i => i.partitions == Tables.pinnedParallelism(spark) && i.cachedBytes > 0),
       s"images not re-persisted and filled: $infos")
+  }
+
+  // ---------------------------------------------------- prepared counts
+
+  private def atomJ(source: String, field: String, op: String, value: String): String =
+    s"""{"source": "$source", "field": "$field", "op": "$op", "value": $value}"""
+
+  /** Four specs, one per shape, with literals drawn from `r`: every op,
+    * string, long and double literals, a long and a double literal on
+    * one field, both populations. Each call draws other literals of
+    * the same shapes.
+    */
+  private def seededSpecs(r: java.util.Random): Seq[String] = {
+    def str(xs: String*) = "\"" + xs(r.nextInt(xs.size)) + "\""
+    def long(lo: Int, span: Int) = (lo + r.nextInt(span)).toString
+    def dbl(lo: Double, span: Double) = (math.rint((lo + r.nextDouble() * span) * 100) / 100).toString
+    val priority = str("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+    Seq(
+      s"""{"and": [{"or": [${atomJ("orders", "o_orderpriority", "eq", priority)},
+         |                  ${atomJ("lineitem", "l_returnflag", "eq", str("A", "N", "R"))}]},
+         |          {"or": [${atomJ("customer", "c_mktsegment", "like", "\"%ING\"")},
+         |                  ${atomJ("orders", "o_totalprice", "gt", long(100000, 200000))}]}],
+         | "not": [${atomJ("customer", "c_nationkey", "in", s"[${long(0, 8)}, ${long(8, 8)}, ${long(16, 9)}]")}]}""",
+      s"""{"and": [{"or": [${atomJ("orders", "o_totalprice", "ge", dbl(150000, 200000))},
+         |                  ${atomJ("customer", "c_acctbal", "lt", long(-500, 3000))}]},
+         |          ${atomJ("lineitem", "l_discount", "between", s"[${dbl(0, 0.05)}, ${dbl(0.05, 0.05)}]")}],
+         | "not": [${atomJ("orders", "o_orderstatus", "ne", str("F", "O"))}]}""",
+      s"""{"and": [${atomJ("customer", "c_acctbal", "le", dbl(2000, 6000))},
+         |          {"or": [${atomJ("lineitem", "l_quantity", "gt", long(40, 10))},
+         |                  ${atomJ("orders", "o_orderpriority", "ne", priority)}]},
+         |          ${atomJ("orders", "o_totalprice", "lt", dbl(200000, 200000))},
+         |          ${atomJ("orders", "o_totalprice", "gt", long(1000, 100000))}]}""",
+      s"""{"population": "visit",
+         | "and": [${atomJ("orders", "o_orderpriority", "eq", priority)},
+         |         {"or": [${atomJ("lineitem", "l_returnflag", "eq", str("A", "N", "R"))},
+         |                 ${atomJ("lineitem", "l_quantity", "ge", long(30, 20))}]}],
+         | "not": [${atomJ("orders", "o_totalprice", "le", dbl(20000, 50000))}]}"""
+    ).map(_.stripMargin)
+  }
+
+  private def countOf(dir: String, spec: String): Long =
+    CohortQuery.count(spark, dir, spec).head().getLong(0)
+
+  test("prepared counts equal count over seeded specs, each shape sent again with other literals") {
+    val r = new java.util.Random(1019)
+    val first = seededSpecs(r)
+    first.foreach(spec => assert(CohortQuery.populationSize(spark, sf, spec) === countOf(sf, spec), spec))
+    val held = CohortQuery.preparedInfo(spark, sf)
+    val second = seededSpecs(r)
+    assert(second.zip(first).forall { case (a, b) => a != b }, "the seed drew the same literals twice")
+    second.foreach(spec => assert(CohortQuery.populationSize(spark, sf, spec) === countOf(sf, spec), spec))
+    val after = CohortQuery.preparedInfo(spark, sf)
+    assert(after.hits === held.hits + 4 && after.prepares === held.prepares,
+      s"the second literals re-planned a shape: $held -> $after")
+    assert(second.map(countOf(sf, _)).exists(_ > 0) && first.map(countOf(sf, _)).exists(_ > 0))
+    // a long and a double literal on one field are two shapes
+    val asLong = s"""{"and": [${atomJ("orders", "o_totalprice", "gt", "150000")}]}"""
+    val asDouble = s"""{"and": [${atomJ("orders", "o_totalprice", "gt", "150000.5")}]}"""
+    val before = CohortQuery.preparedInfo(spark, sf).prepares
+    assert(CohortQuery.populationSize(spark, sf, asLong) === countOf(sf, asLong))
+    assert(CohortQuery.populationSize(spark, sf, asDouble) === countOf(sf, asDouble))
+    assert(CohortQuery.preparedInfo(spark, sf).prepares === before + 2)
+    // values travel as text: separators and non-ASCII survive the trip
+    val odd = s"""{"and": [${atomJ("orders", "o_orderpriority", "in", "[\"a:1\", \"1-URGENT\", \"ü:9:\"]")}]}"""
+    assert(countOf(sf, odd) > 0)
+    assert(CohortQuery.populationSize(spark, sf, odd) === countOf(sf, odd))
+  }
+
+  test("typed atoms, overrides and plans with an exchange count through the slot-bound plan, never memoized") {
+    val variant = CohortQuery.eventsSpec.replace("\"minEras\": 60", "\"minEras\": 2")
+      .replace("[250, 300]", "[100, 200]").replace("\"value\": 300", "\"value\": 200")
+    assert(variant.contains("[100, 200]") && variant.contains("\"minEras\": 2"))
+    val over = Map("orders" -> Tables.orders(spark, sf).filter(col("o_custkey") % 3 === 0))
+    val held = CohortQuery.preparedInfo(spark, sf)
+    for (spec <- Seq(CohortQuery.eventsSpec, variant))
+      assert(CohortQuery.populationSize(spark, sf, spec) === countOf(sf, spec))
+    assert(countOf(sf, variant) > 0, "the fixture lost the users the variant selects")
+    for (spec <- seededSpecs(new java.util.Random(7)))
+      assert(CohortQuery.populationSize(spark, sf, spec, over) ===
+        CohortQuery.count(spark, sf, spec, over).head().getLong(0))
+    // images alone, but a union that keeps no partitioning plans an
+    // exchange under the aggregate (a shape no other test prepares)
+    withSQLConf("spark.sql.unionOutputPartitioning" -> "false") {
+      for (seed <- Seq(8, 9)) {
+        val spec = seededSpecs(new java.util.Random(seed)).head.replace("%ING", "%URE")
+        assert(CohortQuery.populationSize(spark, sf, spec) === countOf(sf, spec))
+      }
+    }
+    assert(CohortQuery.preparedInfo(spark, sf) === held)
+  }
+
+  test("a second count of a prepared shape runs no analyzer or optimizer rule, compiles no code and runs one job") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    val r = new java.util.Random(2041)
+    val spec = seededSpecs(r).head
+    val other = seededSpecs(r).head
+    CohortQuery.populationSize(spark, sf, spec) // prepares the shape and fills its images
+    var rules = Seq.empty[String]
+    var compiles = -1L
+    var size = -1L
+    val jobs = jobsIn("prepared-hit") {
+      RuleExecutor.resetMetrics()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      size = CohortQuery.populationSize(spark, sf, other)
+      compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      // one row per rule that ran: name, times, runs
+      rules = RuleExecutor.dumpTimeSpent().linesIterator.dropWhile(!_.startsWith("Rule ")).drop(1)
+        .map(_.trim.split("\\s+").head).filter(_.nonEmpty).toSeq
+    }
+    // the tasks' generated projections clean their expressions with a
+    // rule executor of their own at run time; no other rule may run
+    assert(rules.forall(_.endsWith("ExpressionCanonicalizer$CleanExpressions")),
+      s"the second request ran planning rules: $rules")
+    assert(compiles === 0L, "the second request compiled code")
+    assert(jobs === 1)
+    assert(size === countOf(sf, other))
+  }
+
+  test("a prepared shape is planned again after a table rewrite, clearCache and Stage.releaseAll") {
+    import CohortQuery.PreparedInfo
+    val dir = tableCopy("cohort-prepared")
+    def size(): Long = CohortQuery.populationSize(spark, dir, richUrgent)
+    def info: PreparedInfo = CohortQuery.preparedInfo(spark, dir)
+    val before = size()
+    assert(before === richUrgentByHand(dir))
+    assert(size() === before)
+    assert(info === PreparedInfo(1, 1, 1))
+    rewriteCustomers(dir)
+    val after = size()
+    assert(after === richUrgentByHand(dir))
+    assert(after !== before, "the rewrite must change the answer")
+    assert(info === PreparedInfo(1, 1, 2))
+    spark.catalog.clearCache()
+    assert(size() === after)
+    assert(info === PreparedInfo(1, 1, 3))
+    Stage.releaseAll(spark)
+    assert(info === PreparedInfo(0, 0, 0))
+    assert(size() === after)
+    assert(info === PreparedInfo(1, 0, 1))
   }
 }

@@ -34,7 +34,8 @@ object OptProbe {
   /** Round-trip times of `n` sequential keep-alive requests per
     * endpoint to an in-process `WarehouseServer` over `d`, after one
     * untimed request each (it opens the connection and fills the
-    * cohort images).
+    * cohort images). `POST /cohort/query (varied)` sends the demo spec
+    * with other literals on every request: one shape, bound afresh.
     */
   private def timeServe(spark: SparkSession, d: String, n: Int): Unit = {
     import java.net.URI
@@ -42,21 +43,27 @@ object OptProbe {
     val srv = graft.serve.WarehouseServer.start(spark, graft.serve.WarehouseServer.Config(dataDir = d))
     try {
       val client = HttpClient.newHttpClient()
-      val calls = Seq(
-        "GET /health" -> HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/health")).GET(),
-        "GET /status" -> HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/status")).GET(),
-        "POST /cohort/query" -> HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/cohort/query"))
-          .POST(HttpRequest.BodyPublishers.ofString(operators.CohortQuery.demoSpec)))
+      def at(path: String) = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}$path"))
+      def cohort(spec: String) = at("/cohort/query").POST(HttpRequest.BodyPublishers.ofString(spec))
+      val priorities = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+      def varied(i: Int): String = operators.CohortQuery.demoSpec
+        .replace("\"1-URGENT\"", s"\"${priorities(i % priorities.size)}\"")
+        .replace("\"value\": 7000", s"\"value\": ${5000 + 500 * (i % 7)}")
+      val calls: Seq[(String, Int => HttpRequest.Builder)] = Seq(
+        "GET /health" -> (_ => at("/health").GET()),
+        "GET /status" -> (_ => at("/status").GET()),
+        "POST /cohort/query" -> (_ => cohort(operators.CohortQuery.demoSpec)),
+        "POST /cohort/query (varied)" -> (i => cohort(varied(i))))
       for ((label, req) <- calls) {
-        def once(): Double = {
+        def once(i: Int): Double = {
           val t0 = System.nanoTime()
-          val r = client.send(req.build(), HttpResponse.BodyHandlers.ofString())
+          val r = client.send(req(i).build(), HttpResponse.BodyHandlers.ofString())
           require(r.statusCode() == 200, s"$label answered ${r.statusCode()}: ${r.body()}")
           (System.nanoTime() - t0) / 1e6
         }
-        once()
-        val ms = Seq.fill(n)(once()).sorted
-        println(f"PROBE serve $label%-20s n=$n p50 ${ms(n / 2)}%8.2f ms  min ${ms.head}%8.2f ms  max ${ms.last}%8.2f ms")
+        once(0)
+        val ms = (1 to n).map(once).sorted
+        println(f"PROBE serve $label%-28s n=$n p50 ${ms(n / 2)}%8.2f ms  min ${ms.head}%8.2f ms  max ${ms.last}%8.2f ms")
       }
     } finally srv.close()
   }

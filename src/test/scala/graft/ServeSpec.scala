@@ -1847,6 +1847,58 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(CohortQuery.imageInfo(spark, dir).map(_.source) === Seq("customer"))
   }
 
+  test("/status counts prepared cohort shapes; two clients sending one shape with other literals get their own counts") {
+    val dir = tmpDir("serve-prepared")
+    Seq("customer", "orders").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    }
+    val srv = WarehouseServer.start(spark, WarehouseServer.Config(dataDir = dir))
+    try {
+      val b = s"http://127.0.0.1:${srv.port}"
+      def prepared(): JValue = {
+        val r = client.send(HttpRequest.newBuilder(URI.create(s"$b/status")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200)
+        JsonMethods.parse(r.body()) \ "cohort_prepared"
+      }
+      def served(spec: String): Long = {
+        val r = client.send(HttpRequest.newBuilder(URI.create(s"$b/cohort/query"))
+          .POST(HttpRequest.BodyPublishers.ofString(spec, UTF_8)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        if (r.statusCode() != 200) throw new AssertionError(s"answered ${r.statusCode()}: ${r.body()}")
+        longOf(JsonMethods.parse(r.body()) \ "n_subjects")
+      }
+      assert(prepared() == JObject("shapes" -> JInt(0), "hits" -> JInt(0), "prepares" -> JInt(0)))
+      def spec(priority: String, balance: Int) =
+        s"""{"and": [{"or": [
+           |  {"source": "orders", "field": "o_orderpriority", "op": "eq", "value": "$priority"},
+           |  {"source": "customer", "field": "c_acctbal", "op": "gt", "value": $balance}]}],
+           | "not": [{"source": "customer", "field": "c_mktsegment", "op": "eq", "value": "BUILDING"}]}""".stripMargin
+      val perClient = Seq(Seq(spec("1-URGENT", 9000), spec("2-HIGH", 5000)),
+        Seq(spec("3-MEDIUM", 1000), spec("5-LOW", 8000)))
+      val want = perClient.flatten.map(s => s -> CohortQuery.count(spark, dir, s).head().getLong(0)).toMap
+      assert(want.values.toSet.size >= 3, s"the specs must answer apart: $want")
+      val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val clients = perClient.map { specs =>
+        new Thread(() => (0 until 20).foreach { round =>
+          val s = specs(round % specs.size)
+          try {
+            val got = served(s)
+            if (got != want(s)) wrong.add(s"round $round answered $got, expected ${want(s)}")
+          } catch { case e: Throwable => wrong.add(s"round $round: $e") }
+        })
+      }
+      clients.foreach(_.start())
+      clients.foreach(_.join())
+      assert(wrong.isEmpty, wrong.toString)
+      // one shape; both clients may miss it at once on the first round
+      val p = prepared()
+      val (hits, prepares) = (longOf(p \ "hits"), longOf(p \ "prepares"))
+      assert(longOf(p \ "shapes") == 1L && prepares >= 1L && prepares <= 2L && hits + prepares == 40L, p)
+    } finally srv.close()
+  }
+
   test("/dedup/check_vec screens a posted embedding against the persisted vector index") {
     val corpusRoot = s"${tmpDir("serve-vcheck")}/corpus"
     val indexRoot = s"${tmpDir("serve-vcheck")}/index"

@@ -47,6 +47,8 @@ class StageSpec extends SparkSpec {
     // the cohort path's image memo is released the same way
     val cohort = CohortQuery.count(spark, sf, CohortQuery.demoSpec)
     val n = cohort.head().getLong(0)
+    assert(CohortQuery.populationSize(spark, sf, CohortQuery.demoSpec) === n)
+    assert(CohortQuery.preparedInfo(spark, sf).shapes > 0)
     val images = cohort.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder }
     assert(images.nonEmpty && images.forall(_.isCachedColumnBuffersLoaded), "the count filled no image")
     assert(CohortQuery.imageInfo(spark, sf).nonEmpty)
@@ -54,6 +56,7 @@ class StageSpec extends SparkSpec {
     assert(dedup.Dedup.geomMemoSize === 0, "releaseAll left the geometry memo populated")
     assert(dedup.Dedup.vecIndexGeometry(spark, root) === g)
     assert(CohortQuery.imageInfo(spark, sf).isEmpty, "releaseAll left the image memo populated")
+    assert(CohortQuery.preparedInfo(spark, sf).shapes === 0, "releaseAll left prepared counts held")
     assert(!images.exists(_.isCachedColumnBuffersLoaded), "releaseAll left an image persisted")
     assert(CohortQuery.count(spark, sf, CohortQuery.demoSpec).head().getLong(0) === n)
   }
