@@ -178,12 +178,9 @@ object Stage {
     * recomputes from lineage if its result is still referenced.
     * Reliable-checkpoint stages drop their memo entries (identical
     * plans re-checkpoint afterwards) but their bytes stay under
-    * graft.checkpointDir, reclaimed with the directory. The vector
-    * index geometry memo is cleared too (it is keyed by index root,
-    * not by session, so every release clears all of it; later
-    * lookups re-read the sidecar files). The cohort path's source
-    * images are unpersisted and forgotten with their session's stages,
-    * and so are the cohort counts prepared over them.
+    * graft.checkpointDir, reclaimed with the directory. The cohort
+    * path's source images are unpersisted and forgotten with their
+    * session's stages, and so are the cohort counts prepared over them.
     */
   def releaseAll(): Unit = releaseFor(None)
 
@@ -217,7 +214,6 @@ object Stage {
     while (it.hasNext) {
       if (s.forall(_ eq it.next()._2.sparkSession)) it.remove()
     }
-    graft.dedup.Dedup.clearGeomMemo()
     graft.operators.CohortQuery.releaseImages(s)
   }
 

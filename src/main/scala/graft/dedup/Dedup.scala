@@ -1599,13 +1599,16 @@ object Dedup {
     * scans the embeddings of) the accumulated corpus.
     *
     * The hyperplane GEOMETRY is resolved once at build time and
-    * pinned in a sidecar: bucket keys from two different hyperplane
-    * sets never align, so a growing corpus must NOT re-resolve its
-    * auto geometry between ingests — delta commits extend the SAME
-    * hash tables. When the corpus outgrows the built geometry (mean
-    * bucket = n/2^planes drifting past the solver's target), rebuild
-    * with [[commitVecIndex]]: the new full snapshot supersedes all
-    * earlier segments, exactly like [[compactBandIndex]]'s contract.
+    * pinned in the `meta` of the full snapshot's manifest line: bucket
+    * keys from two different hyperplane sets never align, so a growing
+    * corpus must NOT re-resolve its auto geometry between ingests —
+    * delta commits extend the SAME hash tables. When the corpus
+    * outgrows the built geometry (mean bucket = n/2^planes drifting
+    * past the solver's target), rebuild with [[commitVecIndex]]: the
+    * new full snapshot supersedes all earlier segments, exactly like
+    * [[compactBandIndex]]'s contract. The snapshot and its geometry
+    * publish in ONE manifest CAS, so no reader can see one without the
+    * other.
     */
   /** One pinned geometry: what [[commitVecIndex]] resolves and every
     * ingest MUST band with (including the probe decision — the solver
@@ -1615,6 +1618,11 @@ object Dedup {
     */
   final case class VecIndexGeom(tables: Int, planes: Int, dims: Int, tau: Double, probe1: Boolean)
 
+  /** The manifest-meta key holding a full snapshot's geometry as one
+    * JSON object (`Double.toString` keeps tau round-trip exact).
+    */
+  private val GeomKey = "vec_geom"
+
   def commitVecIndex(
       corpus: DataFrame,
       root: String,
@@ -1623,8 +1631,6 @@ object Dedup {
       planes: Int = 0,
       probe1: Boolean = false): Long = {
     requireFiniteTau(tau, "commitVecIndex")
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val e = corpus.select(col("vec_id"), col("embedding"),
       graft.functions.VectorFunctions.norm2(col("embedding")).as("nrm"))
     // ONE aggregate job answers BOTH geometry inputs the solver needs
@@ -1645,191 +1651,53 @@ object Dedup {
     require(dims.nonEmpty, s"commitVecIndex needs a corpus with at least one non-null embedding (geometry is data-derived)")
     // `probe1 = true` REQUESTS the 1-bit batch-side multiprobe even
     // where the solver wouldn't turn it on (gate-scale geometries):
-    // the decision is pinned in the sidecar and every ingest honors
+    // the decision is pinned with the geometry and every ingest honors
     // it, so an index built for exact-recall screening (q6d's oracle
     // operating point) keeps that property across its whole life.
     val g = graft.ann.LshGeometry.resolve(statsRow.getLong(0), tau, tables, planes, probe1 = probe1)
-    val v = graft.sources.Snapshots.commit(
-      graft.ann.Knn.lshTables(e, g.tables, g.planes, seed = 7, dims = dims)
-        .select("vec_id", "tbl", "bkt"),
-      root)
-    // geometry publishes AFTER its snapshot, under the snapshot's own
-    // version (never overwritten): readers only adopt a full snapshot
-    // once its sidecar exists, so a crash mid-rebuild leaves the old
-    // (snapshot, geometry) pair fully consistent and a concurrent
-    // ingest never sees a half-written sidecar
-    writeGeom(spark, root, v, VecIndexGeom(g.tables, g.planes, dims.get, tau, g.probe1))
-    v
-  }
-
-  private def geomPath(root: String, v: Long): String = s"$root/_geom/v$v"
-
-  /** Published-geometry memo: a (root, version) sidecar is immutable
-    * once published (never overwritten — the read gate's whole
-    * premise), so one filesystem read per JVM serves every later
-    * ingest/serve lookup of the same index version. The q6d lifecycle
-    * alone reads the same geometry three times without this.
-    */
-  private val geomMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), VecIndexGeom]()
-
-  /** Drop every memoized geometry (later lookups re-read the
-    * sidecars); [[graft.Stage.releaseAll]] calls this, so a long-lived
-    * session that builds index after index does not grow the memo
-    * without bound.
-    */
-  private[graft] def clearGeomMemo(): Unit = geomMemo.clear()
-
-  /** Test seam: memoized geometries. */
-  private[graft] def geomMemoSize: Int = geomMemo.size()
-
-  /** The sidecar is a one-line JSON FILE written driver-side: the old
-    * 1-row parquet sidecar cost a full Spark write job per publish
-    * and a read job per geometry load — pure scheduler overhead for
-    * five scalars. Written to a temp name and renamed into place, so
-    * the existence check ([[hasGeom]]) that gates snapshot adoption
-    * can never observe a half-written sidecar. A publish to a version
-    * whose sidecar exists is refused before the rename (HDFS's rename
-    * fails onto an existing target, but a local filesystem's POSIX
-    * rename silently replaces it). Old parquet sidecars (directories)
-    * stay readable forever — see [[readGeom]].
-    */
-  private[graft] def writeGeom(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String, v: Long, g: VecIndexGeom): Unit = {
-    val p = new org.apache.hadoop.fs.Path(geomPath(root, v))
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$root/_geom/.tmp-v$v-${java.util.UUID.randomUUID.toString.take(8)}")
     val json = String.format(java.util.Locale.ROOT,
       """{"tables":%d,"planes":%d,"dims":%d,"tau":%s,"probe1":%b}""",
-      Int.box(g.tables), Int.box(g.planes), Int.box(g.dims),
-      g.tau.toString, Boolean.box(g.probe1))
-    val out = f.create(tmp, false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (f.exists(p) || !f.rename(tmp, p)) {
-      f.delete(tmp, false)
-      throw new IllegalStateException(
-        s"geometry sidecar for v$v of $root already exists (sidecars are never overwritten)")
-    }
-    geomMemo.put((root, v), g)
-    ()
+      Int.box(g.tables), Int.box(g.planes), Int.box(dims.get), tau.toString, Boolean.box(g.probe1))
+    graft.sources.Snapshots.commit(
+      graft.ann.Knn.lshTables(e, g.tables, g.planes, seed = 7, dims = dims)
+        .select("vec_id", "tbl", "bkt"),
+      root, meta = Map(GeomKey -> json))
   }
 
-  /** Read one version's geometry: memo → JSON file → (back-compat)
-    * the pre-r14 1-row parquet directory form.
+  /** The newest full snapshot's line of one manifest read and the
+    * geometry its meta pins. A newest full WITHOUT geometry meta — a
+    * store written before the geometry moved onto the manifest, or a
+    * raw `Snapshots.commit` into an index root — is refused: banding
+    * with a guessed geometry would silently miss every candidate.
     */
-  private def readGeom(
-      spark: org.apache.spark.sql.SparkSession, root: String, v: Long): VecIndexGeom = {
-    val key = (root, v)
-    val hit = geomMemo.get(key)
-    if (hit != null) return hit
-    val p = new org.apache.hadoop.fs.Path(geomPath(root, v))
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val g =
-      if (f.getFileStatus(p).isDirectory) {
-        // pre-r14 sidecar: a 1-row parquet directory
-        val r = graft.sources.Sources.readParquet(spark, geomPath(root, v)).head()
-        VecIndexGeom(r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3), r.getBoolean(4))
-      } else {
-        val in = f.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        org.json4s.jackson.JsonMethods.parse(txt) match {
-          case o: org.json4s.JObject =>
-            implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-            VecIndexGeom(
-              (o \ "tables").extract[Int], (o \ "planes").extract[Int],
-              (o \ "dims").extract[Int], (o \ "tau").extract[Double],
-              (o \ "probe1").extract[Boolean])
-          case other => throw new IllegalStateException(
-            s"malformed geometry sidecar $p: $other")
-        }
-      }
-    geomMemo.put(key, g)
-    g
+  private def vecBase(
+      root: String, st: graft.sources.Snapshots.ManifestState)
+      : (graft.sources.Snapshots.ManifestLine, VecIndexGeom) = {
+    require(st.lines.nonEmpty, s"no vector index committed at $root (run commitVecIndex first)")
+    val base = st.lines.filter(_.kind == "full").lastOption.getOrElse(
+      throw new IllegalStateException(s"no full vector-index snapshot in $root"))
+    val json = base.meta.getOrElse(GeomKey, throw new IllegalStateException(
+      s"full snapshot v${base.v} of vector index $root carries no geometry in its manifest " +
+        "line (written by an older build, or committed without commitVecIndex) — " +
+        "rebuild the index with commitVecIndex"))
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val o = org.json4s.jackson.JsonMethods.parse(json)
+    (base, VecIndexGeom((o \ "tables").extract[Int], (o \ "planes").extract[Int],
+      (o \ "dims").extract[Int], (o \ "tau").extract[Double], (o \ "probe1").extract[Boolean]))
   }
 
-  private def hasGeom(spark: org.apache.spark.sql.SparkSession, root: String, v: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(geomPath(root, v))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The base version vec readers agree on: the NEWEST full snapshot
-    * whose geometry sidecar is published. A full snapshot without its
-    * sidecar (crash between commit and publish) is invisible — the
-    * previous consistent pair keeps serving.
+  /** The vector index at `root` from ONE manifest read: the pinned
+    * geometry and the (vec_id, tbl, bkt) segments it bands — the
+    * newest full snapshot plus later deltas
+    * ([[graft.sources.Snapshots.readAppendOnly]]'s chain). An ingest
+    * racing a rebuild therefore bands with the geometry of the very
+    * segments it reads.
     */
-  private def vecBaseVersion(
-      spark: org.apache.spark.sql.SparkSession, root: String): (Long, Seq[(Long, String, String)]) = {
-    val vs = graft.sources.Snapshots.versions(spark, root)
-    require(vs.nonEmpty, s"no vector index committed at $root (run commitVecIndex first)")
-    val baseV = vs.filter(t => t._2 == "full" && hasGeom(spark, root, t._1))
-      .map(_._1).maxOption.getOrElse(
-        throw new IllegalStateException(s"no published full vector-index snapshot in $root"))
-    (baseV, vs)
-  }
-
-  /** Retention for the persisted VECTOR index: vacuum pinned at the
-    * reader's OWN base — the newest full snapshot whose geometry
-    * sidecar is PUBLISHED — never at the raw newest full. A plain
-    * `Snapshots.vacuum(root, latest)` would resolve its base to a
-    * full whose sidecar never landed (crash between the rebuild's
-    * commit and its geometry publish — the exact window the
-    * sidecar gate exists for) and physically delete the segments the
-    * gated reader is still serving from, killing the index forever.
-    * Sidecars of the vacuumed versions are deleted along with them.
-    */
-  def vacuumVecIndex(spark: org.apache.spark.sql.SparkSession, root: String): Seq[Long] = {
-    val (baseV, _) = vecBaseVersion(spark, root)
-    val deleted = graft.sources.Snapshots.vacuum(spark, root, keepAfterVersion = baseV)
-    deleted.foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(geomPath(root, v))
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (f.exists(p)) { f.delete(p, true); () }
-    }
-    deleted
-  }
-
-  /** Retention for the persisted BAND index: its readers base on the
-    * newest full snapshot unconditionally ([[readBandIndex]]), so the
-    * plain store vacuum at the tip is safe — this wrapper just names
-    * the operational intent next to [[compactBandIndex]].
-    */
-  def vacuumBandIndex(spark: org.apache.spark.sql.SparkSession, root: String): Seq[Long] =
-    graft.sources.Snapshots.vacuum(spark, root,
-      graft.sources.Snapshots.latestVersion(spark, root))
-
-  /** The pinned build-time geometry of the index at `root`. */
-  def vecIndexGeometry(spark: org.apache.spark.sql.SparkSession, root: String): VecIndexGeom = {
-    val (baseV, _) = vecBaseVersion(spark, root)
-    readGeom(spark, root, baseV)
-  }
-
-  /** Base segment + subsequent DELTAS as one narrow union — shared by
-    * both persisted indexes ([[readBandIndex]]'s read contract), and
-    * ONE definition with the corpus stores' append-only read
-    * ([[graft.sources.Snapshots.readChain]]): a supersession-rule fix
-    * lands in every reader at once. A full snapshot NEWER than the
-    * chosen base is skipped: for the vec index the base is
-    * sidecar-gated, so a crash between a compaction commit and its
-    * geometry publish must not let the half-published fold
-    * double-count against the segments it folded.
-    */
-  private def readSegments(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      baseV: Long,
-      vs: Seq[(Long, String, String)]): DataFrame =
-    graft.sources.Snapshots.readChain(spark, root, baseV, vs)
-
-  /** Latest PUBLISHED full snapshot + subsequent deltas — over bucket
-    * keys instead of band hashes.
-    */
-  def readVecIndex(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame = {
-    val (baseV, vs) = vecBaseVersion(spark, root)
-    readSegments(spark, root, baseV, vs)
+  def openVecIndex(
+      spark: org.apache.spark.sql.SparkSession, root: String): (VecIndexGeom, DataFrame) = {
+    val st = graft.sources.Snapshots.manifestState(spark, root)
+    val (_, g) = vecBase(root, st)
+    (g, graft.sources.Snapshots.readAppendOnlyAt(spark, root, st))
   }
 
   /** Ingest verdicts for a vector `batch` against the PERSISTED
@@ -1846,28 +1714,24 @@ object Dedup {
   def ingestAgainstVecIndex(
       batch: DataFrame,
       corpusVecs: DataFrame,
-      root: String): DataFrame = {
-    val spark = batch.sparkSession
-    ingestWithGeom(batch, corpusVecs, root, vecIndexGeometry(spark, root))
-  }
+      root: String): DataFrame =
+    ingestWith(batch, corpusVecs, openVecIndex(batch.sparkSession, root))
 
-  /** The ingest body, parameterized by an already-read geometry so
-    * [[ingestAndCommitVec]] touches the sidecar and manifest once per
-    * cycle, not once per step. The probe decision is the STORED one:
-    * the solver sized the index's tables assuming it.
+  /** The ingest body over an already-opened index (geometry and
+    * segments of one manifest read). The probe decision is the STORED
+    * one: the solver sized the index's tables assuming it.
     */
-  private def ingestWithGeom(
+  private[graft] def ingestWith(
       batch: DataFrame,
       corpusVecs: DataFrame,
-      root: String,
-      g: VecIndexGeom): DataFrame = {
+      index: (VecIndexGeom, DataFrame)): DataFrame = {
     import graft.functions.VectorFunctions._
-    val spark = batch.sparkSession
+    val (g, segments) = index
     val b = batch.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
     val bb0 = graft.ann.Knn.lshTables(b, g.tables, g.planes, seed = 7, dims = Some(g.dims))
       .select(col("vec_id").as("b_id"), col("tbl"), col("bkt"))
     val bb = if (!g.probe1) bb0 else graft.ann.Knn.probe1Expand(bb0, g.planes)
-    val cb = readVecIndex(spark, root).select(col("vec_id").as("c_id"), col("tbl"), col("bkt"))
+    val cb = segments.select(col("vec_id").as("c_id"), col("tbl"), col("bkt"))
     val cand = broadcast(bb).join(cb, Seq("tbl", "bkt")).select("b_id", "c_id").distinct()
     val hits = broadcast(cand)
       .join(corpusVecs.select(col("vec_id").as("c_id"), col("embedding"),
@@ -1889,9 +1753,9 @@ object Dedup {
       batch: DataFrame,
       corpusVecs: DataFrame,
       root: String): DataFrame = {
-    val spark = batch.sparkSession
-    val g = vecIndexGeometry(spark, root)
-    val verdicts = graft.Stage.cut(ingestWithGeom(batch, corpusVecs, root, g))
+    val index = openVecIndex(batch.sparkSession, root)
+    val g = index._1
+    val verdicts = graft.Stage.cut(ingestWith(batch, corpusVecs, index))
     val keepers = keepersOf(batch, verdicts, key = "vec_id")
       .select(col("vec_id"), col("embedding"),
         graft.functions.VectorFunctions.norm2(col("embedding")).as("nrm"))
@@ -1906,17 +1770,12 @@ object Dedup {
   }
 
   /** Fold the vector index's delta chain into a fresh full snapshot —
-    * [[compactBandIndex]]'s contract. The UNCHANGED geometry is
-    * re-published under the new version (readers adopt a full
-    * snapshot only once its sidecar exists; a fold that crashed
-    * before publishing stays invisible and the old chain keeps
-    * serving, without double-counting — see [[readSegments]]).
+    * [[compactBandIndex]]'s contract, with the base line's UNCHANGED
+    * geometry carried onto the fold's line in the same publish.
     */
   def compactVecIndex(spark: org.apache.spark.sql.SparkSession, root: String): Long = {
-    val g = vecIndexGeometry(spark, root)
-    val v = graft.sources.Snapshots.commit(readVecIndex(spark, root), root)
-    writeGeom(spark, root, v, g)
-    v
+    val st = graft.sources.Snapshots.manifestState(spark, root)
+    graft.sources.Snapshots.compactAppendOnly(spark, root, st, meta = vecBase(root, st)._1.meta)
   }
 
   /** q6d: two successive vector-ingest batches through the persisted
@@ -2331,22 +2190,6 @@ object Dedup {
   def commitBandIndex(corpus: DataFrame, root: String): Long =
     graft.sources.Snapshots.commit(bandedKeys(minhashSignatures(corpus)), root)
 
-  /** The stored band index: a raw union of every committed segment.
-    * Append-only means NO last-writer-wins merge — an as-of style
-    * window here would shuffle the whole index per ingest; the union
-    * of parquet scans is narrow and AQE-coalesced instead.
-    */
-  def readBandIndex(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame = {
-    val vs = graft.sources.Snapshots.versions(spark, root)
-    require(vs.nonEmpty, s"no band index committed at $root (run commitBandIndex first)")
-    // latest full snapshot + its subsequent deltas: a rebuilt index
-    // (a second full commit) SUPERSEDES earlier segments — a raw
-    // union of everything would scan every band key once per rebuild
-    val baseV = vs.filter(_._2 == "full").map(_._1).maxOption.getOrElse(
-      throw new IllegalStateException(s"no full band-index snapshot in $root"))
-    readSegments(spark, root, baseV, vs)
-  }
-
   /** Ingest verdicts for `batch` against the PERSISTED band index —
     * same output contract as [[incrementalNearDups]], but candidate
     * generation never touches corpus text: the (tiny) batch bands
@@ -2366,7 +2209,10 @@ object Dedup {
       batch: DataFrame, corpusText: DataFrame, root: String, minJ: Double = 0.8): DataFrame = {
     val spark = batch.sparkSession
     val incBands = bandedKeys(minhashSignatures(batch)).withColumnRenamed("doc_id", "inc_id")
-    val corpBands = readBandIndex(spark, root).withColumnRenamed("doc_id", "corp_id")
+    // the stored index: newest full snapshot + later deltas as a raw
+    // narrow union — bands are immutable, so no merge runs
+    val corpBands = graft.sources.Snapshots.readAppendOnly(spark, root)
+      .withColumnRenamed("doc_id", "corp_id")
     val cand = broadcast(incBands).join(corpBands, Seq("band", "bh"))
       .select("inc_id", "corp_id").distinct()
     val hits = jaccardVerified(
@@ -2380,16 +2226,20 @@ object Dedup {
   }
 
   /** Fold the band index's delta chain into a fresh full snapshot.
-    * [[readBandIndex]] reads the latest full snapshot + later deltas,
-    * so the new commit SUPERSEDES the old segments — after N ingests
-    * the per-ingest scan fan-in is back to one file set. Bands are
+    * The index read is the latest full snapshot + later deltas, so
+    * the new commit SUPERSEDES the old segments — after N ingests the
+    * per-ingest scan fan-in is back to one file set. Bands are
     * immutable (no per-key merge needed), so compaction is a plain
-    * rewrite of the current union: no shuffle at all beyond the
-    * write. Run on the same cadence as any log-structured table's
-    * compaction; old versions stay readable.
+    * rewrite of the current union
+    * ([[graft.sources.Snapshots.compactAppendOnly]]): no shuffle at
+    * all beyond the write, and a keeper delta that lands mid-fold
+    * fails the fold loudly instead of being dropped. Run on the same
+    * cadence as any log-structured table's compaction; old versions
+    * stay readable.
     */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession, root: String): Long =
-    graft.sources.Snapshots.commit(readBandIndex(spark, root), root)
+    graft.sources.Snapshots.compactAppendOnly(
+      spark, root, graft.sources.Snapshots.manifestState(spark, root))
 
   /** The ONE definition of "accepted batch docs" — shared by
     * [[ingestAndCommit]] (band-index delta) and

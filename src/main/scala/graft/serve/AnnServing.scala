@@ -228,10 +228,10 @@ object AnnServing {
     * read of precomputed keys on its first search, not the full
     * tables×planes×n banding pass it previously re-ran per process.
     * A cold (or stale) build still bands inline, then PERSISTS the
-    * banded frame + a geometry sidecar through the snapshot store
-    * (commit, then sidecar, then vacuum of superseded versions — the
-    * q6d crash-ordering: a crash mid-save leaves the previous
-    * consistent pair, and a sidecar-less snapshot is never adopted).
+    * banded frame through the snapshot store with the source stamp
+    * and geometry as its manifest line's meta — the image and its
+    * geometry publish in one CAS, so a crash mid-save leaves the
+    * previous image intact — then vacuums superseded versions.
     * The stamp check means a warm image NEVER outlives its corpus
     * version: any source commit invalidates it and the next build
     * re-bands and re-persists.
@@ -263,34 +263,25 @@ object AnnServing {
         }
     }
 
-  private def warmGeomPath(root: String, v: Long): String = s"$root/_serving_geom/v$v"
-
-  /** Newest full snapshot in `root` whose sidecar exists AND records
-    * exactly `stamp` — loaded as the serving index. Any mismatch
-    * (no store, no sidecar, moved stamp, wrong schema) falls through
-    * to the inline build; warm start is an optimization, its absence
-    * is never an error. The banded read is materialized before the
-    * instance is published, so the first search pays no banding.
+  /** Newest full snapshot in `root` whose line meta records exactly
+    * `stamp` — loaded as the serving index. Any mismatch (no store, a
+    * moved stamp, an image written before the geometry moved onto the
+    * manifest line, wrong schema) falls through to the inline build;
+    * warm start is an optimization, its absence is never an error.
+    * The stamp and geometry come from the one manifest read, so a
+    * warm load costs no job beyond materializing the banded read
+    * (before the instance is published, so the first search pays no
+    * banding).
     */
   private def loadWarm(
       spark: SparkSession, source: Source, root: String, stamp: String): Option[AnnServing] =
     scala.util.Try {
-      graft.sources.Snapshots.versions(spark, root)
-        .filter(_._2 == "full").map(_._1).sorted.reverse
-        // lazy walk: each candidate costs a sidecar parquet head() job,
-        // so only the NEWEST matching full may be read — an eager
-        // flatMap would pay one driver job per retained full on a
-        // shared warmRoot with racing writers
-        .iterator.flatMap { v =>
-          val p = new org.apache.hadoop.fs.Path(warmGeomPath(root, v))
-          if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-          else {
-            val r = graft.sources.Sources.readParquet(spark, warmGeomPath(root, v)).head()
-            if (r.getString(0) != stamp) None
-            else Some((v, LshGeometry(r.getInt(1), r.getInt(2), r.getBoolean(3)), r.getInt(4)))
-          }
-        }.nextOption().map { case (v, g, dims) =>
-          val banded = graft.sources.Snapshots.read(spark, root, v)
+      graft.sources.Snapshots.manifestState(spark, root).lines
+        .filter(l => l.kind == "full" && l.meta.get("stamp").contains(stamp))
+        .lastOption.map { l =>
+          val g = LshGeometry(l.meta("tables").toInt, l.meta("planes").toInt, l.meta("probe1").toBoolean)
+          val dims = l.meta("dims").toInt
+          val banded = graft.sources.Sources.readParquet(spark, s"$root/${l.rel}")
             .select("vec_id", "tbl", "bkt").persist()
           try {
             banded.count() // materialize: first search must not pay the read either
@@ -305,23 +296,18 @@ object AnnServing {
         }
     }.toOption.flatten
 
-  /** Commit the built index's banded frame + geometry sidecar, then
-    * vacuum superseded versions (and their sidecars) so restarts
-    * don't accrete one full snapshot per corpus version forever.
+  /** Commit the built index's banded frame with its stamp and geometry
+    * as the line's meta (one publish), then vacuum superseded versions
+    * so restarts don't accrete one full snapshot per corpus version
+    * forever.
     */
   private def saveWarm(spark: SparkSession, built: AnnServing, root: String): Unit = {
-    val v = graft.sources.Snapshots.commit(built.bandedFrame, root)
-    import spark.implicits._
-    Seq((built.sourceVersion, built.geometry.tables, built.geometry.planes,
-        built.geometry.probe1, built.dims))
-      .toDF("stamp", "tables", "planes", "probe1", "dims")
-      .write.parquet(warmGeomPath(root, v))
-    val deleted = graft.sources.Snapshots.vacuum(spark, root, keepAfterVersion = v)
-    deleted.foreach { dv =>
-      val p = new org.apache.hadoop.fs.Path(warmGeomPath(root, dv))
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (f.exists(p)) { f.delete(p, true); () }
-    }
+    val g = built.geometry
+    val v = graft.sources.Snapshots.commit(built.bandedFrame, root, meta = Map(
+      "stamp" -> built.sourceVersion, "tables" -> g.tables.toString,
+      "planes" -> g.planes.toString, "probe1" -> g.probe1.toString, "dims" -> built.dims.toString))
+    graft.sources.Snapshots.vacuum(spark, root, keepAfterVersion = v)
+    ()
   }
 
   /** Build (and materialize) the serving index over `source`. Costs

@@ -1659,18 +1659,20 @@ object WarehouseServer {
             case JArray(_) => throw HttpError(400, "embedding must be non-empty")
             case other => throw HttpError(400, s"check_vec needs an 'embedding' array, got $other")
           }
-          // geometry read resolves the index (404 when none committed);
-          // the posted vector must be scorable IN that geometry — a
+          // opening the index resolves it (404 when none committed) —
+          // geometry and segments from ONE manifest read; the posted
+          // vector must be scorable IN that geometry — a
           // dims mismatch would silently bucket garbage, and a
           // zero/NaN/Inf norm is the library's un-scorable class
           // (cosine NULL, keep-by-default) which for a CHECK endpoint
           // is a vacuous always-keep: refuse both as typed 400s
-          val g =
-            try graft.dedup.Dedup.vecIndexGeometry(spark, idxRoot)
+          val index =
+            try graft.dedup.Dedup.openVecIndex(spark, idxRoot)
             catch {
               case e: IllegalArgumentException =>
                 throw HttpError(404, Option(e.getMessage).getOrElse("no vector index"))
             }
+          val g = index._1
           if (emb.size != g.dims)
             throw HttpError(400,
               s"embedding has ${emb.size} dims but the index is built for ${g.dims}")
@@ -1696,7 +1698,7 @@ object WarehouseServer {
               case e: IllegalArgumentException =>
                 throw HttpError(404, Option(e.getMessage).getOrElse("empty vector corpus store"))
             }
-          val v = graft.dedup.Dedup.ingestAgainstVecIndex(batch, corpus, idxRoot)
+          val v = graft.dedup.Dedup.ingestWith(batch, corpus, index)
             .collect().head // exactly one verdict row for the 1-row batch
           ("keep" -> v.getBoolean(3)) ~
             ("dup_of" -> (if (v.isNullAt(1)) JNull else JInt(v.getLong(1)))) ~

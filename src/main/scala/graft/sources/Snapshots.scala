@@ -180,7 +180,10 @@ object Snapshots {
       v: Long, kind: String, rel: String, ts: Long, meta: Map[String, String])
 
   private[graft] final case class ManifestState(
-      fileNum: Long, lines: Seq[ManifestLine])
+      fileNum: Long, lines: Seq[ManifestLine]) {
+    /** (version, kind, path) entries, version-ascending. */
+    def versions: Seq[(Long, String, String)] = lines.map(l => (l.v, l.kind, l.rel))
+  }
 
   private def parseMeta(raw: String, mp: Path): Map[String, String] =
     org.json4s.jackson.JsonMethods.parse(raw) match {
@@ -225,7 +228,7 @@ object Snapshots {
 
   /** (version, kind, path) entries, version-ascending. */
   def versions(spark: SparkSession, root: String): Seq[(Long, String, String)] =
-    manifestState(spark, root).lines.map(l => (l.v, l.kind, l.rel))
+    manifestState(spark, root).versions
 
   /** [[versions]] plus each line's commit wall-time (epoch millis;
     * -1 when the line predates the timestamp field).
@@ -637,6 +640,21 @@ object Snapshots {
     // calls out); only a lost CAS pays a fresh read for its retry.
     var st = manifestState(spark, root)
     def next(s: ManifestState): Long = s.lines.lastOption.map(_.v + 1).getOrElse(1L)
+    // staleness pin for content computed from a chain read (compact):
+    // the CAS alone only detects a SAME-version collision — a commit
+    // that landed between the fold's chain read and this publish just
+    // bumps nextVersion past it, and the fold would supersede rows it
+    // never contained. With the expected version pinned, any
+    // intervening commit makes this a loud failure instead — checked
+    // before the write too, so a fold already stale here writes
+    // nothing. (A commit racing our own pre-write read surfaces the
+    // same way: the publish CAS below fails and the retry re-reads.)
+    def checkPin(v: Long): Unit = expectedVersion.foreach { ev =>
+      if (v != ev) throw new IllegalStateException(
+        s"stale fold: expected to publish v$ev but the store is at v${v - 1} " +
+          s"— a commit landed after the chain read; re-run the fold over the new chain")
+    }
+    checkPin(next(st))
     val rel = s"v${next(st)}-${java.util.UUID.randomUUID.toString.take(8)}"
     validateStatsCols(df, statsCols) // BEFORE the write — a typo'd column must not cost a corpus write
     validateBloomCols(df, bloomCols)
@@ -655,19 +673,7 @@ object Snapshots {
     while (true) {
       attempt += 1
       val v = next(st)
-      // staleness pin for content computed from a chain read (compact):
-      // the CAS alone only detects a SAME-version collision — a commit
-      // that landed between the fold's chain read and this publish just
-      // bumps nextVersion past it, and the fold would supersede rows it
-      // never contained. With the expected version pinned, any
-      // intervening commit makes this a loud failure instead. (A commit
-      // racing our own pre-write read surfaces the same way: the
-      // publish CAS below fails and the retry re-reads.)
-      expectedVersion.foreach { ev =>
-        if (v != ev) throw new IllegalStateException(
-          s"stale fold: expected to publish v$ev but the store is at v${v - 1} " +
-            s"— a commit landed after the chain read; re-run the fold over the new chain")
-      }
+      checkPin(v)
       try {
         publishAt(spark, root, st.fileNum + 1,
           st.lines :+ ManifestLine(v, kind, rel, System.currentTimeMillis(), meta))
@@ -903,34 +909,27 @@ object Snapshots {
     * segments). Falls back to the all-deltas union when no full
     * snapshot exists yet.
     */
-  def readAppendOnly(spark: SparkSession, root: String): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"empty snapshot store at $root")
-    vs.filter(_._2 == "full").map(_._1).maxOption match {
-      case Some(baseV) => readChain(spark, root, baseV, vs)
-      // no full snapshot yet: every segment is a delta — the chain
-      // read from the FIRST version covers exactly all of them (and
-      // carries the tombstone guard, same as the based path)
-      case None => readChain(spark, root, vs.head._1, vs)
-    }
-  }
+  def readAppendOnly(spark: SparkSession, root: String): DataFrame =
+    readAppendOnlyAt(spark, root, manifestState(spark, root))
 
-  /** THE supersession chain read — `baseV`'s segment plus every LATER
-    * delta as a raw narrow union, shared by [[readAppendOnly]] and
-    * the persisted-index readers in graft.dedup (whose base choice is
-    * sidecar-gated). A full snapshot NEWER than `baseV` is skipped:
-    * for the vector index a crash between a compaction commit and its
-    * geometry publish must not let the half-published fold
-    * double-count against the segments it folded; one definition so
-    * a supersession-rule fix can never drift between the corpus and
-    * index reads.
+  /** [[readAppendOnly]] over an already-taken manifest read — for a
+    * caller that needs the chain's lines too (the vector index reads
+    * its geometry from the base line's meta) and must see the segments
+    * of that SAME read, never of a newer one.
     */
-  private[graft] def readChain(
+  private[graft] def readAppendOnlyAt(
+      spark: SparkSession, root: String, st: ManifestState): DataFrame =
+    readChain(spark, root, appendOnlyEntries(root, st.versions))
+
+  /** The raw narrow union of exactly `segs` — every caller passes
+    * [[appendOnlyEntries]] or a pruned subset of it, so the
+    * supersession rule (newest full + later deltas) lives in one place.
+    */
+  private def readChain(
       spark: SparkSession,
       root: String,
-      baseV: Long,
-      vs: Seq[(Long, String, String)]): DataFrame =
-    vs.filter(t => t._1 == baseV || (t._1 > baseV && t._2 != "full"))
+      segs: Seq[(Long, String, String)]): DataFrame =
+    segs
       // segment paths straight from the chain entries: read() would
       // re-list + re-parse the manifest PER SEGMENT (K+1 manifest
       // reads per call on a K-segment chain, growing with every
@@ -1234,14 +1233,15 @@ object Snapshots {
   }
 
   /** The chain entries [[readAppendOnly]] unions: latest full base (or
-    * the first delta when no full exists) plus every later delta.
+    * the first delta when no full exists — every segment is then a
+    * delta) plus every later delta. Segments the newest full
+    * supersedes are skipped.
     */
   private def appendOnlyEntries(
-      spark: SparkSession, root: String): Seq[(Long, String, String)] = {
-    val vs = versions(spark, root)
+      root: String, vs: Seq[(Long, String, String)]): Seq[(Long, String, String)] = {
     require(vs.nonEmpty, s"empty snapshot store at $root")
     val baseV = vs.filter(_._2 == "full").map(_._1).maxOption.getOrElse(vs.head._1)
-    vs.filter(t => t._1 == baseV || (t._1 > baseV && t._2 != "full"))
+    vs.filter(_._1 >= baseV)
   }
 
   /** [[readAppendOnly]] restricted to `column ∈ [lo, hi]` with
@@ -1278,8 +1278,8 @@ object Snapshots {
         entries.filter(e => Sources.readParquet(spark, s"$root/${e._3}").columns.contains(column))
       if (carriers.isEmpty)
         throw new IllegalArgumentException(s"no segment of $root carries column '$column'")
-      readChain(spark, root, carriers.head._1, carriers).where(lit(false)).filter(bounded)
-    } else readChain(spark, root, kept.head._1, kept).filter(bounded)
+      readChain(spark, root, carriers).where(lit(false)).filter(bounded)
+    } else readChain(spark, root, kept).filter(bounded)
   }
 
   /** Stats-and-schema pruning shared by [[readAppendOnlyWhere]] and
@@ -1298,7 +1298,7 @@ object Snapshots {
   private def rangeSegments(
       spark: SparkSession, root: String, column: String, lo: Any, hi: Any)
       : (Seq[(Long, String, String)], Seq[(Long, String, String)]) = {
-    val entries = appendOnlyEntries(spark, root)
+    val entries = appendOnlyEntries(root, versions(spark, root))
     val statsKept = entries.filter { case (_, _, rel) =>
       mayContain(segmentStats(spark, root, rel), column, lo, hi)
     }
@@ -1496,6 +1496,23 @@ object Snapshots {
       bloomCols = bloomCols)
   }
 
+  /** [[compact]] for the persisted dedup indexes, which are
+    * APPEND-ONLY: the fold is the [[readAppendOnly]] union of the
+    * chain read `st` — no merge, no shuffle beyond the write — under
+    * [[compact]]'s staleness pin, so a keeper delta published between
+    * that read and the fold's publish (an ingest's
+    * [[commitDeltaRetrying]]) fails the fold loudly instead of being
+    * superseded by a full snapshot that never held its rows. `meta`
+    * goes on the fold's line: the vector index carries its pinned
+    * geometry forward this way. `st` is a parameter so the index-fold
+    * race spec can pass a read taken before a concurrent delta commit.
+    */
+  private[graft] def compactAppendOnly(
+      spark: SparkSession, root: String, st: ManifestState,
+      meta: Map[String, String] = Map.empty): Long =
+    writeAndPublish(readAppendOnlyAt(spark, root, st), root, "full",
+      expectedVersion = Some(st.lines.last.v + 1), meta = meta)
+
   // ------------------------------------------------------------ tags
 
   /** Named version tags — the human-addressable as-of: "read the
@@ -1620,12 +1637,10 @@ object Snapshots {
     * job mid-flight) can fail — the standard retention trade-off;
     * pick `keepAfterVersion` behind the oldest pin in use.
     *
-    * Stores whose readers gate their base on EXTERNAL state must
-    * vacuum through their owner's wrapper, not this raw call: the
-    * vector index adopts a full snapshot only once its geometry
-    * sidecar is published (`graft.dedup.Dedup.vacuumVecIndex` pins at
-    * that gated base), so vacuuming here at the raw newest full could
-    * delete the segments the gated reader still serves from.
+    * The persisted dedup indexes and the ANN warm image keep their
+    * geometry in the `meta` of the full snapshot's own manifest line
+    * (a retained line keeps its meta), so a plain vacuum at the tip
+    * is their retention too.
     *
     * Returns the deleted versions (empty when nothing was superseded).
     */

@@ -287,7 +287,9 @@ object EventStreams {
     * retry the manifest CAS
     * ([[graft.sources.Snapshots.commitDeltaRetrying]]), so losing
     * the race to a compact re-publishes instead of killing the
-    * stream; a compact that loses fails loudly and is simply re-run.
+    * stream; both folds are pinned to the chain they read, so one
+    * that a delta overtakes fails loudly ("stale fold") and is
+    * simply re-run.
     *
     * Delivery is at-least-once (foreachBatch). A replayed shingled
     * keeper matches its own committed copy (jaccard 1) and drops; a

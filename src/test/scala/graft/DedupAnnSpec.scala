@@ -269,7 +269,7 @@ class DedupAnnSpec extends SparkSpec {
     // Snapshots stores, so one excise call each removes the payload
     // and its DERIVED fingerprints (band keys leak membership too)
     Snapshots.excise(spark, root, col("doc_id") === target)
-    assert(Dedup.readBandIndex(spark, root).filter(col("doc_id") === target).count() === 0L,
+    assert(Snapshots.readAppendOnly(spark, root).filter(col("doc_id") === target).count() === 0L,
       "derived band keys for the excised doc survived the takedown")
     // the excised index serves ingest EXACTLY like an index rebuilt
     // over the post-takedown corpus — no dangling candidates, no
@@ -289,8 +289,8 @@ class DedupAnnSpec extends SparkSpec {
     val root = tmpDir("vecindex-excise") + "/idx"
     Dedup.commitVecIndex(corpus, root, probe1 = true)
     val target = corpus.select("vec_id").head().getLong(0)
-    // excise preserves version numbers, so the _geom/v<N> sidecar the
-    // reader gates on still pairs with its (rewritten) snapshot
+    // excise rewrites the snapshot's path on its manifest line and
+    // keeps the line's meta, so the pinned geometry stays with it
     Snapshots.excise(spark, root, col("vec_id") === target)
     val corpus2 = corpus.filter(col("vec_id") =!= target)
     val verdicts = Dedup.ingestAgainstVecIndex(batch, corpus2, root)
@@ -340,7 +340,7 @@ class DedupAnnSpec extends SparkSpec {
 
     Dedup.compactBandIndex(spark, root)
     // the compacted index is ONE frame (scan fan-in reset)...
-    val p = Dedup.readBandIndex(spark, root).queryExecution.executedPlan.toString
+    val p = graft.sources.Snapshots.readAppendOnly(spark, root).queryExecution.executedPlan.toString
     assert("Scan parquet".r.findAllIn(p).length === 1,
       s"compacted index should scan a single snapshot:\n$p")
     // ...and screening is bit-identical through it
@@ -447,7 +447,7 @@ class DedupAnnSpec extends SparkSpec {
     val b2 = emb.filter(col("vec_id") % 7 === 5)
     val root = tmpDir("vecindex-sem") + "/idx"
     Dedup.commitVecIndex(corpus, root)
-    val g = Dedup.vecIndexGeometry(spark, root)
+    val g = Dedup.openVecIndex(spark, root)._1
 
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Option[Long], Long, Boolean)] =
       df.collect().map(r => (r.getLong(0),
@@ -473,20 +473,64 @@ class DedupAnnSpec extends SparkSpec {
     assert(rows(Dedup.ingestAgainstVecIndex(b2, corpus2, root)) === rows(v2))
   }
 
-  test("a geometry sidecar is never overwritten: a second publish of a version throws, the first file stays") {
+  test("vector-index geometry rides the manifest line: it survives a fold, an excise and a vacuum") {
+    import graft.sources.Snapshots
     val emb = Tables.embeddings(spark, sf)
+    val isInc = col("vec_id") % 7 === 3
+    val (batch, corpus) = (emb.filter(isInc), emb.filter(!isInc))
     val root = tmpDir("vecindex-geom") + "/idx"
-    val v = Dedup.commitVecIndex(emb, root)
-    val sidecar = java.nio.file.Paths.get(s"$root/_geom/v$v")
-    val before = java.nio.file.Files.readAllBytes(sidecar)
-    val g = Dedup.vecIndexGeometry(spark, root)
-    intercept[IllegalStateException] {
-      Dedup.writeGeom(spark, root, v, g.copy(tables = g.tables + 1, tau = 0.9))
-    }
-    assert(java.nio.file.Files.readAllBytes(sidecar).sameElements(before),
-      "the second publish replaced the first sidecar")
-    val stray = new java.io.File(s"$root/_geom").list().filter(_.startsWith(".tmp-"))
-    assert(stray.isEmpty, s"the refused publish left temp files: ${stray.mkString(", ")}")
+    Dedup.commitVecIndex(corpus, root, tau = 0.1 + 0.2, probe1 = true)           // v1
+    val g = Dedup.openVecIndex(spark, root)._1
+    assert(g.tau === 0.1 + 0.2 && g.probe1, s"geometry must round-trip exactly: $g")
+    Dedup.ingestAndCommitVec(batch, corpus, root)                                  // v2 delta
+    assert(Dedup.compactVecIndex(spark, root) === 3L)                              // v3 fold
+    assert(Dedup.openVecIndex(spark, root)._1 === g, "the fold dropped the geometry")
+    val target = corpus.select("vec_id").head().getLong(0)
+    Snapshots.excise(spark, root, col("vec_id") === target)
+    assert(Dedup.openVecIndex(spark, root)._1 === g, "the excise dropped the geometry")
+    assert(Snapshots.vacuum(spark, root, Snapshots.latestVersion(spark, root)) === Seq(1L, 2L))
+    val (g2, segments) = Dedup.openVecIndex(spark, root)
+    assert(g2 === g, "the vacuum dropped the geometry")
+    assert(segments.filter(col("vec_id") === target).count() === 0L)
+    assert(new java.io.File(root).list().forall(n => !n.contains("geom")),
+      "no geometry file beside the manifests")
+  }
+
+  test("an index fold overtaken by a keeper delta fails as a stale fold and leaves the store unchanged") {
+    import graft.sources.Snapshots
+    def ids(root: String): Set[Long] =
+      Snapshots.readAppendOnly(spark, root).select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    // band index: the fold reads its chain, then an ingest publishes a
+    // keeper delta (commitDeltaRetrying), then the fold publishes
+    val docs = Tables.documents(spark, sf)
+    val (corpus, batch) = (docs.filter(col("doc_id") % 7 =!= 3), docs.filter(col("doc_id") % 7 === 3))
+    val root = tmpDir("bandindex-race") + "/idx"
+    Dedup.commitBandIndex(corpus, root)
+    val stale = Snapshots.manifestState(spark, root)
+    Dedup.ingestAndCommit(batch, corpus, root)
+    val (vs, want) = (Snapshots.versions(spark, root), ids(root))
+    val files = new java.io.File(root).list().toSet
+    val keepers = Snapshots.read(spark, root, 2L).select("doc_id").distinct().count()
+    assert(keepers > 0, "the race needs a delta with rows")
+    val e = intercept[IllegalStateException](Snapshots.compactAppendOnly(spark, root, stale))
+    assert(e.getMessage.contains("stale fold"), e.getMessage)
+    assert(Snapshots.versions(spark, root) === vs && ids(root) === want,
+      "a stale fold changed the store")
+    assert(new java.io.File(root).list().toSet === files, "a stale fold wrote a segment")
+    // re-run over the new chain: the fold holds the delta's rows
+    assert(Dedup.compactBandIndex(spark, root) === 3L)
+    assert(ids(root) === want)
+    // the vector fold takes the same pin, carrying its geometry meta
+    val emb = Tables.embeddings(spark, sf)
+    val vroot = tmpDir("vecindex-race") + "/idx"
+    Dedup.commitVecIndex(emb.filter(col("vec_id") % 7 =!= 3), vroot)
+    val vstale = Snapshots.manifestState(spark, vroot)
+    Dedup.ingestAndCommitVec(emb.filter(col("vec_id") % 7 === 3), emb.filter(col("vec_id") % 7 =!= 3), vroot)
+    val vvs = Snapshots.versions(spark, vroot)
+    val ve = intercept[IllegalStateException](
+      Snapshots.compactAppendOnly(spark, vroot, vstale, vstale.lines.head.meta))
+    assert(ve.getMessage.contains("stale fold"), ve.getMessage)
+    assert(Snapshots.versions(spark, vroot) === vvs, "a stale vector fold changed the store")
   }
 
   test("NaN and infinite tau are refused at every tau entry, before anything is published") {

@@ -1657,6 +1657,30 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally srv4.close()
   }
 
+  test("a warm ann load reads stamp and geometry from the image's manifest line: six jobs, no sidecar read") {
+    import graft.serve.AnnServing
+    import spark.implicits._
+    val base = tmpDir("serve-ann-warm-jobs")
+    val (root, warm) = (s"$base/corpus", s"$base/warm")
+    Snapshots.commit(Tables.embeddings(spark, sf).select("vec_id", "embedding"), root)
+    val src = AnnServing.StoreSource(root)
+    // an image without stamp meta (what an older build left behind) is
+    // never adopted: the build bands inline and persists a fresh image
+    Snapshots.commit(Seq((0L, 0, 0L)).toDF("vec_id", "tbl", "bkt"), warm)
+    AnnServing.build(spark, src, Some(warm)).close()
+    val vs = Snapshots.versions(spark, warm)
+    assert(vs.map(_._1) == Seq(2L), s"the cold build must supersede the meta-less image: $vs")
+    var loaded: AnnServing = null
+    // the banded and corpus materializations only: stamp and geometry
+    // come with the manifest read, which runs no job
+    val jobs = jobsIn("warm-load") { loaded = AnnServing.build(spark, src, Some(warm)) }
+    try {
+      assert(Snapshots.versions(spark, warm) == vs, "the warm load re-banded")
+      assert(jobs === 6, s"warm load ran $jobs jobs")
+      assert(new java.io.File(warm).list().forall(!_.contains("geom")), "a geometry sidecar was written")
+    } finally loaded.close()
+  }
+
   test("a broken ann source answers 503 (server fault), never the request-validation 400") {
     // an EMPTY snapshot store: the build fails server-side while the
     // posted vector is perfectly well-formed

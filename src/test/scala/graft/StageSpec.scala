@@ -37,14 +37,12 @@ class StageSpec extends SparkSpec {
     assert(a.count() === n)
   }
 
-  test("releaseAll empties the vector-index geometry memo; geometry still reads back") {
+  test("releaseAll empties the cohort image memo; a vector index's geometry still reads back") {
     import operators.CohortQuery
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val root = tmpDir("stage-geom") + "/idx"
     dedup.Dedup.commitVecIndex(Tables.embeddings(spark, sf), root)
-    val g = dedup.Dedup.vecIndexGeometry(spark, root)
-    assert(dedup.Dedup.geomMemoSize > 0)
-    // the cohort path's image memo is released the same way
+    val g = dedup.Dedup.openVecIndex(spark, root)._1
     val cohort = CohortQuery.count(spark, sf, CohortQuery.demoSpec)
     val n = cohort.head().getLong(0)
     assert(CohortQuery.populationSize(spark, sf, CohortQuery.demoSpec) === n)
@@ -53,8 +51,8 @@ class StageSpec extends SparkSpec {
     assert(images.nonEmpty && images.forall(_.isCachedColumnBuffersLoaded), "the count filled no image")
     assert(CohortQuery.imageInfo(spark, sf).nonEmpty)
     Stage.releaseAll(spark)
-    assert(dedup.Dedup.geomMemoSize === 0, "releaseAll left the geometry memo populated")
-    assert(dedup.Dedup.vecIndexGeometry(spark, root) === g)
+    // the geometry lives on the index's manifest line, not in a memo
+    assert(dedup.Dedup.openVecIndex(spark, root)._1 === g)
     assert(CohortQuery.imageInfo(spark, sf).isEmpty, "releaseAll left the image memo populated")
     assert(CohortQuery.preparedInfo(spark, sf).shapes === 0, "releaseAll left prepared counts held")
     assert(!images.exists(_.isCachedColumnBuffersLoaded), "releaseAll left an image persisted")

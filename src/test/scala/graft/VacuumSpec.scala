@@ -135,38 +135,34 @@ class VacuumSpec extends SparkSpec {
       Set((2, "b2", 21L), (3, "c", 30L), (4, "d", 40L), (6, "f", 60L)))
   }
 
-  test("vacuumVecIndex pins at the sidecar-gated base; a crashed rebuild's full is never adopted") {
+  test("a newest full snapshot without geometry meta is refused by every vector-index reader") {
     import graft.dedup.Dedup
     val root = s"${tmpDir("vac-vecidx")}/idx"
-    def vecs(ids: Range): DataFrame = ids
+    val vecs = (0 until 8)
       .map(i => (i.toLong, Seq.tabulate(4)(j => (i + j + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    Dedup.commitVecIndex(vecs(0 until 8), root)                                   // v1 full + sidecar
-    Snapshots.commitDelta(Seq((100L, 0, 1L)).toDF("vec_id", "tbl", "bkt"), root)  // v2 ingest delta
-    // a crashed rebuild: the full snapshot committed but its geometry
-    // sidecar never published — by design the reader keeps serving
-    // v1 + v2 and never adopts v3
-    Snapshots.commit(Seq((200L, 0, 2L)).toDF("vec_id", "tbl", "bkt"), root)       // v3 full, NO sidecar
-    val before = Dedup.readVecIndex(spark, root)
-      .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(before.contains(100L) && !before.contains(200L), "gated reader must serve v1+v2")
-    // the raw store vacuum would base at v3 and delete the segments
-    // the gated reader serves from; the index-aware wrapper pins at
-    // the GATED base and deletes nothing here
-    assert(Dedup.vacuumVecIndex(spark, root) === Seq.empty)
-    assert(Dedup.readVecIndex(spark, root)
-      .select("vec_id").distinct().collect().map(_.getLong(0)).toSet === before)
-    // a COMPLETED rebuild (full + sidecar) moves the base; vacuum then
-    // reclaims everything below it, vacuumed sidecars included
-    Dedup.commitVecIndex(vecs(0 until 8), root)                                   // v4 full + sidecar
-    assert(Dedup.vacuumVecIndex(spark, root) === Seq(1L, 2L, 3L))
-    assert(!new java.io.File(s"$root/_geom/v1").exists(), "vacuumed version's sidecar must go")
-    assert(new java.io.File(s"$root/_geom/v4").exists(), "the serving sidecar must stay")
-    assert(Dedup.readVecIndex(spark, root).count() > 0)
-    assert(Dedup.vecIndexGeometry(spark, root).dims === 4)
+    Dedup.commitVecIndex(vecs, root)                                              // v1 full + geometry
+    Dedup.ingestAndCommitVec(vecs.limit(1), vecs, root)                           // v2 delta
+    // a raw commit into the index root (or a store written before the
+    // geometry moved onto the manifest line): the newest full carries
+    // no geometry, and banding with a guessed one would miss every
+    // candidate — so every reader refuses it, naming the remedy
+    Snapshots.commit(Seq((200L, 0, 2L)).toDF("vec_id", "tbl", "bkt"), root)       // v3 full, no meta
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("v3") && e.getMessage.contains("commitVecIndex"), e.getMessage)
+    }
+    refused(Dedup.openVecIndex(spark, root))
+    refused(Dedup.ingestAgainstVecIndex(vecs.limit(1), vecs, root))
+    refused(Dedup.ingestAndCommitVec(vecs.limit(1), vecs, root))
+    refused(Dedup.compactVecIndex(spark, root))
+    assert(Snapshots.versions(spark, root).map(_._1) === Seq(1L, 2L, 3L), "a refused reader published")
+    // a rebuild publishes snapshot and geometry in one line: readable again
+    Dedup.commitVecIndex(vecs, root)                                              // v4
+    assert(Dedup.openVecIndex(spark, root)._1.dims === 4)
   }
 
-  test("vacuumBandIndex reclaims what a band-index compaction superseded; the read is invariant") {
+  test("a plain vacuum at the tip reclaims what a band-index compaction superseded; the read is invariant") {
     import graft.dedup.Dedup
     val root = s"${tmpDir("vac-bandidx")}/idx"
     val docs = Seq(
@@ -177,9 +173,9 @@ class VacuumSpec extends SparkSpec {
     Dedup.commitBandIndex(docs, root)                                             // v1 full
     Snapshots.commitDelta(Seq((99L, 0, 123L)).toDF("doc_id", "band", "bh"), root) // v2 ingest delta
     Dedup.compactBandIndex(spark, root)                                           // v3 full fold
-    val want = Dedup.readBandIndex(spark, root).collect().map(_.toSeq).toSet
-    assert(Dedup.vacuumBandIndex(spark, root) === Seq(1L, 2L))
-    assert(Dedup.readBandIndex(spark, root).collect().map(_.toSeq).toSet === want,
+    val want = Snapshots.readAppendOnly(spark, root).collect().map(_.toSeq).toSet
+    assert(Snapshots.vacuum(spark, root, Snapshots.latestVersion(spark, root)) === Seq(1L, 2L))
+    assert(Snapshots.readAppendOnly(spark, root).collect().map(_.toSeq).toSet === want,
       "the folded read must be invariant across the vacuum")
     assert(Snapshots.versions(spark, root).map(_._1) === Seq(3L))
   }
