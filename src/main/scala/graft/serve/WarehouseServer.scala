@@ -544,18 +544,66 @@ object WarehouseServer {
     }.toMap
   }
 
-  private def body(ex: HttpExchange, maxBytes: Int): String = {
-    val in = ex.getRequestBody
-    val buf = new java.io.ByteArrayOutputStream()
-    val chunk = new Array[Byte](8192)
-    var n = in.read(chunk)
-    while (n >= 0) {
-      buf.write(chunk, 0, n)
-      if (buf.size > maxBytes) throw HttpError(413, s"request body exceeds $maxBytes bytes")
-      n = in.read(chunk)
-    }
-    new String(buf.toByteArray, UTF_8)
+  /** One endpoint, declared once: its verb, its path, its service-doc
+    * entry (`rel` plus `params`/`body`; an empty `rel` leaves it out of
+    * the document, which does not list itself) and its handler.
+    * `/queries/{name}` is the only templated path: a `{…}` last segment
+    * matches one non-empty segment, handed to the handler as `Req.arg`.
+    */
+  private final case class Route(method: String, path: String, rel: String,
+      params: String = "", body: String = "")(val handler: Req => JValue) {
+    private val prefix = if (path.endsWith("}")) path.take(path.lastIndexOf('/') + 1) else ""
+
+    /** The templated segment when `p` is this route's path ("" for a plain path). */
+    def arg(p: String): Option[String] =
+      if (prefix.isEmpty) (if (p == path) Some("") else None)
+      else if (p.length > prefix.length && p.startsWith(prefix) &&
+          p.indexOf('/', prefix.length) < 0) Some(p.drop(prefix.length))
+      else None
   }
+
+  /** A routed request as its handler sees it: the query params, the
+    * page bound, and `arg`, the templated path segment. The body is
+    * read on demand, capped at `maxBytes`.
+    */
+  private final class Req(ex: HttpExchange, maxBytes: Int,
+      val params: Map[String, String], limit: Int, val arg: String) {
+    def body: String = {
+      val in = ex.getRequestBody
+      val buf = new java.io.ByteArrayOutputStream()
+      val chunk = new Array[Byte](8192)
+      var n = in.read(chunk)
+      while (n >= 0) {
+        buf.write(chunk, 0, n)
+        if (buf.size > maxBytes) throw HttpError(413, s"request body exceeds $maxBytes bytes")
+        n = in.read(chunk)
+      }
+      new String(buf.toByteArray, UTF_8)
+    }
+
+    def json: JValue = JsonMethods.parse(body)
+
+    def need(key: String): String =
+      params.getOrElse(key, throw HttpError(400, s"missing query param '$key'"))
+
+    /** The merge key columns a store read names (`keys`, required). */
+    def keys: Seq[String] = params.get("keys").map(_.split(',').toSeq)
+      .getOrElse(throw HttpError(400, "missing query param 'keys' (comma-separated)"))
+
+    def page(df: DataFrame): JValue = WarehouseServer.page(df, limit, params.get("after"))
+  }
+
+  /** A merge read this store cannot answer (no full snapshot under the
+    * pin, a segment lacking a merge key) is the client's addressing
+    * error on THIS store: 400, not a server fault.
+    */
+  private def mergeRead[T](read: => T): T =
+    try read
+    catch {
+      case e: IllegalStateException if Option(e.getMessage).exists(m =>
+          m.contains("no full snapshot") || m.contains("lacks merge key")) =>
+        throw HttpError(400, e.getMessage)
+    }
 
   private def limitOf(params: Map[String, String], cfg: Config): Int =
     params.get("limit") match {
@@ -569,9 +617,6 @@ object WarehouseServer {
         case _ => throw HttpError(400, s"bad limit '$s'")
       }
     }
-
-  private def need(params: Map[String, String], key: String): String =
-    params.getOrElse(key, throw HttpError(400, s"missing query param '$key'"))
 
   /** Import sources must live under dataDir or storeRoot — the server
     * never reads a path a request invents.
@@ -641,100 +686,23 @@ object WarehouseServer {
       try out.write(bytes) finally out.close()
     }
 
-    val serviceDoc: JValue =
-      ("service" -> "graft-warehouse") ~
-        ("data_dir" -> cfg.dataDir) ~
-        ("store_root" -> cfg.storeRoot) ~
-        ("links" -> List(
-          ("href" -> "/health") ~ ("method" -> "GET") ~ ("rel" -> "health"),
-          ("href" -> "/status") ~ ("method" -> "GET") ~
-            ("rel" -> "observability: per-endpoint counts/latency, ann index, store tip, cohort images and prepared shapes"),
-          ("href" -> "/tables") ~ ("method" -> "GET") ~ ("rel" -> "tables"),
-          ("href" -> "/cohort/query") ~ ("method" -> "POST") ~
-            ("rel" -> "cohort-count") ~ ("body" -> "cohort DSL (see README)") ~
-            ("params" -> "as_of_ts?, tag?, speculative_import?, speculative_evolve?"),
-          ("href" -> "/cohort/population") ~ ("method" -> "POST") ~
-            ("rel" -> "cohort-population") ~ ("params" -> "limit, after"),
-          ("href" -> "/cohort/atom-counts") ~ ("method" -> "POST") ~
-            ("rel" -> "per-criterion counts") ~ ("body" -> "{population, atoms:[...]}") ~
-            ("params" -> "maintained? (store-fed atoms answered O(import batch) from cached state)"),
-          ("href" -> "/tables/profile") ~ ("method" -> "GET") ~
-            ("rel" -> "per-column census") ~ ("params" -> "source, cols?, exact?"),
-          ("href" -> "/items/stats") ~ ("method" -> "GET") ~
-            ("rel" -> "item-statistics") ~ ("params" -> "source, field, by?"),
-          ("href" -> "/items/histogram") ~ ("method" -> "GET") ~
-            ("rel" -> "item-histogram") ~ ("params" -> "source, field, width"),
-          ("href" -> "/items/frequencies") ~ ("method" -> "GET") ~
-            ("rel" -> "value-frequencies") ~ ("params" -> "source, field"),
-          ("href" -> "/metadata/search") ~ ("method" -> "GET") ~
-            ("rel" -> "metadata-search") ~ ("params" -> "q | regex"),
-          ("href" -> "/queries") ~ ("method" -> "GET") ~ ("rel" -> "named queries"),
-          ("href" -> "/queries/{name}") ~ ("method" -> "POST") ~
-            ("rel" -> "run named query") ~ ("params" -> "limit, after"),
-          ("href" -> "/store/versions") ~ ("method" -> "GET") ~ ("rel" -> "store versions"),
-          ("href" -> "/store/read") ~ ("method" -> "GET") ~
-            ("rel" -> "versioned read") ~
-            ("params" -> "keys, version?, as_of_ts?, tag?, limit, after"),
-          ("href" -> "/store/tags") ~ ("method" -> "GET") ~
-            ("rel" -> "named version tags"),
-          ("href" -> "/store/tag") ~ ("method" -> "POST") ~
-            ("rel" -> "name a version (immutable)") ~ ("body" -> "{name, version}"),
-          ("href" -> "/store/untag") ~ ("method" -> "POST") ~
-            ("rel" -> "remove a tag") ~ ("body" -> "{name}"),
-          ("href" -> "/store/read_range") ~ ("method" -> "GET") ~
-            ("rel" -> "zone-map range read (append-only; keys= for merge stores)") ~
-            ("params" -> "column, lo, hi, keys?, limit, after"),
-          ("href" -> "/store/read_eq") ~ ("method" -> "GET") ~
-            ("rel" -> "bloom-pruned point lookup (merged read of the probed keys)") ~
-            ("params" -> "column, values, keys, limit, after"),
-          ("href" -> "/store/history") ~ ("method" -> "GET") ~
-            ("rel" -> "per-entity timeline (insert/update/delete per version)") ~
-            ("params" -> "keys, key?, limit, after"),
-          ("href" -> "/store/changes") ~ ("method" -> "GET") ~
-            ("rel" -> "version-pair CDC feed (what did imports from..to do)") ~
-            ("params" -> "keys, from, to?, limit, after"),
-          ("href" -> "/store/commit") ~ ("method" -> "POST") ~
-            ("rel" -> "import") ~
-            ("body" -> "{source, mode: full|delta, evolve?, stats?, blooms?, meta?}"),
-          ("href" -> "/store/excise") ~ ("method" -> "POST") ~
-            ("rel" -> "hard delete across history (PII/GDPR takedown)") ~
-            ("body" -> "{column, values: [...] | lo+hi, meta?}"),
-          ("href" -> "/store/excisions") ~ ("method" -> "GET") ~
-            ("rel" -> "takedown audit trail (no excised values)"),
-          ("href" -> "/tokenize") ~ ("method" -> "POST") ~
-            ("rel" -> "BPE tokenize (corpus-learned or supplied merge table; ids = code point | 0x110000+rank)") ~
-            ("body" -> "{texts: [...], n_merges? | merges?: [[l,r],...]}"),
-          ("href" -> "/ann/search") ~ ("method" -> "POST") ~
-            ("rel" -> "similarity-search") ~
-            ("body" -> "{vector: [...], k?, method?: lsh|brute, tables?}"),
-          ("href" -> "/ann/refresh") ~ ("method" -> "POST") ~
-            ("rel" -> "rebuild similarity index"),
-          ("href" -> "/dedup/check_vec") ~ ("method" -> "POST") ~
-            ("rel" -> "vector near-dup verdict") ~
-            ("body" -> "{embedding: [...]}"),
-          ("href" -> "/dedup/check") ~ ("method" -> "POST") ~
-            ("rel" -> "near-dup verdict") ~ ("body" -> "{text, min_jaccard?}")))
-
     def storeRoot: String =
       cfg.storeRoot.getOrElse(throw HttpError(404, "no store configured (Config.storeRoot)"))
 
-    // `as_of_ts` values: an ISO-8601 instant or epoch milliseconds
-    def parseInstantMs(raw: String): Long =
-      if (raw.nonEmpty && raw.forall(_.isDigit)) raw.toLong
-      else
-        try java.time.Instant.parse(raw).toEpochMilli
-        catch {
-          case _: java.time.format.DateTimeParseException => throw HttpError(400,
-            s"bad as_of_ts '$raw' — pass an ISO-8601 instant (2026-08-15T12:00:00Z) " +
-              "or epoch milliseconds")
-        }
-
-    def versionAtOr400(tsMs: Long): Long =
-      try Snapshots.versionAt(spark, storeRoot, tsMs)
-      catch {
-        case e: IllegalArgumentException =>
-          throw HttpError(400, Option(e.getMessage).getOrElse("bad as_of_ts"))
-      }
+    // the version an `as_of_ts` addresses (an ISO-8601 instant or epoch
+    // milliseconds): the latest commit stamped at or before it
+    def versionAtTs(raw: String): Long = {
+      val ms =
+        if (raw.nonEmpty && raw.forall(_.isDigit)) raw.toLong
+        else
+          try java.time.Instant.parse(raw).toEpochMilli
+          catch {
+            case _: java.time.format.DateTimeParseException => throw HttpError(400,
+              s"bad as_of_ts '$raw' — pass an ISO-8601 instant (2026-08-15T12:00:00Z) " +
+                "or epoch milliseconds")
+          }
+      Snapshots.versionAt(spark, storeRoot, ms)
+    }
 
     // Instant-addressed cohort queries: `as_of_ts` swaps the `orders`
     // source for the configured store's as-of read (keyed o_orderkey,
@@ -758,8 +726,7 @@ object WarehouseServer {
           throw HttpError(400,
             "pass at most one of 'as_of_ts', 'speculative_import', 'tag'")
         case (Some(raw), None, None) =>
-          val ver = versionAtOr400(parseInstantMs(raw))
-          Map("orders" -> Snapshots.asOf(spark, storeRoot, ver, Seq("o_orderkey")))
+          Map("orders" -> Snapshots.asOf(spark, storeRoot, versionAtTs(raw), Seq("o_orderkey")))
         case (None, None, Some(t)) =>
           Map("orders" -> Snapshots.asOfTag(spark, storeRoot, t, Seq("o_orderkey")))
         case (None, Some(src), None) =>
@@ -814,10 +781,7 @@ object WarehouseServer {
       if (cohortClosed) throw HttpError(503, "server is shutting down")
       val root = cfg.storeRoot.getOrElse(throw HttpError(400,
         "maintained atom counts answer over the snapshot store — this server has none configured"))
-      val (subjectName, preds) =
-        try CohortQuery.maintainedSpec(bodyStr)
-        catch { case e: IllegalArgumentException =>
-          throw HttpError(400, Option(e.getMessage).getOrElse("bad maintained atom spec")) }
+      val (subjectName, preds) = CohortQuery.maintainedSpec(bodyStr)
       val specKey = JsonMethods.compact(JsonMethods.parse(bodyStr))
       val ms = Snapshots.manifestState(spark, root)
       if (ms.lines.isEmpty) throw HttpError(404, "the store is empty — commit before querying it")
@@ -950,8 +914,8 @@ object WarehouseServer {
         case NonFatal(e) => throw HttpError(503,
           s"ann index source unavailable: ${Option(e.getMessage).getOrElse(e.toString)}")
       }
-    def annBuild(): AnnServing =
-      try AnnServing.build(spark, annSource, cfg.annWarmRoot)
+    def annBuild(build: => AnnServing): AnnServing =
+      try build
       catch {
         case NonFatal(e) => throw HttpError(503,
           s"ann index build failed (server-side, not your request): " +
@@ -959,7 +923,7 @@ object WarehouseServer {
       }
     def annSwap(cur: AnnServing): AnnServing = {
       if (annClosed) throw HttpError(503, "server is shutting down")
-      val built = annBuild()
+      val built = annBuild(AnnServing.build(spark, annSource, cfg.annWarmRoot))
       annRef.set(built)
       if (cur != null) cur.close()
       built
@@ -1091,13 +1055,7 @@ object WarehouseServer {
           cur.lastUse.set(System.nanoTime())
           cur.idx // fresh: the sweep just removed every stale slot
         } else {
-          val built =
-            try AnnServing.buildWithTables(spark, annSource, tables)
-            catch {
-              case NonFatal(e) => throw HttpError(503,
-                s"ann index build failed (server-side, not your request): " +
-                  s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-            }
+          val built = annBuild(AnnServing.buildWithTables(spark, annSource, tables))
           // LRU cap on live same-stamp slots (see annAltCap)
           while (annAlt.size() >= annAltCap) {
             import scala.jdk.CollectionConverters._
@@ -1129,20 +1087,846 @@ object WarehouseServer {
 
     // control-plane observability (served by GET /status): per-endpoint
     // request counts / error counts / latency sums, keyed by a BOUNDED
-    // set of keys — known routes by path, /queries/{name} collapsed to
-    // one key, everything else pooled under "(other)" so unknown-path
-    // probing cannot grow the map without bound
+    // set of keys — "<method> <route path>", with a method no route uses
+    // and a path no route matches each pooled under "(other)", so
+    // neither made-up verbs nor unknown-path probing can grow the map
     val startedAtMs = System.currentTimeMillis()
     val stats = new java.util.concurrent.ConcurrentHashMap[String, EndpointStat]()
-    def statKey(method: String, path: String): String = {
-      val p =
-        if (getPaths(path) || postPaths(path)) path
-        else if (QueryRun.unapply(path).isDefined) "/queries/{name}"
-        else "(other)"
-      s"$method $p"
-    }
 
-    def handle(ex: HttpExchange): JValue = {
+    // One declaration per endpoint: dispatch, the 405/404 split, the
+    // service document's links and the /status keys all read this
+    // table (see Route). Lazy, like serviceDoc: each reads the other.
+    lazy val routes: Seq[Route] = Seq(
+      Route("GET", "/", "")(_ => serviceDoc),
+      Route("GET", "/health", "health") { _ =>
+        ("status" -> "ok") ~
+          ("spark_version" -> spark.version) ~
+          ("app_id" -> spark.sparkContext.applicationId) ~
+          ("default_parallelism" -> spark.sparkContext.defaultParallelism)
+      },
+      Route("GET", "/status", "observability: per-endpoint counts/latency, ann index, " +
+        "store tip, cohort images and prepared shapes") { _ =>
+        // control-plane observability, all driver-side reads: the
+        // only I/O is one manifest listing when a store is
+        // configured — safe to poll from a monitoring loop
+        import scala.jdk.CollectionConverters._
+        val endpoints = JObject(stats.asScala.toList.sortBy(_._1).map { case (k, s) =>
+          k -> (("count" -> s.count.get) ~ ("errors" -> s.errors.get) ~
+            ("total_ms" -> s.totalMs.get): JValue)
+        })
+        val ann: JValue = Option(annRef.get) match {
+          case None => JNull
+          case Some(a) =>
+            ("index_version" -> a.sourceVersion) ~
+              ("age_ms" -> (System.currentTimeMillis() - a.builtAtMs)) ~
+              ("rebuilding" -> annRebuilding.get) ~
+              // live recall-ladder slots (each pins two corpus-sized
+              // cached frames; LRU-capped) — the operational check
+              // that a tables sweep isn't holding memory
+              ("ladder_slots" -> annAlt.size())
+        }
+        val store: JValue = cfg.storeRoot match {
+          case None => JNull
+          case Some(r) =>
+            val ms = Snapshots.manifestState(spark, r)
+            ("tip_version" -> ms.lines.lastOption.map(_.v)) ~
+              ("manifest_file" -> ms.fileNum) ~
+              // the tip commit's provenance (who/which job/why) —
+              // answered from the manifest line, no data read
+              ("tip_meta" -> ms.lines.lastOption.map(l => metaJson(l.meta)))
+        }
+        val cohort: JValue = Option(cohortStateRef.get) match {
+          case None => JNull
+          case Some(cs) =>
+            // the incrementality evidence: built_at_version is where
+            // the full build happened; applied_batches counts the
+            // O(delta) advances since (a rebuild resets it to 0)
+            ("atoms" -> cs.nAtoms) ~
+              ("version" -> cs.lines.last._1) ~
+              ("built_at_version" -> cs.builtAtVersion) ~
+              ("applied_batches" -> cs.appliedBatches)
+        }
+        // the cohort path's cached source images (session-scoped:
+        // they outlive this server and serve the next one)
+        val images = JArray(CohortQuery.imageInfo(spark, cfg.dataDir).toList.map { i =>
+          ("population" -> i.population) ~ ("source" -> i.source) ~
+            ("partitions" -> i.partitions) ~ ("cached_bytes" -> i.cachedBytes): JValue
+        })
+        // the served counts' prepared query shapes (session-scoped
+        // like the images): how many are held, reused and planned
+        val prepared = CohortQuery.preparedInfo(spark, cfg.dataDir)
+        ("uptime_ms" -> (System.currentTimeMillis() - startedAtMs)) ~
+          ("active_job_groups" -> JArray(active.asScala.toList.sorted.map(JString(_)))) ~
+          ("endpoints" -> endpoints) ~
+          ("ann" -> ann) ~
+          ("store" -> store) ~
+          ("cohort_state" -> cohort) ~
+          ("cohort_images" -> images) ~
+          ("cohort_prepared" -> (("shapes" -> prepared.shapes) ~ ("hits" -> prepared.hits) ~
+            ("prepares" -> prepared.prepares)))
+      },
+      Route("GET", "/tables", "tables")(_ => tablesDoc),
+      Route("POST", "/cohort/query", "cohort-count",
+        params = "as_of_ts?, tag?, speculative_import?, speculative_evolve?",
+        body = "cohort DSL (see README)") { req =>
+        JObject("n_subjects" -> JInt(CohortQuery.populationSize(spark, cfg.dataDir,
+          req.body, cohortSources(req.params))))
+      },
+      Route("POST", "/cohort/population", "cohort-population", params = "limit, after") { req =>
+        req.page(CohortQuery.population(spark, cfg.dataDir, req.body,
+          cohortSources(req.params)).orderBy("subject"))
+      },
+      Route("POST", "/cohort/atom-counts", "per-criterion counts",
+        params = "maintained? (store-fed atoms answered O(import batch) from cached state)",
+        body = "{population, atoms:[...]}") { req =>
+        req.params.get("maintained") match {
+          case Some("true") =>
+            if (req.params.contains("as_of_ts") || req.params.contains("speculative_import")
+                || req.params.contains("tag"))
+              throw HttpError(400,
+                "maintained counts are the store's PRESENT — drop as_of_ts/speculative_import/tag")
+            req.page(maintainedAtomCounts(req.body))
+          case None | Some("false") =>
+            req.page(CohortQuery.atomCounts(spark, cfg.dataDir, req.body,
+              cohortSources(req.params)))
+          case Some(other) =>
+            throw HttpError(400, s"maintained must be true|false, got '$other'")
+        }
+      },
+      Route("GET", "/tables/profile", "per-column census",
+        params = "source, cols?, exact?") { req =>
+        // q9h over HTTP: per-column census of an allowlisted table —
+        // a control-plane aggregate whose output is bounded by the
+        // column count. `cols` defaults to the whole table;
+        // `exact=false` serves the 1%-HLL form (the scale default
+        // for wide tables — the exact multi-distinct Expand
+        // multiplies the scan by the column count)
+        val src = table(spark, cfg.dataDir, req.need("source"))
+        val cols = req.params.get("cols")
+          .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
+          .getOrElse(src.columns.toSeq)
+        val exact = req.params.get("exact").forall {
+          case "true" => true
+          case "false" => false
+          case other => throw HttpError(400, s"exact must be true|false, got '$other'")
+        }
+        req.page(graft.operators.Warehouse.profile(src, cols, exact))
+      },
+      Route("GET", "/items/stats", "item-statistics", params = "source, field, by?") { req =>
+        req.page(Cohort.itemStats(
+          table(spark, cfg.dataDir, req.need("source")),
+          req.need("field"), req.params.get("by")))
+      },
+      Route("GET", "/items/histogram", "item-histogram", params = "source, field, width") { req =>
+        val width = req.need("width").toDoubleOption
+          .getOrElse(throw HttpError(400, "bad width"))
+        req.page(Cohort.itemHistogram(
+          table(spark, cfg.dataDir, req.need("source")),
+          req.need("field"), width))
+      },
+      Route("GET", "/items/frequencies", "value-frequencies", params = "source, field") { req =>
+        req.page(Cohort.valueFrequencies(
+          table(spark, cfg.dataDir, req.need("source")),
+          req.need("field")))
+      },
+      Route("GET", "/metadata/search", "metadata-search", params = "q | regex") { req =>
+        req.page(Cohort.metadataSearch(
+          Tables.part(spark, cfg.dataDir), req.params.get("q"), req.params.get("regex")))
+      },
+      Route("GET", "/queries", "named queries") { _ =>
+        JArray(SparkEntry.defs.map { q =>
+          ("name" -> q.name) ~ ("oracle_checked" -> q.oracle.nonEmpty): JValue
+        }.toList)
+      },
+      Route("POST", "/queries/{name}", "run named query", params = "limit, after") { req =>
+        val q = SparkEntry.defs.find(_.name == req.arg)
+          .getOrElse(throw HttpError(404, s"unknown query '${req.arg}'"))
+        req.page(q.run(spark, cfg.dataDir))
+      },
+      Route("GET", "/store/versions", "store versions") { _ =>
+        JArray(Snapshots.versionsWithMeta(spark, storeRoot).map { case (v, kind, path, ts, meta) =>
+          val base = ("version" -> v) ~ ("kind" -> kind) ~ ("path" -> path)
+          // commit_ts is omitted (not null) on lines that predate the
+          // timestamp field — "unknown", not "at the epoch"; meta is
+          // omitted when the commit carried none
+          val stamped =
+            if (ts >= 0) base ~ ("commit_ts" -> java.time.Instant.ofEpochMilli(ts).toString)
+            else base
+          (if (meta.nonEmpty) stamped ~ ("meta" -> metaJson(meta))
+           else stamped): JValue
+        }.toList)
+      },
+      Route("GET", "/store/read", "versioned read",
+        params = "keys, version?, as_of_ts?, tag?, limit, after") { req =>
+        val keys = req.keys
+        // `as_of_ts` = ISO-8601 instant or epoch millis — the
+        // instant-addressed twin of `version` (Snapshots.versionAt
+        // semantics: latest commit stamped at or before it)
+        if (Seq("version", "as_of_ts", "tag").count(req.params.contains) > 1)
+          throw HttpError(400, "pass at most one of 'version', 'as_of_ts', 'tag'")
+        val df = (req.params.get("version"), req.params.get("as_of_ts"), req.params.get("tag")) match {
+          case (Some(v), _, _) => Snapshots.asOf(spark, storeRoot,
+            v.toLongOption.getOrElse(throw HttpError(400, s"bad version '$v'")), keys)
+          case (_, Some(raw), _) =>
+            Snapshots.asOf(spark, storeRoot, versionAtTs(raw), keys)
+          // tag = the named as-of: an unknown tag is the library's
+          // typed error listing what exists (→ 400 via the global map)
+          case (_, _, Some(t)) => Snapshots.asOfTag(spark, storeRoot, t, keys)
+          case _ => Snapshots.latest(spark, storeRoot, keys)
+        }
+        // `order=desc` = "latest keys first", the most common
+        // warehouse listing order — keyset-paged like asc, through
+        // the same per-key-direction cursors
+        val orderOf: String => org.apache.spark.sql.Column =
+          req.params.getOrElse("order", "asc") match {
+            case "asc"  => c => org.apache.spark.sql.functions.col(c).asc
+            case "desc" => c => org.apache.spark.sql.functions.col(c).desc
+            case other  => throw HttpError(400, s"order must be asc|desc, got '$other'")
+          }
+        req.page(df.orderBy(keys.map(orderOf): _*))
+      },
+      Route("GET", "/store/read_range", "zone-map range read (append-only; keys= for merge stores)",
+        params = "column, lo, hi, keys?, limit, after") { req =>
+        // zone-map range read over an APPEND-ONLY store: opens only
+        // the segments whose committed stats intersect [lo, hi]
+        // (Snapshots.readAppendOnlyWhere) — the time-series "last
+        // hour" listing that skips the months behind it. Bounds
+        // parse long → double → string, matching the sidecar's
+        // recorded type loudly (a mismatch is a 400, not a silent
+        // no-prune).
+        val column = req.need("column")
+        val (loRaw, hiRaw) = (req.need("lo"), req.need("hi"))
+        val bounds: (Any, Any) = (loRaw.toLongOption, hiRaw.toLongOption) match {
+          case (Some(l), Some(h)) => (l, h)
+          case _ => (loRaw.toDoubleOption, hiRaw.toDoubleOption) match {
+            case (Some(l), Some(h)) => (l, h)
+            case _ => (loRaw, hiRaw)
+          }
+        }
+        // `keys=` switches to the MERGE-read range form
+        // (Snapshots.readMergeWhere): last-writer-wins + tombstones
+        // honored, segments pruned on the range column's zone map —
+        // which must be one of the merge keys (the only column
+        // class whose stats soundly bound where a superseding row
+        // lives). Without keys, the append-only form as before.
+        // unknown column surfaces as AnalysisException, mismatched
+        // bound types / empty store / non-key column as
+        // IllegalArgumentException (both 400s via the global map)
+        val df = try req.params.get("keys") match {
+            case Some(ks) => Snapshots.readMergeWhere(
+              spark, storeRoot, ks.split(',').toSeq, column, bounds._1, bounds._2)
+            case None => Snapshots.readAppendOnlyWhere(
+              spark, storeRoot, column, bounds._1, bounds._2)
+          }
+          catch {
+            // pointing the append-only form at a merge-read store
+            // (tombstoned segments) is a client-addressable misuse —
+            // 409 with the remedy this route actually offers.
+            // Matched on the tombstone guard's message (the
+            // publish-race precedent): other IllegalStateExceptions
+            // (malformed manifest, race) are server faults, 500
+            case e: IllegalStateException
+              if Option(e.getMessage).exists(_.startsWith("append-only read")) =>
+              throw HttpError(409, e.getMessage +
+                "; or pass keys=<merge keys> for a pruned merge-range read")
+          }
+        req.page(df.orderBy(column))
+      },
+      Route("GET", "/store/read_eq", "bloom-pruned point lookup (merged read of the probed keys)",
+        params = "column, values, keys, limit, after") { req =>
+        // bloom-pruned POINT LOOKUP over the merge-read store
+        // (Snapshots.readMergeEq): "fetch these entities now" — the
+        // merged state of the probed keys, opening only segments
+        // whose key sidecars (zone map, then bloom) might hold one.
+        // `keys` is REQUIRED: the eq form exists for merge stores
+        // (an append-only store answers point probes through
+        // read_range's lo=hi). Values parse long-else-string as one
+        // homogeneous batch — a mixed or mistyped probe surfaces in
+        // the zone-map check's loud type error (→ 400).
+        val column = req.need("column")
+        val keys = req.keys
+        val raws = req.need("values").split(',').toSeq.filter(_.nonEmpty)
+        if (raws.isEmpty) throw HttpError(400, "values must carry at least one probe")
+        // the endpoint is a point lookup, not a bulk export: an
+        // unbounded IN list builds an unbounded driver-side plan
+        // (and probes every bloom per value) — bound it loudly
+        if (raws.size > 1024)
+          throw HttpError(400, s"too many probe values (${raws.size} > 1024) — " +
+            "batch point lookups, or use read_range for a bulk slice")
+        val values: Seq[Any] =
+          if (raws.forall(_.toLongOption.isDefined)) raws.map(_.toLong)
+          else raws
+        val df = mergeRead(Snapshots.readMergeEq(spark, storeRoot, keys, column, values))
+        req.page(df.orderBy(column))
+      },
+      Route("GET", "/store/changes", "version-pair CDC feed (what did imports from..to do)",
+        params = "keys, from, to?, limit, after") { req =>
+        // version-pair CDC over HTTP (Snapshots.changes): "what did
+        // the imports between v_from and v_to do", keyset-paged.
+        // `to` defaults to the tip so "changes since v" is one call.
+        val keys = req.keys
+        val fromV = req.need("from").toLongOption
+          .getOrElse(throw HttpError(400, s"bad from '${req.params("from")}'"))
+        val toV = req.params.get("to") match {
+          case None => Snapshots.latestVersion(spark, storeRoot)
+          case Some(v) => v.toLongOption.getOrElse(throw HttpError(400, s"bad to '$v'"))
+        }
+        val df = mergeRead(Snapshots.changes(spark, storeRoot, fromV, toV, keys))
+        req.page(df.orderBy(keys.map(k =>
+          org.apache.spark.sql.functions.col(k).asc): _*))
+      },
+      Route("GET", "/store/history", "per-entity timeline (insert/update/delete per version)",
+        params = "keys, key?, limit, after") { req =>
+        // per-entity timeline (Snapshots.history): one chain read
+        // giving (version, commit_ts_ms, op, key..., payload...)
+        // per state change — the Datomic history read that
+        // previously took a client-side loop over versions. `key=`
+        // narrows to ONE entity (comma-separated values matched
+        // positionally against `keys`); equality literals are typed
+        // from the result schema so the filter pushes into every
+        // segment scan instead of casting the column.
+        import org.apache.spark.sql.functions.{col, lit}
+        import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, DoubleType, FloatType}
+        val keys = req.keys
+        val df0 = mergeRead(Snapshots.history(spark, storeRoot, keys))
+        val df = req.params.get("key") match {
+          case None => df0
+          case Some(raw) =>
+            val vals = raw.split(',').toSeq
+            if (vals.size != keys.size) throw HttpError(400,
+              s"'key' carries ${vals.size} value(s) for ${keys.size} key column(s)")
+            keys.zip(vals).foldLeft(df0) { case (d, (k, v)) =>
+              val typed = d.schema.find(_.name == k).map(_.dataType) match {
+                case Some(LongType | IntegerType | ShortType) =>
+                  lit(v.toLongOption.getOrElse(throw HttpError(400,
+                    s"key value '$v' is not integral for column '$k'")))
+                case Some(DoubleType | FloatType) =>
+                  lit(v.toDoubleOption.getOrElse(throw HttpError(400,
+                    s"key value '$v' is not numeric for column '$k'")))
+                case _ => lit(v)
+              }
+              d.filter(col(k) === typed)
+            }
+        }
+        req.page(df.orderBy(keys.map(k => col(k).asc) :+ col("version").asc: _*))
+      },
+      Route("POST", "/tokenize",
+        "BPE tokenize (corpus-learned or supplied merge table; ids = code point | 0x110000+rank)",
+        body = "{texts: [...], n_merges? | merges?: [[l,r],...]}") { req =>
+        val spec = req.json
+        val texts = spec \ "texts" match {
+          case JArray(ts) if ts.nonEmpty => ts.map {
+            case JString(t) => t
+            case other => throw HttpError(400, s"texts must be strings, got $other")
+          }
+          case JArray(_) | JNothing =>
+            throw HttpError(400, "tokenize needs a non-empty 'texts' array")
+          case other => throw HttpError(400, s"texts must be an array, got $other")
+        }
+        if (texts.size > cfg.defaultLimit)
+          throw HttpError(400,
+            s"tokenize is a bounded control-plane call: at most ${cfg.defaultLimit} " +
+              s"texts per request, got ${texts.size}")
+        val merges: Seq[(String, String)] = spec \ "merges" match {
+          case JArray(ms) => ms.map {
+            case JArray(List(JString(l), JString(r))) if l.nonEmpty && r.nonEmpty => (l, r)
+            case other => throw HttpError(400,
+              s"each merge must be a [left, right] pair of non-empty strings, got $other")
+          }
+          case JNothing =>
+            val n = spec \ "n_merges" match {
+              case JNothing => 30
+              case JInt(i) if i >= 1 && i <= 1000 => i.toInt
+              case other => throw HttpError(400,
+                s"n_merges must be an integer in [1, 1000], got $other")
+            }
+            // driver-side listing only — the freshness check itself
+            // costs no Spark job; a stale entry relearns in-request
+            val srcSig = Sources.listingSignature(
+              spark, s"${cfg.dataDir}/documents.parquet")
+            bpeTables.compute(n, (nn, cur) =>
+              if (cur != null && cur._1 == srcSig) cur
+              else (srcSig, graft.operators.TextAnalysis
+                .bpeMerges(Tables.documents(spark, cfg.dataDir), nn)
+                .map { case (l, r, _) => (l, r) }))._2
+          case other => throw HttpError(400, s"merges must be an array of pairs, got $other")
+        }
+        // a corpus too small/uniform to learn a single merge has no
+        // tokenizer to serve — loud, with both remedies named
+        if (merges.isEmpty) throw HttpError(400,
+          "no merge table: the corpus learned zero merges — pass 'merges' explicitly " +
+            "or raise n_merges after committing documents")
+        // the EXACT map the codegen'd expression builds (duplicate
+        // pairs keep their first rank), driving the same encoder
+        val ranks = new java.util.HashMap[String, Integer](merges.size * 2)
+        merges.zipWithIndex.foreach { case ((l, r), i) =>
+          ranks.putIfAbsent(l + " " + r, Int.box(i)); ()
+        }
+        val outRank = new java.util.HashMap[String, Integer](merges.size * 2)
+        merges.zipWithIndex.foreach { case ((l, r), i) =>
+          outRank.putIfAbsent(l + r, Int.box(i)); ()
+        }
+        def idOf(tok: String): Long =
+          if (tok.codePointCount(0, tok.length) == 1) tok.codePointAt(0).toLong
+          else Option(outRank.get(tok)).map(0x110000L + _.longValue())
+            .getOrElse(-1L) // unreachable for well-formed tables; never a 500
+        val results = texts.map { t =>
+          val arr = graft.functions.TextExprHelpers.bpeEncode(
+            org.apache.spark.unsafe.types.UTF8String.fromString(t), ranks)
+          val toks = (0 until arr.numElements())
+            .map(i => arr.getUTF8String(i).toString).toList
+          (("tokens" -> JArray(toks.map(JString(_)))) ~
+            ("ids" -> JArray(toks.map(tk => JLong(idOf(tk)))))): JValue
+        }
+        ("n_merges_used" -> merges.size) ~ ("results" -> JArray(results))
+      },
+      Route("POST", "/ann/search", "similarity-search",
+        body = "{vector: [...], k?, method?: lsh|brute, tables?}") { req =>
+        val spec = req.json
+        val vector = spec \ "vector" match {
+          case JArray(vs) => vs.map {
+            case JInt(i)     => i.toDouble
+            case JDouble(d)  => d
+            case JDecimal(d) => d.toDouble
+            case other => throw HttpError(400, s"vector elements must be numbers, got $other")
+          }
+          case _ => throw HttpError(400, "search needs a 'vector' array")
+        }
+        val k = spec \ "k" match {
+          case JInt(i) if i > 0 && i <= cfg.annMaxK => i.toInt
+          case JNothing => 10
+          case other => throw HttpError(400,
+            s"k must be an integer in [1, ${cfg.annMaxK}], got $other")
+        }
+        val method = spec \ "method" match {
+          case JString(m @ ("lsh" | "brute")) => m
+          case JNothing => "lsh"
+          case other => throw HttpError(400, s"method must be lsh|brute, got $other")
+        }
+        // the recall ladder's knob: serve this request from an index
+        // banded at `tables` tables (capped — each slot persists a
+        // corpus-sized banding; 128 is far past the measured
+        // full-recall point and a typo'd 10_000 must not OOM the
+        // server). Meaningless for brute (exact already): loud 400.
+        val tablesOpt = spec \ "tables" match {
+          case JInt(t) if t >= 1 && t <= 128 => Some(t.toInt)
+          case JNothing => None
+          case other => throw HttpError(400,
+            s"tables must be an integer in [1, 128] (the lsh recall ladder's knob), got $other")
+        }
+        if (tablesOpt.isDefined && method == "brute")
+          throw HttpError(400, "tables applies to method=lsh only — brute is already exact")
+        // ONE index resolution per request (freshness check + maybe
+        // rebuild happen here, as 503s); a bad vector (dims
+        // mismatch, NaN, zero norm) then throws
+        // IllegalArgumentException → the 400 mapping below
+        val idx = tablesOpt.fold(annIndex())(annIndexAt)
+        val neighbors = idx.search(vector, k, method)
+        val g = idx.geometry
+        ("k" -> k) ~ ("method" -> method) ~
+          ("index_version" -> idx.sourceVersion) ~
+          ("geometry" ->
+            (("tables" -> g.tables) ~ ("planes" -> g.planes) ~ ("probe1" -> g.probe1))) ~
+          ("neighbors" -> JArray(neighbors.map { case (id, cos) =>
+            ("vec_id" -> JInt(id)) ~ ("cos" -> jval(cos)): JValue
+          }.toList))
+      },
+      Route("POST", "/ann/refresh", "rebuild similarity index") { _ =>
+        val (oldV, built) = annRefresh()
+        ("rebuilt" -> true) ~
+          ("index_version" -> built.sourceVersion) ~
+          ("previous_version" -> oldV)
+      },
+      Route("POST", "/dedup/check", "near-dup verdict", body = "{text, min_jaccard?}") { req =>
+        val idxRoot = cfg.dedupIndexRoot.getOrElse(throw HttpError(404,
+          "no dedup band index configured (Config.dedupIndexRoot)"))
+        val spec = req.json
+        val text = spec \ "text" match {
+          case JString(t) => t
+          case other => throw HttpError(400, s"check needs a 'text' string, got $other")
+        }
+        // floor 0.8: the persisted index's BANDING is fixed at build
+        // time for the ≥0.8 operating point — candidate recall below
+        // it is near zero, so accepting a lower threshold would
+        // answer confidently-wrong keep=true for pairs the bands
+        // never surface. Honest 400 instead. (JInt admits the
+        // integer literal 1, which json4s parses as JInt, not
+        // JDouble.)
+        val minJ = spec \ "min_jaccard" match {
+          case JDouble(d) if d >= 0.8 && d <= 1  => d
+          case JDecimal(d) if d >= 0.8 && d <= 1 => d.toDouble
+          case JInt(i) if i == 1 => 1.0
+          case JNothing => 0.8
+          case other => throw HttpError(400,
+            s"min_jaccard must be in [0.8, 1] — the persisted index's banding is built " +
+              s"for the 0.8 operating point and cannot surface candidates below it; got $other")
+        }
+        // READ-ONLY screen of one posted doc against the persisted
+        // band index — the q6b ingest path's candidate+verify stages
+        // with a 1-row broadcast batch and a synthetic id that can
+        // never collide with corpus doc_ids. Nothing is committed.
+        // Per-request cost = one index-key scan + one candidate-
+        // bounded corpus join, exactly q6b's per-INGEST steady-state
+        // cost, always against the freshest committed index (a
+        // server-cached snapshot would answer stale verdicts after
+        // every delta commit; freshness wins for a dedup gate).
+        import spark.implicits._
+        val batch = Seq((-1L, text)).toDF("doc_id", "text")
+        val corpus = Tables.documents(spark, cfg.dataDir)
+        val v = graft.dedup.Dedup.ingestAgainstIndex(batch, corpus, idxRoot, minJ)
+          .collect().head // exactly one verdict row for the 1-row batch
+        ("keep" -> v.getBoolean(3)) ~
+          ("dup_of" -> (if (v.isNullAt(1)) JNull else JInt(v.getLong(1)))) ~
+          ("n_matches" -> v.getLong(2)) ~
+          ("min_jaccard" -> minJ)
+      },
+      Route("POST", "/dedup/check_vec", "vector near-dup verdict",
+        body = "{embedding: [...]}") { req =>
+        val idxRoot = cfg.vecIndexRoot.getOrElse(throw HttpError(404,
+          "no vector band index configured (Config.vecIndexRoot)"))
+        val corpusRoot = cfg.annVecStoreRoot.getOrElse(throw HttpError(404,
+          "no vector corpus store configured (Config.annVecStoreRoot)"))
+        val spec = req.json
+        val emb: Seq[Float] = spec \ "embedding" match {
+          case JArray(vs) if vs.nonEmpty => vs.map {
+            case JInt(i)     => i.toFloat
+            case JDouble(d)  => d.toFloat
+            case JDecimal(d) => d.toFloat
+            case other => throw HttpError(400, s"embedding elements must be numbers, got $other")
+          }
+          case JArray(_) => throw HttpError(400, "embedding must be non-empty")
+          case other => throw HttpError(400, s"check_vec needs an 'embedding' array, got $other")
+        }
+        // opening the index resolves it (404 when none committed) —
+        // geometry and segments from ONE manifest read; the posted
+        // vector must be scorable IN that geometry — a
+        // dims mismatch would silently bucket garbage, and a
+        // zero/NaN/Inf norm is the library's un-scorable class
+        // (cosine NULL, keep-by-default) which for a CHECK endpoint
+        // is a vacuous always-keep: refuse both as typed 400s
+        val index =
+          try graft.dedup.Dedup.openVecIndex(spark, idxRoot)
+          catch {
+            case e: IllegalArgumentException =>
+              throw HttpError(404, Option(e.getMessage).getOrElse("no vector index"))
+          }
+        val g = index._1
+        if (emb.size != g.dims)
+          throw HttpError(400,
+            s"embedding has ${emb.size} dims but the index is built for ${g.dims}")
+        val nrm = math.sqrt(emb.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
+        if (nrm == 0.0 || nrm.isNaN || nrm.isInfinite || emb.exists(x => x.isNaN || x.isInfinite))
+          throw HttpError(400,
+            "embedding is un-scorable (zero, NaN or infinite norm) — cosine is undefined " +
+              "for it, so a near-dup verdict would be vacuous")
+        // READ-ONLY screen of one posted vector — the q6d ingest
+        // path's candidate+re-score stages with a 1-row broadcast
+        // batch and a synthetic id that can never collide with
+        // corpus vec_ids. Nothing commits; always the freshest
+        // committed index + corpus (srv11's freshness-over-caching
+        // trade, same rationale).
+        import spark.implicits._
+        val batch = Seq((-1L, emb)).toDF("vec_id", "embedding")
+        // an empty/missing corpus store is SERVER state, not a bad
+        // request — 404 like the missing index, never the generic
+        // IllegalArgumentException→400 mapping blaming the client
+        val corpus =
+          try Snapshots.readAppendOnly(spark, corpusRoot)
+          catch {
+            case e: IllegalArgumentException =>
+              throw HttpError(404, Option(e.getMessage).getOrElse("empty vector corpus store"))
+          }
+        val v = graft.dedup.Dedup.ingestWith(batch, corpus, index)
+          .collect().head // exactly one verdict row for the 1-row batch
+        ("keep" -> v.getBoolean(3)) ~
+          ("dup_of" -> (if (v.isNullAt(1)) JNull else JInt(v.getLong(1)))) ~
+          ("n_matches" -> v.getLong(2)) ~
+          ("tau" -> g.tau)
+      },
+      Route("POST", "/store/commit", "import",
+        body = "{source, mode: full|delta, evolve?, stats?, blooms?, meta?}") { req =>
+        val spec = req.json
+        val source = spec \ "source" match {
+          case JString(s) => checkUnder(s, cfg.dataDir +: cfg.storeRoot.toSeq)
+          case other => throw HttpError(400, s"commit needs a 'source' path, got $other")
+        }
+        val mode = spec \ "mode" match {
+          case JString(m @ ("full" | "delta")) => m
+          case JNothing   => "delta"
+          case other      => throw HttpError(400, s"mode must be full|delta, got $other")
+        }
+        // schema-drift gate (Snapshots.commitDelta): a drifting
+        // delta is a 400 naming the columns unless the client opts
+        // into evolution explicitly
+        val evolve = spec \ "evolve" match {
+          case JBool(b)  => b
+          case JNothing  => false
+          case other     => throw HttpError(400, s"evolve must be a boolean, got $other")
+        }
+        def columns(field: String): Seq[String] = spec \ field match {
+          case JArray(vs) => vs.map {
+            case JString(c) => c
+            case other => throw HttpError(400, s"$field entries must be column names, got $other")
+          }
+          case JNothing => Nil
+          case other => throw HttpError(400, s"$field must be an array of column names, got $other")
+        }
+        // optional zone-map columns: min/max sidecar on the committed
+        // segment (Snapshots statsCols) — feeds /store/read_range
+        val stats = columns("stats")
+        // optional bloom columns: point-lookup sidecar on the
+        // committed segment (Snapshots bloomCols) — feeds
+        // /store/read_eq's segment skip
+        val blooms = columns("blooms")
+        // commit provenance — free-form string facts stored on the
+        // manifest line, surfaced by /store/versions and /status
+        val meta: Map[String, String] = parseMetaObject(spec)
+        val df = Sources.readParquet(spark, source)
+        val version =
+          try {
+            if (mode == "full") Snapshots.commit(df, storeRoot, statsCols = stats,
+              meta = meta, bloomCols = blooms)
+            else Snapshots.commitDeltaRetrying(df, storeRoot,
+              evolveSchema = evolve, statsCols = stats, meta = meta, bloomCols = blooms)
+          } catch {
+            // the library's drift error names ITS remedy (the
+            // evolveSchema parameter); an HTTP client's actionable
+            // remedy is this route's `evolve` body field — rewrite
+            // so the 400 is actionable verbatim
+            case e: IllegalArgumentException
+                if Option(e.getMessage).exists(_.contains("evolveSchema = true")) =>
+              throw HttpError(400, e.getMessage.replace(
+                "pass evolveSchema = true",
+                "pass \"evolve\": true in the request body"))
+          }
+        ("version" -> version) ~ ("mode" -> mode)
+      },
+      Route("GET", "/store/tags", "named version tags") { _ =>
+        // the named-release catalog: every tag as {name, version}
+        JArray(Snapshots.tags(spark, storeRoot).map { case (n, v) =>
+          (("name" -> n) ~ ("version" -> v)): JValue
+        }.toList)
+      },
+      Route("POST", "/store/tag", "name a version (immutable)", body = "{name, version}") { req =>
+        // name a version ("release-2026-08" -> v12). Tags are
+        // immutable: a duplicate is a 409 (the library's message
+        // names the untag remedy), an unknown version / bad name a
+        // 400 via the global IllegalArgumentException map
+        val spec = req.json
+        val name = spec \ "name" match {
+          case JString(n) => n
+          case other => throw HttpError(400, s"tag needs a 'name' string, got $other")
+        }
+        val version = spec \ "version" match {
+          case JInt(v) => v.toLong
+          case other => throw HttpError(400, s"tag needs an integer 'version', got $other")
+        }
+        try Snapshots.tag(spark, storeRoot, name, version)
+        catch {
+          case e: IllegalArgumentException
+              if Option(e.getMessage).exists(_.contains("already exists")) =>
+            throw HttpError(409, e.getMessage)
+        }
+        ("name" -> name) ~ ("version" -> version)
+      },
+      Route("POST", "/store/untag", "remove a tag", body = "{name}") { req =>
+        val spec = req.json
+        val name = spec \ "name" match {
+          case JString(n) => n
+          case other => throw HttpError(400, s"untag needs a 'name' string, got $other")
+        }
+        Snapshots.untag(spark, storeRoot, name)
+        ("name" -> name) ~ ("removed" -> true)
+      },
+      Route("GET", "/store/excisions", "takedown audit trail (no excised values)") { _ =>
+        // the takedown audit trail (Snapshots.excisions): proof a
+        // GDPR excision ran — when, which columns, per-version row
+        // counts, the operator's meta — with the excised values
+        // themselves deliberately absent
+        JArray(Snapshots.excisions(spark, storeRoot).map { r =>
+          (("at" -> java.time.Instant.ofEpochMilli(r.atMs).toString) ~
+            ("columns" -> r.columns) ~
+            ("segments" -> JArray(r.segments.map { case (v, n) =>
+              (("version" -> v) ~ ("rows" -> n)): JValue
+            }.toList)) ~
+            ("rows" -> r.rows) ~
+            ("meta" -> metaJson(r.meta))): JValue
+        }.toList)
+      },
+      Route("POST", "/store/excise", "hard delete across history (PII/GDPR takedown)",
+        body = "{column, values: [...] | lo+hi, meta?}") { req =>
+        // hard delete across history (Snapshots.excise): the
+        // PII/GDPR takedown — rewrites every retained segment that
+        // carries the named rows, so history/as-of/changes at ANY
+        // version stop serving them. Body names ONE key column and
+        // either the `values` to excise (identity takedown, isin)
+        // or a closed `lo`/`hi` range (retention takedown); value
+        // literals are typed from the chain's union schema so the
+        // match (and the counting pass's pushdown and zone-map
+        // skip) compares in the column's own type.
+        import org.apache.spark.sql.functions.{col, lit}
+        import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, ByteType,
+          DoubleType, FloatType, StringType, BooleanType, DecimalType, DateType, TimestampType}
+        val spec = req.json
+        val column = spec \ "column" match {
+          case JString(c) => c
+          case other => throw HttpError(400, s"excise needs a 'column' name, got $other")
+        }
+        def rawOf(v: JValue, what: String): String = v match {
+          case JString(str) => str
+          case JInt(i)      => i.toString
+          case JLong(l)     => l.toString
+          case JDouble(d)   => d.toString
+          case other => throw HttpError(400, s"unsupported excise $what $other")
+        }
+        val rawVals: Option[Seq[String]] = spec \ "values" match {
+          case JArray(vs) if vs.nonEmpty => Some(vs.map(rawOf(_, "value")))
+          case JArray(_) => throw HttpError(400, "excise 'values' must be non-empty")
+          case JNothing => None
+          case other => throw HttpError(400, s"excise 'values' must be an array, got $other")
+        }
+        val rawRange: Option[(String, String)] = (spec \ "lo", spec \ "hi") match {
+          case (JNothing, JNothing) => None
+          case (lo, hi) if lo != JNothing && hi != JNothing =>
+            Some((rawOf(lo, "bound"), rawOf(hi, "bound")))
+          case _ => throw HttpError(400, "excise range needs BOTH 'lo' and 'hi'")
+        }
+        if (rawVals.isDefined == rawRange.isDefined)
+          throw HttpError(400,
+            "excise takes exactly one of 'values' (identity takedown) or 'lo'/'hi' (range)")
+        // the column's type comes from the chain's UNION schema
+        // (Snapshots.chainSchema — footer reads only): an evolved
+        // chain that widened the column (int → long full
+        // redefinition) resolves to the WIDE type here, so no
+        // takedown value is ever narrowed/wrapped into silently
+        // missing the rows it names
+        val colType =
+          (try Snapshots.chainSchema(spark, storeRoot)
+           catch {
+             case e: IllegalArgumentException =>
+               throw HttpError(404, Option(e.getMessage).getOrElse("the store is empty"))
+           })
+            .find(_.name == column)
+            .getOrElse(throw HttpError(400,
+              s"no segment of the store carries column '$column'")).dataType
+        // literals in the column's EXACT external type — a
+        // lit(v).cast(colType) wrapper would reach conditionBounds
+        // as Cast nodes and lose the zone-map segment skip
+        def typed(v: String): Any = {
+          def integral: Long = v.toLongOption.getOrElse(
+            throw HttpError(400, s"excise value '$v' is not integral for column '$column'"))
+          colType match {
+            case LongType    => integral
+            case IntegerType =>
+              val l = integral
+              if (l.isValidInt) l.toInt else throw HttpError(400,
+                s"excise value '$v' overflows the store's int column '$column'")
+            case ShortType   =>
+              val l = integral
+              if (l >= Short.MinValue && l <= Short.MaxValue) l.toShort
+              else throw HttpError(400,
+                s"excise value '$v' overflows the store's short column '$column'")
+            case ByteType =>
+              val l = integral
+              if (l >= Byte.MinValue && l <= Byte.MaxValue) l.toByte
+              else throw HttpError(400,
+                s"excise value '$v' overflows the store's byte column '$column'")
+            case DoubleType => v.toDoubleOption.getOrElse(
+              throw HttpError(400, s"excise value '$v' is not numeric for column '$column'"))
+            case FloatType => v.toFloatOption.getOrElse(
+              throw HttpError(400, s"excise value '$v' is not numeric for column '$column'"))
+            case d: DecimalType =>
+              // the column's own scale, no rounding: a value with
+              // more fractional digits than the column can hold
+              // names rows that cannot exist — a typo, not a no-op
+              try new java.math.BigDecimal(v).setScale(d.scale, java.math.RoundingMode.UNNECESSARY)
+              catch {
+                case _: NumberFormatException => throw HttpError(400,
+                  s"excise value '$v' is not numeric for column '$column'")
+                case _: ArithmeticException => throw HttpError(400,
+                  s"excise value '$v' has more fractional digits than " +
+                    s"decimal(${d.precision},${d.scale}) column '$column' holds")
+              }
+            case DateType =>
+              try java.sql.Date.valueOf(v)
+              catch { case _: IllegalArgumentException => throw HttpError(400,
+                s"excise value '$v' is not a yyyy-mm-dd date for column '$column'") }
+            case TimestampType =>
+              // zone-explicit strings are honored; naive wall-clock
+              // strings read in the SESSION timezone (the frame the
+              // store's instants render in) — never the JVM default,
+              // which would shift a GDPR takedown range by the
+              // host's UTC offset
+              try java.sql.Timestamp.from(
+                try java.time.Instant.parse(v)
+                catch {
+                  case _: java.time.format.DateTimeParseException =>
+                    java.time.LocalDateTime.parse(v.replace(' ', 'T'))
+                      .atZone(java.time.ZoneId.of(
+                        spark.conf.get("spark.sql.session.timeZone")))
+                      .toInstant
+                })
+              catch { case _: java.time.format.DateTimeParseException => throw HttpError(400,
+                s"excise value '$v' is not an ISO instant or yyyy-mm-dd hh:mm:ss[.f] " +
+                  s"timestamp for column '$column'") }
+            case StringType => v
+            case BooleanType => throw HttpError(400,
+              s"refusing a takedown keyed on boolean column '$column' — a true/false " +
+                "match names half the table, not an entity; excise by a key column, " +
+                "or use the library API with an explicit condition")
+            // an implicit string-vs-<type> cast would wrap the
+            // ATTRIBUTE, losing both the match semantics and the
+            // zone-map skip — refuse instead of comparing wrong
+            case other => throw HttpError(400,
+              s"excise by values/range is not supported for ${other.simpleString} " +
+                s"column '$column' — use the library API with an explicit condition")
+          }
+        }
+        val condition = (rawVals, rawRange) match {
+          case (Some(vs), _) => col(column).isin(vs.map(typed): _*)
+          case (_, Some((lo, hi))) => col(column) >= typed(lo) && col(column) <= typed(hi)
+          case _ => throw HttpError(400, "unreachable: exclusivity checked above")
+        }
+        // audit provenance for the takedown record (ticket id, who
+        // ordered it) — free-form strings; the record never carries
+        // the excised values themselves
+        val exMeta: Map[String, String] = parseMetaObject(spec)
+        val report =
+          try Snapshots.excise(spark, storeRoot, condition, meta = exMeta)
+          catch {
+            // a takedown naming rows the store never held is a
+            // client addressing error — surface it as not-found,
+            // never a silently-recorded no-op
+            case e: IllegalArgumentException
+                if Option(e.getMessage).exists(_.contains("matched NO rows")) =>
+              throw HttpError(404, e.getMessage)
+            // a commit/compact/vacuum raced the republish: the store
+            // is unchanged, the client retries over the new chain
+            case e: IllegalStateException
+                if Option(e.getMessage).exists(_.contains("manifest publish race")) =>
+              throw HttpError(409, e.getMessage + " — retry the excision")
+          }
+        ("excised" -> JArray(report.map { case (v, n) =>
+          (("version" -> v) ~ ("rows" -> n)): JValue
+        }.toList)) ~ ("total_rows" -> report.map(_._2).sum)
+      }
+    )
+
+    lazy val serviceDoc: JValue =
+      ("service" -> "graft-warehouse") ~
+        ("data_dir" -> cfg.dataDir) ~
+        ("store_root" -> cfg.storeRoot) ~
+        ("links" -> routes.filter(_.rel.nonEmpty).map { r =>
+          ("href" -> r.path) ~ ("method" -> r.method) ~ ("rel" -> r.rel) ~
+            ("body" -> Some(r.body).filter(_.nonEmpty)) ~
+            ("params" -> Some(r.params).filter(_.nonEmpty))
+        })
+
+    // the methods some route serves; the JDK server hands the handler
+    // any method token, and the others share one /status key
+    val routeMethods = routes.map(_.method).toSet
+
+    def handle(ex: HttpExchange, hits: Seq[(Route, String)]): JValue = {
       // auth gate FIRST — before any param parsing or body read, so an
       // unauthenticated remote can neither run Spark work nor probe
       // validation errors. Loopback remotes bypass unless
@@ -1155,833 +1939,21 @@ object WarehouseServer {
         .foreach(msg => throw HttpError(401, msg))
       val params = queryParams(ex)
       val limit = limitOf(params, cfg)
-      val after = params.get("after")
-      (ex.getRequestMethod, ex.getRequestURI.getPath) match {
-        case ("GET", "/") => serviceDoc
-        case ("GET", "/health") =>
-          ("status" -> "ok") ~
-            ("spark_version" -> spark.version) ~
-            ("app_id" -> spark.sparkContext.applicationId) ~
-            ("default_parallelism" -> spark.sparkContext.defaultParallelism)
-        case ("GET", "/status") =>
-          // control-plane observability, all driver-side reads: the
-          // only I/O is one manifest listing when a store is
-          // configured — safe to poll from a monitoring loop
-          import scala.jdk.CollectionConverters._
-          val endpoints = JObject(stats.asScala.toList.sortBy(_._1).map { case (k, s) =>
-            k -> (("count" -> s.count.get) ~ ("errors" -> s.errors.get) ~
-              ("total_ms" -> s.totalMs.get): JValue)
-          })
-          val ann: JValue = Option(annRef.get) match {
-            case None => JNull
-            case Some(a) =>
-              ("index_version" -> a.sourceVersion) ~
-                ("age_ms" -> (System.currentTimeMillis() - a.builtAtMs)) ~
-                ("rebuilding" -> annRebuilding.get) ~
-                // live recall-ladder slots (each pins two corpus-sized
-                // cached frames; LRU-capped) — the operational check
-                // that a tables sweep isn't holding memory
-                ("ladder_slots" -> annAlt.size())
-          }
-          val store: JValue = cfg.storeRoot match {
-            case None => JNull
-            case Some(r) =>
-              val ms = Snapshots.manifestState(spark, r)
-              ("tip_version" -> ms.lines.lastOption.map(_.v)) ~
-                ("manifest_file" -> ms.fileNum) ~
-                // the tip commit's provenance (who/which job/why) —
-                // answered from the manifest line, no data read
-                ("tip_meta" -> ms.lines.lastOption.map(l => metaJson(l.meta)))
-          }
-          val cohort: JValue = Option(cohortStateRef.get) match {
-            case None => JNull
-            case Some(cs) =>
-              // the incrementality evidence: built_at_version is where
-              // the full build happened; applied_batches counts the
-              // O(delta) advances since (a rebuild resets it to 0)
-              ("atoms" -> cs.nAtoms) ~
-                ("version" -> cs.lines.last._1) ~
-                ("built_at_version" -> cs.builtAtVersion) ~
-                ("applied_batches" -> cs.appliedBatches)
-          }
-          // the cohort path's cached source images (session-scoped:
-          // they outlive this server and serve the next one)
-          val images = JArray(CohortQuery.imageInfo(spark, cfg.dataDir).toList.map { i =>
-            ("population" -> i.population) ~ ("source" -> i.source) ~
-              ("partitions" -> i.partitions) ~ ("cached_bytes" -> i.cachedBytes): JValue
-          })
-          // the served counts' prepared query shapes (session-scoped
-          // like the images): how many are held, reused and planned
-          val prepared = CohortQuery.preparedInfo(spark, cfg.dataDir)
-          ("uptime_ms" -> (System.currentTimeMillis() - startedAtMs)) ~
-            ("active_job_groups" -> JArray(active.asScala.toList.sorted.map(JString(_)))) ~
-            ("endpoints" -> endpoints) ~
-            ("ann" -> ann) ~
-            ("store" -> store) ~
-            ("cohort_state" -> cohort) ~
-            ("cohort_images" -> images) ~
-            ("cohort_prepared" -> (("shapes" -> prepared.shapes) ~ ("hits" -> prepared.hits) ~
-              ("prepares" -> prepared.prepares)))
-        case ("GET", "/tables") => tablesDoc
-        case ("POST", "/cohort/query") =>
-          JObject("n_subjects" -> JInt(CohortQuery.populationSize(spark, cfg.dataDir,
-            body(ex, cfg.maxBodyBytes), cohortSources(params))))
-        case ("POST", "/cohort/population") =>
-          page(CohortQuery.population(spark, cfg.dataDir, body(ex, cfg.maxBodyBytes),
-            cohortSources(params)).orderBy("subject"), limit, after)
-        case ("POST", "/cohort/atom-counts") =>
-          params.get("maintained") match {
-            case Some("true") =>
-              if (params.contains("as_of_ts") || params.contains("speculative_import")
-                  || params.contains("tag"))
-                throw HttpError(400,
-                  "maintained counts are the store's PRESENT — drop as_of_ts/speculative_import/tag")
-              page(maintainedAtomCounts(body(ex, cfg.maxBodyBytes)), limit, after)
-            case None | Some("false") =>
-              page(CohortQuery.atomCounts(spark, cfg.dataDir, body(ex, cfg.maxBodyBytes),
-                cohortSources(params)), limit, after)
-            case Some(other) =>
-              throw HttpError(400, s"maintained must be true|false, got '$other'")
-          }
-        case ("GET", "/tables/profile") =>
-          // q9h over HTTP: per-column census of an allowlisted table —
-          // a control-plane aggregate whose output is bounded by the
-          // column count. `cols` defaults to the whole table;
-          // `exact=false` serves the 1%-HLL form (the scale default
-          // for wide tables — the exact multi-distinct Expand
-          // multiplies the scan by the column count)
-          val src = table(spark, cfg.dataDir, need(params, "source"))
-          val cols = params.get("cols")
-            .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-            .getOrElse(src.columns.toSeq)
-          val exact = params.get("exact").forall {
-            case "true" => true
-            case "false" => false
-            case other => throw HttpError(400, s"exact must be true|false, got '$other'")
-          }
-          page(
-            try graft.operators.Warehouse.profile(src, cols, exact)
-            catch {
-              case e: IllegalArgumentException =>
-                throw HttpError(400, Option(e.getMessage).getOrElse("bad cols"))
-            }, limit, after)
-        case ("GET", "/items/stats") =>
-          page(Cohort.itemStats(
-            table(spark, cfg.dataDir, need(params, "source")),
-            need(params, "field"), params.get("by")), limit, after)
-        case ("GET", "/items/histogram") =>
-          val width = need(params, "width").toDoubleOption
-            .getOrElse(throw HttpError(400, "bad width"))
-          page(Cohort.itemHistogram(
-            table(spark, cfg.dataDir, need(params, "source")),
-            need(params, "field"), width), limit, after)
-        case ("GET", "/items/frequencies") =>
-          page(Cohort.valueFrequencies(
-            table(spark, cfg.dataDir, need(params, "source")),
-            need(params, "field")), limit, after)
-        case ("GET", "/metadata/search") =>
-          page(Cohort.metadataSearch(
-            Tables.part(spark, cfg.dataDir), params.get("q"), params.get("regex")), limit, after)
-        case ("GET", "/queries") =>
-          JArray(SparkEntry.defs.map { q =>
-            ("name" -> q.name) ~ ("oracle_checked" -> q.oracle.nonEmpty): JValue
-          }.toList)
-        case ("POST", QueryRun(name)) =>
-          val q = SparkEntry.defs.find(_.name == name)
-            .getOrElse(throw HttpError(404, s"unknown query '$name'"))
-          page(q.run(spark, cfg.dataDir), limit, after)
-        case ("GET", "/store/versions") =>
-          JArray(Snapshots.versionsWithMeta(spark, storeRoot).map { case (v, kind, path, ts, meta) =>
-            val base = ("version" -> v) ~ ("kind" -> kind) ~ ("path" -> path)
-            // commit_ts is omitted (not null) on lines that predate the
-            // timestamp field — "unknown", not "at the epoch"; meta is
-            // omitted when the commit carried none
-            val stamped =
-              if (ts >= 0) base ~ ("commit_ts" -> java.time.Instant.ofEpochMilli(ts).toString)
-              else base
-            (if (meta.nonEmpty) stamped ~ ("meta" -> metaJson(meta))
-             else stamped): JValue
-          }.toList)
-        case ("GET", "/store/read") =>
-          val keys = params.get("keys").map(_.split(',').toSeq)
-            .getOrElse(throw HttpError(400, "missing query param 'keys' (comma-separated)"))
-          // `as_of_ts` = ISO-8601 instant or epoch millis — the
-          // instant-addressed twin of `version` (Snapshots.versionAt
-          // semantics: latest commit stamped at or before it)
-          if (Seq("version", "as_of_ts", "tag").count(params.contains) > 1)
-            throw HttpError(400, "pass at most one of 'version', 'as_of_ts', 'tag'")
-          val df = (params.get("version"), params.get("as_of_ts"), params.get("tag")) match {
-            case (Some(v), _, _) => Snapshots.asOf(spark, storeRoot,
-              v.toLongOption.getOrElse(throw HttpError(400, s"bad version '$v'")), keys)
-            case (_, Some(raw), _) =>
-              Snapshots.asOf(spark, storeRoot, versionAtOr400(parseInstantMs(raw)), keys)
-            // tag = the named as-of: an unknown tag is the library's
-            // typed error listing what exists (→ 400 via the global map)
-            case (_, _, Some(t)) => Snapshots.asOfTag(spark, storeRoot, t, keys)
-            case _ => Snapshots.latest(spark, storeRoot, keys)
-          }
-          // `order=desc` = "latest keys first", the most common
-          // warehouse listing order — keyset-paged like asc, through
-          // the same per-key-direction cursors
-          val orderOf: String => org.apache.spark.sql.Column =
-            params.getOrElse("order", "asc") match {
-              case "asc"  => c => org.apache.spark.sql.functions.col(c).asc
-              case "desc" => c => org.apache.spark.sql.functions.col(c).desc
-              case other  => throw HttpError(400, s"order must be asc|desc, got '$other'")
-            }
-          page(df.orderBy(keys.map(orderOf): _*), limit, after)
-        case ("GET", "/store/read_range") =>
-          // zone-map range read over an APPEND-ONLY store: opens only
-          // the segments whose committed stats intersect [lo, hi]
-          // (Snapshots.readAppendOnlyWhere) — the time-series "last
-          // hour" listing that skips the months behind it. Bounds
-          // parse long → double → string, matching the sidecar's
-          // recorded type loudly (a mismatch is a 400, not a silent
-          // no-prune).
-          val column = need(params, "column")
-          val (loRaw, hiRaw) = (need(params, "lo"), need(params, "hi"))
-          val bounds: (Any, Any) = (loRaw.toLongOption, hiRaw.toLongOption) match {
-            case (Some(l), Some(h)) => (l, h)
-            case _ => (loRaw.toDoubleOption, hiRaw.toDoubleOption) match {
-              case (Some(l), Some(h)) => (l, h)
-              case _ => (loRaw, hiRaw)
-            }
-          }
-          // `keys=` switches to the MERGE-read range form
-          // (Snapshots.readMergeWhere): last-writer-wins + tombstones
-          // honored, segments pruned on the range column's zone map —
-          // which must be one of the merge keys (the only column
-          // class whose stats soundly bound where a superseding row
-          // lives). Without keys, the append-only form as before.
-          // unknown column surfaces as AnalysisException (→ 400 below);
-          // mismatched bound types / empty store / non-key column as
-          // IllegalArgumentException
-          val df = try params.get("keys") match {
-              case Some(ks) => Snapshots.readMergeWhere(
-                spark, storeRoot, ks.split(',').toSeq, column, bounds._1, bounds._2)
-              case None => Snapshots.readAppendOnlyWhere(
-                spark, storeRoot, column, bounds._1, bounds._2)
-            }
-            catch {
-              case e: IllegalArgumentException =>
-                throw HttpError(400, Option(e.getMessage).getOrElse("bad range"))
-              // pointing the append-only form at a merge-read store
-              // (tombstoned segments) is a client-addressable misuse —
-              // 409 with the remedy this route actually offers.
-              // Matched on the tombstone guard's message (the
-              // publish-race precedent): other IllegalStateExceptions
-              // (malformed manifest, race) are server faults, 500
-              case e: IllegalStateException
-                if Option(e.getMessage).exists(_.startsWith("append-only read")) =>
-                throw HttpError(409, e.getMessage +
-                  "; or pass keys=<merge keys> for a pruned merge-range read")
-            }
-          page(df.orderBy(column), limit, after)
-        case ("GET", "/store/read_eq") =>
-          // bloom-pruned POINT LOOKUP over the merge-read store
-          // (Snapshots.readMergeEq): "fetch these entities now" — the
-          // merged state of the probed keys, opening only segments
-          // whose key sidecars (zone map, then bloom) might hold one.
-          // `keys` is REQUIRED: the eq form exists for merge stores
-          // (an append-only store answers point probes through
-          // read_range's lo=hi). Values parse long-else-string as one
-          // homogeneous batch — a mixed or mistyped probe surfaces in
-          // the zone-map check's loud type error (→ 400).
-          val column = need(params, "column")
-          val keys = params.get("keys").map(_.split(',').toSeq)
-            .getOrElse(throw HttpError(400, "missing query param 'keys' (comma-separated)"))
-          val raws = need(params, "values").split(',').toSeq.filter(_.nonEmpty)
-          if (raws.isEmpty) throw HttpError(400, "values must carry at least one probe")
-          // the endpoint is a point lookup, not a bulk export: an
-          // unbounded IN list builds an unbounded driver-side plan
-          // (and probes every bloom per value) — bound it loudly
-          if (raws.size > 1024)
-            throw HttpError(400, s"too many probe values (${raws.size} > 1024) — " +
-              "batch point lookups, or use read_range for a bulk slice")
-          val values: Seq[Any] =
-            if (raws.forall(_.toLongOption.isDefined)) raws.map(_.toLong)
-            else raws
-          val df = try Snapshots.readMergeEq(spark, storeRoot, keys, column, values)
-            catch {
-              case e: IllegalArgumentException =>
-                throw HttpError(400, Option(e.getMessage).getOrElse("bad point lookup"))
-              case e: IllegalStateException
-                  if Option(e.getMessage).exists(m =>
-                    m.contains("no full snapshot") || m.contains("lacks merge key")) =>
-                throw HttpError(400, e.getMessage)
-            }
-          page(df.orderBy(column), limit, after)
-        case ("GET", "/store/changes") =>
-          // version-pair CDC over HTTP (Snapshots.changes): "what did
-          // the imports between v_from and v_to do", keyset-paged.
-          // `to` defaults to the tip so "changes since v" is one call.
-          val keys = params.get("keys").map(_.split(',').toSeq)
-            .getOrElse(throw HttpError(400, "missing query param 'keys' (comma-separated)"))
-          val fromV = need(params, "from").toLongOption
-            .getOrElse(throw HttpError(400, s"bad from '${params("from")}'"))
-          val toV = params.get("to") match {
-            case None => Snapshots.latestVersion(spark, storeRoot)
-            case Some(v) => v.toLongOption.getOrElse(throw HttpError(400, s"bad to '$v'"))
-          }
-          val df =
-            try Snapshots.changes(spark, storeRoot, fromV, toV, keys)
-            catch {
-              case e: IllegalArgumentException =>
-                throw HttpError(400, Option(e.getMessage).getOrElse("bad version range"))
-              case e: IllegalStateException
-                  if Option(e.getMessage).exists(m =>
-                    m.contains("no full snapshot") || m.contains("lacks merge key")) =>
-                throw HttpError(400, e.getMessage)
-            }
-          page(df.orderBy(keys.map(k =>
-            org.apache.spark.sql.functions.col(k).asc): _*), limit, after)
-        case ("GET", "/store/history") =>
-          // per-entity timeline (Snapshots.history): one chain read
-          // giving (version, commit_ts_ms, op, key..., payload...)
-          // per state change — the Datomic history read that
-          // previously took a client-side loop over versions. `key=`
-          // narrows to ONE entity (comma-separated values matched
-          // positionally against `keys`); equality literals are typed
-          // from the result schema so the filter pushes into every
-          // segment scan instead of casting the column.
-          import org.apache.spark.sql.functions.{col, lit}
-          import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, DoubleType, FloatType}
-          val keys = params.get("keys").map(_.split(',').toSeq)
-            .getOrElse(throw HttpError(400, "missing query param 'keys' (comma-separated)"))
-          val df0 =
-            try Snapshots.history(spark, storeRoot, keys)
-            catch {
-              case e: IllegalArgumentException =>
-                throw HttpError(400, Option(e.getMessage).getOrElse("bad history request"))
-              // a key column some segment lacks is a client-side
-              // addressing error on THIS store, not a server fault
-              case e: IllegalStateException
-                  if Option(e.getMessage).exists(_.contains("lacks merge key")) =>
-                throw HttpError(400, e.getMessage)
-            }
-          val df = params.get("key") match {
-            case None => df0
-            case Some(raw) =>
-              val vals = raw.split(',').toSeq
-              if (vals.size != keys.size) throw HttpError(400,
-                s"'key' carries ${vals.size} value(s) for ${keys.size} key column(s)")
-              keys.zip(vals).foldLeft(df0) { case (d, (k, v)) =>
-                val typed = d.schema.find(_.name == k).map(_.dataType) match {
-                  case Some(LongType | IntegerType | ShortType) =>
-                    lit(v.toLongOption.getOrElse(throw HttpError(400,
-                      s"key value '$v' is not integral for column '$k'")))
-                  case Some(DoubleType | FloatType) =>
-                    lit(v.toDoubleOption.getOrElse(throw HttpError(400,
-                      s"key value '$v' is not numeric for column '$k'")))
-                  case _ => lit(v)
-                }
-                d.filter(col(k) === typed)
-              }
-          }
-          page(df.orderBy(keys.map(k => col(k).asc) :+ col("version").asc: _*),
-            limit, after)
-        case ("POST", "/tokenize") =>
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val texts = spec \ "texts" match {
-            case JArray(ts) if ts.nonEmpty => ts.map {
-              case JString(t) => t
-              case other => throw HttpError(400, s"texts must be strings, got $other")
-            }
-            case JArray(_) | JNothing =>
-              throw HttpError(400, "tokenize needs a non-empty 'texts' array")
-            case other => throw HttpError(400, s"texts must be an array, got $other")
-          }
-          if (texts.size > cfg.defaultLimit)
-            throw HttpError(400,
-              s"tokenize is a bounded control-plane call: at most ${cfg.defaultLimit} " +
-                s"texts per request, got ${texts.size}")
-          val merges: Seq[(String, String)] = spec \ "merges" match {
-            case JArray(ms) => ms.map {
-              case JArray(List(JString(l), JString(r))) if l.nonEmpty && r.nonEmpty => (l, r)
-              case other => throw HttpError(400,
-                s"each merge must be a [left, right] pair of non-empty strings, got $other")
-            }
-            case JNothing =>
-              val n = spec \ "n_merges" match {
-                case JNothing => 30
-                case JInt(i) if i >= 1 && i <= 1000 => i.toInt
-                case other => throw HttpError(400,
-                  s"n_merges must be an integer in [1, 1000], got $other")
-              }
-              // driver-side listing only — the freshness check itself
-              // costs no Spark job; a stale entry relearns in-request
-              val srcSig = Sources.listingSignature(
-                spark, s"${cfg.dataDir}/documents.parquet")
-              bpeTables.compute(n, (nn, cur) =>
-                if (cur != null && cur._1 == srcSig) cur
-                else (srcSig, graft.operators.TextAnalysis
-                  .bpeMerges(Tables.documents(spark, cfg.dataDir), nn)
-                  .map { case (l, r, _) => (l, r) }))._2
-            case other => throw HttpError(400, s"merges must be an array of pairs, got $other")
-          }
-          // a corpus too small/uniform to learn a single merge has no
-          // tokenizer to serve — loud, with both remedies named
-          if (merges.isEmpty) throw HttpError(400,
-            "no merge table: the corpus learned zero merges — pass 'merges' explicitly " +
-              "or raise n_merges after committing documents")
-          // the EXACT map the codegen'd expression builds (duplicate
-          // pairs keep their first rank), driving the same encoder
-          val ranks = new java.util.HashMap[String, Integer](merges.size * 2)
-          merges.zipWithIndex.foreach { case ((l, r), i) =>
-            ranks.putIfAbsent(l + " " + r, Int.box(i)); ()
-          }
-          val outRank = new java.util.HashMap[String, Integer](merges.size * 2)
-          merges.zipWithIndex.foreach { case ((l, r), i) =>
-            outRank.putIfAbsent(l + r, Int.box(i)); ()
-          }
-          def idOf(tok: String): Long =
-            if (tok.codePointCount(0, tok.length) == 1) tok.codePointAt(0).toLong
-            else Option(outRank.get(tok)).map(0x110000L + _.longValue())
-              .getOrElse(-1L) // unreachable for well-formed tables; never a 500
-          val results = texts.map { t =>
-            val arr = graft.functions.TextExprHelpers.bpeEncode(
-              org.apache.spark.unsafe.types.UTF8String.fromString(t), ranks)
-            val toks = (0 until arr.numElements())
-              .map(i => arr.getUTF8String(i).toString).toList
-            (("tokens" -> JArray(toks.map(JString(_)))) ~
-              ("ids" -> JArray(toks.map(tk => JLong(idOf(tk)))))): JValue
-          }
-          ("n_merges_used" -> merges.size) ~ ("results" -> JArray(results))
-        case ("POST", "/ann/search") =>
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val vector = spec \ "vector" match {
-            case JArray(vs) => vs.map {
-              case JInt(i)     => i.toDouble
-              case JDouble(d)  => d
-              case JDecimal(d) => d.toDouble
-              case other => throw HttpError(400, s"vector elements must be numbers, got $other")
-            }
-            case _ => throw HttpError(400, "search needs a 'vector' array")
-          }
-          val k = spec \ "k" match {
-            case JInt(i) if i > 0 && i <= cfg.annMaxK => i.toInt
-            case JNothing => 10
-            case other => throw HttpError(400,
-              s"k must be an integer in [1, ${cfg.annMaxK}], got $other")
-          }
-          val method = spec \ "method" match {
-            case JString(m @ ("lsh" | "brute")) => m
-            case JNothing => "lsh"
-            case other => throw HttpError(400, s"method must be lsh|brute, got $other")
-          }
-          // the recall ladder's knob: serve this request from an index
-          // banded at `tables` tables (capped — each slot persists a
-          // corpus-sized banding; 128 is far past the measured
-          // full-recall point and a typo'd 10_000 must not OOM the
-          // server). Meaningless for brute (exact already): loud 400.
-          val tablesOpt = spec \ "tables" match {
-            case JInt(t) if t >= 1 && t <= 128 => Some(t.toInt)
-            case JNothing => None
-            case other => throw HttpError(400,
-              s"tables must be an integer in [1, 128] (the lsh recall ladder's knob), got $other")
-          }
-          if (tablesOpt.isDefined && method == "brute")
-            throw HttpError(400, "tables applies to method=lsh only — brute is already exact")
-          // ONE index resolution per request (freshness check + maybe
-          // rebuild happen here, as 503s); a bad vector (dims
-          // mismatch, NaN, zero norm) then throws
-          // IllegalArgumentException → the 400 mapping below
-          val idx = tablesOpt.fold(annIndex())(annIndexAt)
-          val neighbors = idx.search(vector, k, method)
-          val g = idx.geometry
-          ("k" -> k) ~ ("method" -> method) ~
-            ("index_version" -> idx.sourceVersion) ~
-            ("geometry" ->
-              (("tables" -> g.tables) ~ ("planes" -> g.planes) ~ ("probe1" -> g.probe1))) ~
-            ("neighbors" -> JArray(neighbors.map { case (id, cos) =>
-              ("vec_id" -> JInt(id)) ~ ("cos" -> jval(cos)): JValue
-            }.toList))
-        case ("POST", "/ann/refresh") =>
-          val (oldV, built) = annRefresh()
-          ("rebuilt" -> true) ~
-            ("index_version" -> built.sourceVersion) ~
-            ("previous_version" -> oldV)
-        case ("POST", "/dedup/check") =>
-          val idxRoot = cfg.dedupIndexRoot.getOrElse(throw HttpError(404,
-            "no dedup band index configured (Config.dedupIndexRoot)"))
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val text = spec \ "text" match {
-            case JString(t) => t
-            case other => throw HttpError(400, s"check needs a 'text' string, got $other")
-          }
-          // floor 0.8: the persisted index's BANDING is fixed at build
-          // time for the ≥0.8 operating point — candidate recall below
-          // it is near zero, so accepting a lower threshold would
-          // answer confidently-wrong keep=true for pairs the bands
-          // never surface. Honest 400 instead. (JInt admits the
-          // integer literal 1, which json4s parses as JInt, not
-          // JDouble.)
-          val minJ = spec \ "min_jaccard" match {
-            case JDouble(d) if d >= 0.8 && d <= 1  => d
-            case JDecimal(d) if d >= 0.8 && d <= 1 => d.toDouble
-            case JInt(i) if i == 1 => 1.0
-            case JNothing => 0.8
-            case other => throw HttpError(400,
-              s"min_jaccard must be in [0.8, 1] — the persisted index's banding is built " +
-                s"for the 0.8 operating point and cannot surface candidates below it; got $other")
-          }
-          // READ-ONLY screen of one posted doc against the persisted
-          // band index — the q6b ingest path's candidate+verify stages
-          // with a 1-row broadcast batch and a synthetic id that can
-          // never collide with corpus doc_ids. Nothing is committed.
-          // Per-request cost = one index-key scan + one candidate-
-          // bounded corpus join, exactly q6b's per-INGEST steady-state
-          // cost, always against the freshest committed index (a
-          // server-cached snapshot would answer stale verdicts after
-          // every delta commit; freshness wins for a dedup gate).
-          import spark.implicits._
-          val batch = Seq((-1L, text)).toDF("doc_id", "text")
-          val corpus = Tables.documents(spark, cfg.dataDir)
-          val v = graft.dedup.Dedup.ingestAgainstIndex(batch, corpus, idxRoot, minJ)
-            .collect().head // exactly one verdict row for the 1-row batch
-          ("keep" -> v.getBoolean(3)) ~
-            ("dup_of" -> (if (v.isNullAt(1)) JNull else JInt(v.getLong(1)))) ~
-            ("n_matches" -> v.getLong(2)) ~
-            ("min_jaccard" -> minJ)
-        case ("POST", "/dedup/check_vec") =>
-          val idxRoot = cfg.vecIndexRoot.getOrElse(throw HttpError(404,
-            "no vector band index configured (Config.vecIndexRoot)"))
-          val corpusRoot = cfg.annVecStoreRoot.getOrElse(throw HttpError(404,
-            "no vector corpus store configured (Config.annVecStoreRoot)"))
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val emb: Seq[Float] = spec \ "embedding" match {
-            case JArray(vs) if vs.nonEmpty => vs.map {
-              case JInt(i)     => i.toFloat
-              case JDouble(d)  => d.toFloat
-              case JDecimal(d) => d.toFloat
-              case other => throw HttpError(400, s"embedding elements must be numbers, got $other")
-            }
-            case JArray(_) => throw HttpError(400, "embedding must be non-empty")
-            case other => throw HttpError(400, s"check_vec needs an 'embedding' array, got $other")
-          }
-          // opening the index resolves it (404 when none committed) —
-          // geometry and segments from ONE manifest read; the posted
-          // vector must be scorable IN that geometry — a
-          // dims mismatch would silently bucket garbage, and a
-          // zero/NaN/Inf norm is the library's un-scorable class
-          // (cosine NULL, keep-by-default) which for a CHECK endpoint
-          // is a vacuous always-keep: refuse both as typed 400s
-          val index =
-            try graft.dedup.Dedup.openVecIndex(spark, idxRoot)
-            catch {
-              case e: IllegalArgumentException =>
-                throw HttpError(404, Option(e.getMessage).getOrElse("no vector index"))
-            }
-          val g = index._1
-          if (emb.size != g.dims)
-            throw HttpError(400,
-              s"embedding has ${emb.size} dims but the index is built for ${g.dims}")
-          val nrm = math.sqrt(emb.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-          if (nrm == 0.0 || nrm.isNaN || nrm.isInfinite || emb.exists(x => x.isNaN || x.isInfinite))
-            throw HttpError(400,
-              "embedding is un-scorable (zero, NaN or infinite norm) — cosine is undefined " +
-                "for it, so a near-dup verdict would be vacuous")
-          // READ-ONLY screen of one posted vector — the q6d ingest
-          // path's candidate+re-score stages with a 1-row broadcast
-          // batch and a synthetic id that can never collide with
-          // corpus vec_ids. Nothing commits; always the freshest
-          // committed index + corpus (srv11's freshness-over-caching
-          // trade, same rationale).
-          import spark.implicits._
-          val batch = Seq((-1L, emb)).toDF("vec_id", "embedding")
-          // an empty/missing corpus store is SERVER state, not a bad
-          // request — 404 like the missing index, never the generic
-          // IllegalArgumentException→400 mapping blaming the client
-          val corpus =
-            try Snapshots.readAppendOnly(spark, corpusRoot)
-            catch {
-              case e: IllegalArgumentException =>
-                throw HttpError(404, Option(e.getMessage).getOrElse("empty vector corpus store"))
-            }
-          val v = graft.dedup.Dedup.ingestWith(batch, corpus, index)
-            .collect().head // exactly one verdict row for the 1-row batch
-          ("keep" -> v.getBoolean(3)) ~
-            ("dup_of" -> (if (v.isNullAt(1)) JNull else JInt(v.getLong(1)))) ~
-            ("n_matches" -> v.getLong(2)) ~
-            ("tau" -> g.tau)
-        case ("POST", "/store/commit") =>
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val source = spec \ "source" match {
-            case JString(s) => checkUnder(s, cfg.dataDir +: cfg.storeRoot.toSeq)
-            case other => throw HttpError(400, s"commit needs a 'source' path, got $other")
-          }
-          val mode = spec \ "mode" match {
-            case JString(m @ ("full" | "delta")) => m
-            case JNothing   => "delta"
-            case other      => throw HttpError(400, s"mode must be full|delta, got $other")
-          }
-          // schema-drift gate (Snapshots.commitDelta): a drifting
-          // delta is a 400 naming the columns unless the client opts
-          // into evolution explicitly
-          val evolve = spec \ "evolve" match {
-            case JBool(b)  => b
-            case JNothing  => false
-            case other     => throw HttpError(400, s"evolve must be a boolean, got $other")
-          }
-          // optional zone-map columns: min/max sidecar on the committed
-          // segment (Snapshots statsCols) — feeds /store/read_range
-          val stats: Seq[String] = spec \ "stats" match {
-            case JArray(vs) => vs.map {
-              case JString(c) => c
-              case other => throw HttpError(400, s"stats entries must be column names, got $other")
-            }
-            case JNothing => Nil
-            case other => throw HttpError(400, s"stats must be an array of column names, got $other")
-          }
-          // optional bloom columns: point-lookup sidecar on the
-          // committed segment (Snapshots bloomCols) — feeds
-          // /store/read_eq's segment skip
-          val blooms: Seq[String] = spec \ "blooms" match {
-            case JArray(vs) => vs.map {
-              case JString(c) => c
-              case other => throw HttpError(400, s"blooms entries must be column names, got $other")
-            }
-            case JNothing => Nil
-            case other => throw HttpError(400, s"blooms must be an array of column names, got $other")
-          }
-          // commit provenance — free-form string facts stored on the
-          // manifest line, surfaced by /store/versions and /status
-          val meta: Map[String, String] = parseMetaObject(spec)
-          val df = Sources.readParquet(spark, source)
-          val version =
-            try {
-              if (mode == "full") Snapshots.commit(df, storeRoot, statsCols = stats,
-                meta = meta, bloomCols = blooms)
-              else Snapshots.commitDeltaRetrying(df, storeRoot,
-                evolveSchema = evolve, statsCols = stats, meta = meta, bloomCols = blooms)
-            } catch {
-              // the library's drift error names ITS remedy (the
-              // evolveSchema parameter); an HTTP client's actionable
-              // remedy is this route's `evolve` body field — rewrite
-              // so the 400 is actionable verbatim
-              case e: IllegalArgumentException
-                  if Option(e.getMessage).exists(_.contains("evolveSchema = true")) =>
-                throw HttpError(400, e.getMessage.replace(
-                  "pass evolveSchema = true",
-                  "pass \"evolve\": true in the request body"))
-            }
-          ("version" -> version) ~ ("mode" -> mode)
-        case ("GET", "/store/tags") =>
-          // the named-release catalog: every tag as {name, version}
-          JArray(Snapshots.tags(spark, storeRoot).map { case (n, v) =>
-            (("name" -> n) ~ ("version" -> v)): JValue
-          }.toList)
-        case ("POST", "/store/tag") =>
-          // name a version ("release-2026-08" -> v12). Tags are
-          // immutable: a duplicate is a 409 (the library's message
-          // names the untag remedy), an unknown version / bad name a
-          // 400 via the global IllegalArgumentException map
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val name = spec \ "name" match {
-            case JString(n) => n
-            case other => throw HttpError(400, s"tag needs a 'name' string, got $other")
-          }
-          val version = spec \ "version" match {
-            case JInt(v) => v.toLong
-            case other => throw HttpError(400, s"tag needs an integer 'version', got $other")
-          }
-          try Snapshots.tag(spark, storeRoot, name, version)
-          catch {
-            case e: IllegalArgumentException
-                if Option(e.getMessage).exists(_.contains("already exists")) =>
-              throw HttpError(409, e.getMessage)
-          }
-          ("name" -> name) ~ ("version" -> version)
-        case ("POST", "/store/untag") =>
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val name = spec \ "name" match {
-            case JString(n) => n
-            case other => throw HttpError(400, s"untag needs a 'name' string, got $other")
-          }
-          Snapshots.untag(spark, storeRoot, name)
-          ("name" -> name) ~ ("removed" -> true)
-        case ("GET", "/store/excisions") =>
-          // the takedown audit trail (Snapshots.excisions): proof a
-          // GDPR excision ran — when, which columns, per-version row
-          // counts, the operator's meta — with the excised values
-          // themselves deliberately absent
-          JArray(Snapshots.excisions(spark, storeRoot).map { r =>
-            (("at" -> java.time.Instant.ofEpochMilli(r.atMs).toString) ~
-              ("columns" -> r.columns) ~
-              ("segments" -> JArray(r.segments.map { case (v, n) =>
-                (("version" -> v) ~ ("rows" -> n)): JValue
-              }.toList)) ~
-              ("rows" -> r.rows) ~
-              ("meta" -> metaJson(r.meta))): JValue
-          }.toList)
-        case ("POST", "/store/excise") =>
-          // hard delete across history (Snapshots.excise): the
-          // PII/GDPR takedown — rewrites every retained segment that
-          // carries the named rows, so history/as-of/changes at ANY
-          // version stop serving them. Body names ONE key column and
-          // either the `values` to excise (identity takedown, isin)
-          // or a closed `lo`/`hi` range (retention takedown); value
-          // literals are typed from the chain's union schema so the
-          // match (and the counting pass's pushdown and zone-map
-          // skip) compares in the column's own type.
-          import org.apache.spark.sql.functions.{col, lit}
-          import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, ByteType,
-            DoubleType, FloatType, StringType, BooleanType, DecimalType, DateType, TimestampType}
-          val spec = JsonMethods.parse(body(ex, cfg.maxBodyBytes))
-          val column = spec \ "column" match {
-            case JString(c) => c
-            case other => throw HttpError(400, s"excise needs a 'column' name, got $other")
-          }
-          def rawOf(v: JValue, what: String): String = v match {
-            case JString(str) => str
-            case JInt(i)      => i.toString
-            case JLong(l)     => l.toString
-            case JDouble(d)   => d.toString
-            case other => throw HttpError(400, s"unsupported excise $what $other")
-          }
-          val rawVals: Option[Seq[String]] = spec \ "values" match {
-            case JArray(vs) if vs.nonEmpty => Some(vs.map(rawOf(_, "value")))
-            case JArray(_) => throw HttpError(400, "excise 'values' must be non-empty")
-            case JNothing => None
-            case other => throw HttpError(400, s"excise 'values' must be an array, got $other")
-          }
-          val rawRange: Option[(String, String)] = (spec \ "lo", spec \ "hi") match {
-            case (JNothing, JNothing) => None
-            case (lo, hi) if lo != JNothing && hi != JNothing =>
-              Some((rawOf(lo, "bound"), rawOf(hi, "bound")))
-            case _ => throw HttpError(400, "excise range needs BOTH 'lo' and 'hi'")
-          }
-          if (rawVals.isDefined == rawRange.isDefined)
-            throw HttpError(400,
-              "excise takes exactly one of 'values' (identity takedown) or 'lo'/'hi' (range)")
-          // the column's type comes from the chain's UNION schema
-          // (Snapshots.chainSchema — footer reads only): an evolved
-          // chain that widened the column (int → long full
-          // redefinition) resolves to the WIDE type here, so no
-          // takedown value is ever narrowed/wrapped into silently
-          // missing the rows it names
-          val colType =
-            (try Snapshots.chainSchema(spark, storeRoot)
-             catch {
-               case e: IllegalArgumentException =>
-                 throw HttpError(404, Option(e.getMessage).getOrElse("the store is empty"))
-             })
-              .find(_.name == column)
-              .getOrElse(throw HttpError(400,
-                s"no segment of the store carries column '$column'")).dataType
-          // literals in the column's EXACT external type — a
-          // lit(v).cast(colType) wrapper would reach conditionBounds
-          // as Cast nodes and lose the zone-map segment skip
-          def typed(v: String): Any = {
-            def integral: Long = v.toLongOption.getOrElse(
-              throw HttpError(400, s"excise value '$v' is not integral for column '$column'"))
-            colType match {
-              case LongType    => integral
-              case IntegerType =>
-                val l = integral
-                if (l.isValidInt) l.toInt else throw HttpError(400,
-                  s"excise value '$v' overflows the store's int column '$column'")
-              case ShortType   =>
-                val l = integral
-                if (l >= Short.MinValue && l <= Short.MaxValue) l.toShort
-                else throw HttpError(400,
-                  s"excise value '$v' overflows the store's short column '$column'")
-              case ByteType =>
-                val l = integral
-                if (l >= Byte.MinValue && l <= Byte.MaxValue) l.toByte
-                else throw HttpError(400,
-                  s"excise value '$v' overflows the store's byte column '$column'")
-              case DoubleType => v.toDoubleOption.getOrElse(
-                throw HttpError(400, s"excise value '$v' is not numeric for column '$column'"))
-              case FloatType => v.toFloatOption.getOrElse(
-                throw HttpError(400, s"excise value '$v' is not numeric for column '$column'"))
-              case d: DecimalType =>
-                // the column's own scale, no rounding: a value with
-                // more fractional digits than the column can hold
-                // names rows that cannot exist — a typo, not a no-op
-                try new java.math.BigDecimal(v).setScale(d.scale, java.math.RoundingMode.UNNECESSARY)
-                catch {
-                  case _: NumberFormatException => throw HttpError(400,
-                    s"excise value '$v' is not numeric for column '$column'")
-                  case _: ArithmeticException => throw HttpError(400,
-                    s"excise value '$v' has more fractional digits than " +
-                      s"decimal(${d.precision},${d.scale}) column '$column' holds")
-                }
-              case DateType =>
-                try java.sql.Date.valueOf(v)
-                catch { case _: IllegalArgumentException => throw HttpError(400,
-                  s"excise value '$v' is not a yyyy-mm-dd date for column '$column'") }
-              case TimestampType =>
-                // zone-explicit strings are honored; naive wall-clock
-                // strings read in the SESSION timezone (the frame the
-                // store's instants render in) — never the JVM default,
-                // which would shift a GDPR takedown range by the
-                // host's UTC offset
-                try java.sql.Timestamp.from(
-                  try java.time.Instant.parse(v)
-                  catch {
-                    case _: java.time.format.DateTimeParseException =>
-                      java.time.LocalDateTime.parse(v.replace(' ', 'T'))
-                        .atZone(java.time.ZoneId.of(
-                          spark.conf.get("spark.sql.session.timeZone")))
-                        .toInstant
-                  })
-                catch { case _: java.time.format.DateTimeParseException => throw HttpError(400,
-                  s"excise value '$v' is not an ISO instant or yyyy-mm-dd hh:mm:ss[.f] " +
-                    s"timestamp for column '$column'") }
-              case StringType => v
-              case BooleanType => throw HttpError(400,
-                s"refusing a takedown keyed on boolean column '$column' — a true/false " +
-                  "match names half the table, not an entity; excise by a key column, " +
-                  "or use the library API with an explicit condition")
-              // an implicit string-vs-<type> cast would wrap the
-              // ATTRIBUTE, losing both the match semantics and the
-              // zone-map skip — refuse instead of comparing wrong
-              case other => throw HttpError(400,
-                s"excise by values/range is not supported for ${other.simpleString} " +
-                  s"column '$column' — use the library API with an explicit condition")
-            }
-          }
-          val condition = (rawVals, rawRange) match {
-            case (Some(vs), _) => col(column).isin(vs.map(typed): _*)
-            case (_, Some((lo, hi))) => col(column) >= typed(lo) && col(column) <= typed(hi)
-            case _ => throw HttpError(400, "unreachable: exclusivity checked above")
-          }
-          // audit provenance for the takedown record (ticket id, who
-          // ordered it) — free-form strings; the record never carries
-          // the excised values themselves
-          val exMeta: Map[String, String] = parseMetaObject(spec)
-          val report =
-            try Snapshots.excise(spark, storeRoot, condition, meta = exMeta)
-            catch {
-              // a takedown naming rows the store never held is a
-              // client addressing error — surface it as not-found,
-              // never a silently-recorded no-op
-              case e: IllegalArgumentException
-                  if Option(e.getMessage).exists(_.contains("matched NO rows")) =>
-                throw HttpError(404, e.getMessage)
-              case e: IllegalArgumentException =>
-                throw HttpError(400, Option(e.getMessage).getOrElse("bad excise request"))
-              // a commit/compact/vacuum raced the republish: the store
-              // is unchanged, the client retries over the new chain
-              case e: IllegalStateException
-                  if Option(e.getMessage).exists(_.contains("manifest publish race")) =>
-                throw HttpError(409, e.getMessage + " — retry the excision")
-            }
-          ("excised" -> JArray(report.map { case (v, n) =>
-            (("version" -> v) ~ ("rows" -> n)): JValue
-          }.toList)) ~ ("total_rows" -> report.map(_._2).sum)
-        case (m, p) =>
-          // known path + wrong verb is 405, not 404
-          val known = getPaths(p) || postPaths(p) || QueryRun.unapply(p).isDefined
-          if (known) throw HttpError(405, s"method $m not supported on $p")
-          else throw HttpError(404, "no such resource — GET / lists them")
+      val m = ex.getRequestMethod
+      hits.find(_._1.method == m) match {
+        case Some((route, arg)) => route.handler(new Req(ex, cfg.maxBodyBytes, params, limit, arg))
+        // known path + wrong verb is 405, not 404
+        case None if hits.nonEmpty =>
+          throw HttpError(405, s"method $m not supported on ${ex.getRequestURI.getPath}")
+        case None => throw HttpError(404, "no such resource — GET / lists them")
       }
     }
 
     server.createContext("/", (ex: HttpExchange) => {
       val reqId = s"graft-serve-${reqIds.incrementAndGet()}"
       val reqStartNs = System.nanoTime()
+      // the routes whose path matches, each with its templated segment
+      val hits = routes.flatMap(r => r.arg(ex.getRequestURI.getPath).map(r -> _))
       active.add(reqId)
       // deadline state for THIS request: the watchdog cancels the
       // request's job group (including jobs the handler has not
@@ -2029,7 +2001,7 @@ object WarehouseServer {
         // below). Discarding that finished work as a 504 just because
         // the flag flipped during final serialization would waste a
         // correct answer the client then recomputes.
-        (200, handle(ex))
+        (200, handle(ex, hits))
       } catch {
         // deadline first: the cancellation surfaces as a SparkException
         // whose shape varies by where the job was when it died —
@@ -2055,8 +2027,11 @@ object WarehouseServer {
       }
       // record AFTER the response is computed (latency covers the real
       // work) but regardless of whether the client hangs up mid-write
+      val method = ex.getRequestMethod
       val st = stats.computeIfAbsent(
-        statKey(ex.getRequestMethod, ex.getRequestURI.getPath), _ => new EndpointStat)
+        (if (routeMethods(method)) method else "(other)") + " " +
+          hits.headOption.fold("(other)")(_._1.path),
+        _ => new EndpointStat)
       st.count.incrementAndGet()
       if (code >= 400) st.errors.incrementAndGet()
       st.totalMs.addAndGet((System.nanoTime() - reqStartNs) / 1000000L)
@@ -2095,26 +2070,5 @@ object WarehouseServer {
     val count = new AtomicLong(0L)
     val errors = new AtomicLong(0L)
     val totalMs = new AtomicLong(0L)
-  }
-
-  // Keep these in sync with the match in handle(): a route added there
-  // but not here answers 404 on a wrong-verb request where the
-  // contract says 405 (nothing fails at compile time if they drift).
-  private val getPaths = Set("/", "/health", "/status", "/tables", "/tables/profile",
-    "/items/stats", "/items/histogram", "/items/frequencies", "/metadata/search",
-    "/queries", "/store/versions", "/store/read", "/store/read_range", "/store/read_eq",
-    "/store/history", "/store/changes", "/store/excisions", "/store/tags")
-  private val postPaths = Set("/cohort/query", "/cohort/population",
-    "/cohort/atom-counts", "/store/commit", "/store/excise", "/tokenize",
-    "/store/tag", "/store/untag",
-    "/ann/search", "/ann/refresh",
-    "/dedup/check", "/dedup/check_vec")
-
-  /** POST /queries/{name} matcher (no other path params exist). */
-  private object QueryRun {
-    def unapply(path: String): Option[String] =
-      if (path.startsWith("/queries/") && path.length > "/queries/".length)
-        Some(path.drop("/queries/".length)).filterNot(_.contains('/'))
-      else None
   }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * comparable, like ProbeSweep: cross-run numbers move with
   * box-hours.
   *
-  *   sbt "runMain graft.ExciseProbe [sfDir] [segments]"
+  *   sbt "Test/runMain graft.ExciseProbe [sfDir] [segments]"
   */
 object ExciseProbe {
   def main(args: Array[String]): Unit = {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * so depth only moves WHERE the page starts, not how much is read.
   *
   * Not part of `sbt test` (tens of seconds at sf0.1): run manually
-  * with `sbt "runMain graft.PaginationSoak"`; findings go to PLANS.md.
+  * with `sbt "Test/runMain graft.PaginationSoak"`; findings go to PLANS.md.
   */
 object PaginationSoak {
   def main(args: Array[String]): Unit = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * acceptance numbers (maxBucket 32→889/920, 64→913, 128→919,
   * 256→920 under hamming-1 union probes) live in PLANS.md.
   *
-  *   sbt "runMain graft.ProbeSweep [sfDir] [cap,cap,...]"
+  *   sbt "Test/runMain graft.ProbeSweep [sfDir] [cap,cap,...]"
   */
 object ProbeSweep {
   def main(args: Array[String]): Unit = {

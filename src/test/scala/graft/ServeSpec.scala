@@ -250,6 +250,92 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(get("/cohort/query")._1 == 405)
   }
 
+  /** `method path` on the server at `b`, with no body. */
+  private def send(b: String, method: String, path: String): (Int, JValue) = {
+    val r = client.send(
+      HttpRequest.newBuilder(URI.create(s"$b$path"))
+        .method(method, HttpRequest.BodyPublishers.noBody()).build(),
+      HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), JsonMethods.parse(r.body()))
+  }
+
+  /** Every (method, path) the server routes: dropping a route, or adding
+    * one without listing it here, fails the routing contract below.
+    */
+  private val routed: Set[(String, String)] = Set(
+    "GET" -> "/", "GET" -> "/health", "GET" -> "/status", "GET" -> "/tables",
+    "GET" -> "/tables/profile", "GET" -> "/items/stats", "GET" -> "/items/histogram",
+    "GET" -> "/items/frequencies", "GET" -> "/metadata/search", "GET" -> "/queries",
+    "GET" -> "/store/versions", "GET" -> "/store/read", "GET" -> "/store/read_range",
+    "GET" -> "/store/read_eq", "GET" -> "/store/history", "GET" -> "/store/changes",
+    "GET" -> "/store/excisions", "GET" -> "/store/tags",
+    "POST" -> "/cohort/query", "POST" -> "/cohort/population",
+    "POST" -> "/cohort/atom-counts", "POST" -> "/queries/{name}", "POST" -> "/store/commit",
+    "POST" -> "/store/excise", "POST" -> "/store/tag", "POST" -> "/store/untag",
+    "POST" -> "/tokenize", "POST" -> "/ann/search", "POST" -> "/ann/refresh",
+    "POST" -> "/dedup/check", "POST" -> "/dedup/check_vec")
+
+  test("routing contract: the service doc, /status keys, 405s and 404s follow the routes") {
+    assert(routed.size == 31)
+    // empty store and vector-store roots: every store read, commit and
+    // index build fails fast, but inside its own handler
+    val srv = WarehouseServer.start(spark, WarehouseServer.Config(dataDir = sf,
+      storeRoot = Some(tmpDir("serve-routes-store")),
+      annVecStoreRoot = Some(tmpDir("serve-routes-vec"))))
+    try {
+      val b = s"http://127.0.0.1:${srv.port}"
+      def concrete(path: String) = path.replace("{name}", "no_such_query")
+      // the service document lists every route but itself, once each
+      val links = (send(b, "GET", "/")._2 \ "links").asInstanceOf[JArray].arr.map { l =>
+        (l \ "method", l \ "href") match {
+          case (JString(m), JString(h)) => m -> h
+          case other => fail(s"bad link $other")
+        }
+      }
+      assert(links.size == links.toSet.size)
+      assert(links.toSet == routed - ("GET" -> "/"))
+      // each route reaches its handler: whatever the handler answers to
+      // a bare request, it is never the router's 404 or 405
+      routed.foreach { case (m, p) =>
+        val (code, v) = send(b, m, concrete(p))
+        assert(code != 405 && v \ "error" != JString("no such resource — GET / lists them"),
+          s"$m $p answered $code $v")
+      }
+      // ... and is counted under its own /status key
+      val endpoints = send(b, "GET", "/status")._2 \ "endpoints"
+      routed.foreach { case (m, p) =>
+        assert(longOf(endpoints \ s"$m $p" \ "count") >= 1L, s"no /status key for $m $p")
+      }
+      // a routed path answers any other verb with 405
+      routed.map(_._2).foreach { p =>
+        Seq("GET", "POST", "DELETE").filterNot(m => routed(m -> p)).foreach { m =>
+          assert(send(b, m, concrete(p))._1 == 405, s"$m $p")
+        }
+      }
+      // an unrouted path is a 404 whatever the verb
+      Seq("/nope", "/queries/", "/queries/a/b", "/health/x", "/store").foreach { p =>
+        Seq("GET", "POST").foreach(m => assert(send(b, m, p)._1 == 404, s"$m $p"))
+      }
+    } finally srv.close()
+  }
+
+  test("made-up request methods add at most one /status key") {
+    val srv = WarehouseServer.start(spark, WarehouseServer.Config(dataDir = sf))
+    try {
+      val b = s"http://127.0.0.1:${srv.port}"
+      def keys(): Set[String] = send(b, "GET", "/status")._2 \ "endpoints" match {
+        case JObject(fs) => fs.map(_._1).toSet
+        case other => fail(s"no endpoints object: $other")
+      }
+      val before = keys()
+      // the JDK server hands any method token to the handler; on a
+      // routed path each is a wrong verb
+      (1 to 40).foreach(i => assert(send(b, s"FOO$i", "/health")._1 == 405))
+      val gained = keys() -- before - "GET /status"
+      assert(gained.size <= 1, s"40 made-up methods added /status keys $gained")
+    } finally srv.close()
+  }
+
   test("store endpoints: import, versions, versioned read, path jail") {
     import org.apache.spark.sql.functions.col
     // stage an import batch under the store root (an allowed source)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * says bounds all fan-out work), and wall times.
   *
   * Not part of `sbt test` (minutes, not seconds): run manually with
-  * `sbt "runMain graft.Soak"`; findings are recorded in PLANS.md.
+  * `sbt "Test/runMain graft.Soak"`; findings are recorded in PLANS.md.
   */
 object Soak {
 
