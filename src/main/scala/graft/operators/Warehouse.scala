@@ -101,13 +101,7 @@ object Warehouse {
     val sig = graft.sources.Sources.listingSignature(s, s"$d/orders.parquet")
     val f = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
     val sigPath = new Path(root, "_source.sig")
-    val stampedSig =
-      if (!f.exists(sigPath)) None
-      else {
-        val in = f.open(sigPath)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        finally in.close()
-      }
+    val stampedSig = Option.when(f.exists(sigPath))(Snapshots.readText(f, sigPath).trim)
     val want = s"$sig|$marker"
     if (Snapshots.latestVersion(s, root) != 2L || !stampedSig.contains(want)) {
       val p = new Path(root)

@@ -180,10 +180,6 @@ object WarehouseServer {
 
   // ------------------------------------------------------------ JSON
 
-  /** Row values → JSON. Non-finite doubles are JSON-illegal, so they
-    * travel as strings ("NaN"/"Infinity") rather than breaking the
-    * document; binary is base64.
-    */
   /** Commit/excise provenance from a request body: the optional
     * string-valued `meta` object, with per-key typed 400s.
     */
@@ -203,6 +199,16 @@ object WarehouseServer {
   private def metaJson(meta: Map[String, String]): JObject =
     JObject(meta.toList.sortBy(_._1).map { case (k, v) => k -> (JString(v): JValue) })
 
+  /** A near-dup verdict row of [[graft.dedup.Dedup]]'s ingest as
+    * JSON, its `keep`, `dup_of` and `n_matches` read by name.
+    */
+  private def verdictJson(v: Row): JObject =
+    JObject(List("keep", "dup_of", "n_matches").map(c => c -> jval(v.getAs[Any](c))))
+
+  /** Row values → JSON. Non-finite doubles are JSON-illegal, so they
+    * travel as strings ("NaN"/"Infinity") rather than breaking the
+    * document; binary is base64.
+    */
   private def jval(v: Any): JValue = v match {
     case null                 => JNull
     case s: String            => JString(s)
@@ -564,7 +570,7 @@ object WarehouseServer {
 
   /** A routed request as its handler sees it: the query params, the
     * page bound, and `arg`, the templated path segment. The body is
-    * read on demand, capped at `maxBytes`.
+    * read on demand, capped at `maxBytes`; an empty one is a 400.
     */
   private final class Req(ex: HttpExchange, maxBytes: Int,
       val params: Map[String, String], limit: Int, val arg: String) {
@@ -578,7 +584,11 @@ object WarehouseServer {
         if (buf.size > maxBytes) throw HttpError(413, s"request body exceeds $maxBytes bytes")
         n = in.read(chunk)
       }
-      new String(buf.toByteArray, UTF_8)
+      val text = new String(buf.toByteArray, UTF_8)
+      // every body is a JSON document or the cohort DSL: an empty one
+      // is the client's omission, not a parser fault to echo back
+      if (text.trim.isEmpty) throw HttpError(400, "request body is empty")
+      text
     }
 
     def json: JValue = JsonMethods.parse(body)
@@ -1244,15 +1254,15 @@ object WarehouseServer {
         req.page(q.run(spark, cfg.dataDir))
       },
       Route("GET", "/store/versions", "store versions") { _ =>
-        JArray(Snapshots.versionsWithMeta(spark, storeRoot).map { case (v, kind, path, ts, meta) =>
-          val base = ("version" -> v) ~ ("kind" -> kind) ~ ("path" -> path)
+        JArray(Snapshots.manifestState(spark, storeRoot).lines.map { l =>
+          val base = ("version" -> l.v) ~ ("kind" -> l.kind) ~ ("path" -> l.rel)
           // commit_ts is omitted (not null) on lines that predate the
           // timestamp field — "unknown", not "at the epoch"; meta is
           // omitted when the commit carried none
           val stamped =
-            if (ts >= 0) base ~ ("commit_ts" -> java.time.Instant.ofEpochMilli(ts).toString)
+            if (l.ts >= 0) base ~ ("commit_ts" -> java.time.Instant.ofEpochMilli(l.ts).toString)
             else base
-          (if (meta.nonEmpty) stamped ~ ("meta" -> metaJson(meta))
+          (if (l.meta.nonEmpty) stamped ~ ("meta" -> metaJson(l.meta))
            else stamped): JValue
         }.toList)
       },
@@ -1322,9 +1332,9 @@ object WarehouseServer {
             // pointing the append-only form at a merge-read store
             // (tombstoned segments) is a client-addressable misuse —
             // 409 with the remedy this route actually offers.
-            // Matched on the tombstone guard's message (the
-            // publish-race precedent): other IllegalStateExceptions
-            // (malformed manifest, race) are server faults, 500
+            // Matched on the tombstone guard's message: other
+            // IllegalStateExceptions (malformed manifest, race) are
+            // server faults, 500
             case e: IllegalStateException
               if Option(e.getMessage).exists(_.startsWith("append-only read")) =>
               throw HttpError(409, e.getMessage +
@@ -1575,10 +1585,7 @@ object WarehouseServer {
         val corpus = Tables.documents(spark, cfg.dataDir)
         val v = graft.dedup.Dedup.ingestAgainstIndex(batch, corpus, idxRoot, minJ)
           .collect().head // exactly one verdict row for the 1-row batch
-        ("keep" -> v.getBoolean(3)) ~
-          ("dup_of" -> (if (v.isNullAt(1)) JNull else JInt(v.getLong(1)))) ~
-          ("n_matches" -> v.getLong(2)) ~
-          ("min_jaccard" -> minJ)
+        verdictJson(v) ~ ("min_jaccard" -> minJ)
       },
       Route("POST", "/dedup/check_vec", "vector near-dup verdict",
         body = "{embedding: [...]}") { req =>
@@ -1638,10 +1645,7 @@ object WarehouseServer {
           }
         val v = graft.dedup.Dedup.ingestWith(batch, corpus, index)
           .collect().head // exactly one verdict row for the 1-row batch
-        ("keep" -> v.getBoolean(3)) ~
-          ("dup_of" -> (if (v.isNullAt(1)) JNull else JInt(v.getLong(1)))) ~
-          ("n_matches" -> v.getLong(2)) ~
-          ("tau" -> g.tau)
+        verdictJson(v) ~ ("tau" -> g.tau)
       },
       Route("POST", "/store/commit", "import",
         body = "{source, mode: full|delta, evolve?, stats?, blooms?, meta?}") { req =>
@@ -1902,8 +1906,7 @@ object WarehouseServer {
               throw HttpError(404, e.getMessage)
             // a commit/compact/vacuum raced the republish: the store
             // is unchanged, the client retries over the new chain
-            case e: IllegalStateException
-                if Option(e.getMessage).exists(_.contains("manifest publish race")) =>
+            case e: Snapshots.ManifestRace =>
               throw HttpError(409, e.getMessage + " — retry the excision")
           }
         ("excised" -> JArray(report.map { case (v, n) =>

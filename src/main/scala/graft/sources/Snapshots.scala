@@ -55,7 +55,7 @@ import scala.jdk.CollectionConverters._
   * link(2) fails atomically on an existing destination) or
   * refuse-existing rename (HDFS-contract stores) — a single-winner
   * CAS when two writers race on the same version number; see
-  * [[appendManifest]] for the exact protocol and its fallbacks.
+  * [[publishExclusive]] for the exact protocol and its fallbacks.
   *
   * Each commit is assumed to carry at most one row per merge key (the
   * reference's import batches do). Duplicate keys within one delta tie
@@ -87,14 +87,11 @@ object Snapshots {
 
   private def storedFormat(f: FileSystem, root: String): Option[Int] = {
     val p = new Path(root, FormatMarkerName)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
+    Option.when(f.exists(p)) {
+      val raw = readText(f, p).trim
       // an unparseable marker is itself a format we don't know —
       // refuse with the upgrade message, never guess
-      raw.toIntOption.orElse(throw new IllegalStateException(
+      raw.toIntOption.getOrElse(throw new IllegalStateException(
         s"snapshot store $root carries format marker '$raw' this build cannot " +
           s"parse (it reads formats <= $SupportedManifestFormat) — upgrade the " +
           "reader before opening this store"))
@@ -102,31 +99,97 @@ object Snapshots {
   }
 
   /** Stamp `needed` into the `_format` marker when the store's stamp
-    * is lower (monotone — a rollback of the WRITER never downgrades
-    * the marker out from under data that still needs it). Tmp+rename
-    * so no reader sees a half-written marker; concurrent stampers
-    * write identical bytes, so whoever wins is right.
+    * is lower. The marker is written once, onto an absent marker
+    * (format 1 needs none, and 2 is the only format ever stamped), so
+    * it publishes exclusively: a concurrent stamper that got there
+    * first wrote the same value, which a re-read confirms. Monotone —
+    * a rollback of the WRITER never downgrades the marker out from
+    * under data that still needs it.
     */
-  private def stampFormat(f: FileSystem, root: String, needed: Int): Unit = {
-    if (storedFormat(f, root).getOrElse(1) >= needed) return
-    val dest = new Path(root, FormatMarkerName)
-    val tmp = new Path(root,
-      s"$FormatMarkerName.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
+  private def stampFormat(f: FileSystem, root: String, needed: Int): Unit =
+    if (storedFormat(f, root).getOrElse(1) < needed &&
+        !publishExclusive(f, root, FormatMarkerName, needed.toString.getBytes("UTF-8")) &&
+        storedFormat(f, root).getOrElse(1) < needed)
+      throw new IllegalStateException(
+        s"snapshot store $root carries a format marker below $needed, which no " +
+          s"writer stamps — refusing to publish a format-$needed manifest under it")
+
+  /** A small store file's whole text (UTF-8). */
+  private[graft] def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** Names of the write-then-publish temporaries [[publishExclusive]]
+    * leaves behind when a writer dies between the two steps. No
+    * published name matches (tag names may not contain `.tmp-`), so
+    * [[vacuumFrom]] sweeps them by this pattern alone.
+    */
+  private val TmpName = "_.+\\.tmp-[0-9a-f-]+".r
+
+  private def tmpPath(root: String, name: String): Path =
+    new Path(root, s"$name.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
+
+  /** THE small-file publish of the store: make `root/name` hold
+    * `bytes` unless a file of that name already exists, in one
+    * single-winner step. Returns whether this writer won. Every
+    * manifest, tag, excise audit record and format marker publishes
+    * through here.
+    *
+    * The bytes go to a tmp sibling first: a created-but-unwritten file
+    * must never be listable under its final name (a reader between
+    * create and close would see an empty manifest or tag). Then:
+    *  - `file:` stores hard-link the tmp file to the final name.
+    *    POSIX rename REPLACES an existing destination, so
+    *    exists-then-rename lets two writers both "win" and the later
+    *    one silently overwrite the earlier; link(2) fails atomically
+    *    when the destination exists.
+    *  - other stores (HDFS, object-store committers with a rename
+    *    contract) rename, which refuses an existing destination
+    *    atomically there. It is also the fallback for `file:` mounts
+    *    that cannot hard-link (FAT, some CIFS/fuse) — non-atomic there,
+    *    but the store keeps working where it worked before links.
+    */
+  private def publishExclusive(
+      f: FileSystem, root: String, name: String, bytes: Array[Byte]): Boolean = {
+    val dest = new Path(root, name)
+    val tmp = tmpPath(root, name)
     val out = f.create(tmp, true)
-    try out.write(needed.toString.getBytes("UTF-8")) finally out.close()
-    val qualified = f.makeQualified(dest)
-    if (qualified.toUri.getScheme == "file") {
-      // atomic replace on posix; markers are monotone so replacing a
-      // concurrent stamper's identical (or lower) value is harmless
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(f.makeQualified(tmp).toUri),
-        java.nio.file.Paths.get(qualified.toUri),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    } else {
-      f.delete(dest, false)
-      if (!f.rename(tmp, dest)) { f.delete(tmp, false); () }
-    }
+    try out.write(bytes) finally out.close()
+    def renamed: Boolean = !f.exists(dest) && f.rename(tmp, dest)
+    try {
+      val qualified = f.makeQualified(dest)
+      if (qualified.toUri.getScheme != "file") renamed
+      else {
+        val tmpNio = java.nio.file.Paths.get(f.makeQualified(tmp).toUri)
+        try { java.nio.file.Files.createLink(java.nio.file.Paths.get(qualified.toUri), tmpNio); true }
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+          case e @ (_: UnsupportedOperationException | _: java.nio.file.FileSystemException) =>
+            // Distinguish "this mount can't hard-link" from a genuine
+            // failure (quota, access, IO) WITHOUT parsing strerror
+            // text — NIO's exception reasons are locale-dependent, so
+            // string-matching "not supported" breaks on any non-English
+            // JVM. Probe instead: link the tmp file to a throwaway
+            // sibling. Probe fails → links don't work here → rename.
+            // Probe succeeds → the original failure was real —
+            // propagate loudly rather than silently reopening the
+            // lost-commit race link(2) exists to close.
+            val probe = java.nio.file.Paths.get(f.makeQualified(tmpPath(root, "_linkprobe")).toUri)
+            val linksWork =
+              try {
+                java.nio.file.Files.createLink(probe, tmpNio)
+                // the LINK is the capability evidence — a failed cleanup
+                // of the probe file must not be misread as "links don't
+                // work" (the sweep reclaims it by its tmp name)
+                try java.nio.file.Files.delete(probe)
+                catch { case scala.util.control.NonFatal(_) => () }
+                true
+              } catch { case scala.util.control.NonFatal(_) => false }
+            if (linksWork) throw e else renamed
+        }
+      }
+    } finally { f.delete(tmp, false); () }
   }
 
   /** Newest committed manifest as (file number, path), if any.
@@ -183,6 +246,9 @@ object Snapshots {
       fileNum: Long, lines: Seq[ManifestLine]) {
     /** (version, kind, path) entries, version-ascending. */
     def versions: Seq[(Long, String, String)] = lines.map(l => (l.v, l.kind, l.rel))
+
+    /** The data version the next commit publishes. */
+    def nextVersion: Long = lines.lastOption.map(_.v + 1).getOrElse(1L)
   }
 
   private def parseMeta(raw: String, mp: Path): Map[String, String] =
@@ -208,11 +274,7 @@ object Snapshots {
     latestManifest(f, root) match {
       case None => ManifestState(0L, Seq.empty)
       case Some((n, mp)) =>
-        val in = f.open(mp)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val lines = text.linesIterator.filter(_.nonEmpty).map { line =>
+        val lines = readText(f, mp).linesIterator.filter(_.nonEmpty).map { line =>
           line.split("\t", 5) match {
             case Array(v, kind, path, ts, meta) =>
               ManifestLine(v.toLong, kind, path, ts.toLong, parseMeta(meta, mp))
@@ -229,21 +291,6 @@ object Snapshots {
   /** (version, kind, path) entries, version-ascending. */
   def versions(spark: SparkSession, root: String): Seq[(Long, String, String)] =
     manifestState(spark, root).versions
-
-  /** [[versions]] plus each line's commit wall-time (epoch millis;
-    * -1 when the line predates the timestamp field).
-    */
-  def versionsWithTimes(spark: SparkSession, root: String): Seq[(Long, String, String, Long)] =
-    manifestState(spark, root).lines.map(l => (l.v, l.kind, l.rel, l.ts))
-
-  /** [[versionsWithTimes]] plus each commit's provenance meta — the
-    * caller-supplied facts ([[commit]]/[[commitDelta]]/[[compact]]'s
-    * `meta`) that answer "which import job wrote this version";
-    * empty on lines that predate the field or carried none.
-    */
-  def versionsWithMeta(
-      spark: SparkSession, root: String): Seq[(Long, String, String, Long, Map[String, String])] =
-    manifestState(spark, root).lines.map(l => (l.v, l.kind, l.rel, l.ts, l.meta))
 
   /** `private[graft]` is a test seam: the two-writer race spec drives
     * the publish step directly to interleave two writers that both
@@ -262,15 +309,14 @@ object Snapshots {
       spark: SparkSession, root: String, version: Long, kind: String, rel: String): Unit = {
     val st = manifestState(spark, root)
     if (st.lines.exists(_.v >= version))
-      throw new IllegalStateException(
-        s"manifest publish race: v$version already committed in $root")
+      throw new ManifestRace(s"v$version already committed in $root")
     publishAt(spark, root, st.fileNum + 1,
       st.lines :+ ManifestLine(version, kind, rel, System.currentTimeMillis(), Map.empty))
   }
 
   /** Publish `entries` as manifest file `_manifest.v<fileNum>` — the
-    * single-winner CAS every manifest mutation goes through. Throws
-    * IllegalStateException("manifest publish race…") when that file
+    * single-winner CAS every manifest mutation goes through
+    * ([[publishExclusive]]). Throws [[ManifestRace]] when that file
     * number is already taken, i.e. ANY publish landed after the
     * [[manifestState]] read that produced `fileNum`. A line whose
     * commit time is unknown (-1, inherited from a pre-timestamp
@@ -298,71 +344,36 @@ object Snapshots {
     // manifest can already see the format it needs (meta-less
     // manifests stay format 1 — no marker, no churn)
     if (entries.exists(_.meta.nonEmpty)) stampFormat(f, root, 2)
-    // write-to-tmp-then-rename: a created-but-unwritten manifest must
-    // never be listable under its final name (a reader between create
-    // and close would see an empty store). The ManifestName pattern
-    // matches whole names only, so readers skip the .tmp file. Rename
-    // refuses an existing destination, which keeps the same-version
-    // writer race a loud failure instead of a lost commit.
-    val tmp = new Path(root, s"_manifest.v$fileNum.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(lines.getBytes("UTF-8")) finally out.close()
-    val dest = new Path(root, s"_manifest.v$fileNum")
-    val qualified = f.makeQualified(dest)
-    // HDFS (and object-store committers with a rename contract):
-    // rename refuses an existing destination atomically, which keeps
-    // the same-version writer race a loud failure, not a lost commit.
-    // Also the fallback for file: mounts without hard-link support.
-    def renamePublish(): Unit =
-      if (f.exists(dest) || !f.rename(tmp, dest)) {
-        f.delete(tmp, false)
-        throw new IllegalStateException(
-          s"manifest publish race: manifest file v$fileNum already published in $root")
-      }
-    if (qualified.toUri.getScheme == "file") {
-      // posix rename REPLACES an existing destination, so
-      // exists-then-rename has a lost-commit window under two
-      // same-version writers. link(2) is the local-fs CAS: creating a
-      // hard link fails atomically when the destination exists.
-      val destNio = java.nio.file.Paths.get(qualified.toUri)
-      val tmpNio = java.nio.file.Paths.get(f.makeQualified(tmp).toUri)
-      try {
-        java.nio.file.Files.createLink(destNio, tmpNio)
-        f.delete(tmp, false)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false)
-          throw new IllegalStateException(
-            s"manifest publish race: manifest file v$fileNum already published in $root")
-        case e @ (_: UnsupportedOperationException | _: java.nio.file.FileSystemException) =>
-          // Distinguish "this mount can't hard-link" (FAT, some
-          // CIFS/fuse) from a genuine failure (quota, access, IO)
-          // WITHOUT parsing strerror text — NIO's exception reasons
-          // are locale-dependent, so string-matching "not supported"
-          // breaks on any non-English JVM. Probe instead: link the
-          // tmp file to a throwaway sibling. Probe fails → links
-          // don't work here → degrade to the rename CAS (non-atomic
-          // there, but the store keeps working where the old publish
-          // worked). Probe succeeds → links DO work and the original
-          // failure was real — propagate loudly rather than silently
-          // reopening the lost-commit race link(2) exists to close.
-          val probe = java.nio.file.Paths.get(f.makeQualified(new Path(root,
-            s".linkprobe-${java.util.UUID.randomUUID.toString.take(8)}")).toUri)
-          val linksWork =
-            try {
-              java.nio.file.Files.createLink(probe, tmpNio)
-              // the LINK is the capability evidence — a failed cleanup
-              // of the probe file must not be misread as "links don't
-              // work" (that would silently downgrade to the racy
-              // rename publish on a mount where linking works)
-              try java.nio.file.Files.delete(probe)
-              catch { case scala.util.control.NonFatal(_) => () }
-              true
-            } catch { case scala.util.control.NonFatal(_) => false }
-          if (linksWork) { f.delete(tmp, false); throw e }
-          else renamePublish()
-      }
-    } else renamePublish()
+    if (!publishExclusive(f, root, s"_manifest.v$fileNum", lines.getBytes("UTF-8")))
+      throw new ManifestRace(s"manifest file v$fileNum already published in $root")
+  }
+
+  /** A lost manifest publish CAS: some publish landed after the
+    * [[manifestState]] read the loser built on. The store is unchanged
+    * by the loser; [[withManifestRetry]] redoes an attempt over a
+    * fresh read, every other caller fails loudly with it.
+    */
+  final class ManifestRace(detail: String)
+      extends IllegalStateException(s"manifest publish race: $detail")
+
+  /** THE retry loop of the manifest publishes that may be redone: run
+    * `attempt` over a fresh [[manifestState]] read, and again over a
+    * fresh read each time it loses the publish CAS, at most `attempts`
+    * times in all. The last loss propagates, and every other failure
+    * propagates at once. An attempt must derive what it publishes
+    * from the read it is given — recomputing from the fresh read is
+    * what makes the retry safe.
+    */
+  @scala.annotation.tailrec
+  private def withManifestRetry[T](spark: SparkSession, root: String, attempts: Int)(
+      attempt: ManifestState => T): T = {
+    val won =
+      try Some(attempt(manifestState(spark, root)))
+      catch { case _: ManifestRace if attempts > 1 => None }
+    won match {
+      case Some(t) => t
+      case None => withManifestRetry(spark, root, attempts - 1)(attempt)
+    }
   }
 
   /** Normalize the tombstone column: an absent `_deleted` column, or a
@@ -618,7 +629,7 @@ object Snapshots {
   }
 
   private[graft] def nextVersion(spark: SparkSession, root: String): Long =
-    versions(spark, root).lastOption.map(_._1 + 1).getOrElse(1L)
+    manifestState(spark, root).nextVersion
 
   /** Write data under an attempt-unique directory, then publish it via
     * the manifest. The manifest is the ONLY source of truth: a crash
@@ -633,13 +644,6 @@ object Snapshots {
       expectedVersion: Option[Long] = None, statsCols: Seq[String] = Nil,
       meta: Map[String, String] = Map.empty, bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    // ONE manifest read serves the dir naming AND the first publish
-    // attempt (this path is the streaming sinks' per-micro-batch hot
-    // loop — the old shape re-listed and re-parsed the manifest three
-    // times per commit, the exact anti-pattern readChain's comment
-    // calls out); only a lost CAS pays a fresh read for its retry.
-    var st = manifestState(spark, root)
-    def next(s: ManifestState): Long = s.lines.lastOption.map(_.v + 1).getOrElse(1L)
     // staleness pin for content computed from a chain read (compact):
     // the CAS alone only detects a SAME-version collision — a commit
     // that landed between the fold's chain read and this publish just
@@ -648,44 +652,40 @@ object Snapshots {
     // intervening commit makes this a loud failure instead — checked
     // before the write too, so a fold already stale here writes
     // nothing. (A commit racing our own pre-write read surfaces the
-    // same way: the publish CAS below fails and the retry re-reads.)
+    // same way: the publish CAS fails and the retry re-reads.)
     def checkPin(v: Long): Unit = expectedVersion.foreach { ev =>
       if (v != ev) throw new IllegalStateException(
         s"stale fold: expected to publish v$ev but the store is at v${v - 1} " +
           s"— a commit landed after the chain read; re-run the fold over the new chain")
     }
-    checkPin(next(st))
-    val rel = s"v${next(st)}-${java.util.UUID.randomUUID.toString.take(8)}"
-    validateStatsCols(df, statsCols) // BEFORE the write — a typo'd column must not cost a corpus write
-    validateBloomCols(df, bloomCols)
-    df.write.mode("errorifexists").parquet(s"$root/$rel")
-    // sidecars BEFORE publish: a crash here leaves an unreferenced
-    // dir for the orphan sweep, never a referenced segment with
-    // half-written stats or blooms
-    if (statsCols.nonEmpty) writeStatsSidecar(df, root, rel, statsCols)
-    if (bloomCols.nonEmpty) writeBloomSidecar(df, root, rel, bloomCols)
-    // the data dir is written ONCE; only the manifest publish retries
-    // (losing the CAS re-reads the chain and re-publishes the same
-    // segment under the next version — the dir name keeps the first
-    // attempt's version, which is cosmetic: the manifest is the only
-    // source of truth for version → path)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val v = next(st)
+    // ONE manifest read serves the dir naming AND the first publish
+    // attempt (this path is the streaming sinks' per-micro-batch hot
+    // loop); only a lost CAS pays a fresh read for its retry. The data
+    // dir is written ONCE, by the first attempt: a retry re-publishes
+    // the same segment under the next version — the dir name keeps the
+    // first attempt's version, which is cosmetic: the manifest is the
+    // only source of truth for version → path.
+    var written: Option[String] = None
+    withManifestRetry(spark, root, maxAttempts) { st =>
+      val v = st.nextVersion
       checkPin(v)
-      try {
-        publishAt(spark, root, st.fileNum + 1,
-          st.lines :+ ManifestLine(v, kind, rel, System.currentTimeMillis(), meta))
-        return v
+      val rel = written.getOrElse {
+        val r = s"v$v-${java.util.UUID.randomUUID.toString.take(8)}"
+        validateStatsCols(df, statsCols) // BEFORE the write — a typo'd column must not cost a corpus write
+        validateBloomCols(df, bloomCols)
+        df.write.mode("errorifexists").parquet(s"$root/$r")
+        // sidecars BEFORE publish: a crash here leaves an unreferenced
+        // dir for the orphan sweep, never a referenced segment with
+        // half-written stats or blooms
+        if (statsCols.nonEmpty) writeStatsSidecar(df, root, r, statsCols)
+        if (bloomCols.nonEmpty) writeBloomSidecar(df, root, r, bloomCols)
+        written = Some(r)
+        r
       }
-      catch {
-        case e: IllegalStateException
-          if e.getMessage != null && e.getMessage.contains("manifest publish race")
-            && attempt < maxAttempts => st = manifestState(spark, root)
-      }
+      publishAt(spark, root, st.fileNum + 1,
+        st.lines :+ ManifestLine(v, kind, rel, System.currentTimeMillis(), meta))
+      v
     }
-    -1L // unreachable
   }
 
   /** Commit a full snapshot; returns the new version number. A full
@@ -696,7 +696,7 @@ object Snapshots {
     * `meta` is commit provenance — caller-supplied facts about the
     * transaction itself (who imported, which batch/job, why), the
     * reference store's facts-on-the-transaction-entity idea: stored
-    * on the manifest line, surfaced by [[versionsWithMeta]],
+    * on the manifest line, surfaced by [[manifestState]]'s lines,
     * [[history]]'s `commit_meta` column, and the serving layer's
     * /store/versions, so "which import wrote v7" is answerable
     * forever without a side channel.
@@ -1027,21 +1027,16 @@ object Snapshots {
       spark: SparkSession, root: String, rel: String): Option[Map[String, ColStats]] = {
     val f = fs(spark, root)
     val p = new Path(s"$root/$rel", StatsName)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val j = org.json4s.jackson.JsonMethods.parse(text)
-      Some(j.asInstanceOf[org.json4s.JObject].obj.map { case (c, v) =>
+    Option.when(f.exists(p)) {
+      val j = org.json4s.jackson.JsonMethods.parse(readText(f, p))
+      j.asInstanceOf[org.json4s.JObject].obj.map { case (c, v) =>
         implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
         val t = (v \ "type").extract[String]
         val allNull = (v \ "all_null").extract[Boolean]
         c -> ColStats(t,
           (v \ "min").extractOpt[String].getOrElse(""),
           (v \ "max").extractOpt[String].getOrElse(""), allNull)
-      }.toMap)
+      }.toMap
     }
   }
 
@@ -1521,6 +1516,9 @@ object Snapshots {
     * (`_tag.<name>` beside the manifests): re-tagging is refused —
     * a silently moved tag would change what every pinned reader
     * means by the name — so renames go through untag + tag, loudly.
+    * A tag publishes like a manifest ([[publishExclusive]]): of two
+    * concurrent `tag` calls on one name exactly one wins, and the
+    * other fails with "already exists".
     * [[vacuumFrom]] refuses to delete versions a tag still
     * addresses: retention can never quietly turn a named release
     * into a dangling pointer.
@@ -1533,32 +1531,17 @@ object Snapshots {
   }
 
   def tag(spark: SparkSession, root: String, name: String, version: Long): Unit = {
-    val f = fs(spark, root)
-    val dest = new Path(root, tagFile(name))
+    val file = tagFile(name)
     require(versions(spark, root).exists(_._1 == version),
       s"cannot tag: no version $version in $root")
-    def exists(): Nothing = throw new IllegalArgumentException(
-      s"tag '$name' already exists in $root — tags are immutable (a silently moved " +
-        "tag changes what every pinned reader means by the name); untag first or " +
-        "pick a new name")
-    if (f.exists(dest)) exists()
-    // tmp + no-replace rename: a reader never sees a half-written
-    // tag, and losing a concurrent tag race is loud, not last-wins
-    val tmp = new Path(root, s"${tagFile(name)}.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-    val qualified = f.makeQualified(dest)
-    if (qualified.toUri.getScheme == "file") {
-      try {
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(f.makeQualified(tmp).toUri),
-          java.nio.file.Paths.get(qualified.toUri))
-        ()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false); exists()
-      }
-    } else if (!f.rename(tmp, dest)) { f.delete(tmp, false); exists() }
+    // the manifest's single-winner publish: a reader never sees a
+    // half-written tag, and losing a concurrent tag race is loud, not
+    // last-wins
+    if (!publishExclusive(fs(spark, root), root, file, version.toString.getBytes("UTF-8")))
+      throw new IllegalArgumentException(
+        s"tag '$name' already exists in $root — tags are immutable (a silently moved " +
+          "tag changes what every pinned reader means by the name); untag first or " +
+          "pick a new name")
   }
 
   def untag(spark: SparkSession, root: String, name: String): Unit = {
@@ -1580,12 +1563,10 @@ object Snapshots {
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("_tag.")
-        && !s.getPath.getName.matches(".*\\.tmp-[0-9a-f-]+$"))
+        && !TmpName.matches(s.getPath.getName))
       .map { s =>
         val name = s.getPath.getName.stripPrefix("_tag.")
-        val in = f.open(s.getPath)
-        val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
+        val raw = readText(f, s.getPath).trim
         name -> raw.toLongOption.getOrElse(throw new IllegalStateException(
           s"tag '$name' in $root carries unparseable content '$raw'"))
       }
@@ -1647,23 +1628,9 @@ object Snapshots {
   def vacuum(
       spark: SparkSession, root: String, keepAfterVersion: Long,
       force: Boolean = false, maxAttempts: Int = 8,
-      orphanGraceMs: Long = 24L * 3600 * 1000): Seq[Long] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return vacuumFrom(spark, root, keepAfterVersion, manifestState(spark, root),
-        force, orphanGraceMs)
-      catch {
-        // ONLY the publish race retries (with a fresh chain read —
-        // recomputing the retained lines is what makes the retry safe);
-        // refusals propagate
-        case e: IllegalStateException
-          if e.getMessage != null && e.getMessage.contains("manifest publish race")
-            && attempt < maxAttempts => ()
-      }
-    }
-    Seq.empty // unreachable
-  }
+      orphanGraceMs: Long = 24L * 3600 * 1000): Seq[Long] =
+    withManifestRetry(spark, root, maxAttempts)(
+      vacuumFrom(spark, root, keepAfterVersion, _, force, orphanGraceMs))
 
   /** One vacuum attempt against an explicitly-passed chain read —
     * `private[graft]` test seam so the vacuum-during-ingest race spec
@@ -1735,18 +1702,12 @@ object Snapshots {
           && s.getModificationTime < cutoff) {
         f.delete(s.getPath, true); ()
       }
-      // stray write-then-rename temporaries: a crash between creating
-      // and renaming a manifest or excise-audit tmp file leaves it in
-      // the root forever (nothing ever references a .tmp- name). The
-      // final `_manifest.v<N>` / `_excise.v<N>` names never match
-      // these patterns, and the grace window protects a publish in
-      // flight right now.
-      if (s.isFile
-          && (n.matches("_manifest\\.v\\d+\\.tmp-[0-9a-f-]+")
-            || n.matches("_excise\\.v\\d+\\.tmp-[0-9a-f-]+")
-            || n.matches("_format\\.tmp-[0-9a-f-]+")
-            || n.matches("_tag\\..+\\.tmp-[0-9a-f-]+"))
-          && s.getModificationTime < cutoff) {
+      // stray publish temporaries: a crash between writing and
+      // publishing a manifest, tag, audit record or marker leaves its
+      // tmp file in the root forever (nothing ever references a tmp
+      // name). No published name matches [[TmpName]], and the grace
+      // window protects a publish in flight right now.
+      if (s.isFile && TmpName.matches(n) && s.getModificationTime < cutoff) {
         f.delete(s.getPath, false); ()
       }
     }
@@ -1866,11 +1827,7 @@ object Snapshots {
       })
       .sortBy(_._1)
       .map { case (n, p) =>
-        val in = f.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val j = org.json4s.jackson.JsonMethods.parse(text)
+        val j = org.json4s.jackson.JsonMethods.parse(readText(f, p))
         ExciseRecord(
           n,
           (j \ "at_ms").extract[Long],
@@ -1893,23 +1850,16 @@ object Snapshots {
       ("rows" -> segments.map(_._2).sum) ~
       ("meta" -> org.json4s.JObject(meta.toList.sortBy(_._1)
         .map { case (k, v) => k -> (org.json4s.JString(v): org.json4s.JValue) }))
-    // write-to-tmp then rename, like every manifest publish: a crash
-    // (or a concurrent excisions() listing) must never observe a
-    // partial record under the final name — one truncated sidecar
-    // would make the WHOLE trail unreadable forever, since vacuum
-    // deliberately never deletes these. The final name is unique (the
-    // publish CAS won this fileNum), so plain rename suffices — no
-    // second CAS needed.
-    val tmp = new Path(root,
-      s"_excise.v$fileNum.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(org.json4s.jackson.JsonMethods.compact(obj).getBytes("UTF-8"))
-    finally out.close()
-    if (!f.rename(tmp, new Path(root, s"_excise.v$fileNum"))) {
-      f.delete(tmp, false)
+    // published whole, like every manifest: a crash (or a concurrent
+    // excisions() listing) must never observe a partial record under
+    // the final name — one truncated sidecar would make the WHOLE
+    // trail unreadable forever, since vacuum deliberately never
+    // deletes these. The name is unique (the manifest CAS won this
+    // fileNum), so losing it means the store was tampered with.
+    if (!publishExclusive(f, root, s"_excise.v$fileNum",
+        org.json4s.jackson.JsonMethods.compact(obj).getBytes("UTF-8")))
       throw new java.io.IOException(
         s"could not publish audit record _excise.v$fileNum in $root")
-    }
   }
 
   /** Conservative [lo, hi] bound of an ANALYZED excision condition,
@@ -2601,36 +2551,22 @@ object Snapshots {
           Sources.readParquet(spark, s"$outRoot/${l.rel}")
             .agg(max(col("_to_v"))).head().getLong(0) > last
         }
-        var st = manifestState(spark, outRoot)
-        // fence BEFORE the data write: the already-landed-loser case
-        // (a rival tail committed this span while we diffed it) drops
-        // the span for the cost of one column-pruned agg, not a
+        // the fence runs BEFORE the data write: the already-landed-loser
+        // case (a rival tail committed this span while we diffed it)
+        // drops the span for the cost of one column-pruned agg, not a
         // feed-sized parquet write destined straight for the orphan
-        // sweep
-        if (!progressedAt(st)) {
-          val rel = s"v${st.lines.lastOption.map(_.v + 1).getOrElse(1L)}" +
-            s"-${java.util.UUID.randomUUID.toString.take(8)}"
-          feed.write.mode("errorifexists").parquet(s"$outRoot/$rel")
-          var attempt = 0
-          var done = false
-          while (!done) {
-            attempt += 1
-            val v = st.lines.lastOption.map(_.v + 1).getOrElse(1L)
-            try {
-              publishAt(spark, outRoot, st.fileNum + 1,
-                st.lines :+ ManifestLine(v, "delta", rel, System.currentTimeMillis(), Map.empty))
-              done = true
-            } catch {
-              case e: IllegalStateException
-                  if e.getMessage != null &&
-                    e.getMessage.contains("manifest publish race") =>
-                if (attempt >= 8) throw e
-                st = manifestState(spark, outRoot)
-                // a rival that landed this (or a later) span between
-                // our fence and our publish: drop — the written dir
-                // becomes an orphan for the sweep, never a duplicate
-                if (progressedAt(st)) done = true
+        // sweep.
+        var written: Option[String] = None
+        withManifestRetry(spark, outRoot, 8) { st =>
+          if (!progressedAt(st)) {
+            val rel = written.getOrElse {
+              val r = s"v${st.nextVersion}-${java.util.UUID.randomUUID.toString.take(8)}"
+              feed.write.mode("errorifexists").parquet(s"$outRoot/$r")
+              written = Some(r)
+              r
             }
+            publishAt(spark, outRoot, st.fileNum + 1, st.lines :+
+              ManifestLine(st.nextVersion, "delta", rel, System.currentTimeMillis(), Map.empty))
           }
         }
       }

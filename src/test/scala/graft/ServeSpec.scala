@@ -250,6 +250,17 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(get("/cohort/query")._1 == 405)
   }
 
+  test("an empty request body is a plain 400 on every JSON-body route") {
+    Seq("/cohort/query", "/cohort/population", "/cohort/atom-counts", "/tokenize",
+      "/ann/search", "/store/commit", "/store/tag", "/store/untag", "/store/excise").foreach { p =>
+      Seq("", " \n").foreach { body =>
+        val (code, v) = post(p, body)
+        assert(code == 400 && v \ "error" == JString("request body is empty"),
+          s"POST $p with body '$body' answered $code $v")
+      }
+    }
+  }
+
   /** `method path` on the server at `b`, with no body. */
   private def send(b: String, method: String, path: String): (Int, JValue) = {
     val r = client.send(
@@ -1162,8 +1173,8 @@ class ServeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           when(col("o_orderkey") % 10 === 3, lit("R")).otherwise(col("o_orderstatus")))
         .withColumn("_deleted", col("o_orderkey") % 10 === 7),
       root)
-    val times = Snapshots.versionsWithTimes(spark, root)
-    val (t1, t2) = (times(0)._4, times(1)._4)
+    val times = Snapshots.manifestState(spark, root).lines
+    val (t1, t2) = (times(0).ts, times(1).ts)
     assert(t1 > 0 && t2 > t1)
     val srv = WarehouseServer.start(spark, WarehouseServer.Config(
       dataDir = sf, storeRoot = Some(root)))

@@ -220,7 +220,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.compact(spark, root, Seq("id"))
     Snapshots.commitDelta(Seq((3, "c", 0.5)).toDF("id", "name", "score"), root,
       evolveSchema = true)
-    val before = Snapshots.versionsWithTimes(spark, root)
+    val before = Snapshots.manifestState(spark, root).lines
     val othersBefore = Snapshots.asOf(spark, root, 5, Seq("id"))
       .select("id", "name").collect().map(r => (r.getInt(0), r.getString(1))).toSet
 
@@ -232,9 +232,9 @@ class SnapshotsSpec extends SparkSpec {
 
     // versions, kinds and commit stamps are untouched; only the two
     // rewritten paths moved
-    val after = Snapshots.versionsWithTimes(spark, root)
-    assert(after.map(t => (t._1, t._2, t._4)) === before.map(t => (t._1, t._2, t._4)))
-    assert(after.zip(before).count { case (a, b) => a._3 != b._3 } === 2)
+    val after = Snapshots.manifestState(spark, root).lines
+    assert(after.map(l => (l.v, l.kind, l.ts)) === before.map(l => (l.v, l.kind, l.ts)))
+    assert(after.zip(before).count { case (a, b) => a.rel != b.rel } === 2)
 
     // NOTHING for id=2 anywhere: every as-of version, the raw
     // segment reads, the full history, and version-pair changes
@@ -460,7 +460,8 @@ class SnapshotsSpec extends SparkSpec {
     val stale = Snapshots.manifestState(spark, root)
     // a delta lands between the excise's chain read and its republish
     Snapshots.commitDelta(Seq((3, "c")).toDF("id", "name"), root)
-    val e = intercept[IllegalStateException](
+    // the type the server maps to 409
+    val e = intercept[Snapshots.ManifestRace](
       Snapshots.exciseFrom(spark, root, col("id") === 2, stale))
     assert(e.getMessage.contains("manifest publish race"))
     // the concurrent delta is NOT un-listed and the store is intact
@@ -598,6 +599,42 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.untag(spark, root, "release-1")
     assert(Snapshots.vacuum(spark, root, 3L, orphanGraceMs = 0L).nonEmpty)
     intercept[IllegalArgumentException](Snapshots.untag(spark, root, "release-1"))
+  }
+
+  test("tags: of two concurrent tag calls on one name exactly one wins; the loser fails loudly") {
+    val root = tmpDir("snap-tag-race")
+    Snapshots.commit(Seq((1L, "a")).toDF("id", "name"), root)
+    Snapshots.commitDelta(Seq((2L, "b")).toDF("id", "name"), root)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      // per name, tag(name, 1) and tag(name, 2) on two threads that
+      // start together
+      val outcomes = (1 to 200).map(i => s"race-$i").map { name =>
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        name -> Seq(1L, 2L).map { v =>
+          pool.submit(new java.util.concurrent.Callable[Either[Throwable, Long]] {
+            def call(): Either[Throwable, Long] = {
+              barrier.await()
+              try { Snapshots.tag(spark, root, name, v); Right(v) }
+              catch { case e: Throwable => Left(e) }
+            }
+          })
+        }.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      }
+      val doubles = outcomes.filter(_._2.forall(_.isRight)).map(_._1)
+      assert(doubles.isEmpty,
+        s"${doubles.size} of ${outcomes.size} names were tagged by both concurrent calls: $doubles")
+      outcomes.foreach { case (name, calls) =>
+        val winners = calls.collect { case Right(v) => v }
+        assert(winners.size === 1, s"'$name': $calls")
+        calls.collect { case Left(e) => e }.foreach { e =>
+          assert(e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains("already exists"),
+            s"'$name' loser: $e")
+        }
+        // the tag reads back the winner's version
+        assert(Snapshots.tagVersion(spark, root, name) === winners.head)
+      }
+    } finally pool.shutdownNow()
   }
 
   test("blooms: point lookups prune where zone maps can't; the skip trusts the bloom's word") {
@@ -752,31 +789,31 @@ class SnapshotsSpec extends SparkSpec {
     val t0 = System.currentTimeMillis()
     Snapshots.commit(Seq((1, "a", 10L)).toDF("id", "name", "amount"), root)
     val t1 = System.currentTimeMillis()
-    val l1 = Snapshots.versionsWithTimes(spark, root)
-    assert(l1.map(_._1) === Seq(1L))
-    assert(l1.head._4 >= t0 && l1.head._4 <= t1,
-      s"v1 stamp ${l1.head._4} outside the commit's wall-clock bracket [$t0, $t1]")
+    val l1 = Snapshots.manifestState(spark, root).lines
+    assert(l1.map(_.v) === Seq(1L))
+    assert(l1.head.ts >= t0 && l1.head.ts <= t1,
+      s"v1 stamp ${l1.head.ts} outside the commit's wall-clock bracket [$t0, $t1]")
     Thread.sleep(5) // commits also take ~100ms; the sleep just makes the distinct-stamp claim airtight
     Snapshots.commitDelta(Seq((1, "a2", 11L)).toDF("id", "name", "amount"), root)
-    val l2 = Snapshots.versionsWithTimes(spark, root)
-    assert(l2.map(_._1) === Seq(1L, 2L))
+    val l2 = Snapshots.manifestState(spark, root).lines
+    assert(l2.map(_.v) === Seq(1L, 2L))
     // v1's stamp is its COMMIT time — the later publish that re-wrote
     // the manifest line must not have re-stamped it
-    assert(l2.head._4 === l1.head._4, "a later publish re-stamped an old line")
-    assert(l2(1)._4 > l2.head._4)
+    assert(l2.head.ts === l1.head.ts, "a later publish re-stamped an old line")
+    assert(l2(1).ts > l2.head.ts)
     // instant → version: latest commit stamped at or before t
-    assert(Snapshots.versionAt(spark, root, l2(1)._4) === 2L)
-    assert(Snapshots.versionAt(spark, root, l2(1)._4 - 1) === 1L)
+    assert(Snapshots.versionAt(spark, root, l2(1).ts) === 2L)
+    assert(Snapshots.versionAt(spark, root, l2(1).ts - 1) === 1L)
     assert(Snapshots.versionAt(spark, root, System.currentTimeMillis()) === 2L)
     val early = intercept[IllegalArgumentException] {
-      Snapshots.versionAt(spark, root, l2.head._4 - 1)
+      Snapshots.versionAt(spark, root, l2.head.ts - 1)
     }
     assert(early.getMessage.contains("no version committed at or before"))
     // asOfTimestamp ≡ asOf(versionAt): the v1 answer at v1's instant,
     // reproducible after v2 amended it
-    assert(rowsOf(Snapshots.asOfTimestamp(spark, root, l2.head._4, Seq("id"))) ===
+    assert(rowsOf(Snapshots.asOfTimestamp(spark, root, l2.head.ts, Seq("id"))) ===
       Set((1, "a", 10L)))
-    assert(rowsOf(Snapshots.asOfTimestamp(spark, root, l2(1)._4, Seq("id"))) ===
+    assert(rowsOf(Snapshots.asOfTimestamp(spark, root, l2(1).ts, Seq("id"))) ===
       Set((1, "a2", 11L)))
   }
 
@@ -789,7 +826,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commit(Seq((1, "a"), (2, "b")).toDF("id", "name"), root, meta = m1)
     Snapshots.commitDelta(Seq((2, "b2")).toDF("id", "name"), root, meta = m2)
     Snapshots.commitDelta(Seq((3, "c")).toDF("id", "name"), root) // no meta
-    assert(Snapshots.versionsWithMeta(spark, root).map(t => (t._1, t._5)) ===
+    assert(Snapshots.manifestState(spark, root).lines.map(l => (l.v, l.meta)) ===
       Seq((1L, m1), (2L, m2), (3L, Map.empty)))
     // history rows carry the committing transaction's meta — the
     // "which import wrote this state" read, straight off each row
@@ -809,11 +846,11 @@ class SnapshotsSpec extends SparkSpec {
     assert(del.getMap[String, String](del.fieldIndex("commit_meta")).toMap === mC)
     // vacuum's trimmed republish preserves the retained lines' meta
     Snapshots.vacuum(spark, root, keepAfterVersion = 4L)
-    assert(Snapshots.versionsWithMeta(spark, root).map(t => (t._1, t._5)) === Seq((4L, mC)))
+    assert(Snapshots.manifestState(spark, root).lines.map(l => (l.v, l.meta)) === Seq((4L, mC)))
     // excision republishes with meta intact — only the path moves
     Snapshots.commitDelta(Seq((9, "pii")).toDF("id", "name"), root, meta = m2)
     Snapshots.excise(spark, root, col("id") === 9)
-    assert(Snapshots.versionsWithMeta(spark, root).map(t => (t._1, t._5)) ===
+    assert(Snapshots.manifestState(spark, root).lines.map(l => (l.v, l.meta)) ===
       Seq((4L, mC), (5L, m2)))
   }
 
@@ -828,7 +865,7 @@ class SnapshotsSpec extends SparkSpec {
       "1\tfull\tv1-aaaa1111\n2\tdelta\tv2-bbbb2222\t5000\n".getBytes("UTF-8"))
     assert(Snapshots.versions(spark, root).map(t => (t._1, t._2)) ===
       Seq((1L, "full"), (2L, "delta")))
-    assert(Snapshots.versionsWithTimes(spark, root).map(_._4) === Seq(-1L, 5000L))
+    assert(Snapshots.manifestState(spark, root).lines.map(_.ts) === Seq(-1L, 5000L))
     // unstamped = "committed before stamps existed": older than any t
     assert(Snapshots.versionAt(spark, root, 4999L) === 1L)
     assert(Snapshots.versionAt(spark, root, 5000L) === 2L)
@@ -837,11 +874,11 @@ class SnapshotsSpec extends SparkSpec {
     // a post-upgrade commit re-publishes the unstamped line in its OLD
     // 3-field form — re-stamping it with "now" would lie to versionAt
     Snapshots.commitDelta(Seq((1, "a3", 12L)).toDF("id", "name", "amount"), root)
-    val after = Snapshots.versionsWithTimes(spark, root)
-    assert(after.map(_._1) === Seq(1L, 2L, 3L))
-    assert(after.head._4 === -1L, "a republish stamped a pre-timestamp line")
-    assert(after(1)._4 === 5000L)
-    assert(after(2)._4 > 5000L)
+    val after = Snapshots.manifestState(spark, root).lines
+    assert(after.map(_.v) === Seq(1L, 2L, 3L))
+    assert(after.head.ts === -1L, "a republish stamped a pre-timestamp line")
+    assert(after(1).ts === 5000L)
+    assert(after(2).ts > 5000L)
   }
 
   test("nullable _deleted (when() without otherwise) does not drop upserts") {
@@ -1123,7 +1160,8 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.excise(spark, root, col("id") === 2L)
     val hfs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     // a crash between create and rename leaves exactly these behind
-    val strays = Seq("_manifest.v9.tmp-deadbeef", "_excise.v9.tmp-deadbeef", "_format.tmp-deadbeef")
+    val strays = Seq("_manifest.v9.tmp-deadbeef", "_excise.v9.tmp-deadbeef", "_format.tmp-deadbeef",
+      "_tag.rel.tmp-deadbeef", "_linkprobe.tmp-deadbeef")
     strays.foreach { n =>
       val out = hfs.create(new org.apache.hadoop.fs.Path(root, n), true)
       try out.write("stray".getBytes("UTF-8")) finally out.close()
